@@ -1,23 +1,18 @@
 #!/usr/bin/env bash
 # CHANGES-narrative gate, standalone so BOTH presnapshot.sh and the git
-# pre-commit hook can run it. Round N = highest N among driver
-# artifacts + 1; a commit/snapshot without CHANGES_r{N}.md fails.
-# (Round 10's presnapshot gate never fired because nothing forced the
-# script to run — the hook makes the check unskippable per-commit.)
+# pre-commit hook can run it. The repo logs one entry per change in
+# CHANGES.md; a commit/snapshot without a non-empty CHANGES.md fails.
 #
-# It also rejects a CHANGES file that ends in a dangling promise
-# ("… re-measure below." with nothing below — the r12 truncation): the
+# It also rejects a CHANGES.md that ends in a dangling promise
+# ("… re-measure below." with nothing below — a truncated entry): the
 # last non-blank line must not end with a bare colon or with
 # "below"/"follows" (+ punctuation), which always announce content that
 # is supposed to come after.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-ROUND="$(ls VERDICT.md CORRECTNESS_r*.json BENCH_r*.json 2>/dev/null \
-  | grep -oE 'r[0-9]+' | tr -d r | sort -n | tail -1 || true)"
-ROUND="$(( ${ROUND:-0} + 1 ))"
-if [[ ! -f "CHANGES_r${ROUND}.md" ]]; then
-  echo "FATAL: CHANGES_r${ROUND}.md missing — write the round narrative first" >&2
+if ! grep -q '[^[:space:]]' CHANGES.md 2>/dev/null; then
+  echo "FATAL: CHANGES.md missing or empty — describe the change first" >&2
   exit 1
 fi
 
@@ -31,4 +26,4 @@ check_no_dangling_promise() {
     exit 1
   fi
 }
-check_no_dangling_promise "CHANGES_r${ROUND}.md"
+check_no_dangling_promise CHANGES.md

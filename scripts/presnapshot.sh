@@ -29,7 +29,7 @@ SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-16}" \
 echo "== presnapshot: duckdb localcheck =="
 python3 scripts/localcheck.py "$SF_DIR" "$OUT_DIR"
 
-echo "== presnapshot: per-round CHANGES narrative =="
+echo "== presnapshot: CHANGES.md entry =="
 # Shared with the git pre-commit hook, which is what actually makes the
 # gate fire (round 10 proved a script nobody runs gates nothing).
 bash scripts/check_changes.sh

@@ -555,8 +555,38 @@ object JaccardDedup {
     crossPairs(left.filter(keep(sh)), leftId, right, rightId, textCol, nGram, threshold)
   }
 
-  /** Decontaminate: drop every left (train) doc contaminated by the
-    * right (benchmark) corpus at the given similarity.
+  /** Decontaminate: drop every train row whose id has a row at n-gram
+    * Jaccard ≥ `threshold` with some benchmark doc. The output is the
+    * train rows of the surviving ids, as a multiset.
+    *
+    * The train side is one map-side probe against a broadcast index
+    * built from the BENCHMARK side alone, so train needs no statistics,
+    * no shuffle and no window before the verify:
+    *   - each train row is shingled once;
+    *   - every one of its shingles probes the broadcast postings, and
+    *     the size filter t·max(n_t, n_b) ≤ min(n_t, n_b) drops a
+    *     candidate before it leaves the probe;
+    *   - each candidate is verified with the early-exit
+    *     `sorted_intersect_at_least` walk and the exact
+    *     c / (n_t + n_b − c) ≥ t test against the broadcast bench array.
+    * The verified ids leave through an id `left_anti` join.
+    *
+    * Single-sided prefix filter (lossless): J(x, b) ≥ t gives
+    * c ≥ t·(n_x + n_b − c) ≥ t·n_b, since n_x ≥ c. So x shares a
+    * shingle with the first n_b − ⌈t·n_b⌉ + 1 shingles of b under ANY
+    * fixed order, and only those prefixes are posted. The order is
+    * (benchmark document frequency asc, hash asc), so shingles common in
+    * the benchmark stay out of its postings; no train statistic is
+    * needed because the probe side posts nothing. [[crossPairs]] needs a
+    * two-sided prefix and therefore a global rarity order over both
+    * corpora; it stays the operator for listing the pairs.
+    *
+    * Contract: the benchmark is small (the decontamination use case —
+    * the same one [[crossPairs]] relies on when it broadcasts it). Its
+    * shingle arrays are collected to the driver in ONE eager job,
+    * labelled `decontaminate: bench index`, before this returns; the
+    * train input is not read until the result is. `benchId` is not
+    * read: which benchmark doc matched does not change what is kept.
     */
   def decontaminate(
       train: DataFrame, trainId: String,
@@ -564,8 +594,64 @@ object JaccardDedup {
       textCol: String,
       nGram: Int = 2,
       threshold: Double = 0.5): DataFrame = {
-    val dirty = crossPairs(train, trainId, benchmark, benchId, textCol, nGram, threshold)
-      .select(col("left_id").as(trainId)).distinct()
+    require(threshold > 0, "threshold must be > 0")
+    val spark = train.sparkSession
+    // null text shingles to an empty array, never to null: a nullable
+    // array would let the optimizer infer isnotnull(size(__sh)) from the
+    // verify and push it below the projection, shingling every row twice
+    val shingles = coalesce(
+      graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
+      typedLit(Array.emptyLongArray))
+    // identical benchmark docs contaminate the same train docs, so the
+    // index keeps each distinct non-empty shingle array once (filtered
+    // here, not in the plan, where it would shingle twice too)
+    val bench = Par.labeled(spark, "decontaminate: bench index")(
+        benchmark.select(shingles).collect())
+      .map(_.getSeq[Long](0).toArray)
+      .filter(_.nonEmpty)
+      .distinctBy(_.toSeq)
+    val index = spark.sparkContext.broadcast(new BenchPostings(bench, threshold))
+    val probe = udf((sh: scala.collection.Seq[Long]) => index.value.probe(sh))
+    val benchDocs = spark.createDataFrame(bench.indices.map(i => (i, bench(i), bench(i).length)))
+      .toDF("__bi", "__shb", "__nb")
+    val alpha = ceil((col("__nt") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
+      .cast("int")
+    val dirty = train.select(col(trainId), shingles.as("__sh"))
+      .select(col(trainId), col("__sh"), size(col("__sh")).as("__nt"),
+        explode(probe(col("__sh"))).as("__bi"))
+      .join(broadcast(benchDocs), Seq("__bi"))
+      .withColumn("c", graft.functions.NativeHash.sortedIntersectAtLeast(
+        col("__sh"), col("__shb"), alpha))
+      .filter(col("c") >= 0 && col("c") / (col("__nt") + col("__nb") - col("c")) >= threshold)
+      .select(col(trainId)).distinct()
     train.join(dirty, Seq(trainId), "left_anti")
+  }
+
+  /** [[decontaminate]]'s broadcast index over the distinct non-empty
+    * benchmark shingle arrays `docs`: postings from each prefix shingle
+    * to the docs (by position in `docs`) whose prefix holds it.
+    */
+  private final class BenchPostings(docs: Array[Array[Long]], threshold: Double)
+      extends Serializable {
+    private val sizes = docs.map(_.length)
+    private val postings: Map[Long, Array[Int]] = {
+      val df = docs.iterator.flatMap(_.iterator).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
+      docs.indices.flatMap { i =>
+        val n = docs(i).length
+        docs(i).sortBy(s => (df(s), s))
+          .take(n - math.ceil(n * threshold - Eps).toInt + 1)
+          .map(_ -> i)
+      }.groupMap(_._1)(_._2).view.mapValues(_.toArray).toMap
+    }
+
+    /** Distinct benchmark docs sharing a posted shingle with `sh` that
+      * pass the size filter.
+      */
+    def probe(sh: scala.collection.Seq[Long]): Array[Int] = {
+      val n = sh.length
+      sh.iterator.flatMap(s => postings.getOrElse(s, Array.emptyIntArray))
+        .filter(b => math.max(n, sizes(b)) * threshold <= math.min(n, sizes(b)) + Eps)
+        .distinct.toArray
+    }
   }
 }

@@ -44,6 +44,12 @@ object TextSearch {
     // them in as literals is value-identical to the broadcast columns.
     val st = Par.labeled(docs.sparkSession, "bm25: corpus stats")(
       docToks.agg(count(lit(1)).as("n_docs"), avg("len").as("avgdl")).head())
+    // no tokenized doc (an empty corpus, or only null texts) leaves avgdl
+    // null, and no doc can score: the result is empty
+    if (st.isNullAt(1)) {
+      docToks.unpersist(false)
+      return docs.select(col(idCol), lit(0.0).as("score")).limit(0)
+    }
     val nDocs = st.getLong(0)
     val avgdl = st.getDouble(1)
     // per-term tf computed MAP-SIDE from the token array (queryTerms is

@@ -123,6 +123,40 @@ class DedupSpec extends AnyFunSuite {
     assert(clean == Set(2L), s"expected only doc 2 to survive, got $clean")
   }
 
+  test("decontaminate runs one labelled bench-index job at construction and reads no train input") {
+    // a parquet benchmark, so building the index is a real job (a local
+    // relation is collected on the driver without one)
+    val dir = java.nio.file.Files.createTempDirectory("decontaminate").toString
+    Seq((100L, "the quick brown fox jumps over the lazy dog"), (101L, "columnar storage"))
+      .toDF("bench_id", "text").write.parquet(s"$dir/bench")
+    val bench = spark.read.parquet(s"$dir/bench")
+    // evaluating any train row throws, so a job over train fails the test
+    val poisoned = udf((id: Long) =>
+      if (id >= 0) throw new IllegalStateException("train read at construction") else "")
+    val train = spark.range(10).select(col("id").as("doc_id"), poisoned(col("id")).as("text"))
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        // only jobs of this thread's group: another suite's jobs never count
+        if (js.properties.getProperty("spark.jobGroup.id") == "decontaminate-construct")
+          descs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup("decontaminate-construct", "decontaminate construction")
+    try {
+      JaccardDedup.decontaminate(train, "doc_id", bench, "bench_id", "text",
+        nGram = 2, threshold = 0.5)
+      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
+      assert(descs.toArray.toSeq == Seq("decontaminate: bench index"), s"jobs: $descs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("overlapJoin finds exactly the pairs at/above the overlap floor (prefix-filter lossless)") {
     import graft.functions.{NativeHash, Text}
     // token sets engineered so some overlaps sit EXACTLY on the floor;

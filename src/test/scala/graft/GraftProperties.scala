@@ -267,6 +267,43 @@ object GraftProperties extends Properties("graft") {
       got == want
     }
 
+  property("decontaminate equals the quadratic ground truth as a multiset of kept rows") =
+    forAll(for {
+      // corpus rows plus rows reusing corpus ids with other texts: null,
+      // empty, one word (shorter than the 2-gram) or a corpus text
+      train <- corpusGen.flatMap { docs =>
+        Gen.listOfN(4, Gen.zip(Gen.choose(0L, 12L),
+            Gen.oneOf(Gen.const(null: String), Gen.const(""), Gen.const("alpha"),
+              Gen.oneOf(docs.map(_._2)))))
+          .map(extra => docs ++ extra)
+      }
+      // empty, or a corpus plus copies of some train texts, verbatim and
+      // one word longer, so contamination (J = 1 included) does occur
+      bench <- Gen.frequency(1 -> Gen.const(Nil), 3 -> (for {
+        c <- corpusGen
+        copied <- Gen.someOf(train.map(_._2).filter(_ != null))
+      } yield (100L, "beta") :: (101L, null: String) ::
+        copied.toList.flatMap(x => List((102L, x), (103L, x + " mu"))) ++ c))
+      t <- Gen.oneOf(0.3, 0.5, 1.0)
+    } yield (train, bench, t)) { case (train, bench, t) =>
+      import graft.operators.JaccardDedup
+      def sh(text: String): Set[String] = {
+        val tk = Option(text).fold(Array.empty[String])(_.toLowerCase.split("\\s+").filter(_.nonEmpty))
+        if (tk.length < 2) Set.empty else tk.sliding(2).map(_.mkString(" ")).toSet
+      }
+      val benchSh = bench.map(b => sh(b._2)).filter(_.nonEmpty)
+      val dirty = train.collect { case (id, x) if sh(x).nonEmpty && benchSh.exists { b =>
+          val a = sh(x); val c = (a & b).size
+          c.toDouble / (a.size + b.size - c) >= t
+        } => id }.toSet
+      def multiset(rows: Seq[(Long, String)]) = rows.groupBy(identity).view.mapValues(_.size).toMap
+      val got = JaccardDedup.decontaminate(
+          train.toDF("doc_id", "text"), "doc_id",
+          bench.toDF("bench_id", "text"), "bench_id", "text", 2, t)
+        .as[(Long, String)].collect().toSeq
+      multiset(got) == multiset(train.filterNot(r => dirty(r._1)))
+    }
+
   property("parseContainerMeta is total on arbitrary bytes: never throws, garbage is unknown") =
     forAll(Gen.oneOf(
       // pure random bytes

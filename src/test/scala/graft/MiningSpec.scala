@@ -134,4 +134,11 @@ class MiningSpec extends AnyFunSuite {
       (2L, 1, "banana"), (2L, 2, "common"),
       (3L, 1, "cherry"), (3L, 2, "common")))
   }
+
+  test("bm25 on an empty corpus returns an empty (id, score) frame") {
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val out = TextSearch.bm25(empty, "doc_id", "text", Seq("fox"))
+    assert(out.columns.toSeq == Seq("doc_id", "score"))
+    assert(out.collect().isEmpty)
+  }
 }

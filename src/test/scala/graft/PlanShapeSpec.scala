@@ -252,6 +252,9 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("sorted_intersect_at_least"), s"early-exit walk lost:\n$p")
     assert(!p.contains("sorted_intersect_count"),
       s"full-count walk appeared on the boolean containment path:\n$p")
+    // the train side probes a benchmark-only prefix index: no rarity
+    // window over the train corpus
+    assert(!p.contains("row_number"), s"plan:\n$p")
   }
 
   test("cosineNearDupPairs: pair-distinct runs at signature-group granularity") {
