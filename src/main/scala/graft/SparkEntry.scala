@@ -2237,7 +2237,7 @@ object SparkEntry {
     // cost Σ|c|² on a co-partitioned equi-join, and k grows with the
     // corpus so |c| stays bounded. The SHORT name carries the √n-rule
     // arm — seeds = first ceil(√n) vectors, so the clustering budget
-    // grows with the corpus (tools/SemProbe at 10×: fixed k=8 pays 35×
+    // grows with the corpus (measured at 10×: fixed k=8 pays 35×
     // wall; k≈√n recovers Σ|c|²/k — the 100× soak completes at 757 s
     // where fixed k is infeasible). A user copying the bench-priced
     // row gets the plan that survives scale.
@@ -4322,8 +4322,8 @@ object SparkEntry {
       "CAST(ceil(sqrt((SELECT count(*) FROM v))) AS BIGINT)"),
 
     // the paper's fixed-k formulation under the SAME template — the
-    // A/B arm (tools/SemProbe measured fixed k=8 paying 35× wall at
-    // 10× data and k≈√n recovering Σ|c|²/k)
+    // A/B arm (measured at 10× data: fixed k=8 pays 35× wall and
+    // k≈√n recovers Σ|c|²/k)
     "dedup_semantic_fixedk" -> semanticDedupOracle("8"),
 
 

@@ -371,7 +371,7 @@ object ClusterDedup {
     * passes (shingles, banding, narrow pre-contraction) plus candidate
     * and verify volume proportional to the DELTA-TOUCHED slice of the
     * cluster graph — a 1% daily batch prices ~1% of the quadratic
-    * stages (IncProbe at 100×: 59 s vs 169 s full recompute at a 1.4%
+    * stages (measured at 100×: 59 s vs 169 s full recompute at a 1.4%
     * batch), while the adversarial every-family-touched split (the %7
     * gate fixture) degrades to a bounded ~1-1.4× of the full clustered
     * recompute — never to the doc-level g² cliff. Operationally: a
@@ -973,7 +973,7 @@ object ClusterDedup {
     //     sets share buckets, so distinct-buckets-over-docs equals
     //     distinct-buckets-over-reps and the statistic is rep-level
     //     even before the collapse decision is made.
-    // Two r18 changes, both measured at sf0.1 (JobProfile/StatProbe):
+    // Two r18 changes, both measured at sf0.1 (OPTIMIZATION_r18.md):
     //   - rsd 0.05, not 0.01 — the high-precision HLL buffer made the
     //     probe itself the bottleneck (fused aggregate 4.0 s vs 0.9 s;
     //     every routing threshold tolerates ≥ 10% estimate error, and

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 import graft.functions.Text
 
 /** Exact n-gram Jaccard near-duplicate pairs WITHOUT an all-pairs join.
@@ -244,10 +246,10 @@ object JaccardDedup {
     * the new batch: base-internal pairs are a previous run's output.
     *
     * Candidate generation is the PPJoin prefix scheme under ONE global
-    * rarity order computed over the UNION (the [[crossPairs]] stance —
-    * the losslessness proof needs some fixed common order, and a pair
-    * at J ≥ t shares a shingle inside the first n − ⌈t·n⌉ + 1 elements
-    * of EACH side under any such order). Both orientations of a
+    * rarity order computed over the UNION (the losslessness proof
+    * needs some fixed common order, and a pair at J ≥ t shares a
+    * shingle inside the first n − ⌈t·n⌉ + 1 elements of EACH side
+    * under any such order). Both orientations of a
     * delta-base pair are covered by joining the DELTA prefix index
     * against the full one; delta-delta pairs arrive twice and collapse
     * in the canonical least/greatest distinct. Size and positional
@@ -299,8 +301,8 @@ object JaccardDedup {
     * public wrapper; kept private[graft] for probes that want to plan
     * or time the unsealed stream (ClusterDedup.componentsIncremental
     * does NOT consume this — its final design runs its own
-    * cluster-granularity path; this doc-level listing is its measured
-    * A/B arm, see IncProbe).
+    * cluster-granularity path; this doc-level listing was its measured
+    * A/B arm, 409 s at the 10× soak — see the replication caveat).
     */
   private[graft] def nearDupPairsIncrementalPlan(
       base: DataFrame,
@@ -420,23 +422,20 @@ object JaccardDedup {
   }
 
   /** Cross-corpus contamination pairs: (left_id, right_id, jaccard) for
-    * every left doc sharing ≥ threshold n-gram Jaccard with a right doc
-    * — the train-vs-benchmark decontamination check of LLM pipelines.
+    * every (left row, right row) at n-gram Jaccard ≥ `threshold`, as a
+    * multiset — the train-vs-benchmark decontamination check of LLM
+    * pipelines, naming which benchmark doc each train doc matches.
     *
-    * PPJoin-style prefix filtering, cross-corpus flavor: both sides'
-    * prefixes are selected under ONE global order — ascending document
-    * frequency summed across the two corpora, ties by hash — and the
-    * lossless-candidate proof is the self-join's verbatim (a pair at
-    * J ≥ t shares a shingle inside the first n − ⌈t·n⌉ + 1 elements of
-    * each side under ANY common fixed order). The pre-prefix-filter
-    * inverted-index join this replaces shipped every (shingle, left,
-    * right) co-occurrence row into a pair-count exchange — Σ_s
-    * dfL(s)·dfR(s) rows, ×100 under 10× near-dup replication (the r13
-    * soak's 28× wall); prefixes at t = 0.5 halve each index and the
-    * rarity order keeps viral shingles out of every prefix, so the
-    * distinct exchange carries candidate PAIRS, not co-occurrences.
-    * Verification is the same early-exit sorted merge walk as the
-    * self-join — exact c, exact jaccard, identical output.
+    * The same probe and exact verify as [[decontaminate]] (see there for
+    * the lossless single-sided prefix filter), followed by a broadcast
+    * join from each verified benchmark shingle array to the ids of the
+    * benchmark rows carrying it. The left side is not shuffled before
+    * the verify.
+    *
+    * Contract: the right side is the small benchmark. Its ids and
+    * shingle arrays are collected to the driver in ONE eager job,
+    * labelled `decontaminate: bench index`, before this returns; the
+    * left input is not read until the result is.
     */
   def crossPairs(
       left: DataFrame, leftId: String,
@@ -445,71 +444,16 @@ object JaccardDedup {
       nGram: Int = 2,
       threshold: Double = 0.3): DataFrame = {
     require(threshold > 0, "threshold must be > 0")
-    // one persisted doc table per side carries the sorted hash array
-    // (feeds the df count, the prefix window AND verify); no derived-
-    // column filter before the persist — it would be pushed below
-    // Par.widen's exchange and shingle the corpus on one core
-    def docsOf(df: DataFrame, idCol: String, outId: String) = Par.widen(df)
-      .select(col(idCol).as(outId),
-        graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram).as("__sh"))
-      .select(col(outId), col("__sh"), size(col("__sh")).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ld = docsOf(left, leftId, "left_id")
-    val rd = docsOf(right, rightId, "right_id")
-    // NO eager cache-materialization action: the main query's AQE
-    // stages race to build the ld/rd caches and re-shingle parts of
-    // the corpus, but that duplicated work overlaps on otherwise-idle
-    // cores — the r18 A/B measured an explicit materialization action
-    // 15-35% SLOWER across the decontaminate family (it serializes a
-    // full tokenize pass the query pipeline hides).
-    // the common global rarity order: df summed over BOTH corpora
-    val dfreq = ld.select(explode(col("__sh")).as("s"))
-      .union(rd.select(explode(col("__sh")).as("s")))
-      .groupBy("s").agg(count(lit(1)).as("df"))
-    def prefixOf(docs: DataFrame, idCol: String) = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(idCol)).orderBy(col("df").asc, col("s").asc)
-      docs.select(col(idCol), explode(col("__sh")).as("s"), col("n"))
-        .join(dfreq, Seq("s"))
-        .withColumn("pos", row_number().over(w))
-        .filter(col("pos") <= col("n") - ceil(col("n") * threshold - lit(Eps)) + 1)
-        .select(col("s"), col(idCol), col("n").as(s"n_$idCol"), col("pos").as(s"p_$idCol"))
-    }
-    // benchmark corpora are small by nature (that is the decontamination
-    // use case), so the right prefix index is broadcast: the train index
-    // — the 100 TB side — streams map-side and never shuffles for this
-    // join; only distinct candidate pairs reach an exchange. The size
-    // and positional filters run INSIDE the join condition, so pruned
-    // rows never reach the pair-distinct exchange.
-    val alpha = ceil((col("n_left_id") + col("n_right_id")) * (threshold / (1.0 + threshold)) - lit(Eps))
-    val lp = prefixOf(ld, "left_id")
-    val rp = prefixOf(rd, "right_id")
-    val candidates = lp.join(broadcast(rp),
-        lp("s") === rp("s") &&
-        greatest(col("n_left_id"), col("n_right_id")) * threshold <=
-          least(col("n_left_id"), col("n_right_id")) + lit(Eps) &&
-        lit(1) + least(col("n_left_id") - col("p_left_id"),
-          col("n_right_id") - col("p_right_id")) >= alpha)
-      .select("left_id", "right_id")
-      .distinct()
-    val alphaV = ceil((col("n_l") + col("n_r")) * (threshold / (1.0 + threshold)) - lit(Eps)).cast("int")
-    candidates
-      .join(ld.select(col("left_id"), col("__sh").as("__shl"), col("n").as("n_l")), Seq("left_id"))
-      .join(broadcast(rd.select(col("right_id"), col("__sh").as("__shr"), col("n").as("n_r"))), Seq("right_id"))
-      .withColumn("c", graft.functions.NativeHash.sortedIntersectAtLeast(
-        col("__shl"), col("__shr"), alphaV))
-      .filter(col("c") >= 0)
-      .withColumn("jaccard", col("c") / (col("n_l") + col("n_r") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("left_id"), col("right_id"), col("jaccard"))
+    crossPairsOf(left, leftId, benchIndex(right, rightId, textCol, nGram),
+      textCol, nGram, threshold)
   }
 
-  /** crossPairs with a Bloom-filter pre-prune of the (huge) left/train
-    * side. At 100 TB the exact benchmark shingle index is the broadcast
-    * in crossPairs; when even that is uncomfortably large, a Bloom
-    * filter at ~1% fpp costs ~10 bits per shingle (20-60× smaller than
-    * the exact long set) and drops almost every clean train doc in the
-    * scan itself, BEFORE its shingles are exploded into the join.
+  /** [[crossPairs]] with a Bloom-filter pre-prune of the (huge) left/train
+    * side: a filter at ~1% fpp over the benchmark's distinct shingles
+    * drops almost every clean train doc in the scan itself, before its
+    * shingles are exploded into the probe. The filter is built on the
+    * driver from the shingles the one construction job already
+    * collected, so this runs the same single job as [[crossPairs]].
     *
     * The prune is provably lossless: J(a,b) = o/(n_a+n_b−o) with
     * n_b ≥ o gives J ≤ o/n_a, so J ≥ t requires overlap o ≥ t·n_a —
@@ -526,24 +470,19 @@ object JaccardDedup {
       threshold: Double = 0.3,
       fpp: Double = 0.01): DataFrame = {
     require(threshold > 0, "threshold must be > 0")
-    val rh = right
-      .select(explode(
-        graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram)).as("s"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nShingles = math.max(rh.count(), 1L) // bounded: benchmark corpus
-    val bf = rh.stat.bloomFilter("s", nShingles, fpp)
-    rh.unpersist(false)
+    val bench = benchIndex(right, rightId, textCol, nGram)
+    val distinct = bench.docs.iterator.flatten.distinct.toArray
+    val bf = org.apache.spark.util.sketch.BloomFilter.create(math.max(distinct.length, 1L), fpp)
+    distinct.foreach(bf.putLong)
     val bbf = left.sparkSession.sparkContext.broadcast(bf)
     // one UDF doing count-and-compare so the (expensive) shingle child
     // evaluates once per row — FilterExec does no subexpression
     // elimination, so `hits(sh) >= t * size(sh)` would shingle twice.
     // o ≥ t·n_a, fp-conservative on the product like the PPJoin bounds.
-    // null text ⇒ null shingle array: drop, matching explode() in the
-    // exact path. asNondeterministic keeps the filter ABOVE any
-    // upstream repartition (a deterministic one is pushed below
-    // Par.widen's exchange and shingles the corpus on one core — the
-    // documented round-4 pushdown trap).
+    // null text ⇒ null shingle array: drop, as the exact path never
+    // matches it. asNondeterministic keeps the filter where it is
+    // written: a deterministic one is pushed below any upstream
+    // repartition and shingles the corpus at the width before it.
     val keep = udf((arr: scala.collection.Seq[Long]) => {
       if (arr == null) false
       else {
@@ -552,7 +491,7 @@ object JaccardDedup {
       }
     }).asNondeterministic()
     val sh = graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram)
-    crossPairs(left.filter(keep(sh)), leftId, right, rightId, textCol, nGram, threshold)
+    crossPairsOf(left.filter(keep(sh)), leftId, bench, textCol, nGram, threshold)
   }
 
   /** Decontaminate: drop every train row whose id has a row at n-gram
@@ -577,16 +516,14 @@ object JaccardDedup {
     * fixed order, and only those prefixes are posted. The order is
     * (benchmark document frequency asc, hash asc), so shingles common in
     * the benchmark stay out of its postings; no train statistic is
-    * needed because the probe side posts nothing. [[crossPairs]] needs a
-    * two-sided prefix and therefore a global rarity order over both
-    * corpora; it stays the operator for listing the pairs.
+    * needed because the probe side posts nothing. The verify is exact,
+    * so [[crossPairs]] lists the matching pairs through the same probe.
     *
-    * Contract: the benchmark is small (the decontamination use case —
-    * the same one [[crossPairs]] relies on when it broadcasts it). Its
-    * shingle arrays are collected to the driver in ONE eager job,
-    * labelled `decontaminate: bench index`, before this returns; the
-    * train input is not read until the result is. `benchId` is not
-    * read: which benchmark doc matched does not change what is kept.
+    * Contract: the benchmark is small (the decontamination use case).
+    * Its ids and shingle arrays are collected to the driver in ONE eager
+    * job, labelled `decontaminate: bench index`, before this returns;
+    * the train input is not read until the result is. [[crossPairs]]
+    * and [[crossPairsBloom]] keep the same one-job contract.
     */
   def decontaminate(
       train: DataFrame, trainId: String,
@@ -595,39 +532,80 @@ object JaccardDedup {
       nGram: Int = 2,
       threshold: Double = 0.5): DataFrame = {
     require(threshold > 0, "threshold must be > 0")
+    val bench = benchIndex(benchmark, benchId, textCol, nGram)
+    val dirty = verifiedMatches(train, trainId, bench, textCol, nGram, threshold)
+      .select(col(trainId)).distinct()
+    train.join(dirty, Seq(trainId), "left_anti")
+  }
+
+  // null text shingles to an empty array, never to null: a nullable
+  // array would let the optimizer infer isnotnull(size(__sh)) from the
+  // verify and push it below the projection, shingling every row twice
+  private def shinglesOf(textCol: String, nGram: Int): Column = coalesce(
+    graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
+    typedLit(Array.emptyLongArray))
+
+  /** The benchmark side of the decontamination family: its distinct
+    * non-empty shingle arrays `docs` (identical benchmark docs match the
+    * same train docs, so each array is indexed once) and `ids`, a local
+    * (`__bi`, `__id`) frame from each array's position in `docs` to the
+    * ids of the benchmark rows carrying it, with multiplicity.
+    */
+  private final class BenchIndex(val docs: Array[Array[Long]], val ids: DataFrame)
+
+  /** Collects the benchmark in ONE eager job labelled
+    * `decontaminate: bench index` (empty arrays are filtered here, not
+    * in the plan, where they would shingle twice too).
+    */
+  private def benchIndex(benchmark: DataFrame, benchId: String, textCol: String,
+      nGram: Int): BenchIndex = {
+    val spark = benchmark.sparkSession
+    val sel = benchmark.select(col(benchId).as("__id"), shinglesOf(textCol, nGram))
+    val rows = Par.labeled(spark, "decontaminate: bench index")(sel.collect())
+      .filter(_.getSeq[Long](1).nonEmpty)
+    val docs = rows.map(_.getSeq[Long](1)).distinct
+    val pos = docs.zipWithIndex.toMap
+    val ids = spark.createDataFrame(
+      rows.toSeq.map(r => Row(pos(r.getSeq[Long](1)), r.get(0))).asJava,
+      StructType(StructField("__bi", IntegerType, nullable = false) +: sel.schema.take(1)))
+    new BenchIndex(docs.map(_.toArray), ids)
+  }
+
+  /** Every `train` row that verifies at J ≥ `threshold` against a
+    * benchmark array, once per such array: the row's `trainId`, the
+    * array's position `__bi` in `bench.docs`, the intersection `c` and
+    * both sizes `__nt`/`__nb` (the probe and verify of [[decontaminate]]).
+    */
+  private def verifiedMatches(train: DataFrame, trainId: String, bench: BenchIndex,
+      textCol: String, nGram: Int, threshold: Double): DataFrame = {
     val spark = train.sparkSession
-    // null text shingles to an empty array, never to null: a nullable
-    // array would let the optimizer infer isnotnull(size(__sh)) from the
-    // verify and push it below the projection, shingling every row twice
-    val shingles = coalesce(
-      graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
-      typedLit(Array.emptyLongArray))
-    // identical benchmark docs contaminate the same train docs, so the
-    // index keeps each distinct non-empty shingle array once (filtered
-    // here, not in the plan, where it would shingle twice too)
-    val bench = Par.labeled(spark, "decontaminate: bench index")(
-        benchmark.select(shingles).collect())
-      .map(_.getSeq[Long](0).toArray)
-      .filter(_.nonEmpty)
-      .distinctBy(_.toSeq)
-    val index = spark.sparkContext.broadcast(new BenchPostings(bench, threshold))
+    val docs = bench.docs
+    val index = spark.sparkContext.broadcast(new BenchPostings(docs, threshold))
     val probe = udf((sh: scala.collection.Seq[Long]) => index.value.probe(sh))
-    val benchDocs = spark.createDataFrame(bench.indices.map(i => (i, bench(i), bench(i).length)))
+    val benchDocs = spark.createDataFrame(docs.indices.map(i => (i, docs(i), docs(i).length)))
       .toDF("__bi", "__shb", "__nb")
     val alpha = ceil((col("__nt") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
       .cast("int")
-    val dirty = train.select(col(trainId), shingles.as("__sh"))
+    train.select(col(trainId), shinglesOf(textCol, nGram).as("__sh"))
       .select(col(trainId), col("__sh"), size(col("__sh")).as("__nt"),
         explode(probe(col("__sh"))).as("__bi"))
       .join(broadcast(benchDocs), Seq("__bi"))
       .withColumn("c", graft.functions.NativeHash.sortedIntersectAtLeast(
         col("__sh"), col("__shb"), alpha))
       .filter(col("c") >= 0 && col("c") / (col("__nt") + col("__nb") - col("c")) >= threshold)
-      .select(col(trainId)).distinct()
-    train.join(dirty, Seq(trainId), "left_anti")
   }
 
-  /** [[decontaminate]]'s broadcast index over the distinct non-empty
+  /** [[crossPairs]] over an already collected benchmark: the verified
+    * matches, expanded from each benchmark array to its ids.
+    */
+  private def crossPairsOf(left: DataFrame, leftId: String, bench: BenchIndex,
+      textCol: String, nGram: Int, threshold: Double): DataFrame =
+    verifiedMatches(left, leftId, bench, textCol, nGram, threshold)
+      .join(broadcast(bench.ids), Seq("__bi"))
+      .select(col(leftId).as("left_id"), col("__id").as("right_id"),
+        (col("c") / (col("__nt") + col("__nb") - col("c"))).as("jaccard"))
+
+  /** The family's broadcast index over the distinct non-empty
     * benchmark shingle arrays `docs`: postings from each prefix shingle
     * to the docs (by position in `docs`) whose prefix holds it.
     */

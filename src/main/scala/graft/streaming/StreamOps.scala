@@ -156,11 +156,9 @@ object StreamOps {
     * of incoming docs is checked against a FIXED benchmark corpus at
     * the exact n-gram-Jaccard threshold, and only clean docs land.
     * Contamination is a pure per-doc predicate against a constant
-    * reference, so the stream carries NO state: each batch runs the
-    * PPJoin cross join (benchmark side broadcast; `bloom = true`
-    * routes through the Bloom pre-prune for benchmarks too large to
-    * broadcast exactly — lossless either way) and the batch side is
-    * only ever batch-sized.
+    * reference, so the stream carries NO state: each batch is one
+    * `decontaminate` call (one job collects the benchmark index; the
+    * batch side is only ever batch-sized and caches nothing).
     *
     * Exactly-once across restarts via the same deterministic
     * `part=b<N>` + Overwrite idiom as [[incrementalDedupSink]]: a
@@ -176,20 +174,13 @@ object StreamOps {
       cleanDir: String,
       checkpoint: String,
       nGram: Int = 2,
-      threshold: Double = 0.5,
-      bloom: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
+      threshold: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.operators.JaccardDedup
-        val dirty =
-          (if (bloom)
-            JaccardDedup.crossPairsBloom(batch, idCol, benchmark, benchId, textCol, nGram, threshold)
-          else
-            JaccardDedup.crossPairs(batch, idCol, benchmark, benchId, textCol, nGram, threshold))
-            .select(col("left_id").as(idCol)).distinct()
-        batch.join(dirty, Seq(idCol), "left_anti")
+        graft.operators.JaccardDedup
+          .decontaminate(batch, idCol, benchmark, benchId, textCol, nGram, threshold)
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$cleanDir/part=b$batchId")
         ()

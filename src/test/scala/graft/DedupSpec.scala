@@ -134,6 +134,14 @@ class DedupSpec extends AnyFunSuite {
     val poisoned = udf((id: Long) =>
       if (id >= 0) throw new IllegalStateException("train read at construction") else "")
     val train = spark.range(10).select(col("id").as("doc_id"), poisoned(col("id")).as("text"))
+    // the whole family shares the one construction job
+    val family = Seq[(String, () => Unit)](
+      "decontaminate" -> (() => JaccardDedup.decontaminate(
+        train, "doc_id", bench, "bench_id", "text", nGram = 2, threshold = 0.5)),
+      "crossPairs" -> (() => JaccardDedup.crossPairs(
+        train, "doc_id", bench, "bench_id", "text", nGram = 2, threshold = 0.5)),
+      "crossPairsBloom" -> (() => JaccardDedup.crossPairsBloom(
+        train, "doc_id", bench, "bench_id", "text", nGram = 2, threshold = 0.5)))
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -147,10 +155,12 @@ class DedupSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     sc.setJobGroup("decontaminate-construct", "decontaminate construction")
     try {
-      JaccardDedup.decontaminate(train, "doc_id", bench, "bench_id", "text",
-        nGram = 2, threshold = 0.5)
-      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
-      assert(descs.toArray.toSeq == Seq("decontaminate: bench index"), s"jobs: $descs")
+      for ((name, construct) <- family) {
+        descs.clear()
+        construct()
+        assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
+        assert(descs.toArray.toSeq == Seq("decontaminate: bench index"), s"$name jobs: $descs")
+      }
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -243,60 +243,71 @@ object GraftProperties extends Properties("graft") {
         collect(JaccardDedup.overlapJoin(df, "doc_id", sets, minOverlap = k))
     }
 
+  /** Corpus rows plus rows reusing corpus ids with other texts: null,
+    * empty, one word (shorter than the 2-gram) or a corpus text.
+    */
+  private def withOddRows(docs: List[(Long, String)]): Gen[List[(Long, String)]] =
+    Gen.listOfN(4, Gen.zip(Gen.choose(0L, 12L),
+        Gen.oneOf(Gen.const(null: String), Gen.const(""), Gen.const("alpha"),
+          Gen.oneOf(docs.map(_._2)))))
+      .map(extra => docs ++ extra)
+
+  /** A benchmark against `train`: empty, or a corpus with odd rows plus
+    * copies of some train texts, verbatim and one word longer, so
+    * contamination (J = 1 included) does occur. A train text held twice
+    * is copied twice under one id, so one benchmark array carries a
+    * repeated id.
+    */
+  private def benchFor(train: List[(Long, String)]): Gen[List[(Long, String)]] =
+    Gen.frequency(1 -> Gen.const(Nil), 3 -> (for {
+      c <- corpusGen.flatMap(withOddRows)
+      copied <- Gen.someOf(train.map(_._2).filter(_ != null))
+    } yield (100L, "beta") :: (101L, null: String) ::
+      copied.toList.flatMap(x => List((102L, x), (103L, x + " mu"))) ++ c))
+
+  /** Set-level mirror of NativeHash.shingleHashes ∘ Text.tokens at n = 2. */
+  private def bigrams(text: String): Set[String] = {
+    val tk = Option(text).fold(Array.empty[String])(_.toLowerCase.split("\\s+").filter(_.nonEmpty))
+    if (tk.length < 2) Set.empty else tk.sliding(2).map(_.mkString(" ")).toSet
+  }
+
+  private def multiset[A](rows: Seq[A]): Map[A, Int] =
+    rows.groupBy(identity).view.mapValues(_.size).toMap
+
   property("crossPairs equals the quadratic cross-corpus ground truth") =
-    forAll(corpusGen, corpusGen, Gen.oneOf(0.3, 0.5)) { (l, r, t) =>
+    forAll(for {
+      l <- corpusGen.flatMap(withOddRows)
+      r <- benchFor(l)
+      t <- Gen.oneOf(0.3, 0.5, 1.0)
+    } yield (l, r, t)) { case (l, r, t) =>
       import graft.operators.JaccardDedup
-      // mirror of NativeHash.shingleHashes ∘ Text.tokens at the set level
-      def sh(text: String): Set[String] = {
-        val tk = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
-        if (tk.length < 2) Set.empty else tk.sliding(2).map(_.mkString(" ")).toSet
-      }
-      val want = (for {
+      // one row per (left row, right row) pair at J ≥ t; Spark divides
+      // the same two ints, so the jaccard values compare exactly
+      val want = for {
         (il, tl) <- l; (ir, tr) <- r
-        a = sh(tl); b = sh(tr) if a.nonEmpty && b.nonEmpty
+        a = bigrams(tl); b = bigrams(tr) if a.nonEmpty && b.nonEmpty
         c = (a & b).size
         j = c.toDouble / (a.size + b.size - c) if j >= t
-      } yield (il, ir, math.rint(j * 1e6) / 1e6)).toSet
+      } yield (il, ir, j)
       val got = JaccardDedup.crossPairs(
-          l.toDF("doc_id", "text"), "doc_id",
-          r.map { case (id, x) => (id + 1000L, x) }.toDF("bench_id", "text"), "bench_id",
+          l.toDF("doc_id", "text"), "doc_id", r.toDF("bench_id", "text"), "bench_id",
           "text", 2, t)
-        .select(col("left_id"), col("right_id"), round(col("jaccard"), 6).as("j"))
-        .as[(Long, Long, Double)].collect()
-        .map { case (a, b, j) => (a, b - 1000L, j) }.toSet
-      got == want
+        .as[(Long, Long, Double)].collect().toSeq
+      multiset(got) == multiset(want)
     }
 
   property("decontaminate equals the quadratic ground truth as a multiset of kept rows") =
     forAll(for {
-      // corpus rows plus rows reusing corpus ids with other texts: null,
-      // empty, one word (shorter than the 2-gram) or a corpus text
-      train <- corpusGen.flatMap { docs =>
-        Gen.listOfN(4, Gen.zip(Gen.choose(0L, 12L),
-            Gen.oneOf(Gen.const(null: String), Gen.const(""), Gen.const("alpha"),
-              Gen.oneOf(docs.map(_._2)))))
-          .map(extra => docs ++ extra)
-      }
-      // empty, or a corpus plus copies of some train texts, verbatim and
-      // one word longer, so contamination (J = 1 included) does occur
-      bench <- Gen.frequency(1 -> Gen.const(Nil), 3 -> (for {
-        c <- corpusGen
-        copied <- Gen.someOf(train.map(_._2).filter(_ != null))
-      } yield (100L, "beta") :: (101L, null: String) ::
-        copied.toList.flatMap(x => List((102L, x), (103L, x + " mu"))) ++ c))
+      train <- corpusGen.flatMap(withOddRows)
+      bench <- benchFor(train)
       t <- Gen.oneOf(0.3, 0.5, 1.0)
     } yield (train, bench, t)) { case (train, bench, t) =>
       import graft.operators.JaccardDedup
-      def sh(text: String): Set[String] = {
-        val tk = Option(text).fold(Array.empty[String])(_.toLowerCase.split("\\s+").filter(_.nonEmpty))
-        if (tk.length < 2) Set.empty else tk.sliding(2).map(_.mkString(" ")).toSet
-      }
-      val benchSh = bench.map(b => sh(b._2)).filter(_.nonEmpty)
-      val dirty = train.collect { case (id, x) if sh(x).nonEmpty && benchSh.exists { b =>
-          val a = sh(x); val c = (a & b).size
+      val benchSh = bench.map(b => bigrams(b._2)).filter(_.nonEmpty)
+      val dirty = train.collect { case (id, x) if bigrams(x).nonEmpty && benchSh.exists { b =>
+          val a = bigrams(x); val c = (a & b).size
           c.toDouble / (a.size + b.size - c) >= t
         } => id }.toSet
-      def multiset(rows: Seq[(Long, String)]) = rows.groupBy(identity).view.mapValues(_.size).toMap
       val got = JaccardDedup.decontaminate(
           train.toDF("doc_id", "text"), "doc_id",
           bench.toDF("bench_id", "text"), "bench_id", "text", 2, t)

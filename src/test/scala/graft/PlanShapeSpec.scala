@@ -214,28 +214,30 @@ class PlanShapeSpec extends AnyFunSuite {
     sealWin(winOut)
   }
 
-  test("crossPairs: broadcast bench prefixes, rarity-order positions, merge-walk verify") {
+  test("crossPairs: broadcast bench index, no rarity window or cache, merge-walk verify") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val bench = docs.filter(col("doc_id") % 10 === 0)
       .select(col("doc_id").as("bench_id"), col("text"))
     val p = plan(graft.operators.JaccardDedup.crossPairs(
       docs, "doc_id", bench, "bench_id", "text", nGram = 2, threshold = 0.5))
-    // the benchmark side must broadcast twice (prefix join + verify
-    // join) — the train side never shuffles for either join
+    // the benchmark side broadcasts twice (bench arrays for the verify,
+    // array → bench ids for the listing) — the train side never
+    // shuffles for either join
     assert(nodes(p, "BroadcastHashJoin") >= 2, s"plan:\n$p")
-    // PPJoin prefix machinery: per-doc positions under the global
-    // rarity order, and the early-exit sorted merge walk verify (the
-    // pre-r13 plan counted raw co-occurrences and had neither)
-    assert(p.contains("row_number"), s"plan:\n$p")
+    // the early-exit sorted merge walk verify
     assert(p.contains("sorted_intersect_at_least"), s"plan:\n$p")
-    assert(!p.contains("LocalTableScan"), s"plan:\n$p")
+    // the train side probes a benchmark-only prefix index: no rarity
+    // window over the train corpus and no per-call cache
+    assert(!p.contains("row_number"), s"plan:\n$p")
+    assert(nodes(p, "Window") == 0, s"plan:\n$p")
+    assert(!p.contains("InMemoryRelation"), s"plan:\n$p")
   }
 
   test("decontaminate (boolean containment, jaccard never kept): early-exit walk only, no full count") {
     // r14 VERDICT audit: could the α-bound pre-filter ALSO plan via
     // sorted_intersect_at_least when the jaccard value is not kept?
-    // Answer — it already does: crossPairs hand-plans the early-exit
+    // Answer — it already does: decontaminate hand-plans the early-exit
     // walk (alpha = the exact J-threshold equivalent, Eps-guarded), the
     // jaccard filter is arithmetic on the walk's returned count, and
     // column pruning drops the value. So the boolean containment
