@@ -1692,9 +1692,10 @@ object SparkEntry {
     // pattern): the r13 10× soak measured the direct prefix self-join
     // at 29.7× wall on 10× data (the suite's one super-linear query);
     // OverlapJoin.pairsClustered generates candidates at cluster
-    // granularity (exact-set collapse + verified-LSH contraction +
-    // (element, cluster) DISTINCT rarity-order postings + union bound)
-    // and only verified member pairs pay doc-level work
+    // granularity (ClusterDedup's pair core under the overlap
+    // predicate: exact-set collapse + verified-LSH contraction +
+    // (element, cluster) DISTINCT rarity-order postings + member-anchor
+    // bound) and only verified member pairs pay doc-level work
     "overlap_join_clustered" -> ((s, dir) =>
       OverlapJoin.pairsClustered(
           docs(s, dir).select(col("doc_id"), col("text")), "doc_id",

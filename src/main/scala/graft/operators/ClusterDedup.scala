@@ -6,51 +6,65 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{NativeHash, Text}
 
-/** Duplicate-CLUSTER labeling (exact n-gram-Jaccard connected
-  * components) with a replication-proof candidate path.
+/** The clustered pair core: exact pair predicates over sorted-distinct
+  * hash sets with a replication-proof candidate path. One core runs
+  * under two [[ClusterDedup.PairPredicate]]s:
+  *   - `Jaccard(t)` — J ≥ t: duplicate-CLUSTER labels ([[components]],
+  *     [[componentsIncremental]]), the pair listing ([[pairsClustered]])
+  *     and per-doc retrieval ([[topKBy]]);
+  *   - `Overlap(k)` — |A∩B| ≥ k: the absolute set-overlap join behind
+  *     [[OverlapJoin]].
+  * PPJoin (Xiao et al., WWW 2008) derives its prefix, size and
+  * positional filters for any overlap-constrained similarity; the two
+  * predicates differ only in the overlap bound α(n_a, n_b), the prefix
+  * length, the size filter and the output score, which is all a
+  * predicate supplies.
   *
-  * The direct pipeline — [[JaccardDedup.nearDupPairs]] then
-  * [[Components.connectedComponents]] — is exact but its candidate join
-  * costs Σ_s dfP(s)² over prefix-shingle document frequencies. That is
-  * the wrong shape for the corpora clustering is FOR: boilerplate-heavy
-  * crawls where the same page recurs with small edits. g near-identical
-  * copies multiply every prefix df by g, so candidates (and the
-  * pair-distinct exchange, and the verify) grow g² — measured on the
-  * 10×-replicated soak corpus: 634M raw candidates vs 6.3M at 1×, 332 s
-  * vs ~2 s. This operator returns the IDENTICAL labeling with candidate
-  * volume back at the distinct-content level:
+  * The direct pipelines — [[JaccardDedup.nearDupPairs]] (then
+  * [[Components.connectedComponents]]) and [[JaccardDedup.overlapJoin]]
+  * — are exact, but their candidate join costs Σ_s dfP(s)² over prefix
+  * element document frequencies. That is the wrong shape for the
+  * corpora clustering is FOR: boilerplate-heavy crawls where the same
+  * page recurs with small edits. g near-identical copies multiply every
+  * prefix df by g, so candidates (and the pair-distinct exchange, and
+  * the verify) grow g² — measured on the 10×-replicated soak corpus:
+  * 634M raw candidates vs 6.3M at 1×, 332 s vs ~2 s (the overlap join
+  * measured 29.7× wall on 10× data). This core returns the IDENTICAL
+  * output with candidate volume back at the distinct-content level:
   *
-  *   1. EXACT-SET COLLAPSE — group docs by their full sorted
-  *      shingle-hash array. Set-identical docs have J = 1 (≥ any
-  *      t ∈ (0,1]) with each other and identical J against everything
-  *      else, so each group contracts to its min-id representative.
-  *      Empty shingle sets are excluded: J = 0/0 is no-edge (matching
-  *      the pair operator, whose explode drops them), so those docs
-  *      stay isolated singletons.
+  *   1. EXACT-SET COLLAPSE — group docs by their full sorted hash
+  *      array. Set-identical docs qualify with each other (J = 1 ≥ any
+  *      t ∈ (0,1]; overlap = n ≥ k) and score identically against
+  *      everything else, so each group contracts to its min-id
+  *      representative and fans back out at the end. Docs the
+  *      predicate rules out never pair: empty sets for Jaccard (J = 0/0
+  *      is no-edge, matching the pair operator, whose explode drops
+  *      them — [[components]] keeps them as isolated singletons), sets
+  *      shorter than k for overlap.
   *   2. LSH CONTRACTION — MinHash band buckets over representatives;
   *      candidates are STAR edges (member → bucket-min hub, O(docs ×
   *      bands), never bucket all-pairs — all-pairs is quadratic in
-  *      replication, the very pathology this operator removes),
-  *      exact-verified at the USER threshold t, then ONE
-  *      star-contraction pass (cl(x) = min(x, min t-neighbor)).
-  *      Contraction is valid whenever each contracted set lies inside
+  *      replication, the very pathology this core removes),
+  *      exact-verified under the predicate, then ONE star-contraction
+  *      pass (cl(x) = min(x, min qualifying neighbor)). For labels the
+  *      contraction is valid whenever each contracted set lies inside
   *      one t-component — true t-edges to a shared hub give exactly
   *      that — so LSH recall (the reason banding can't replace the
   *      exact join) costs nothing here: missed edges only mean less
   *      contraction, caught ones collapse the near-identical cliques
-  *      that cause g². Verification keeps soundness: a bucket-collision
-  *      pair with true J < t is never used as an edge.
+  *      that cause g². For pair listings ANY partition is correct
+  *      (steps 3-5 enumerate all cluster pairs losslessly and verify
+  *      every member pair); clustering quality only buys pruning power.
   *   3. CLUSTER-LEVEL CANDIDATES — the PPJoin prefix index
-  *      ([[JaccardDedup.prefixIndex]], same global rarity order, so the
-  *      same losslessness proof applies to every member pair) projected
-  *      to (shingle, cluster) DISTINCT. g collapsed copies post each
-  *      prefix shingle once, so the self-join is Σ_s dfC(s)² over
+  *      ([[JaccardDedup.prefixIndex]], global rarity order, so the same
+  *      losslessness proof applies to every member pair) projected to
+  *      (element, cluster) DISTINCT. g collapsed copies post each
+  *      prefix element once, so the self-join is Σ_s dfC(s)² over
   *      CLUSTER frequencies — the g² term is gone. A cluster-level size
-  *      filter (some member pair could satisfy t·max ≤ min) prunes
-  *      pairs no member pair can qualify for.
+  *      filter prunes pairs no member pair can qualify for.
   *   4. SOUND CLUSTER-PAIR BOUND — one early-exit merge walk over the
-  *      two clusters' ANCHOR docs (each cluster's min-id MEMBER's
-  *      shingle set) plus per-cluster max member-vs-anchor diffs:
+  *      two clusters' ANCHOR docs (each cluster's min-id MEMBER's set)
+  *      plus per-cluster max member-vs-anchor diffs:
   *      c(x,y) ≤ |H_A∩H_B| + maxD_A + maxD_B for every member pair, so
   *      a walk that can't reach αmin − maxD_A − maxD_B retires the
   *      cluster pair without touching |A|·|B| member pairs. Single-doc
@@ -63,22 +77,28 @@ import graft.functions.{NativeHash, Text}
   *      prune is an optimization, never a correctness arm
   *      (`prune = false` disables it; exactness tests run both arms).
   *   5. EXACT VERIFY — ambiguous surviving cluster pairs expand to
-  *      member pairs, re-checked at exactly [[JaccardDedup]]'s α bound
-  *      (same ±1e-9 fp guards); pairs whose anchor walk already proved
-  *      a J ≥ t anchor edge (the WITNESS of step 4) are cluster edges
-  *      with no expansion at all on the components path. Anchor-gated
-  *      pairs verify through the DIFF identity (each member carried as
-  *      edit-sized diffs against its cluster anchor; the pair's exact
-  *      count reassembled from the prune's anchor walk — see
-  *      [[verifiedMemberPairs]] and
+  *      member pairs, re-checked at exactly the direct operators' α
+  *      bound (same ±1e-9 fp guards for Jaccard); pairs whose anchor
+  *      walk already proved a qualifying anchor pair (the WITNESS of
+  *      step 4) are cluster edges with no expansion at all on the
+  *      components path. Anchor-gated pairs verify through the DIFF
+  *      identity (each member carried as edit-sized diffs against its
+  *      cluster anchor; the pair's exact count reassembled from the
+  *      prune's anchor walk — see [[verifiedMemberPairs]] and
   *      [[graft.functions.NativeHash.SortedDiffHelper]]), so the
-  *      member-pair join never ships full shingle arrays; bypass pairs
-  *      keep the direct early-exit walk. True cross-cluster edges + the
-  *      contraction edges of steps 1-2 span the same components as the
-  *      full t-graph, so the final labels — min reachable id through
-  *      cluster-graph components — equal the direct pipeline's.
+  *      member-pair join never ships full arrays; bypass pairs keep the
+  *      direct early-exit walk. Intra-cluster member pairs are
+  *      verified too (star contraction guarantees hub adjacency, not
+  *      cliqueness). True cross-cluster edges + the contraction edges
+  *      of steps 1-2 span the same components as the full t-graph, so
+  *      the final labels — min reachable id through cluster-graph
+  *      components — equal the direct pipeline's.
   *
-  * Scale shape: every step is a narrow-key shuffle (shingle hash,
+  * An adaptive route (see [[RouteContractRatio]]) runs the direct
+  * prefix self-join over the collapsed reps instead of steps 2-5 when
+  * contraction cannot pay; both routes are exact and row-identical.
+  *
+  * Scale shape: every step is a narrow-key shuffle (element hash,
   * cluster id) or a bounded per-cluster aggregate; no driver
   * materialization anywhere (components themselves go through
   * [[Components]]' adaptive local/distributed arms).
@@ -158,6 +178,69 @@ object ClusterDedup {
     */
   private[operators] val DirectCandCap = 32L * 1000 * 1000
 
+  /** The pair predicate the core runs under. A pair of set sizes
+    * (n_a, n_b) qualifies only with overlap c ≥ α(n_a, n_b), and under
+    * any fixed global element order two such sets share an element
+    * inside the first `prefixLen(n)` elements of each (PPJoin's prefix
+    * filter). Jaccard ≥ t and |A∩B| ≥ k differ in α, the prefix length,
+    * the size filter and the output score — everything here.
+    */
+  private[graft] sealed trait PairPredicate {
+    /** Docs of size n that can be in a qualifying pair. */
+    def eligible(n: Column): Column
+    def prefixLen(n: Column): Column
+    /** α(n_a, n_b), increasing in both sizes (cast to int where a walk
+      * bound needs it). */
+    def alpha(na: Column, nb: Column): Column
+    /** Size filter: a doc of size `big` can qualify with one of size
+      * `small` ≤ `big` only where this holds. */
+    def fits(big: Column, small: Column): Column
+    def scoreCol: String
+    /** Output score of a verified pair with overlap c. */
+    def score(c: Column, na: Column, nb: Column): Column
+    def keep(score: Column): Column
+    /** Score of two docs holding the same size-n set (always kept). */
+    def identical(n: Column): Column
+  }
+
+  /** J = c / (n_a + n_b − c) ≥ t with [[JaccardDedup]]'s ±[[Eps]]
+    * guards: α = ⌈t(n_a+n_b)/(1+t)⌉, prefix n − ⌈t·n⌉ + 1, size filter
+    * t·max ≤ min. */
+  private[graft] final case class Jaccard(threshold: Double) extends PairPredicate {
+    def eligible(n: Column): Column = n > 0
+    def prefixLen(n: Column): Column = n - ceil(n * threshold - lit(Eps)) + 1
+    def alpha(na: Column, nb: Column): Column =
+      ceil((na + nb) * (threshold / (1.0 + threshold)) - lit(Eps))
+    def fits(big: Column, small: Column): Column = big * threshold <= small + lit(Eps)
+    def scoreCol: String = "jaccard"
+    def score(c: Column, na: Column, nb: Column): Column = c / (na + nb - c)
+    def keep(score: Column): Column = score >= threshold
+    def identical(n: Column): Column = lit(1.0)
+  }
+
+  /** |A∩B| ≥ k: α = k, prefix n − k + 1, sets shorter than k never
+    * qualify and any two longer ones fit. */
+  private[graft] final case class Overlap(k: Int) extends PairPredicate {
+    require(k >= 1, "minOverlap must be >= 1")
+    def eligible(n: Column): Column = n >= k
+    def prefixLen(n: Column): Column = n - k + 1
+    def alpha(na: Column, nb: Column): Column = lit(k)
+    def fits(big: Column, small: Column): Column = lit(true)
+    def scoreCol: String = "overlap"
+    def score(c: Column, na: Column, nb: Column): Column = c.cast("long")
+    def keep(score: Column): Column = score >= k
+    def identical(n: Column): Column = n.cast("long")
+  }
+
+  /** `Jaccard(t)` for the clustered paths. The exact-set collapse merges
+    * identical sets (J = 1) unconditionally, which matches the direct
+    * pipeline only for t ∈ (0, 1] — it emits no pair at all for t > 1.
+    */
+  private def jaccard(t: Double): Jaccard = {
+    require(t > 0 && t <= 1, "threshold must be in (0, 1]")
+    Jaccard(t)
+  }
+
   /** Lazy intermediate frames of the candidate path, captured so
     * PlanShapeSpec can pin the scale-shape claims on
     * `explain("formatted")` (cluster-keyed postings aggregate, bound
@@ -188,26 +271,36 @@ object ClusterDedup {
       NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
       threshold, numHashes, numBands, prune, adaptive)._1
 
+  /** What both routes of the core hand their consumers; [[release]]
+    * runs AFTER the consumer's own output is eagerly cut.
+    */
+  private sealed trait Routed {
+    def hashed: DataFrame // (id, __sh, n) — all docs, persisted
+    def docRep: DataFrame // (id, n, rep) — exact-set collapse, eligible docs
+    def cuts: Seq[DataFrame]
+    def release(): Unit = {
+      hashed.unpersist(false)
+      cuts.foreach(Par.free)
+    }
+  }
+
   /** Candidate-path frames shared by [[components]] and
-    * [[pairsClustered]]: everything through the anchor-bound prune
+    * [[pairsClusteredPlan]]: everything through the anchor-bound prune
     * (steps 1-4 of the object doc), plus the bookkeeping the consumers
-    * need to verify, fan out, and release resources. The heavy frames
-    * are already lineage-cut; `persisted`/`cuts` are released by the
-    * consumer AFTER its own output is eagerly cut.
+    * need to verify and fan out. The heavy frames are already
+    * lineage-cut.
     */
   private final case class Core(
-      hashed: DataFrame,     // (id, __sh, n) — all docs, persisted
-      docRep: DataFrame,     // (id, rep) — exact-set collapse, non-empty docs
-      reps: DataFrame,       // (id, __sh, n) — one per distinct set
+      hashed: DataFrame,
+      docRep: DataFrame,
       repCluster: DataFrame, // (id, cl) — LSH star contraction of reps
       member: DataFrame,     // (id, __sh, n, cl)
       anchors: DataFrame,    // (cl, __hsh, __hn)
       diffs: DataFrame,      // (cl, id, n, __hn, __dm, __dp) — member-vs-anchor diffs
       pruned: DataFrame,     // (cl_a, cl_b, __wit, __hc, size stats) surviving the bound
-      threshold: Double,
+      pred: PairPredicate,
       probes: Probes,
-      persisted: Seq[DataFrame],
-      cuts: Seq[DataFrame])
+      cuts: Seq[DataFrame]) extends Routed
 
   /** The ADAPTIVE direct arm (see [[RouteContractRatio]]): the exact
     * rep-level pair stream through the plain PPJoin prefix pipeline —
@@ -216,11 +309,10 @@ object ClusterDedup {
     * the clustered arm does.
     */
   private final case class DirectCore(
-      hashed: DataFrame, // (id, __sh, n) — all docs, persisted
-      docRep: DataFrame, // (id, rep) — exact-set collapse, non-empty docs
-      pairs: DataFrame,  // (ra, rb, jaccard) exact rep pairs — LAZY
-      persisted: Seq[DataFrame],
-      cuts: Seq[DataFrame])
+      hashed: DataFrame,
+      docRep: DataFrame,
+      pairs: DataFrame, // (ra, rb, score) exact rep pairs — LAZY
+      cuts: Seq[DataFrame]) extends Routed
 
   /** [[components]] plus the candidate-path [[Probes]] — the
     * PlanShapeSpec hook, pinned on the CLUSTERED arm (adaptive routing
@@ -252,7 +344,7 @@ object ClusterDedup {
       prune: Boolean,
       adaptive: Boolean): (DataFrame, Option[Probes]) = {
     candidateCore(df, idCol, shingleExpr,
-        threshold, numHashes, numBands, prune, adaptive) match {
+        jaccard(threshold), numHashes, numBands, prune, adaptive) match {
       case Left(d) => (componentsDirect(d), None)
       case Right(core) => componentsClustered(core)
     }
@@ -275,13 +367,12 @@ object ClusterDedup {
     val isolated = d.hashed.where(col("n") === 0)
       .select(col("id"), col("id").as("component"))
     val out = Par.cut(labeled.union(isolated), "cluster: labels out(direct)")
-    d.persisted.foreach(_.unpersist(false))
-    (d.cuts :+ clComp).foreach(Par.free)
+    d.release()
+    Par.free(clComp)
     out
   }
 
   private def componentsClustered(core: Core): (DataFrame, Option[Probes]) = {
-    val threshold = core.threshold
     // ---- 5. exact member verification of surviving cluster pairs ----
     // (connectivity only: the ids and jaccard values are dropped — the
     // pair-listing consumer keeps them, see pairsClustered). Witnessed
@@ -290,7 +381,7 @@ object ClusterDedup {
     val witnessed = core.pruned.where(col("__wit")).select(col("cl_a"), col("cl_b"))
     val crossEdges = Par.cut(witnessed.union(
       verifiedMemberPairs(core.pruned.where(!col("__wit")), core.member,
-          core.diffs, core.anchors, threshold)
+          core.diffs, core.anchors, core.pred)
         .select(col("cl_a"), col("cl_b")).distinct()), "cluster: verify cross edges")
 
     // ---- assemble: cluster-graph components, then fan labels back out
@@ -310,11 +401,11 @@ object ClusterDedup {
     val isolated = core.hashed.where(col("n") === 0)
       .select(col("id"), col("id").as("component"))
     val out = Par.cut(labeled.union(isolated), "cluster: labels out")
-    core.persisted.foreach(_.unpersist(false))
+    core.release()
     // clComp is itself a cut (connectedComponents' sealed result) with
     // no consumer beyond `out` — freeing it here closes a per-call
     // block leak in long-lived sessions (the semanticDedup seal rule)
-    (core.cuts :+ crossEdges :+ clComp).foreach(Par.free)
+    Seq(crossEdges, clComp).foreach(Par.free)
     (out, Some(core.probes))
   }
 
@@ -390,7 +481,7 @@ object ClusterDedup {
       numBands: Int = 16,
       prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
+    val pred = jaccard(threshold)
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val hashed = Par.widen(
         base.select(col(idCol).as("id"), col(textCol).as("__t"), lit(false).as("__d"))
@@ -431,7 +522,7 @@ object ClusterDedup {
     // measured 409 s doc-level vs 116 s clustered).
     val prefIndex = nonEmpty.select(col("id"), explode(col("__sh")).as("s"),
       col("n"), col("__d"))
-    val prefix = JaccardDedup.prefixIndex(prefIndex, "id", threshold, keep = Seq("__d"))
+    val prefix = JaccardDedup.prefixIndex(prefIndex, "id", pred, keep = Seq("__d"))
       .persist(MEMORY_AND_DISK)
     val routeDirect = adaptive && {
       val cv = Par.labeled(base.sparkSession, "inc: candVol probe")(
@@ -449,24 +540,22 @@ object ClusterDedup {
         col("n").as("__na"), col("pos").as("__pa"))
       val b = prefix.select(col("s").as("__sb"), col("id").as("ib"),
         col("n").as("__nb"), col("pos").as("__pb"))
-      val alphaC = ceil((col("__na") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
       val cand = a.join(b,
           col("__sa") === col("__sb") &&
           col("ia") =!= col("ib") &&
-          greatest(col("__na"), col("__nb")) * threshold <=
-            least(col("__na"), col("__nb")) + lit(Eps) &&
-          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >= alphaC)
+          pred.fits(greatest(col("__na"), col("__nb")), least(col("__na"), col("__nb"))) &&
+          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >=
+            pred.alpha(col("__na"), col("__nb")))
         .select(least(col("ia"), col("ib")).as("id_a"),
           greatest(col("ia"), col("ib")).as("id_b"))
         .distinct()
-      val alphaD = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-        .cast("int")
+      val alphaD = pred.alpha(col("n_a"), col("n_b")).cast("int")
       val deltaPairs = cand
         .join(nonEmpty.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
         .join(nonEmpty.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
         .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"), alphaD))
         .filter(col("c") >= 0)
-        .filter(col("c") / (col("n_a") + col("n_b") - col("c")) >= threshold)
+        .filter(pred.keep(pred.score(col("c"), col("n_a"), col("n_b"))))
         .select("id_a", "id_b")
       // baseLabels' star edges (id → component) ARE the base-internal
       // connectivity; self-loops (singletons) drop in the components
@@ -498,16 +587,14 @@ object ClusterDedup {
       .withColumn("__hub", min(col("id")).over(bucketW))
       .filter(col("__hub") < col("id"))
       .select(col("__hub").as("id_a"), col("id").as("id_b")).distinct()
-    val alphaV = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-      .cast("int")
     val starEdges = lshCand
       .join(nonEmpty.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
       .join(nonEmpty.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-      .filter(greatest(col("n_a"), col("n_b")) * threshold <=
-        least(col("n_a"), col("n_b")) + lit(Eps))
-      .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"), alphaV))
+      .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
+      .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"),
+        pred.alpha(col("n_a"), col("n_b")).cast("int")))
       .filter(col("c") >= 0)
-      .filter(col("c") / (col("n_a") + col("n_b") - col("c")) >= threshold)
+      .filter(pred.keep(pred.score(col("c"), col("n_a"), col("n_b"))))
       .select("id_a", "id_b")
 
     // star label per doc: the batch core's one-pass contraction
@@ -550,13 +637,13 @@ object ClusterDedup {
     // probe's persisted prefix index is REUSED as the postings source
     // (cluster labels join on by id — the batch core's pattern), so the
     // dfreq count + per-doc rarity window run once per call
-    val cc = clusterCandidatePlan(member, threshold, prune, requireDelta = true,
+    val cc = clusterCandidatePlan(member, pred, prune, requireDelta = true,
       prefix = Some(prefix))
     val pruned = Par.cut(cc.prunePlan(cc.candCl), "inc: prune")
     val witnessed = pruned.where(col("__wit")).select(col("cl_a"), col("cl_b"))
     val crossEdges = Par.cut(witnessed.union(
       verifiedMemberPairs(pruned.where(!col("__wit")), member,
-          cc.diffs, cc.anchors, threshold, deltaOnly = true)
+          cc.diffs, cc.anchors, pred, deltaOnly = true)
         .select(col("cl_a"), col("cl_b")).distinct()), "inc: verify cross edges")
 
     // final labels: the pre-contraction's (id → cl) star edges carry
@@ -581,15 +668,7 @@ object ClusterDedup {
   /** The exact J ≥ threshold pair LISTING — (id_a, id_b, jaccard),
     * id_a < id_b — through the same replication-proof candidate path.
     * Row-identical to `JaccardDedup.nearDupPairs(df, idCol, textCol,
-    * nGram, threshold)`: cross-cluster member pairs of bound-surviving
-    * cluster pairs plus intra-cluster member pairs all run the exact
-    * early-exit merge walk (star contraction guarantees hub adjacency,
-    * not cliqueness — intra-cluster pairs are verified, never assumed),
-    * then results fan out through the exact-set collapse: members of a
-    * collapsed group share their set, so a rep-level pair's jaccard IS
-    * each expanded pair's jaccard, and intra-group pairs are J = 1
-    * exactly (n > 0 by construction; the direct operator computes
-    * n/(2n−n) = 1 for them).
+    * nGram, threshold)`: see [[pairsClusteredPlan]].
     *
     * Pair listing has Ω(output) cost and the output itself is quadratic
     * in near-duplication (g replicas → g² pairs) — what this path
@@ -630,24 +709,17 @@ object ClusterDedup {
       prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
     val (pairs, seal) = pairsClusteredPlan(df, idCol, shingleExpr,
-      threshold, numHashes, numBands, prune, adaptive)
+      jaccard(threshold), numHashes, numBands, prune, adaptive)
     seal(pairs)
   }
 
   /** Bounded-output near-dup RETRIEVAL: for each document, its `k`
     * most-similar partners (jaccard DESC, ties by ascending partner
     * id) among pairs at J ≥ `threshold`. Output (id, partner_id,
-    * jaccard, rk). The [[graft.operators.OverlapJoin.topK]] pattern on
-    * the Jaccard family: pair LISTING is Ω(output) and output is
-    * quadratic in near-duplication (the chargram listing measured 71×
-    * wall at 100× replication, all of it qualifying output) — the
-    * retrieval variant bounds output at n·k and the row_number filter
-    * plans as a WindowGroupLimit, so per-task partial top-k runs
-    * before the window exchange and the full listing never
-    * materializes (the candidate plan seals only AFTER the window).
-    * Cross-engine rank determinism: jaccard is one double division of
-    * exact integers (c / (n_a + n_b − c)) in both engines, so the
-    * ordering key is bit-identical.
+    * jaccard, rk) — see [[topKPlan]]. Cross-engine rank determinism:
+    * jaccard is one double division of exact integers
+    * (c / (n_a + n_b − c)) in both engines, so the ordering key is
+    * bit-identical.
     */
   def topKBy(
       df: DataFrame,
@@ -659,31 +731,12 @@ object ClusterDedup {
       numBands: Int = 16,
       prune: Boolean = true,
       viaAgg: Boolean = true,
-      adaptive: Boolean = true): DataFrame = {
-    val (lazyOut, seal) = topKPlanBy(df, idCol, shingleExpr, threshold, k,
-      numHashes, numBands, prune, viaAgg, adaptive)
-    // cloned-session-scoped, never the caller's session: the raise is
-    // only safe around an O(k)-buffer aggregate (see
-    // TopKAgg.withHashAggHeadroom)
-    seal(graft.functions.TopKAgg.withHashAggHeadroom(lazyOut))
-  }
+      adaptive: Boolean = true): DataFrame =
+    sealTopK(topKPlanBy(df, idCol, shingleExpr, threshold, k,
+      numHashes, numBands, prune, viaAgg, adaptive))
 
   /** [[topKBy]] split before its seal (PlanShapeSpec pins the plan
     * shape live; the sealed frame's plan is just the checkpoint scan).
-    *
-    * Two row-identical plans, chosen by `viaAgg`:
-    *   - `true` (default, the 100-TB shape): [[TopKAgg.topNeighbors]]
-    *     hash aggregate — one Ω(rows·log k) pass, map-side combined,
-    *     NO sort of the pair stream. The window formulation's partial
-    *     WindowGroupLimit still local-sorts every task's full input,
-    *     which the 100× soak measured at 2.9× the pair LISTING's wall
-    *     (1,380 s vs 475 s); the aggregate removes that sort.
-    *   - `false`: the row_number window (kept measurable — it is the
-    *     plan most engines reach for, and the A/B is the argument).
-    * Both rank by (score DESC, partner ASC); the aggregate's buffer
-    * uses the identical comparator, so outputs are row-identical and
-    * share one oracle. The agg path requires a long-typed id (the
-    * aggregator's input encoder).
     */
   private[graft] def topKPlanBy(
       df: DataFrame,
@@ -695,57 +748,121 @@ object ClusterDedup {
       numBands: Int = 16,
       prune: Boolean = true,
       viaAgg: Boolean = true,
-      adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) = {
+      adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) =
+    topKPlan(df, idCol, shingleExpr, jaccard(threshold), k,
+      numHashes, numBands, prune, viaAgg, adaptive)
+
+  /** Per-doc top-k retrieval over [[pairsClusteredPlan]]: each doc's
+    * `k` best partners (score DESC, ties by ascending partner id),
+    * output (id, partner_id, score, rk), split before its seal.
+    *
+    * Pair LISTING is Ω(output) and output is quadratic in
+    * near-duplication — the 100× soak measured ~1.85B qualifying
+    * overlap pairs from the sf0.1 corpus and the listing (correctly)
+    * filled the disk; the chargram listing measured 71× wall at 100×
+    * replication, all of it qualifying output. Retrieval bounds output
+    * at n·k, and the candidate plan seals only AFTER the bounding step,
+    * so the full listing never materializes. Two row-identical plans,
+    * chosen by `viaAgg`:
+    *   - `true` (default, the 100-TB shape): [[TopKAgg.topNeighbors]]
+    *     hash aggregate — one Ω(rows·log k) pass, map-side combined,
+    *     NO sort of the pair stream. The window formulation's partial
+    *     WindowGroupLimit still local-sorts every task's full input,
+    *     which the 100× soak measured at 2.9× the pair LISTING's wall
+    *     (1,380 s vs 475 s); the aggregate removes that sort.
+    *   - `false`: the row_number window (kept measurable — it is the
+    *     plan most engines reach for, and the A/B is the argument).
+    * Both rank by (score DESC, partner ASC); the aggregate's buffer
+    * uses the identical comparator, so outputs are row-identical and
+    * share one oracle (an overlap rides through the aggregator's double
+    * score losslessly, |overlap| ≪ 2⁵³). The agg path requires a
+    * long-typed id (the aggregator's input encoder).
+    */
+  private[graft] def topKPlan(
+      df: DataFrame,
+      idCol: String,
+      setExpr: Column,
+      pred: PairPredicate,
+      k: Int,
+      numHashes: Int,
+      numBands: Int,
+      prune: Boolean,
+      viaAgg: Boolean,
+      adaptive: Boolean): (DataFrame, DataFrame => DataFrame) = {
     require(k >= 1, "k must be >= 1")
-    val (pairs, seal) = pairsClusteredPlan(df, idCol, shingleExpr,
-      threshold, numHashes, numBands, prune, adaptive)
-    (graft.functions.TopKAgg.perDocTopK(pairs, "jaccard", k, viaAgg), seal)
+    val (pairs, seal) = pairsClusteredPlan(df, idCol, setExpr,
+      pred, numHashes, numBands, prune, adaptive)
+    (graft.functions.TopKAgg.perDocTopK(pairs, pred.scoreCol, k, viaAgg), seal)
   }
 
-  /** The uncut exact pair stream plus the seal that cuts a finished
-    * frame and releases the candidate core — [[topKPlanBy]] applies its
-    * bounded-output window between the two.
+  /** Seal a [[topKPlan]]. The hash-aggregate headroom raise is
+    * cloned-session-scoped, never the caller's session: it is only
+    * safe around an O(k)-buffer aggregate (see
+    * TopKAgg.withHashAggHeadroom).
+    */
+  private[operators] def sealTopK(plan: (DataFrame, DataFrame => DataFrame)): DataFrame =
+    plan._2(graft.functions.TopKAgg.withHashAggHeadroom(plan._1))
+
+  /** The uncut exact pair stream (id_a < id_b, score) plus the seal
+    * that cuts a finished frame and releases the candidate core —
+    * [[topKPlan]] applies its bounded-output step between the two.
+    * Row-identical to the direct twin of `pred`
+    * ([[JaccardDedup.nearDupPairsByHashes]] /
+    * [[JaccardDedup.overlapJoin]]): cross-cluster member pairs of
+    * bound-surviving cluster pairs plus intra-cluster member pairs all
+    * run the exact verify, then results fan out through the exact-set
+    * collapse — members of a collapsed group share their set, so a
+    * rep-level pair's score IS each expanded pair's score, and
+    * intra-group pairs score `pred.identical(n)` (J = 1, overlap = n).
     */
   private[graft] def pairsClusteredPlan(
       df: DataFrame,
       idCol: String,
-      shingleExpr: org.apache.spark.sql.Column,
-      threshold: Double,
+      setExpr: Column,
+      pred: PairPredicate,
       numHashes: Int,
       numBands: Int,
       prune: Boolean,
       adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) = {
-    val coreE = candidateCore(df, idCol, shingleExpr, threshold,
-      numHashes, numBands, prune, adaptive)
-    coreE match {
-      case Left(d) =>
-        // direct route: d.pairs IS the exact rep-level pair stream —
-        // fan it out through the collapse and seal exactly as below
-        val groups = d.docRep
-        val crossGroups = d.pairs
-          .join(groups.select(col("rep").as("ra"), col("id").as("ia")), Seq("ra"))
-          .join(groups.select(col("rep").as("rb"), col("id").as("ib")), Seq("rb"))
-          .select(least(col("ia"), col("ib")).as("id_a"),
-            greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-        val intraGroups = groups.select(col("rep"), col("id").as("id_a"))
-          .join(groups.select(col("rep"), col("id").as("id_b")), Seq("rep"))
-          .filter(col("id_a") < col("id_b"))
-          .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-        return (crossGroups.union(intraGroups), { finished =>
-          val out = Par.cut(finished, "cluster: pairs out(direct)")
-          d.persisted.foreach(_.unpersist(false))
-          d.cuts.foreach(Par.free)
-          out
-        })
-      case Right(_) => ()
+    val (routed, repPairs, outLabel) = candidateCore(df, idCol, setExpr, pred,
+        numHashes, numBands, prune, adaptive) match {
+      // direct route: d.pairs IS the exact rep-level pair stream
+      case Left(d) => (d, d.pairs, "cluster: pairs out(direct)")
+      case Right(core) => (core, clusteredRepPairs(core), "cluster: pairs out")
     }
-    val core = coreE.toOption.get
+    // NO cut on repPairs: it has exactly one consumer (the fan-out join
+    // below) and is output-sized — an eager checkpoint of Ω(output)
+    // rows doubles peak disk for zero reuse (measured filling a 78 GB
+    // disk on the 100× soak corpus); the single final cut on `out` is
+    // what makes the upstream frees safe
 
-    // ---- 5'. exact member verification, KEEPING ids + jaccard ----
+    // ---- fan out through the exact-set collapse ----
+    val groups = routed.docRep // (id, n, rep), eligible docs only
+    val crossGroups = repPairs
+      .join(groups.select(col("rep").as("ra"), col("id").as("ia")), Seq("ra"))
+      .join(groups.select(col("rep").as("rb"), col("id").as("ib")), Seq("rb"))
+      .select(least(col("ia"), col("ib")).as("id_a"),
+        greatest(col("ia"), col("ib")).as("id_b"), col(pred.scoreCol))
+    val intraGroups = groups.select(col("rep"), col("id").as("id_a"), col("n"))
+      .join(groups.select(col("rep"), col("id").as("id_b")), Seq("rep"))
+      .filter(col("id_a") < col("id_b"))
+      .select(col("id_a"), col("id_b"), pred.identical(col("n")).as(pred.scoreCol))
+    (crossGroups.union(intraGroups), { finished =>
+      val out = Par.cut(finished, outLabel)
+      routed.release()
+      out
+    })
+  }
+
+  /** Step 5 of the pair listing on the clustered route: exact rep-level
+    * pairs (ra < rb, score), cross-cluster and intra-cluster.
+    */
+  private def clusteredRepPairs(core: Core): DataFrame = {
+    val pred = core.pred
     val cross = verifiedMemberPairs(core.pruned, core.member,
-        core.diffs, core.anchors, threshold)
+        core.diffs, core.anchors, pred)
       .select(least(col("ida"), col("idb")).as("ra"),
-        greatest(col("ida"), col("idb")).as("rb"), col("jaccard"))
+        greatest(col("ida"), col("idb")).as("rb"), col(pred.scoreCol))
     // intra-cluster pairs: the cluster exists because members share a
     // hub, not because they pairwise qualify — verify each pair. The
     // DIFF identity with both sides on the SAME anchor H collapses to
@@ -755,49 +872,23 @@ object ClusterDedup {
     // diffs instead of full member arrays — this was THE dominant
     // verify volume on the 100× soak (the family contracts into one
     // cluster, so its quadratic lives here, not in the cross arm)
-    val alphaV = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-      .cast("int")
+    val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
     val intra = core.diffs.select(col("cl"), col("id").as("ra"), col("n").as("n_a"),
         col("__hn"), col("__dm").as("__dma"), col("__dp").as("__dpa"))
       .join(core.diffs.select(col("cl"), col("id").as("rb"), col("n").as("n_b"),
         col("__dm").as("__dmb"), col("__dp").as("__dpb")), Seq("cl"))
       .filter(col("ra") < col("rb"))
-      .filter(greatest(col("n_a"), col("n_b")) * threshold <=
-        least(col("n_a"), col("n_b")) + lit(Eps))
+      .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
       // sound pre-walk bound: correction ≤ min(|dM_a|,|dM_b|) +
       // min(|dP_a|,|dP_b|), so c ≤ |H| − max(|dM|) + min(|dP|)
       .filter(col("__hn") - greatest(size(col("__dma")), size(col("__dmb"))) +
         least(size(col("__dpa")), size(col("__dpb"))) >= alphaV)
       .withColumn("c", col("__hn") - size(col("__dma")) - size(col("__dmb")) +
         NativeHash.diffCorrection(col("__dma"), col("__dpa"), col("__dmb"), col("__dpb")))
-      .withColumn("jaccard", col("c") / (col("n_a") + col("n_b") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("ra"), col("rb"), col("jaccard"))
-    // NO cut: repPairs has exactly one consumer (the fan-out join
-    // below) and is output-sized — an eager checkpoint of Ω(output)
-    // rows doubles peak disk for zero reuse (the overlap twin measured
-    // exactly that filling a 78 GB disk on the 100× soak corpus); the
-    // single final cut on `out` is what makes the upstream frees safe
-    val repPairs = cross.union(intra)
-
-    // ---- fan out through the exact-set collapse ----
-    val groups = core.docRep // (id, rep), non-empty docs only
-    val crossGroups = repPairs
-      .join(groups.select(col("rep").as("ra"), col("id").as("ia")), Seq("ra"))
-      .join(groups.select(col("rep").as("rb"), col("id").as("ib")), Seq("rb"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("jaccard"))
-    val intraGroups = groups.select(col("rep"), col("id").as("id_a"))
-      .join(groups.select(col("rep"), col("id").as("id_b")), Seq("rep"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    val pairsOut = crossGroups.union(intraGroups)
-    (pairsOut, { finished =>
-      val out = Par.cut(finished, "cluster: pairs out")
-      core.persisted.foreach(_.unpersist(false))
-      core.cuts.foreach(Par.free)
-      out
-    })
+      .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
+      .filter(pred.keep(col(pred.scoreCol)))
+      .select(col("ra"), col("rb"), col(pred.scoreCol))
+    cross.union(intra)
   }
 
   /** Shared step 5 verify: expand bound-surviving cluster pairs to
@@ -828,18 +919,17 @@ object ClusterDedup {
     *
     * Exactness: every diff-arm term is an exact set cardinality, so the
     * assembled count is the same integer the direct walk returns and
-    * the jaccard division sees identical operands — bit-identical
-    * doubles, one oracle. Returns (cl_a, cl_b, ida, idb, jaccard) —
-    * consumers project what they need.
+    * the score sees identical operands — bit-identical jaccard doubles,
+    * one oracle. Returns (cl_a, cl_b, ida, idb, score) — consumers
+    * project what they need.
     */
   private[operators] def verifiedMemberPairs(
       pruned: DataFrame, member: DataFrame, diffs: DataFrame,
-      anchors: DataFrame, threshold: Double,
+      anchors: DataFrame, pred: PairPredicate,
       deltaOnly: Boolean = false): DataFrame = {
-    val alphaV = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-      .cast("int")
-    val sizeCompat = greatest(col("n_a"), col("n_b")) * threshold <=
-      least(col("n_a"), col("n_b")) + lit(Eps)
+    val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
+    val sizeCompat = pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b")))
+    val score = pred.score(col("c"), col("n_a"), col("n_b"))
 
     // ---- DIRECT arm: bypass pairs (and everything when prune=false) ----
     def aSide(src: DataFrame) = src.select(col("cl").as("cl_a"), col("id").as("ida"),
@@ -867,9 +957,9 @@ object ClusterDedup {
       .withColumn("c", NativeHash.sortedIntersectAtLeast(
         col("__sha"), col("__shb"), alphaV))
       .filter(col("c") >= 0)
-      .withColumn("jaccard", col("c") / (col("n_a") + col("n_b") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("cl_a"), col("cl_b"), col("ida"), col("idb"), col("jaccard"))
+      .withColumn(pred.scoreCol, score)
+      .filter(pred.keep(col(pred.scoreCol)))
+      .select(col("cl_a"), col("cl_b"), col("ida"), col("idb"), col(pred.scoreCol))
 
     // ---- DIFF arm: anchor-gated pairs carry the exact __hc ----
     val gated = pruned.where(col("__hc").isNotNull)
@@ -882,12 +972,10 @@ object ClusterDedup {
       gated.join(m.select(col("cl").as(own), col("id").as(s"id$sfx"),
           col("n").as(s"n_$sfx"), col("__dm").as(s"__dm$sfx"),
           col("__dp").as(s"__dp$sfx")), Seq(own))
-        // x size-matches some y ∈ [minN_opp, maxN_opp] only if
-        // t·n_x ≤ maxN_opp and t·minN_opp ≤ n_x (size-compat is
-        // t·max ≤ min) — qualifying pairs survive, rows that cannot
-        // pair never reach the anchor join below
-        .filter(col(s"n_$sfx") * threshold <= oppMax + lit(Eps) &&
-          oppMin * threshold <= col(s"n_$sfx") + lit(Eps))
+        // x size-matches some y ∈ [minN_opp, maxN_opp] only if it fits
+        // under maxN_opp and minN_opp fits under it — qualifying pairs
+        // survive, rows that cannot pair never reach the anchor join
+        .filter(pred.fits(col(s"n_$sfx"), oppMax) && pred.fits(oppMin, col(s"n_$sfx")))
         .join(anchors.select(col("cl").as(opp), col("__hsh").as("__hOpp")), Seq(opp))
         .withColumn(s"__adj$sfx", NativeHash.anchorAdjust(
           col(s"__dm$sfx"), col(s"__dp$sfx"), col("__hOpp")))
@@ -912,9 +1000,9 @@ object ClusterDedup {
       .filter(col("__hc") + size(col("__dpa")) + size(col("__dpb")) >= alphaV)
       .withColumn("c", col("__hc") + col("__adja") + col("__adjb") +
         NativeHash.diffCorrection(col("__dma"), col("__dpa"), col("__dmb"), col("__dpb")))
-      .withColumn("jaccard", col("c") / (col("n_a") + col("n_b") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("cl_a"), col("cl_b"), col("ida"), col("idb"), col("jaccard"))
+      .withColumn(pred.scoreCol, score)
+      .filter(pred.keep(col(pred.scoreCol)))
+      .select(col("cl_a"), col("cl_b"), col("ida"), col("idb"), col(pred.scoreCol))
     direct.unionByName(diffVerified)
   }
 
@@ -926,22 +1014,17 @@ object ClusterDedup {
   private def candidateCore(
       df: DataFrame,
       idCol: String,
-      shingleExpr: org.apache.spark.sql.Column,
-      threshold: Double,
+      setExpr: Column,
+      pred: PairPredicate,
       numHashes: Int,
       numBands: Int,
       prune: Boolean,
       adaptive: Boolean): Either[DirectCore, Core] = {
-    // Upper bound matters for the row-identity contract: the exact-set
-    // collapse assumes identical docs (J=1) always merge, which is only
-    // valid for thresholds in (0, 1] — the direct pipeline would emit no
-    // edges at all for t > 1.
-    require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val spark = df.sparkSession
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
     val hashed = Par.widen(df)
-      .select(col(idCol).as("id"), shingleExpr.as("__sh"))
+      .select(col(idCol).as("id"), setExpr.as("__sh"))
       .select(col("id"), col("__sh"),
         coalesce(size(col("__sh")), lit(0)).as("n"))
       .persist(MEMORY_AND_DISK)
@@ -949,7 +1032,7 @@ object ClusterDedup {
     // ---- 1. exact-set collapse (array group key: exact, no hash-
     // collision arm; one corpus-sized narrow exchange, same magnitude
     // as the exploded index the pair join already pays) ----
-    val nonEmpty = hashed.where(col("n") > 0)
+    val eligible = hashed.where(pred.eligible(col("n")))
     // ADAPTIVE: the collapse window shuffles every shingle array in the
     // corpus. One HLL probe (1% rsd, narrow partial-aggregate pass over
     // the persisting frame) decides whether exact-set duplication even
@@ -957,7 +1040,7 @@ object ClusterDedup {
     // dedup has run upstream, and the gate corpus at 99.8% — the
     // collapse is the identity and the window + its lineage cut are
     // skipped. Correctness is unaffected either way: identical sets are
-    // ordinary J=1 pairs for the LSH contraction and the exact verify
+    // ordinary qualifying pairs for the LSH contraction and the verify
     // (the contraction is NEVER skipped — near-duplicate replicas have
     // DISTINCT sets, so this probe says nothing about them and the
     // g²-killing contraction must stay unconditional).
@@ -989,7 +1072,7 @@ object ClusterDedup {
     //     candVol — only needed when the contraction-mass shortcut is
     //     inconclusive — runs lazily against the prefix cut below.
     val st = Par.labeled(spark, "cluster: route probe")(
-      nonEmpty.agg(count(lit(1)).as("__n"),
+      eligible.agg(count(lit(1)).as("__n"),
         approx_count_distinct(xxhash64(col("__sh")), 0.05).as("__sets"),
         approx_count_distinct(element_at(
           NativeHash.minhashBandBucketsHashed(col("__sh"), numHashes / numBands, 1),
@@ -1006,13 +1089,13 @@ object ClusterDedup {
     // single cut: docRep/reps are projections of it, not a join + second
     // materialization of the corpus-sized shingle arrays.
     val collapseCut: Option[DataFrame] = if (!collapseUseful) None else Some(
-      Par.cut(nonEmpty
+      Par.cut(eligible
         .select(col("id"), col("__sh"), col("n"), min(col("id")).over(
           org.apache.spark.sql.expressions.Window.partitionBy(col("__sh"))).as("rep")),
         "cluster: collapse window"))
-    val docRep = collapseCut.fold(nonEmpty.select(col("id"), col("id").as("rep")))(
-      _.select("id", "rep"))
-    val reps = collapseCut.fold(nonEmpty.select("id", "__sh", "n"))(
+    val docRep = collapseCut.fold(eligible.select(col("id"), col("n"), col("id").as("rep")))(
+      _.select("id", "n", "rep"))
+    val reps = collapseCut.fold(eligible.select("id", "__sh", "n"))(
       _.where(col("id") === col("rep")).select("id", "__sh", "n"))
 
     // prefix index over the FINAL rep set, built ONCE after the
@@ -1024,7 +1107,7 @@ object ClusterDedup {
     // stages and double-compute the whole df + window chain (r18).
     val prefix = Par.cut(JaccardDedup.prefixIndex(
         reps.select(col("id"), explode(col("__sh")).as("s"), col("n")),
-        "id", threshold), "cluster: prefix index")
+        "id", pred), "cluster: prefix index")
 
     // ---- ADAPTIVE ROUTE (see RouteContractRatio / DirectCandCap).
     // Probe — direct-candidate volume: Σ_s dfP(s)² is the EXACT row
@@ -1062,7 +1145,7 @@ object ClusterDedup {
       direct
     }
     if (routeDirect) {
-      // the direct arm: JaccardDedup's exact prefix pipeline over the
+      // the direct arm: the direct twin's exact prefix pipeline over the
       // already-hashed reps (df-rarity prefix index, size + positional
       // filters inside the join, early-exit merge-walk verify) — the
       // plan the direct operator runs, minus a second shingling pass
@@ -1070,27 +1153,24 @@ object ClusterDedup {
         col("n").as("__na"), col("pos").as("__pa"))
       val b = prefix.select(col("s").as("__sb"), col("id").as("rb"),
         col("n").as("__nb"), col("pos").as("__pb"))
-      val alphaC = ceil((col("__na") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
       val cand = a.join(b,
           col("__sa") === col("__sb") &&
           col("ra") < col("rb") &&
-          greatest(col("__na"), col("__nb")) * threshold <=
-            least(col("__na"), col("__nb")) + lit(Eps) &&
-          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >= alphaC)
+          pred.fits(greatest(col("__na"), col("__nb")), least(col("__na"), col("__nb"))) &&
+          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >=
+            pred.alpha(col("__na"), col("__nb")))
         .select("ra", "rb")
         .distinct()
-      val alphaV = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-        .cast("int")
+      val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
       val pairs = cand
         .join(reps.select(col("id").as("ra"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("ra"))
         .join(reps.select(col("id").as("rb"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("rb"))
         .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"), alphaV))
         .filter(col("c") >= 0)
-        .withColumn("jaccard", col("c") / (col("n_a") + col("n_b") - col("c")))
-        .filter(col("jaccard") >= threshold)
-        .select(col("ra"), col("rb"), col("jaccard"))
-      return Left(DirectCore(hashed, docRep, pairs,
-        persisted = Seq(hashed), cuts = collapseCut.toSeq :+ prefix))
+        .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
+        .filter(pred.keep(col(pred.scoreCol)))
+        .select(col("ra"), col("rb"), col(pred.scoreCol))
+      return Left(DirectCore(hashed, docRep, pairs, cuts = collapseCut.toSeq :+ prefix))
     }
 
     // ---- 2. LSH contraction over representatives ----
@@ -1117,17 +1197,14 @@ object ClusterDedup {
       .withColumn("__hub", min(col("id")).over(bucketW))
       .filter(col("__hub") < col("id"))
       .select(col("__hub").as("id_a"), col("id").as("id_b")).distinct()
-    val alphaOf = (na: String, nb: String) =>
-      ceil((col(na) + col(nb)) * (threshold / (1.0 + threshold)) - lit(Eps)).cast("int")
     val edges1 = lshCand
       .join(reps.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
       .join(reps.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-      .filter(greatest(col("n_a"), col("n_b")) * threshold <=
-        least(col("n_a"), col("n_b")) + lit(Eps))
+      .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
       .withColumn("c", NativeHash.sortedIntersectAtLeast(
-        col("__sha"), col("__shb"), alphaOf("n_a", "n_b")))
+        col("__sha"), col("__shb"), pred.alpha(col("n_a"), col("n_b")).cast("int")))
       .filter(col("c") >= 0)
-      .filter(col("c") / (col("n_a") + col("n_b") - col("c")) >= threshold)
+      .filter(pred.keep(pred.score(col("c"), col("n_a"), col("n_b"))))
       .select("id_a", "id_b")
     // contraction labels by ONE-PASS star contraction, not a full
     // components run: cl(x) = min(x, min t-neighbor). Validity needs
@@ -1153,7 +1230,7 @@ object ClusterDedup {
     // the route probe's persisted prefix index is REUSED as the
     // postings source (contraction labels join on by id) — the dfreq
     // count and per-doc rarity window run once per call, not twice
-    val cc = clusterCandidatePlan(member, threshold, prune, requireDelta = false,
+    val cc = clusterCandidatePlan(member, pred, prune, requireDelta = false,
       prefix = Some(prefix))
     val pruned = Par.cut(cc.prunePlan(cc.candCl), "cluster: prune")
 
@@ -1165,13 +1242,11 @@ object ClusterDedup {
     val pruneProbe = cc.prunePlan(cc.candCl)
     val crossEdgesProbe = pruneProbe.where(col("__wit")).select(col("cl_a"), col("cl_b"))
       .union(verifiedMemberPairs(pruneProbe.where(!col("__wit")), member,
-          cc.diffs, cc.anchors, threshold)
+          cc.diffs, cc.anchors, pred)
         .select(col("cl_a"), col("cl_b")).distinct())
 
-    Right(Core(hashed, docRep, reps, repCluster, member, cc.anchors, cc.diffs, pruned,
-      threshold,
+    Right(Core(hashed, docRep, repCluster, member, cc.anchors, cc.diffs, pruned, pred,
       Probes(cc.cpostRaw, cc.candCl, pruneProbe, crossEdgesProbe),
-      persisted = Seq(hashed),
       cuts = collapseCut.toSeq ++ Seq(prefix, member, cc.cpost, cc.anchors, cc.diffs, pruned)))
   }
 
@@ -1187,9 +1262,10 @@ object ClusterDedup {
       prunePlan: DataFrame => DataFrame)
 
   /** Cluster-level candidate generation + anchor-bound prune over a
-    * member frame (id, __sh, n, cl[, __d]) — any grouping where each
-    * cluster lies within one t-component is valid (contraction labels,
-    * a previous run's FULL component labels, or singletons).
+    * member frame (id, __sh, n, cl[, __d]) — any grouping is valid for
+    * a pair listing, and for labels any grouping where each cluster
+    * lies within one t-component (contraction labels, a previous run's
+    * FULL component labels, or singletons).
     *
     * ---- 3. cluster-level candidate generation ----
     * Postings lift the PPJoin prefix index to clusters with the doc-
@@ -1203,8 +1279,9 @@ object ClusterDedup {
     *     1 + min(n_a−p_a, n_b−p_b) ≥ α(n_a,n_b) ≥ α(minN_A,minN_B)
     *     (α is increasing in sizes), and n−p ≤ mr by construction —
     *     so 1 + min(mr_a, mr_b) ≥ α(minN_A, minN_B) holds for s*.
-    *   - size: some member pair could satisfy t·max ≤ min only if
-    *     t·max(minN_A, minN_B) ≤ min(maxN_A, maxN_B).
+    *   - size: some member pair could pass the predicate's size filter
+    *     (Jaccard: t·max ≤ min) only if max(minN_A, minN_B) fits
+    *     under min(maxN_A, maxN_B).
     * The index explodes from `member`, so `cl` rides the prefix
     * pipeline instead of being re-joined onto the index-sized stream;
     * cluster stats join ONCE onto the postings (narrow (s, cl, mr)
@@ -1250,7 +1327,7 @@ object ClusterDedup {
     *
     * WITNESS: when the walk passes it returns the EXACT |H_A∩H_B|
     * (countAtLeast early-exits only to say "can't reach α"), so
-    * J(H_A,H_B) ≥ t is decided for free. Anchors are members, so a
+    * whether the anchor pair itself qualifies is decided for free. Anchors are members, so a
     * witness-true pair is itself a qualifying cross-cluster member
     * pair — the components consumer takes it as a cluster edge with
     * ZERO member expansion. On replica-heavy corpora this is what
@@ -1272,7 +1349,7 @@ object ClusterDedup {
     */
   private[operators] def clusterCandidatePlan(
       member: DataFrame,
-      threshold: Double,
+      pred: PairPredicate,
       prune: Boolean,
       requireDelta: Boolean,
       prefix: Option[DataFrame] = None): ClusterCand = {
@@ -1290,14 +1367,14 @@ object ClusterDedup {
       case Some(pf) => pf.join(member.select(col("id"), col("cl")), Seq("id"))
       case None =>
         val index = member.select(col("id"), explode(col("__sh")).as("s"), col("n"), col("cl"))
-        JaccardDedup.prefixIndex(index, "id", threshold, keep = Seq("cl"))
+        JaccardDedup.prefixIndex(index, "id", pred, keep = Seq("cl"))
     }
     val cpostRaw = prefixed
       .groupBy(col("s"), col("cl"))
       .agg(max(col("n") - col("pos")).as("mr"))
       .join(cStats, Seq("cl"))
     val cpost = Par.cut(cpostRaw, "cluster: postings")
-    val alphaMin = ceil((col("__mna") + col("__mnb")) * (threshold / (1.0 + threshold)) - lit(Eps))
+    val alphaMin = pred.alpha(col("__mna"), col("__mnb"))
     val aCols = Seq(col("s").as("__sa"), col("cl").as("cl_a"), col("mr").as("__mra"),
       col("minN").as("__mna"), col("maxN").as("__mxa"), col("nm").as("__nma")) ++
       (if (requireDelta) Seq(col("isDelta").as("__dla")) else Nil)
@@ -1313,8 +1390,7 @@ object ClusterDedup {
         col("__sa") === col("__sb") &&
         col("cl_a") < col("cl_b") &&
         deltaPred &&
-        least(col("__mxa"), col("__mxb")) + lit(Eps) >=
-          greatest(col("__mna"), col("__mnb")) * threshold &&
+        pred.fits(greatest(col("__mna"), col("__mnb")), least(col("__mxa"), col("__mxb"))) &&
         lit(1) + least(col("__mra"), col("__mrb")) >= alphaMin)
       // minN/maxN/nm are functionally dependent on the cluster ids, so
       // carrying them through the DISTINCT leaves its semantics
@@ -1385,7 +1461,7 @@ object ClusterDedup {
             .cast("int")))
         .filter(col("__hc") >= 0)
         .select(Seq(col("cl_a"), col("cl_b"),
-          (col("__hc") / (col("__hna") + col("__hnb") - col("__hc")) >= threshold)
+          pred.keep(pred.score(col("__hc"), col("__hna"), col("__hnb")))
             .as("__wit"), col("__hc")) ++ passCols: _*)
         .union(noWalk(cand.where(bothSingle)))
     ClusterCand(cpostRaw, cpost, candCl, anchors, diffs, prunePlan)

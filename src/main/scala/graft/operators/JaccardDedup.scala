@@ -78,17 +78,18 @@ object JaccardDedup {
     */
   private val Eps = 1e-9
 
-  /** Prefix index: each document's rarest n − ⌈t·n⌉ + 1 shingle hashes
+  /** Prefix index: each document's rarest `pred.prefixLen(n)` shingle
+    * hashes (n − ⌈t·n⌉ + 1 for Jaccard ≥ t, n − k + 1 for overlap ≥ k)
     * under the global (document-frequency asc, hash asc) order, each
     * carrying its position `pos` in the doc's FULL sorted shingle list
-    * (for the positional filter). Any pair with J ≥ t shares at least
+    * (for the positional filter). Any qualifying pair shares at least
     * one shingle in BOTH prefixes (see object doc), so a self-join on
     * this index is a lossless candidate generator. Exposed
     * package-private so DedupSpec can pin the hot-shingle fan-out bound
     * directly.
     */
-  private[graft] def prefixIndex(index: DataFrame, idCol: String, threshold: Double,
-      keep: Seq[String] = Nil): DataFrame = {
+  private[graft] def prefixIndex(index: DataFrame, idCol: String,
+      pred: ClusterDedup.PairPredicate, keep: Seq[String] = Nil): DataFrame = {
     // df as a combiner AGGREGATE + join-back, not a count window over an
     // s-partitioned exchange (r18, guide §2.3/§2.5/§3.1). The r17 window
     // form shuffled the ENTIRE exploded index by shingle and sorted
@@ -123,7 +124,7 @@ object JaccardDedup {
     index.join(dfreq, Seq("s"))
       .repartition(Par.scaleWidth(index), col(idCol))
       .withColumn("pos", row_number().over(wDoc))
-      .filter(col("pos") <= col("n") - ceil(col("n") * threshold - lit(Eps)) + 1)
+      .filter(col("pos") <= pred.prefixLen(col("n")))
       .select((Seq("s", idCol, "n", "pos") ++ keep).map(col): _*)
   }
 
@@ -141,7 +142,7 @@ object JaccardDedup {
     * cores) and keep their sequential cut.
     */
   private[graft] def prefixCandidates(index: DataFrame, idCol: String, threshold: Double): DataFrame = {
-    val prefix = prefixIndex(index, idCol, threshold)
+    val prefix = prefixIndex(index, idCol, ClusterDedup.Jaccard(threshold))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val a = prefix.select(col("s").as("__sa"), col(idCol).as("id_a"),
       col("n").as("__na"), col("pos").as("__pa"))
@@ -333,7 +334,7 @@ object JaccardDedup {
     // and measured faster than an eager cut at gate scale)
     val prefix = prefixIndex(
         docs.select(col("id"), explode(col("__sh")).as("s"), col("n"), col("__d")),
-        "id", threshold, keep = Seq("__d"))
+        "id", ClusterDedup.Jaccard(threshold), keep = Seq("__d"))
       .persist(MEMORY_AND_DISK)
     val dp = prefix.filter(col("__d"))
     // delta-active shingles only: the corpus-sized side of the candidate

@@ -1,84 +1,33 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-
-import graft.functions.NativeHash
 
 /** Absolute set-overlap join (|A∩B| ≥ k pairs) with a
-  * replication-proof candidate path — the [[ClusterDedup]] treatment
-  * applied to [[JaccardDedup.overlapJoin]]'s semantics.
+  * replication-proof candidate path: [[JaccardDedup.overlapJoin]]'s
+  * semantics run through [[ClusterDedup]]'s clustered pair core under
+  * the `Overlap(k)` predicate — α = k, prefix n − k + 1, sets shorter
+  * than k never pair, score = overlap.
   *
   * The direct operator's prefix self-join costs Σ_e df(e)² over prefix
   * element frequencies. On boilerplate-heavy corpora g near-identical
   * copies multiply every df by g → candidates grow g² (the r13 10×
   * soak measured 29.7× wall on 10× data — the one super-linear query
-  * in the suite). Here candidates are generated at CLUSTER granularity
-  * and only verified member pairs pay doc-level work:
-  *
-  *   1. EXACT-SET COLLAPSE — docs with identical element sets share
-  *      identical overlaps against everything; each group contracts to
-  *      its min-id representative and fans back out at the end
-  *      (intra-group pairs have overlap = |set| ≥ k by the size
-  *      filter, so every one qualifies).
-  *   2. LSH STAR CONTRACTION — MinHash band buckets over
-  *      representatives; candidates are STAR edges (member → bucket-min
-  *      hub, O(docs × bands) — bucket all-pairs is itself quadratic in
-  *      replication, the pathology this operator removes; see the
-  *      measured note on [[ClusterDedup]] step 2), exact-verified at
-  *      overlap ≥ k, and each rep contracts to min(id, min verified
-  *      neighbor). Unlike the Jaccard-components case no semantic
-  *      validity is needed: ANY partition of reps is correct (steps 3-5
-  *      enumerate all cluster pairs losslessly and verify every member
-  *      pair) — clustering quality only buys pruning power.
-  *   3. CLUSTER POSTINGS — elements in ascending global document
-  *      frequency (the PPJoin rarity order the direct operator's scale
-  *      note calls for; the prefix proof needs only SOME fixed order):
-  *      per doc the first n−k+1 elements, projected to (element,
-  *      cluster) DISTINCT with the positional filter relaxed soundly
-  *      to mr = max over members of (n − pos). g collapsed copies post
-  *      each prefix element once — the g² term is gone.
-  *   4. ANCHOR BOUND — the [[ClusterDedup]] step-4 bound in its
-  *      absolute-overlap flavor. Each cluster anchors at its min-id
-  *      MEMBER's set H_C with maxD_C = max over members of |S_x \ H_C|;
-  *      for members x ∈ A, y ∈ B every element of S_x ∩ S_y is in
-  *      H_A ∩ H_B, in S_x \ H_A, or in S_y \ H_B, so
-  *      |S_x∩S_y| ≤ |H_A∩H_B| + maxD_A + maxD_B and a cluster pair
-  *      retires when one early-exit anchor walk cannot reach
-  *      k − maxD_A − maxD_B. A singleton's anchor IS its member
-  *      (maxD = 0 exactly — the bound walk is that pair's verify
-  *      walk, which is also why singleton-singleton pairs BYPASS the
-  *      gate straight to step 5: gating them duplicates the walk and
-  *      its array movement for zero pruning information). The r13
-  *      union bound (|U_A∩U_B| ≥ k) is gone for the
-  *      reason measured on ClusterDedup's 100× soak: unions ACCUMULATE
-  *      every member's noise, and with k absolute (not scaled to doc
-  *      size) a few shared boilerplate elements across big unions made
-  *      the bound pass for every cluster pair — anchors carry each
-  *      element at most once and the walk is doc-length, not
-  *      union-length (no cap needed, so `unionCap` is retired too).
-  *   5. VERIFY — surviving cluster pairs expand to member pairs,
-  *      intra-cluster member pairs are enumerated directly (they are
-  *      output-shaped: the cluster exists because its members overlap),
-  *      and every pair runs the same early-exit sorted merge walk as
-  *      the direct operator. Results fan out through the collapse.
+  * in the suite). The core generates candidates at CLUSTER granularity
+  * (exact-set collapse, verified-LSH star contraction, (element,
+  * cluster) DISTINCT rarity-order postings, the member-anchor bound)
+  * and only verified member pairs pay doc-level work; an adaptive
+  * route runs the direct prefix self-join over the collapsed sets
+  * where contraction cannot pay. With k absolute rather than scaled to
+  * doc size, the anchor bound is what keeps big replica clusters
+  * prunable: anchors carry each element at most once, where member
+  * unions would share enough boilerplate to pass every cluster pair.
   *
   * Contract: `setCol` must be a sorted-distinct `array<long>` (e.g.
-  * [[NativeHash.shingleHashes]] output) — same as the direct operator.
-  * Output is row-identical to `overlapJoin(df, idCol, setCol, k)`:
-  * (id_a < id_b, overlap).
+  * [[graft.functions.NativeHash.shingleHashes]] output) — same as the
+  * direct operator. Output is row-identical to
+  * `overlapJoin(df, idCol, setCol, k)`: (id_a < id_b, overlap).
   */
 object OverlapJoin {
-
-  /** The uncut clustered pair stream plus the `seal` that eagerly cuts
-    * a finished frame and releases the plan's intermediate checkpoints.
-    * [[pairsClustered]] seals the stream itself; [[topK]] applies its
-    * bounded-output window BETWEEN the two, so the Ω(output) listing is
-    * never materialized — only the n·k retrieval result is.
-    */
-  private[graft] case class ClusteredPairs(
-      pairs: DataFrame, seal: DataFrame => DataFrame)
 
   def pairsClustered(
       df: DataFrame,
@@ -89,28 +38,16 @@ object OverlapJoin {
       numBands: Int = 16,
       prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
-    val p = clusteredPlan(df, idCol, setCol, minOverlap, numHashes, numBands, prune,
-      adaptive)
-    p.seal(p.pairs)
+    val (pairs, seal) = ClusterDedup.pairsClusteredPlan(df, idCol, setCol,
+      ClusterDedup.Overlap(minOverlap), numHashes, numBands, prune, adaptive)
+    seal(pairs)
   }
 
   /** Bounded-output top-k overlap retrieval: for each document, its `k`
     * highest-overlap partners (ties broken by ascending partner id)
     * among pairs with overlap ≥ `minOverlap`. Output columns
-    * (id, partner_id, overlap, rk), one row per kept neighbor.
-    *
-    * This is the shape you actually run at 100 TB. Pair LISTING is
-    * Ω(output), and output under replication is quadratic in family
-    * size — the 100× soak measured ~1.85B qualifying pairs from the
-    * sf0.1 corpus and the listing (correctly) filled the disk through
-    * its three Ω(output) materializations. Retrieval bounds output at
-    * n·k, and the plan bounds everything else too: the row_number
-    * filter plans as a WindowGroupLimit (pinned in PlanShapeSpec), so
-    * each task keeps only its local top-k per doc BEFORE the window
-    * exchange — the verify stream flows through the partial limit
-    * without ever sitting on disk whole. Candidate generation is the
-    * replication-proof [[pairsClustered]] core, sealed only AFTER the
-    * window so the final cut is retrieval-sized.
+    * (id, partner_id, overlap, rk), one row per kept neighbor — see
+    * [[ClusterDedup.topKPlan]].
     */
   def topK(
       df: DataFrame,
@@ -122,26 +59,12 @@ object OverlapJoin {
       numBands: Int = 16,
       prune: Boolean = true,
       viaAgg: Boolean = true,
-      adaptive: Boolean = true): DataFrame = {
-    val (lazyOut, seal) =
-      topKPlan(df, idCol, setCol, minOverlap, k, numHashes, numBands, prune, viaAgg,
-        adaptive)
-    // cloned-session-scoped, never the caller's session: the raise is
-    // only safe around an O(k)-buffer aggregate (see
-    // TopKAgg.withHashAggHeadroom)
-    seal(graft.functions.TopKAgg.withHashAggHeadroom(lazyOut))
-  }
+      adaptive: Boolean = true): DataFrame =
+    ClusterDedup.sealTopK(topKPlan(df, idCol, setCol, minOverlap, k,
+      numHashes, numBands, prune, viaAgg, adaptive))
 
   /** [[topK]] split before its seal, so PlanShapeSpec can pin the plan
     * shape live (the sealed frame's plan is just the checkpoint scan).
-    *
-    * `viaAgg = true` (default, the 100-TB shape) bounds the stream with
-    * [[graft.functions.TopKAgg]] — one hash-aggregate pass, map-side
-    * combined, NO per-task sort of the pair stream; `false` keeps the
-    * row_number window whose partial WindowGroupLimit local-sorts every
-    * task's full input (see ClusterDedup.topKPlanBy for the measured
-    * A/B). Ranks and ties are identical in both plans; overlap rides
-    * through the aggregator's double score losslessly (|overlap| ≪ 2⁵³).
     */
   private[graft] def topKPlan(
       df: DataFrame,
@@ -153,374 +76,7 @@ object OverlapJoin {
       numBands: Int = 16,
       prune: Boolean = true,
       viaAgg: Boolean = true,
-      adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) = {
-    require(k >= 1, "k must be >= 1")
-    val p = clusteredPlan(df, idCol, setCol, minOverlap, numHashes, numBands, prune,
-      adaptive)
-    (graft.functions.TopKAgg.perDocTopK(p.pairs, "overlap", k, viaAgg), p.seal)
-  }
-
-  private[graft] def clusteredPlan(
-      df: DataFrame,
-      idCol: String,
-      setCol: Column,
-      minOverlap: Int,
-      numHashes: Int,
-      numBands: Int,
-      prune: Boolean,
-      adaptive: Boolean = true): ClusteredPairs = {
-    require(minOverlap >= 1, "minOverlap must be >= 1")
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val k = minOverlap
-
-    // size filter AFTER the widen exchange (the documented pushdown
-    // trap: a deterministic filter on the derived set would sink below
-    // the repartition and serialize the set computation on one core)
-    val base = Par.widen(df)
-      .select(col(idCol).as("id"), setCol.as("__set"))
-      .select(col("id"), col("__set"), coalesce(size(col("__set")), lit(0)).as("n"))
-      .where(col("n") >= k) // shorter sets cannot reach overlap k
-      .persist(MEMORY_AND_DISK)
-    val spark = df.sparkSession
-
-    // ---- 1. exact-set collapse, ADAPTIVE (the ClusterDedup HLL probe:
-    // on a (near-)fully-distinct corpus the corpus-wide collapse window
-    // is the identity and its shuffle + cut are skipped; identical sets
-    // are ordinary overlap-n pairs for the downstream arms either way).
-    // One window pass carries (__set, n) through, so the collapse costs
-    // a single cut — docRep/reps are projections, not a join + second
-    // materialization of the corpus-sized set arrays.
-    // ONE narrow probe aggregate carries the doc-level routing
-    // statistics (r18 — reshaped from the r17 fused crossJoin probe;
-    // see ClusterDedup.candidateCore for the full rationale): count +
-    // HLL distinct sets decide the collapse; HLL distinct band-0
-    // buckets give the contraction-mass estimate (reps − distinct
-    // buckets = the star-edge upper bound) — identical sets share
-    // buckets, so the statistic is rep-level even before the collapse
-    // decision is made. rsd 0.05 (not 0.01 — the high-precision HLL
-    // buffer was itself the probe's bottleneck), single subtree (the
-    // crossJoin with candVol ran the stats and the optimistic prefix
-    // build as concurrent AQE stages racing to materialize the base
-    // persist, double-computing the set-building pass), and the prefix
-    // index is built AFTER the collapse decision over the final rep
-    // set — no optimistic build + discard when the collapse fires.
-    def prefixOver(src: DataFrame): DataFrame = Par.cut({
-      // combiner dfreq + AQE-planned join-back + data-size-aware doc
-      // exchange — same shape and rationale as JaccardDedup.prefixIndex
-      // (r18): one index exchange instead of two at gate scale, O(1)
-      // combiner state per hot element instead of a one-task window
-      // buffer, AQE skew-join splitting available on the fallback join.
-      // CUT so the candidate self-join's two sides (or the clustered
-      // arm's postings) cannot race its materialization.
-      val index = src.select(col("id"), explode(col("__set")).as("s"), col("n"))
-      val dfreq = index.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      val wDoc = Window.partitionBy(col("id")).orderBy(col("df").asc, col("s").asc)
-      index.join(dfreq, Seq("s"))
-        .repartition(Par.scaleWidth(index), col("id"))
-        .withColumn("pos", row_number().over(wDoc))
-        .filter(col("pos") <= col("n") - k + 1)
-        .select(col("s"), col("id"), col("n"), col("pos"))
-    }, "overlap: prefix index")
-    val st = Par.labeled(spark, "overlap: route probe")(
-      base.agg(count(lit(1)).as("__n"),
-        approx_count_distinct(xxhash64(col("__set")), 0.05).as("__sets"),
-        approx_count_distinct(element_at(
-          NativeHash.minhashBandBucketsHashed(col("__set"), numHashes / numBands, 1),
-          1), 0.05).as("__buckets")).head())
-    val collapseUseful =
-      st.getLong(1) < st.getLong(0) * ClusterDedup.CollapseSkipRatio
-    val collapseCut: Option[DataFrame] = if (!collapseUseful) None else Some(
-      Par.cut(base.select(col("id"), col("__set"), col("n"), min(col("id")).over(
-        Window.partitionBy(col("__set"))).as("rep")), "overlap: collapse window"))
-    val docRep = collapseCut.fold(base.select(col("id"), col("n"), col("id").as("rep")))(
-      _.select("id", "n", "rep"))
-    val reps = collapseCut.fold(base.select("id", "__set", "n"))(
-      _.where(col("id") === col("rep")).select("id", "__set", "n"))
-
-    // ---- ADAPTIVE ROUTE (the ClusterDedup pattern, overlap flavor):
-    // the clustered machinery below only pays when LSH contraction can
-    // collapse replica families. The rarity-order prefix index is built
-    // (and CUT) once over the final rep set — the direct arm's
-    // candidate self-join or the clustered arm's cluster postings
-    // consume it. Both arms are exact and row-identical
-    // (OverlapJoinSpec pins the routing identity on every fixture); at
-    // 10×/100× replication the collision mass approaches the rep count
-    // and the probe routes clustered. The contraction-mass shortcut
-    // decides first with no extra job; the EXACT direct-join volume
-    // Σ_s dfP(s)² under the absolute cap arbitrates only when the
-    // shortcut is inconclusive (1-gram token sets collide 3664/3935 in
-    // band 0 from sub-threshold overlap, so THIS operator usually pays
-    // the candVol aggregate — one narrow pass over the prefix cut).
-    // Same decision as r17's `candVol < cap || starEdges < ratio·reps`
-    // (`||` commutes), minus the probe-blocking prefix materialization
-    // and minus every probe job when `adaptive` is off.
-    val prefix = prefixOver(reps)
-    val nRepsEst = if (collapseUseful) st.getLong(1) else st.getLong(0)
-    def candVol(): Double = {
-      val cv = Par.labeled(spark, "overlap: candVol probe")(
-        prefix.groupBy("s").agg(count(lit(1)).as("c"))
-          .agg(coalesce(sum(col("c").cast("double") * col("c").cast("double")),
-            lit(0.0)).as("__cv")).head())
-      cv.getDouble(0)
-    }
-    val routeDirect = adaptive && {
-      val starEdgesUb = math.max(0L, nRepsEst - st.getLong(2))
-      starEdgesUb < ClusterDedup.RouteContractRatio * nRepsEst ||
-        candVol() < ClusterDedup.DirectCandCap
-    }
-    if (routeDirect) {
-      // direct arm: the plain rarity-order prefix self-join over the
-      // collapsed reps (positional filter inside the join condition),
-      // exact early-exit walk verify — the overlapJoin plan minus a
-      // second set-building pass; results fan out through the collapse
-      val a = prefix.select(col("s").as("__sa"), col("id").as("ra"),
-        col("n").as("__na"), col("pos").as("__pa"))
-      val b = prefix.select(col("s").as("__sb"), col("id").as("rb"),
-        col("n").as("__nb"), col("pos").as("__pb"))
-      val cand = a.join(b,
-          col("__sa") === col("__sb") &&
-          col("ra") < col("rb") &&
-          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >= lit(k))
-        .select("ra", "rb")
-        .distinct()
-      val repPairs = cand
-        .join(reps.select(col("id").as("ra"), col("__set").as("__sa")), Seq("ra"))
-        .join(reps.select(col("id").as("rb"), col("__set").as("__sb")), Seq("rb"))
-        .withColumn("c", NativeHash.sortedIntersectAtLeast(
-          col("__sa"), col("__sb"), lit(k)))
-        .filter(col("c") >= 0)
-        .select(col("ra"), col("rb"), col("c").cast("long").as("overlap"))
-      val groups = docRep.select(col("id"), col("n"), col("rep"))
-      val crossGroups = repPairs
-        .join(groups.select(col("rep").as("ra"), col("id").as("ia")), Seq("ra"))
-        .join(groups.select(col("rep").as("rb"), col("id").as("ib")), Seq("rb"))
-        .select(least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"), col("overlap"))
-      val intraGroups = groups.select(col("rep"), col("id").as("id_a"), col("n"))
-        .join(groups.select(col("rep"), col("id").as("id_b")), Seq("rep"))
-        .filter(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), col("n").cast("long").as("overlap"))
-      return ClusteredPairs(crossGroups.union(intraGroups), { finished =>
-        val out = Par.cut(finished, "overlap: pairs out(direct)")
-        base.unpersist(false)
-        Par.free(prefix)
-        collapseCut.foreach(Par.free)
-        out
-      })
-    }
-
-    // ---- 2. LSH star contraction over representatives ----
-    val buckets = reps.select(col("id"),
-      posexplode(NativeHash.minhashBandBucketsHashed(col("__set"), numHashes, numBands))
-        .as(Seq("band", "bucket")))
-    // STAR candidates (member → bucket-min hub), not bucket all-pairs —
-    // all-pairs is Σ_b |bucket|², i.e. quadratic in replication inside
-    // every replica-family bucket, which is the very g² this operator
-    // exists to remove (see ClusterDedup step 2 for the 100×-soak
-    // measurement that forced the same change there)
-    val bucketW = Window.partitionBy(col("band"), col("bucket"))
-    val lshCand = buckets
-      .withColumn("__hub", min(col("id")).over(bucketW))
-      .filter(col("__hub") < col("id"))
-      .select(col("__hub").as("id_a"), col("id").as("id_b")).distinct()
-    val edges1 = lshCand
-      .join(reps.select(col("id").as("id_a"), col("__set").as("__sa")), Seq("id_a"))
-      .join(reps.select(col("id").as("id_b"), col("__set").as("__sb")), Seq("id_b"))
-      .withColumn("c", NativeHash.sortedIntersectAtLeast(
-        col("__sa"), col("__sb"), lit(k)))
-      .filter(col("c") >= 0)
-      .select("id_a", "id_b")
-    val nbrMin = edges1.select(col("id_a").as("id"), col("id_b").as("nb"))
-      .union(edges1.select(col("id_b").as("id"), col("id_a").as("nb")))
-      .groupBy("id").agg(min("nb").as("__nbmin"))
-    val repCluster = Par.cut(reps.select(col("id"))
-      .join(nbrMin, Seq("id"), "left")
-      .select(col("id"),
-        least(col("id"), coalesce(col("__nbmin"), col("id"))).as("cl")),
-      "overlap: contraction labels")
-
-    // ---- 3. cluster postings in rarity order — the route probe's
-    // persisted prefix index REUSED as the postings source (cluster
-    // labels join on by id; identical rows to rebuilding the dfreq
-    // count + per-doc window here, which the probe already paid for)
-    val member = Par.cut(reps.join(repCluster, Seq("id")), "overlap: member") // (id, __set, n, cl)
-    val cStats = member.groupBy("cl").agg(count(lit(1)).as("nm"))
-    val cpost = Par.cut(prefix
-      .join(repCluster, Seq("id"))
-      .groupBy(col("s"), col("cl"))
-      .agg(max(col("n") - col("pos")).as("mr"))
-      .join(cStats, Seq("cl")), "overlap: postings")
-    // a qualifying pair shares a prefix element e* with
-    // 1 + min(n_a−p_a, n_b−p_b) ≥ k; mr ≥ n−p per member, so the
-    // relaxed positional filter below is lossless. nm rides the
-    // candidate stream (functionally dependent on cl, so the DISTINCT
-    // is unchanged) to route singleton-singleton pairs around the
-    // anchor gate without a stats re-join of the full pair stream.
-    val candCl = cpost.select(col("s").as("__sa"), col("cl").as("cl_a"),
-        col("mr").as("__mra"), col("nm").as("__nma"))
-      .join(cpost.select(col("s").as("__sb"), col("cl").as("cl_b"),
-          col("mr").as("__mrb"), col("nm").as("__nmb")),
-        col("__sa") === col("__sb") &&
-        col("cl_a") < col("cl_b") &&
-        lit(1) + least(col("__mra"), col("__mrb")) >= lit(k))
-      .select(col("cl_a"), col("cl_b"), col("__nma"), col("__nmb"))
-      .distinct()
-    // not cut/persisted despite the two bypass union arms below —
-    // ReuseExchange shares the candidate self-join's exchanges between
-    // the identical subtrees (see ClusterDedup's note)
-
-    // ---- 4. anchor-bound prune (overlap flavor of ClusterDedup's) ----
-    // anchor = min-id MEMBER's set; maxD_C = max over members of
-    // |S_x \ H_C| (exact, one corpus-linear walk per member;
-    // multi-member clusters only — a singleton's anchor IS its member,
-    // so maxD = 0 exactly via the left-join coalesce). Soundness: for
-    // x ∈ A, y ∈ B every element of S_x ∩ S_y lands in H_A ∩ H_B,
-    // S_x \ H_A (≤ maxD_A of them) or S_y \ H_B (≤ maxD_B), so
-    // |S_x∩S_y| ≤ |H_A∩H_B| + maxD_A + maxD_B — a walk that cannot
-    // reach k − maxD_A − maxD_B retires the cluster pair before the
-    // |A|·|B| member expansion. countAtLeast returns the full count for
-    // non-positive thresholds, so a slack bound degrades to a plain
-    // walk, never a false prune.
-    // cut once: the diffs build, the prune, and the verify's adj
-    // expansion are separate executions — uncut, each recomputes the
-    // corpus-array min_by shuffle (see ClusterDedup's note)
-    val anchors = Par.cut(member.groupBy("cl")
-      .agg(min_by(struct(col("__set"), col("n")), col("id")).as("__h"))
-      .select(col("cl"), col("__h.__set").as("__hset"), col("__h.n").as("__hn")))
-    // MEMBER DIFFS (the ClusterDedup treatment): each member carried as
-    // edit-sized diffs against its cluster anchor — __dm = H \ S_x,
-    // __dp = S_x \ H. Multi-member clusters pay the same corpus-linear
-    // anchor join the old maxD stage paid; singletons are a projection
-    // (their anchor IS the member — both diffs empty, no arrays ship).
-    val emptyArr = typedLit(Array.empty[Long])
-    val multiDiffs = member
-      .join(cStats.where(col("nm") > 1).select("cl"), Seq("cl"))
-      .join(anchors, Seq("cl"))
-      .select(col("cl"), col("id"), col("n"), col("__hn"),
-        NativeHash.sortedDiff(col("__hset"), col("__set")).as("__dm"),
-        NativeHash.sortedDiff(col("__set"), col("__hset")).as("__dp"))
-    val singleDiffs = member
-      .join(cStats.where(col("nm") === 1).select("cl"), Seq("cl"))
-      .select(col("cl"), col("id"), col("n"), col("n").as("__hn"),
-        emptyArr.as("__dm"), emptyArr.as("__dp"))
-    val diffs = Par.cut(multiDiffs.unionByName(singleDiffs))
-    // maxD_C = max over members of |S_x \ H_C| = max |__dp| (singletons
-    // contribute 0 exactly, matching the left-join-coalesce semantics)
-    val maxD = diffs.groupBy("cl").agg(max(size(col("__dp"))).as("__maxd"))
-    // SINGLETON-SINGLETON BYPASS (see ClusterDedup): when both sides
-    // are single-member clusters the anchor walk IS the pair's verify
-    // walk, so gating it only joins the anchor arrays onto the pair
-    // stream a second time — on low-duplication corpora those pairs
-    // are the bulk of the candidates. They go straight to verify;
-    // multi-member pairs (the replica families) still take the gate.
-    val bothSingle = col("__nma") === 1 && col("__nmb") === 1
-    // the prune keeps the walk's EXACT anchor intersection (__hc) — the
-    // verify's diff arm reassembles every member pair's count from it;
-    // bypass pairs carry null and keep the direct full-array walk
-    val pruned =
-      if (!prune) candCl.select(col("cl_a"), col("cl_b"),
-        lit(null).cast("int").as("__hc"))
-      else candCl.where(!bothSingle)
-        .join(anchors.select(col("cl").as("cl_a"), col("__hset").as("__ha")), Seq("cl_a"))
-        .join(anchors.select(col("cl").as("cl_b"), col("__hset").as("__hb")), Seq("cl_b"))
-        .join(maxD.select(col("cl").as("cl_a"), col("__maxd").as("__da")), Seq("cl_a"), "left")
-        .join(maxD.select(col("cl").as("cl_b"), col("__maxd").as("__db")), Seq("cl_b"), "left")
-        .withColumn("__hc", NativeHash.sortedIntersectAtLeast(col("__ha"), col("__hb"),
-          (lit(k) - coalesce(col("__da"), lit(0)) - coalesce(col("__db"), lit(0)))
-            .cast("int")))
-        .filter(col("__hc") >= 0)
-        .select(col("cl_a"), col("cl_b"), col("__hc"))
-        .union(candCl.where(bothSingle).select(col("cl_a"), col("cl_b"),
-          lit(null).cast("int").as("__hc")))
-
-    // ---- 5. verify: cross-cluster member pairs + intra-cluster pairs.
-    // Anchor-gated pairs use the DIFF identity (see ClusterDedup
-    // .verifiedMemberPairs / NativeHash.SortedDiffHelper):
-    //   c = __hc + adj_a + adj_b + correction
-    // with adj computed once per (member, opposite cluster) — the
-    // member-pair join ships only edit-sized diffs, so a replica
-    // family's quadratic expansion moves O(edit) bytes per pair instead
-    // of two full element arrays. Bypass (singleton-singleton) pairs
-    // keep the direct early-exit walk — for them the diff arm IS that
-    // walk plus bookkeeping.
-    def verified(pairs: DataFrame): DataFrame = pairs
-      .withColumn("c", NativeHash.sortedIntersectAtLeast(
-        col("__sa"), col("__sb"), lit(k)))
-      .filter(col("c") >= 0)
-      .select(least(col("ra"), col("rb")).as("ra"),
-        greatest(col("ra"), col("rb")).as("rb"), col("c").cast("long").as("overlap"))
-    val directCross = verified(pruned.where(col("__hc").isNull).select("cl_a", "cl_b")
-      .join(member.select(col("cl").as("cl_a"), col("id").as("ra"), col("__set").as("__sa")), Seq("cl_a"))
-      .join(member.select(col("cl").as("cl_b"), col("id").as("rb"), col("__set").as("__sb")), Seq("cl_b")))
-    val gated = pruned.where(col("__hc").isNotNull)
-    def expand(sfx: String, own: String, opp: String) = {
-      val keep = Seq(col("cl_a"), col("cl_b")) ++
-        (if (sfx == "a") Seq(col("__hc")) else Nil) ++
-        Seq(col(s"r$sfx"), col(s"__dm$sfx"), col(s"__dp$sfx"), col(s"__adj$sfx"))
-      gated.join(diffs.select(col("cl").as(own), col("id").as(s"r$sfx"),
-          col("__dm").as(s"__dm$sfx"), col("__dp").as(s"__dp$sfx")), Seq(own))
-        .join(anchors.select(col("cl").as(opp), col("__hset").as("__hOpp")), Seq(opp))
-        .withColumn(s"__adj$sfx", NativeHash.anchorAdjust(
-          col(s"__dm$sfx"), col(s"__dp$sfx"), col("__hOpp")))
-        .select(keep: _*)
-    }
-    val diffCross = expand("a", "cl_a", "cl_b")
-      .join(expand("b", "cl_b", "cl_a"), Seq("cl_a", "cl_b"))
-      // sound count bound c ≤ __hc + |dP_a| + |dP_b| — retires the pair
-      // before the correction walk
-      .filter(col("__hc") + size(col("__dpa")) + size(col("__dpb")) >= k)
-      .withColumn("c", col("__hc") + col("__adja") + col("__adjb") +
-        NativeHash.diffCorrection(col("__dma"), col("__dpa"), col("__dmb"), col("__dpb")))
-      .filter(col("c") >= k)
-      .select(least(col("ra"), col("rb")).as("ra"),
-        greatest(col("ra"), col("rb")).as("rb"), col("c").cast("long").as("overlap"))
-    val cross = directCross.unionByName(diffCross)
-    // intra: both sides share the anchor, so adj = −|dM| exactly and
-    // c = |H| − |dM_a| − |dM_b| + correction — the replica family's g²
-    // lives here (the family contracts into ONE cluster), now at
-    // edit-sized bytes per pair
-    val intra = diffs.select(col("cl"), col("id").as("ra"), col("__hn"),
-        col("__dm").as("__dma"), col("__dp").as("__dpa"))
-      .join(diffs.select(col("cl"), col("id").as("rb"),
-        col("__dm").as("__dmb"), col("__dp").as("__dpb")), Seq("cl"))
-      .filter(col("ra") < col("rb"))
-      // c ≤ |H| − max(|dM|) + min(|dP|) (correction ≤ min(|dM_a|,|dM_b|)
-      // + min(|dP_a|,|dP_b|)) — cheap pre-walk bound
-      .filter(col("__hn") - greatest(size(col("__dma")), size(col("__dmb"))) +
-        least(size(col("__dpa")), size(col("__dpb"))) >= k)
-      .withColumn("c", col("__hn") - size(col("__dma")) - size(col("__dmb")) +
-        NativeHash.diffCorrection(col("__dma"), col("__dpa"), col("__dmb"), col("__dpb")))
-      .filter(col("c") >= k)
-      .select(col("ra"), col("rb"), col("c").cast("long").as("overlap"))
-    // NO cut here: repPairs has exactly one consumer (the fan-out
-    // below), and pair listings are output-sized — an eager checkpoint
-    // of Ω(output) rows would double the operator's peak disk for zero
-    // reuse (measured: the 100×-replicated soak corpus filled a 78 GB
-    // disk through exactly this materialization before the final cut)
-    val repPairs = cross.union(intra)
-
-    // ---- fan out through the exact-set collapse ----
-    val groups = docRep.select(col("id"), col("n"), col("rep"))
-    val crossGroups = repPairs
-      .join(groups.select(col("rep").as("ra"), col("id").as("ia")), Seq("ra"))
-      .join(groups.select(col("rep").as("rb"), col("id").as("ib")), Seq("rb"))
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"), col("overlap"))
-    // identical-set pairs: overlap = |set| = n, qualifying by the size
-    // filter — no walk needed
-    val intraGroups = groups.select(col("rep"), col("id").as("id_a"), col("n"))
-      .join(groups.select(col("rep"), col("id").as("id_b")), Seq("rep"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("n").cast("long").as("overlap"))
-    val pairsOut = crossGroups.union(intraGroups)
-
-    ClusteredPairs(pairsOut, { finished =>
-      val out = Par.cut(finished, "overlap: pairs out")
-      base.unpersist(false)
-      Par.free(prefix)
-      (collapseCut.toSeq ++ Seq(repCluster, member, anchors, diffs, cpost))
-        .foreach(Par.free)
-      out
-    })
-  }
+      adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) =
+    ClusterDedup.topKPlan(df, idCol, setCol, ClusterDedup.Overlap(minOverlap), k,
+      numHashes, numBands, prune, viaAgg, adaptive)
 }

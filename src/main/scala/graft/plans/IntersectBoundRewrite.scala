@@ -21,10 +21,10 @@ import graft.functions.NativeHash.{SortedIntersectAtLeastExpr, SortedIntersectCo
   * the natural predicate — SQL users via the injected
   * `sorted_intersect_count`, DataFrame users via
   * `NativeHash.sortedIntersectCount` — and the plan gets the bounded
-  * walk automatically (OverlapJoin's union-bound prune hits this form
-  * directly; ClusterDedup's anchor-bound prune calls the at-least
-  * expression itself because it also needs the returned exact count
-  * for its witness check).
+  * walk automatically (the direct JaccardDedup.overlapJoin verify is
+  * written in this form; the clustered pair core's anchor-bound prune calls
+  * the at-least expression itself because it also needs the returned
+  * exact count for its witness check).
   *
   * Soundness of the integer bound: the count c is an integer, so for
   * any real x, c >= x iff c >= ceil(x), and c > x iff c >= floor(x)+1.

@@ -37,7 +37,7 @@ object PlanDump {
       : Map[String, () => org.apache.spark.sql.DataFrame] = {
     import org.apache.spark.sql.functions._
     import graft.functions.{NativeHash, Text}
-    import graft.operators.{ClusterDedup, JaccardDedup, OverlapJoin, Par}
+    import graft.operators.{ClusterDedup, JaccardDedup, Par}
     def docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"), col("lang"))
     Map(
@@ -50,28 +50,29 @@ object PlanDump {
           .where(col("n") > 0)
         JaccardDedup.prefixIndex(
           hashed.select(col("id"), explode(col("__sh")).as("s"), col("n")),
-          "id", 0.3)
+          "id", ClusterDedup.Jaccard(0.3))
       }),
       "dedup_ngram_jaccard_clustered" -> (() =>
         ClusterDedup.pairsClusteredPlan(docs.select(col("doc_id"), col("text")),
           "doc_id", NativeHash.shingleHashes(Text.tokens(col("text")), 2),
-          0.3, 64, 16, prune = true)._1),
+          ClusterDedup.Jaccard(0.3), 64, 16, prune = true)._1),
       "dedup_chargram_clustered" -> (() =>
         ClusterDedup.pairsClusteredPlan(docs.filter(col("lang") === "zh"),
           "doc_id", NativeHash.charShingleHashes(col("text"), 3),
-          0.6, 64, 16, prune = true)._1),
+          ClusterDedup.Jaccard(0.6), 64, 16, prune = true)._1),
       "jaccard_topk" -> (() =>
         ClusterDedup.topKPlanBy(docs.filter(col("lang") === "zh"),
           "doc_id", NativeHash.charShingleHashes(col("text"), 3),
           0.6, 3)._1),
       "overlap_join_clustered" -> (() =>
-        OverlapJoin.clusteredPlan(docs.select(col("doc_id"), col("text")),
+        ClusterDedup.pairsClusteredPlan(docs.select(col("doc_id"), col("text")),
           "doc_id", NativeHash.shingleHashes(Text.tokens(col("text")), 1),
-          30, 64, 16, prune = true).pairs),
+          ClusterDedup.Overlap(30), 64, 16, prune = true)._1),
       "overlap_topk" -> (() =>
-        OverlapJoin.topKPlan(docs.select(col("doc_id"), col("text")),
+        ClusterDedup.topKPlan(docs.select(col("doc_id"), col("text")),
           "doc_id", NativeHash.shingleHashes(Text.tokens(col("text")), 1),
-          30, 5)._1))
+          ClusterDedup.Overlap(30), 5, 64, 16, prune = true, viaAgg = true,
+          adaptive = true)._1))
   }
 
   def main(args: Array[String]): Unit = {

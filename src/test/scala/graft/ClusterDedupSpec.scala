@@ -12,11 +12,20 @@ import graft.operators.{ClusterDedup, Components, JaccardDedup}
   * losslessness these tests pin, including the shapes that motivated
   * the operator (replica cliques) and the shapes that could break it
   * (empty docs, exact duplicates, threshold-boundary pairs, clusters
-  * above the union cap).
+  * whose anchor walk alone misses a qualifying member pair). Pair
+  * listings compare as multisets of exact rows: a listing that emits a
+  * pair twice fails.
   */
 class ClusterDedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private def multiset[A](rows: Seq[A]): Map[A, Int] =
+    rows.groupBy(identity).view.mapValues(_.size).toMap
+
+  private def pairRows(df: DataFrame): Map[(Long, Long, Double), Int] =
+    multiset(df.select(col("id_a"), col("id_b"), col("jaccard"))
+      .as[(Long, Long, Double)].collect().toSeq)
 
   private def direct(df: DataFrame, t: Double, nGram: Int = 2): Set[(Long, Long)] =
     Components.connectedComponents(
@@ -125,13 +134,9 @@ class ClusterDedupSpec extends AnyFunSuite {
       val forcedLabels = ClusterDedup.components(docs, "doc_id", "text", 2, 0.3,
         adaptive = false).as[(Long, Long)].collect().toSet
       assert(adaptiveLabels == forcedLabels)
-      val adaptivePairs = ClusterDedup.pairsClustered(docs, "doc_id", "text", 2, 0.3)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .as[(Long, Long, Double)].collect().toSet
-      val forcedPairs = ClusterDedup.pairsClustered(docs, "doc_id", "text", 2, 0.3,
-        adaptive = false)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .as[(Long, Long, Double)].collect().toSet
+      val adaptivePairs = pairRows(ClusterDedup.pairsClustered(docs, "doc_id", "text", 2, 0.3))
+      val forcedPairs = pairRows(ClusterDedup.pairsClustered(docs, "doc_id", "text", 2, 0.3,
+        adaptive = false))
       assert(adaptivePairs == forcedPairs)
     }
   }
@@ -148,23 +153,19 @@ class ClusterDedupSpec extends AnyFunSuite {
   // the jaccard VALUES (intra-group pairs are emitted as exact 1.0;
   // cross-group pairs inherit the rep pair's value) ----
 
-  private def directPairs(df: DataFrame, t: Double): Set[(Long, Long, Double)] =
-    JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-      .as[(Long, Long, Double)].collect().toSet
+  private def directPairs(df: DataFrame, t: Double): Map[(Long, Long, Double), Int] =
+    pairRows(JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t))
 
   private def clusteredPairs(df: DataFrame, t: Double,
-      prune: Boolean = true): Set[(Long, Long, Double)] =
-    ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t, prune = prune)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-      .as[(Long, Long, Double)].collect().toSet
+      prune: Boolean = true): Map[(Long, Long, Double), Int] =
+    pairRows(ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t, prune = prune))
 
   test("pairsClustered matches nearDupPairs on sf0.001 documents (values included)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val got = clusteredPairs(docs, 0.3)
     val exp = directPairs(docs, 0.3)
-    assert(got == exp, s"missing=${exp -- got} extra=${got -- exp}")
+    assert(got == exp, s"got=$got\nexp=$exp")
   }
 
   test("pairsClustered on the replica-marked soak corpus: identical pairs and values") {
@@ -178,10 +179,10 @@ class ClusterDedupSpec extends AnyFunSuite {
     }.toDF("doc_id", "text")
     val got = clusteredPairs(docs, 0.3)
     val exp = directPairs(docs, 0.3)
-    assert(got == exp, s"missing=${exp -- got} extra=${got -- exp}")
+    assert(got == exp, s"got=$got\nexp=$exp")
     // exact-dup replicas must surface as J=1.0 intra-group pairs
-    assert(got.exists { case (_, _, j) => j == 1.0 } ==
-      exp.exists { case (_, _, j) => j == 1.0 })
+    assert(got.keys.exists { case (_, _, j) => j == 1.0 } ==
+      exp.keys.exists { case (_, _, j) => j == 1.0 })
   }
 
   test("pairsClustered: exact duplicates, empty docs, boundary pairs, prune disabled") {
@@ -195,7 +196,7 @@ class ClusterDedupSpec extends AnyFunSuite {
       (1L, "alpha beta gamma epsilon"),
       (2L, "zeta eta theta iota")).toDF("doc_id", "text")
     assert(clusteredPairs(boundary, 0.5) == directPairs(boundary, 0.5))
-    assert(clusteredPairs(boundary, 0.5).exists { case (a, b, _) => a == 0L && b == 1L })
+    assert(clusteredPairs(boundary, 0.5).keys.exists { case (a, b, _) => a == 0L && b == 1L })
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text")).limit(120)
     assert(clusteredPairs(docs, 0.3, prune = false) == directPairs(docs, 0.3))
@@ -214,12 +215,11 @@ class ClusterDedupSpec extends AnyFunSuite {
       (1L, ((1L to 99L) ++ (1000L to 1003L)).toArray),
       (2L, (1L to 100L).toArray),
       (3L, (71L to 100L).toArray)).toDF("id", "arr")
-    def pairsOf(df: DataFrame) =
-      df.select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
-    val got = pairsOf(ClusterDedup.pairsClusteredBy(rows, "id", col("arr"), 0.3))
-    val exp = pairsOf(JaccardDedup.nearDupPairsByHashes(rows, "id", col("arr"), 0.3))
-    assert(got == exp, s"missing=${exp -- got} extra=${got -- exp}")
-    assert(got.contains((2L, 3L)), "the maxD-boundary pair must survive the anchor bound")
+    val got = pairRows(ClusterDedup.pairsClusteredBy(rows, "id", col("arr"), 0.3))
+    val exp = pairRows(JaccardDedup.nearDupPairsByHashes(rows, "id", col("arr"), 0.3))
+    assert(got == exp, s"got=$got\nexp=$exp")
+    assert(got.keys.exists(p => p._1 == 2L && p._2 == 3L),
+      "the maxD-boundary pair must survive the anchor bound")
   }
 
   test("pairsClusteredBy char-gram flavor matches nearDupPairsByChars (zh-style unsegmented text)") {
@@ -236,14 +236,10 @@ class ClusterDedupSpec extends AnyFunSuite {
       (0 until 4).map { r => (id * 10 + r, if (r == 0) text else s"${text}版$r") }
     }.toDF("doc_id", "text")
     for (t <- Seq(0.3, 0.6)) {
-      val got = ClusterDedup.pairsClusteredBy(docs, "doc_id",
-          NativeHash.charShingleHashes(col("text"), 3), t)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .as[(Long, Long, Double)].collect().toSet
-      val exp = JaccardDedup.nearDupPairsByChars(docs, "doc_id", "text", 3, t)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-        .as[(Long, Long, Double)].collect().toSet
-      assert(got == exp, s"t=$t: missing=${exp -- got} extra=${got -- exp}")
+      val got = pairRows(ClusterDedup.pairsClusteredBy(docs, "doc_id",
+          NativeHash.charShingleHashes(col("text"), 3), t))
+      val exp = pairRows(JaccardDedup.nearDupPairsByChars(docs, "doc_id", "text", 3, t))
+      assert(got == exp, s"t=$t: got=$got\nexp=$exp")
       assert(got.nonEmpty, s"degenerate fixture at t=$t")
     }
   }
@@ -262,21 +258,46 @@ class ClusterDedupSpec extends AnyFunSuite {
     for (t <- Seq(0.3, 0.6); k <- Seq(1, 3)) {
       val pairs = JaccardDedup.nearDupPairsByChars(docs, "doc_id", "text", 3, t)
         .select(col("id_a"), col("id_b"), col("jaccard"))
-        .as[(Long, Long, Double)].collect().toSet
-      val truth = pairs.toSeq
+        .as[(Long, Long, Double)].collect().toSeq
+      val truth = multiset(pairs
         .flatMap { case (a, b, j) => Seq((a, b, j), (b, a, j)) }
         .groupBy(_._1).toSeq.flatMap { case (_, ps) =>
           ps.sortBy(p => (-p._3, p._2)).take(k).zipWithIndex
             .map { case ((id, pid, j), r) => (id, pid, j, r + 1) }
-        }.toSet
-      assert(truth.exists(_._4 == k), s"fixture must cut at k=$k (t=$t)")
+        })
+      assert(truth.keys.exists(_._4 == k), s"fixture must cut at k=$k (t=$t)")
       for (viaAgg <- Seq(true, false)) {
-        val got = ClusterDedup.topKBy(docs, "doc_id",
+        val got = multiset(ClusterDedup.topKBy(docs, "doc_id",
             NativeHash.charShingleHashes(col("text"), 3), t, k, viaAgg = viaAgg)
-          .as[(Long, Long, Double, Int)].collect().toSet
-        assert(got == truth,
-          s"t=$t k=$k viaAgg=$viaAgg: missing=${truth -- got} extra=${got -- truth}")
+          .as[(Long, Long, Double, Int)].collect().toSeq)
+        assert(got == truth, s"t=$t k=$k viaAgg=$viaAgg:\n got=$got\ntruth=$truth")
       }
+    }
+  }
+
+  test("pair listings and top-k release their internals: each call leaves at most its output cut") {
+    import graft.functions.{NativeHash, Text}
+    import graft.operators.OverlapJoin
+    // replica families with exact copies (r = 0, 1) so the collapse
+    // window is cut as well; adaptive = false takes the clustered route
+    val docs = (0L until 8L).flatMap { id =>
+      val text = s"base document number $id with plenty of shared boilerplate text inside"
+      (0 until 6).map(r => (id * 10 + r, if (r <= 1) text else s"$text rep $r"))
+    }.toDF("doc_id", "text")
+    val tokens1 = NativeHash.shingleHashes(Text.tokens(col("text")), 1)
+    val calls = Seq[(String, () => DataFrame)](
+      "ClusterDedup.pairsClustered" ->
+        (() => ClusterDedup.pairsClustered(docs, "doc_id", "text", 2, 0.3)),
+      "OverlapJoin.pairsClustered" ->
+        (() => OverlapJoin.pairsClustered(docs, "doc_id", tokens1, 6)),
+      "OverlapJoin.pairsClustered(adaptive = false)" ->
+        (() => OverlapJoin.pairsClustered(docs, "doc_id", tokens1, 6, adaptive = false)),
+      "OverlapJoin.topK" -> (() => OverlapJoin.topK(docs, "doc_id", tokens1, 6, 3)))
+    for ((name, call) <- calls) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      assert(call().count() > 0, s"$name: degenerate fixture")
+      val left = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+      assert(left <= 1, s"$name left $left persisted RDDs behind")
     }
   }
 

@@ -218,16 +218,24 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
-  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
-    df.select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("j"))
-      .as[(Long, Long, Double)].collect().toSet
+  /** The clustered twins against their direct reference, as multisets
+    * of exact rows, on both routes: the default call (adaptive — at
+    * this corpus size always the direct route) and `adaptive = false`
+    * (the clustered core).
+    */
+  private def bothRoutesMatch[A](want: Seq[A], got: Boolean => Seq[A]): Boolean =
+    multiset(got(true)) == multiset(want) && multiset(got(false)) == multiset(want)
 
   property("ClusterDedup.pairsClustered equals nearDupPairs on random corpora") =
     forAll(corpusGen, Gen.oneOf(0.3, 0.5, 0.8)) { (docs, t) =>
       import graft.operators.{ClusterDedup, JaccardDedup}
       val df = docs.toDF("doc_id", "text")
-      pairSet(ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t)) ==
-        pairSet(JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t))
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.select(col("id_a"), col("id_b"), col("jaccard"))
+          .as[(Long, Long, Double)].collect().toSeq
+      bothRoutesMatch(rows(JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t)),
+        adaptive => rows(ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t,
+          adaptive = adaptive)))
     }
 
   property("OverlapJoin.pairsClustered equals the direct overlapJoin on random corpora") =
@@ -236,11 +244,12 @@ object GraftProperties extends Properties("graft") {
       import graft.operators.{JaccardDedup, OverlapJoin}
       val df = docs.toDF("doc_id", "text")
       val sets = NativeHash.shingleHashes(Text.tokens(col("text")), 1)
-      def collect(d: org.apache.spark.sql.DataFrame) =
+      def rows(d: org.apache.spark.sql.DataFrame) =
         d.select(col("id_a"), col("id_b"), col("overlap"))
-          .as[(Long, Long, Long)].collect().toSet
-      collect(OverlapJoin.pairsClustered(df, "doc_id", sets, minOverlap = k)) ==
-        collect(JaccardDedup.overlapJoin(df, "doc_id", sets, minOverlap = k))
+          .as[(Long, Long, Long)].collect().toSeq
+      bothRoutesMatch(rows(JaccardDedup.overlapJoin(df, "doc_id", sets, minOverlap = k)),
+        adaptive => rows(OverlapJoin.pairsClustered(df, "doc_id", sets, minOverlap = k,
+          adaptive = adaptive)))
     }
 
   /** Corpus rows plus rows reusing corpus ids with other texts: null,

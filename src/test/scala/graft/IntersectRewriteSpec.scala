@@ -41,7 +41,7 @@ class IntersectRewriteSpec extends AnyFunSuite {
   }
 
   test("DataFrame double-RHS prune form (the ClusterDedup shape) rewrites and matches") {
-    // count >= n·t − ε with a per-row numeric RHS — the union-bound prune
+    // count >= n·t − ε with a per-row numeric RHS — a size-scaled bound
     val q = df.filter(NativeHash.sortedIntersectCount(col("a"), col("b")) >=
       size(col("a")) * 0.5 - lit(1e-9)).select("id")
     val p = optimized(q)

@@ -9,11 +9,12 @@ import graft.operators.{JaccardDedup, OverlapJoin}
 
 /** OverlapJoin.pairsClustered must be ROW-IDENTICAL (ids AND overlap
   * values) to the direct prefix self-join on every corpus — collapse,
-  * contraction, postings and the union bound are optimizations whose
+  * contraction, postings and the anchor bound are optimizations whose
   * losslessness these tests pin, including the replica-clique shape
   * that motivated the operator and the shapes that could break it
-  * (exact duplicates, at-threshold pairs, sub-threshold sets, clusters
-  * above the union cap).
+  * (exact duplicates, at-threshold pairs, sub-threshold sets, a pair
+  * the anchor walk alone would miss). Listings compare as multisets of
+  * rows: a listing that emits a pair twice fails.
   */
 class OverlapJoinSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -21,19 +22,24 @@ class OverlapJoinSpec extends AnyFunSuite {
 
   private def tokens1 = NativeHash.shingleHashes(Text.tokens(col("text")), 1)
 
-  private def direct(df: DataFrame, k: Int): Set[(Long, Long, Long)] =
-    JaccardDedup.overlapJoin(df, "doc_id", tokens1, k)
-      .as[(Long, Long, Long)].collect().toSet
+  private def multiset[A](rows: Seq[A]): Map[A, Int] =
+    rows.groupBy(identity).view.mapValues(_.size).toMap
 
-  private def clustered(df: DataFrame, k: Int, prune: Boolean = true): Set[(Long, Long, Long)] = {
+  private def pairRows(df: DataFrame): Map[(Long, Long, Long), Int] =
+    multiset(df.select(col("id_a"), col("id_b"), col("overlap"))
+      .as[(Long, Long, Long)].collect().toSeq)
+
+  private def direct(df: DataFrame, k: Int): Map[(Long, Long, Long), Int] =
+    pairRows(JaccardDedup.overlapJoin(df, "doc_id", tokens1, k))
+
+  private def clustered(df: DataFrame, k: Int,
+      prune: Boolean = true): Map[(Long, Long, Long), Int] = {
     // ROUTING IDENTITY (r17): the adaptive probe picks a plan, never a
     // result — every fixture pins the default (adaptive, DIRECT at spec
     // scale) against the FORCED-CLUSTERED arm before returning
-    val adaptive = OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, prune = prune)
-      .as[(Long, Long, Long)].collect().toSet
-    val forced = OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, prune = prune,
-        adaptive = false)
-      .as[(Long, Long, Long)].collect().toSet
+    val adaptive = pairRows(OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, prune = prune))
+    val forced = pairRows(OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, prune = prune,
+        adaptive = false))
     assert(adaptive == forced,
       s"adaptive route diverges from forced-clustered:\n adaptive=$adaptive\n forced=$forced")
     adaptive
@@ -78,7 +84,7 @@ class OverlapJoinSpec extends AnyFunSuite {
       (2L, "a b q r s t")   // overlap 2 with doc 0, 2 with doc 1
     ).toDF("doc_id", "text")
     assert(clustered(docs, 4) == direct(docs, 4))
-    assert(clustered(docs, 4) == Set((0L, 1L, 4L)))
+    assert(clustered(docs, 4) == Map((0L, 1L, 4L) -> 1))
     assert(clustered(docs, 5) == direct(docs, 5))
     assert(clustered(docs, 5).isEmpty)
   }
@@ -86,7 +92,7 @@ class OverlapJoinSpec extends AnyFunSuite {
   test("sets shorter than k emit nothing, even when identical") {
     val docs = Seq((0L, "a b"), (1L, "a b"), (2L, "a b c d e")).toDF("doc_id", "text")
     assert(clustered(docs, 3) == direct(docs, 3))
-    assert(!clustered(docs, 3).exists(p => p._1 == 0L || p._2 == 1L && p._1 < 2))
+    assert(!clustered(docs, 3).keys.exists(p => p._1 == 0L || p._2 == 1L && p._1 < 2))
   }
 
   test("prune=false (anchor bound disabled) still exact — the prune is never a correctness arm") {
@@ -101,17 +107,18 @@ class OverlapJoinSpec extends AnyFunSuite {
   /** Per-doc top-k from the quadratic pair truth: symmetrize, sort by
     * (overlap DESC, partner ASC), take k, rank 1-based.
     */
-  private def topTruth(pairs: Set[(Long, Long, Long)], k: Int): Set[(Long, Long, Long, Int)] =
-    pairs.toSeq.flatMap { case (a, b, c) => Seq((a, b, c), (b, a, c)) }
+  private def topTruth(pairs: Map[(Long, Long, Long), Int],
+      k: Int): Map[(Long, Long, Long, Int), Int] =
+    multiset(pairs.keys.toSeq.flatMap { case (a, b, c) => Seq((a, b, c), (b, a, c)) }
       .groupBy(_._1).toSeq.flatMap { case (_, ps) =>
         ps.sortBy(p => (-p._3, p._2)).take(k).zipWithIndex
           .map { case ((id, pid, ov), r) => (id, pid, ov, r + 1) }
-      }.toSet
+      })
 
   private def gotTopK(df: DataFrame, m: Int, k: Int,
-      viaAgg: Boolean = true): Set[(Long, Long, Long, Int)] =
-    OverlapJoin.topK(df, "doc_id", tokens1, m, k, viaAgg = viaAgg)
-      .as[(Long, Long, Long, Int)].collect().toSet
+      viaAgg: Boolean = true): Map[(Long, Long, Long, Int), Int] =
+    multiset(OverlapJoin.topK(df, "doc_id", tokens1, m, k, viaAgg = viaAgg)
+      .as[(Long, Long, Long, Int)].collect().toSeq)
 
   test("topK equals per-doc top-k of the direct join on sf0.001 documents (both plans)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -141,8 +148,8 @@ class OverlapJoinSpec extends AnyFunSuite {
     val docs = (0L to 6L).map(i => (i, "a b c d e f")).toDF("doc_id", "text")
     val got = gotTopK(docs, 3, 3)
     assert(got == topTruth(direct(docs, 3), 3))
-    assert(got.filter(_._1 == 0L) ==
-      Set((0L, 1L, 6L, 1), (0L, 2L, 6L, 2), (0L, 3L, 6L, 3)))
+    assert(got.filter(_._1._1 == 0L) ==
+      Map((0L, 1L, 6L, 1) -> 1, (0L, 2L, 6L, 2) -> 1, (0L, 3L, 6L, 3) -> 1))
   }
 
   test("anchor bound includes the member-vs-anchor diff (maxD), not anchor walks alone") {
@@ -156,12 +163,9 @@ class OverlapJoinSpec extends AnyFunSuite {
       (1L, ((1L to 99L) ++ (1000L to 1003L)).toArray),
       (2L, (1L to 100L).toArray),
       (3L, (71L to 100L).toArray)).toDF("doc_id", "arr")
-    def pairsOf(df: DataFrame) =
-      df.select(col("id_a"), col("id_b"), col("overlap"))
-        .as[(Long, Long, Long)].collect().toSet
-    val got = pairsOf(OverlapJoin.pairsClustered(rows, "doc_id", col("arr"), 30))
-    val exp = pairsOf(JaccardDedup.overlapJoin(rows, "doc_id", col("arr"), 30))
-    assert(got == exp, s"missing=${exp -- got} extra=${got -- exp}")
+    val got = pairRows(OverlapJoin.pairsClustered(rows, "doc_id", col("arr"), 30))
+    val exp = pairRows(JaccardDedup.overlapJoin(rows, "doc_id", col("arr"), 30))
+    assert(got == exp, s"got=$got\nexp=$exp")
     assert(got.contains((2L, 3L, 30L)), "the maxD-boundary pair must survive the anchor bound")
   }
 }

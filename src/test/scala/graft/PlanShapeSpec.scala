@@ -140,7 +140,8 @@ class PlanShapeSpec extends AnyFunSuite {
       (id, Array(0L, id + 1, id + 2, id + 3), 4)
     }.toDF("id", "__sh", "n")
     val index = docs.select(col("id"), explode(col("__sh")).as("s"), col("n"))
-    val prefix = graft.operators.JaccardDedup.prefixIndex(index, "id", 0.3)
+    val prefix = graft.operators.JaccardDedup.prefixIndex(index, "id",
+      graft.operators.ClusterDedup.Jaccard(0.3))
     val p = plan(prefix)
     assert(nodes(p, "Window") == 1, s"expected ONLY the per-doc rarity window:\n$p")
     assert(nodes(p, "HashAggregate") >= 2, // partial + final of the df count
