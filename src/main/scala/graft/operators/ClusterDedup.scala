@@ -354,7 +354,11 @@ object ClusterDedup {
     * so the exact rep-level pairs are the cluster edges directly and
     * labels fan out through the collapse alone. Identical labeling to
     * the clustered arm: component = min doc id reachable, and every
-    * collapsed member's id ≥ its rep's.
+    * collapsed member's id ≥ its rep's. The rep pairs are evaluated
+    * once, by the edge cut inside [[Components.connectedComponents]];
+    * on a bounded pair graph its labels come back driver-local, so the
+    * fan-out join below is a broadcast and `labels out(direct)` is the
+    * only cut after the edge cut.
     */
   private def componentsDirect(d: DirectCore): DataFrame = {
     val edges = d.pairs.select(col("ra"), col("rb"))
@@ -402,9 +406,10 @@ object ClusterDedup {
       .select(col("id"), col("id").as("component"))
     val out = Par.cut(labeled.union(isolated), "cluster: labels out")
     core.release()
-    // clComp is itself a cut (connectedComponents' sealed result) with
-    // no consumer beyond `out` — freeing it here closes a per-call
-    // block leak in long-lived sessions (the semanticDedup seal rule)
+    // on the distributed branch clComp is itself a cut (its sealed
+    // labels) with no consumer beyond `out` — freeing it here closes a
+    // per-call block leak in long-lived sessions (the semanticDedup
+    // seal rule); driver-local labels make the free a no-op
     Seq(crossEdges, clComp).foreach(Par.free)
     (out, Some(core.probes))
   }
@@ -651,9 +656,9 @@ object ClusterDedup {
     // plus the verified delta-touching cluster edges
     val preStar = member.where(col("id") =!= col("cl"))
       .select(col("id").as("id_a"), col("cl").as("id_b"))
-    // connectedComponents fully materializes (and cuts) its result
-    // before returning, so every incremental intermediate can be
-    // released immediately after
+    // connectedComponents reads its edges once, into driver labels or
+    // a sealed cut, before returning, so every incremental
+    // intermediate can be released immediately after
     val out = Par.labeled(base.sparkSession, "inc: final components")(
       Components.connectedComponents(
       preStar.unionByName(crossEdges.select(col("cl_a").as("id_a"), col("cl_b").as("id_b"))),

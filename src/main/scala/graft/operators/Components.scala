@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,6 +19,11 @@ import org.apache.spark.sql.functions._
   * `checkpoint()` when the session has a checkpoint dir (the
   * production setting — survives executor loss), else eager
   * localCheckpoint.
+  *
+  * Edge sets under a size threshold skip the rounds: one bounded
+  * collect feeds a driver union-find, and its labels are returned as a
+  * driver-local relation with no further job. Only the distributed
+  * branch seals its labels with a cut.
   */
 object Components {
 
@@ -30,73 +33,87 @@ object Components {
     * `vertices` (single id column, any name) adds isolated nodes that
     * appear in no edge — they map to themselves.
     *
-    * Adaptive execution (same idea as AQE's broadcast threshold): when
-    * the deduped edge set fits `localThreshold` rows (default 2²⁰ ≈
+    * Adaptive execution (same idea as AQE's broadcast threshold): the
+    * normalized, deduped edge list is cut once, self-loops included so
+    * the cut also carries every edge vertex. One bounded
+    * `limit(localThreshold + 1)` collect of that cut picks the branch.
+    * When the edge set fits `localThreshold` rows (default 2²⁰ ≈
     * ~16 MB of id pairs — a bounded driver collect, like the IVF
-    * centroid sample), a driver union-find labels it in one pass
-    * instead of paying several distributed alternation rounds. Dedup
-    * pair graphs are usually corpus-tiny; the distributed path is the
-    * 100 TB posture and is what larger graphs get automatically.
+    * centroid sample), a driver union-find labels every endpoint in
+    * one pass and the driver labels ARE the result: a local relation
+    * with `vertices = None`, one lazy broadcast left join of the
+    * vertex set with `Some`. No checksum and no output cut run on this
+    * branch. Larger graphs get the distributed large-star/small-star
+    * rounds, which checksum each round and seal their labels with one
+    * cut (`components: labels out`). Dedup pair graphs are usually
+    * corpus-tiny; the distributed branch is the 100 TB posture.
     */
   def connectedComponents(
       edges: DataFrame, srcCol: String, dstCol: String,
       vertices: Option[DataFrame] = None, maxIter: Int = 25,
       localThreshold: Long = 1L << 20): DataFrame = {
     val idT = edges.schema(srcCol).dataType
-    // the edge input is often an expensive subtree (e.g. a near-dup
-    // pair pipeline); persist so normalization and vertex extraction
-    // evaluate it exactly once
-    val in = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // normalize: undirected, deduped, self-loops dropped
-    var e = in
+    // normalize: undirected, deduped; self-loops stay so the one cut
+    // carries the edge vertex set too
+    val all = Par.cut(edges
       .select(least(col(srcCol), col(dstCol)).cast(idT).as("dst"),
               greatest(col(srcCol), col(dstCol)).cast(idT).as("src"))
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    e = Par.cut(e)
-
-    var prev = checksum(e)
-    val labels =
-      if (prev._1 <= localThreshold) { val l = localLabels(e, idT); freeCheckpoint(e); l }
-      else {
-        var iter = 0
-        var converged = false
-        while (!converged && iter < maxIter) {
-          val next = Par.cut(smallStar(largeStar(e)))
-          val cur = checksum(next)
-          freeCheckpoint(e)
-          e = next
-          converged = cur == prev
-          prev = cur
-          iter += 1
-        }
-        if (!converged)
-          log.warn(s"connectedComponents: edge-set checksum did not converge in $maxIter " +
-            "alternation rounds — labels below are the groupBy-min of the last edge set " +
-            "and may split components; raise maxIter")
-        // at the fixpoint every non-root points straight at its component
-        // min; groupBy(min) also makes pre-convergence output well-defined
-        e.groupBy(col("src").as("id")).agg(min("dst").as("component"))
+      .distinct())
+    // clamp so `limit`'s Int bound cannot overflow
+    val cap = math.max(0L, math.min(localThreshold, Int.MaxValue - 1L))
+    val head = all.limit(cap.toInt + 1).collect()
+    if (head.length <= cap) {
+      freeCheckpoint(all)
+      val labels = localLabels(all.sparkSession, head, idT)
+      vertices.fold(labels) { v =>
+        v.toDF("id").union(labels.select("id")).distinct()
+          .join(broadcast(labels), Seq("id"), "left")
+          .select(col("id"), coalesce(col("component"), col("id")).as("component"))
       }
+    } else distributedLabels(all, vertices, maxIter)
+  }
+
+  /** The distributed branch over the cut `all` (normalized edges with
+    * self-loops): alternation rounds until the edge-set checksum is
+    * stable, then one cut of (vertex, label) for every vertex of `all`
+    * and `vertices`.
+    */
+  private def distributedLabels(
+      all: DataFrame, vertices: Option[DataFrame], maxIter: Int): DataFrame = {
+    var e = all.where(col("src") =!= col("dst"))
+    var prev = checksum(e)
+    var iter = 0
+    var converged = false
+    while (!converged && iter < maxIter) {
+      val next = Par.cut(smallStar(largeStar(e)))
+      val cur = checksum(next)
+      // round 0's edge set is a filter over `all`, still read below
+      if (iter > 0) freeCheckpoint(e)
+      e = next
+      converged = cur == prev
+      prev = cur
+      iter += 1
+    }
+    if (!converged)
+      log.warn(s"connectedComponents: edge-set checksum did not converge in $maxIter " +
+        "alternation rounds — labels below are the groupBy-min of the last edge set " +
+        "and may split components; raise maxIter")
+    // at the fixpoint every non-root points straight at its component
+    // min; groupBy(min) also makes pre-convergence output well-defined
+    val labels = e.groupBy(col("src").as("id")).agg(min("dst").as("component"))
     val vs = {
-      // one pass over the cached input (a union of two selects would
-      // re-scan it twice); raw edges, so self-loop-only nodes survive
-      val fromEdges = in.select(
-        explode(array(col(srcCol).cast(idT), col(dstCol).cast(idT))).as("id"))
+      // self-loops are still in `all`, so self-loop-only nodes survive
+      val fromEdges = all.select(explode(array(col("src"), col("dst"))).as("id"))
       vertices.map(v => fromEdges.union(v.toDF("id"))).getOrElse(fromEdges)
     }.distinct()
     // materialize the (vertex-sized) result so every intermediate
-    // checkpoint — the per-round edge sets above plus the final
-    // fixpoint — can be freed NOW instead of lingering until RDD GC;
-    // the one surviving checkpoint is the result itself. The vertex
-    // union stays LAZY inside this one cut (r17): a separate eager vs
-    // cut was a whole extra job per call, and the input cache is only
-    // dropped after the cut has materialized everything it reads.
+    // checkpoint — the per-round edge sets plus the normalized cut —
+    // can be freed NOW instead of lingering until RDD GC; the one
+    // surviving checkpoint is the result itself
     val out = Par.cut(vs.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component")),
       "components: labels out")
-    in.unpersist()
-    freeCheckpoint(e)
+    Seq(all, e).foreach(freeCheckpoint)
     out
   }
 
@@ -107,35 +124,38 @@ object Components {
 
   /** Driver union-find over a bounded edge list. Union-by-min with path
     * compression: the smaller id always stays root, so each final root
-    * IS its component's minimum.
+    * IS its component's minimum. Both endpoints of every edge are
+    * registered, so every vertex — a component minimum that is never a
+    * child, a self-loop-only node — gets exactly one row.
     */
-  private def localLabels(e: DataFrame, idT: org.apache.spark.sql.types.DataType): DataFrame = {
-    val spark = e.sparkSession
+  private def localLabels(
+      spark: org.apache.spark.sql.SparkSession,
+      edges: Array[org.apache.spark.sql.Row],
+      idT: org.apache.spark.sql.types.DataType): DataFrame = {
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent(r)
+      while (parent(r) != r) r = parent(r)
       // path compression
       var c = x
-      while (parent.getOrElse(c, c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
     @inline def lt(a: Any, b: Any): Boolean =
       a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
-    e.collect().foreach { row =>
+    edges.foreach { row =>
       val (a, b) = (row.get(0), row.get(1))
+      parent.getOrElseUpdate(a, a)
+      parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) {
-        if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb
-      } else parent.getOrElseUpdate(a, a) // ensure singletons registered
+      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
-    val rows = parent.keysIterator.map(x =>
-      org.apache.spark.sql.Row(x, find(x))).toSeq
+    val rows = parent.keys.toArray.map(x => org.apache.spark.sql.Row(x, find(x)))
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id", idT),
       org.apache.spark.sql.types.StructField("component", idT)))
     spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](rows.asJava), schema)
+      java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Large-star: every node u links each strictly-larger neighbor to

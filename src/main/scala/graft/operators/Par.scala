@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.Shims
 
 /** Partitioning helpers for CPU-bound operators. */
 object Par {
@@ -11,14 +12,19 @@ object Par {
     * for the interpreted higher-order-function pipelines the dedup/ANN
     * operators run (shingling, minhash, plane dots). A real cluster hits
     * the same pathology whenever scan splits ≪ cores × the per-row cost.
-    * No-op when the input is already at least defaultParallelism wide —
-    * at 100 TB the scan is thousands of splits and this adds nothing.
+    * Adds no exchange when the input is already at least
+    * defaultParallelism wide — at 100 TB the scan is thousands of splits.
     *
     * Eager work: counting the splits plans the input through `toRdd`.
-    * Over a scan that runs no job, but when the input ends in a shuffle
-    * (e.g. a `Dedup.byRank` output) AQE runs each upstream shuffle stage
-    * as a job at construction, and the consumer then recomputes it —
-    * measured 1 job over a `Dedup.byRank` input, 0 over a parquet scan.
+    * Over a scan that runs no job, and the input is repartitioned as
+    * is, so column pruning and pushdown still reach the scan. When the
+    * input ends in a shuffle (e.g. a `Dedup.byRank` output) AQE runs
+    * each upstream shuffle stage as a job at construction; the result
+    * (widened or not) then reads that same executed RDD through a
+    * stats-carrying `LogicalRDD` (`Shims.overExecutedRdd`), so the
+    * consumer reuses the materialized shuffle instead of recomputing
+    * it — 1 job over a `Dedup.byRank` input, run once; 0 over a
+    * parquet scan.
     */
   def widen(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -26,7 +32,8 @@ object Par {
     // `df.rdd` would build a second QueryExecution (deserializer plan)
     // and plan the subtree twice
     val splits = df.queryExecution.toRdd.getNumPartitions
-    if (splits < target) df.repartition(target) else df
+    val in = if (Shims.ranQueryStages(df)) Shims.overExecutedRdd(df) else df
+    if (splits < target) in.repartition(target) else in
   }
 
   /** Data-size-aware exchange width with a cores floor (r18). The

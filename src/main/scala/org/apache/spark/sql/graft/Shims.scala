@@ -40,6 +40,30 @@ object Shims {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** True when planning `df` through `toRdd` ran AQE query stages —
+    * its executed plan is adaptive and holds materialized shuffle or
+    * broadcast stages. A plain scan (no exchange) is never adaptive.
+    */
+  def ranQueryStages(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.exists(_.isInstanceOf[org.apache.spark.sql.execution.adaptive.QueryStageExec])
+      case _ => false
+    }
+
+  /** A frame over `df`'s own executed output RDD (`df.queryExecution
+    * .toRdd`) as a `LogicalRDD` leaf — the leaf `Dataset.checkpoint`
+    * builds, minus the persist. It carries `df`'s `optimizedPlan.stats`,
+    * so a small input still plans broadcast joins. Reading it reruns
+    * only the final stage: any shuffle the plan already ran is read
+    * from its map outputs.
+    */
+  def overExecutedRdd(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, org.apache.spark.sql.execution.LogicalRDD
+      .fromDataset(ds.queryExecution.toRdd, ds, ds.isStreaming))
+  }
+
   /** Drain the listener bus (private[spark]): block until every queued
     * SparkListener event has been delivered. Measurement harnesses
     * (graft.tools.Soak) use this between queries so async stage-

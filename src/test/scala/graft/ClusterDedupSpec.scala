@@ -301,6 +301,50 @@ class ClusterDedupSpec extends AnyFunSuite {
     }
   }
 
+  test("direct route construction: the input is scanned once, no labels-out cut in components") {
+    import graft.operators.Dedup
+    // a parquet corpus behind a Dedup.byRank, the curation shape: the
+    // byRank shuffle runs once, in Par.widen's probe, and the route
+    // probe reads its map output
+    val dir = java.nio.file.Files.createTempDirectory("components-jobs").toString
+    (0L until 30L).map { i =>
+      (i, s"family ${i % 6} shares these words across copies number ${i % 6} " +
+        (if (i % 3 == 0) "" else s"edit $i"))
+    }.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/docs")
+    val docs = Dedup.byRank(spark.read.parquet(s"$dir/docs"), Seq("text"), Seq(col("doc_id")))
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      private def ours(p: java.util.Properties) =
+        p.getProperty("spark.jobGroup.id") == "components-construct"
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (ours(js.properties))
+          descs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+      // a stage that runs a parquet scan; skipped stages are never submitted
+      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
+        if (ours(ss.properties) && ss.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scans.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup("components-construct", "components construction")
+    val labels = try {
+      val out = ClusterDedup.components(docs, "doc_id", "text", 2, 0.3)
+      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
+      out
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val jobs = descs.toArray.toSeq.map(_.toString)
+    assert(jobs.contains("cluster: components(direct)"), s"not the direct route: $jobs")
+    assert(!jobs.contains("cut: components: labels out"), s"jobs: $jobs")
+    assert(scans.get == 1, s"the input was scanned ${scans.get} times")
+    assert(jobs.size == 21, s"construction jobs: $jobs")
+    assert(labels.as[(Long, Long)].collect().toSet == direct(docs, 0.3))
+  }
+
   test("chain through mid-similarity links: components merge transitively across clusters") {
     // a—b and b—c above t, a—c below t: one component {a,b,c}
     val docs = Seq(

@@ -13,22 +13,29 @@ class ComponentsSpec extends AnyFunSuite {
   import spark.implicits._
 
   // every case runs BOTH execution paths: threshold 0 forces the
-  // distributed large/small-star alternation, the default takes the
-  // bounded driver union-find
+  // distributed large/small-star alternation (an empty edge list stays
+  // local), the default and Long.MaxValue (the clamp of the collect
+  // bound) take the bounded driver union-find. Output is checked as a
+  // multiset: every id exactly once.
   private def cc(edges: Seq[(Long, Long)],
                  vertices: Option[Seq[Long]] = None): Map[Long, Long] = {
-    val local = Components.connectedComponents(
-        edges.toDF("a", "b"), "a", "b", vertices.map(_.toDF("id")))
-      .as[(Long, Long)].collect().toMap
-    val dist = Components.connectedComponents(
-        edges.toDF("a", "b"), "a", "b", vertices.map(_.toDF("id")),
-        localThreshold = 0L)
-      .as[(Long, Long)].collect().toMap
-    assert(local == dist, "driver union-find and distributed alternation disagree")
-    local
+    val runs = Seq(1L << 20, Long.MaxValue, 0L).map { t =>
+      val rows = Components.connectedComponents(
+          edges.toDF("a", "b"), "a", "b", vertices.map(_.toDF("id")), localThreshold = t)
+        .as[(Long, Long)].collect().toSeq
+      val repeated = rows.groupBy(_._1).collect { case (id, rs) if rs.size > 1 => id }
+      assert(repeated.isEmpty, s"localThreshold=$t labels ids more than once: $repeated")
+      t -> rows.toMap
+    }
+    for ((t, got) <- runs.tail)
+      assert(got == runs.head._2,
+        s"localThreshold=$t disagrees with the default: $got vs ${runs.head._2}")
+    runs.head._2
   }
 
   test("two components resolve to their minimum ids") {
+    // 1 and 10 are never a child in the driver union-find; they must
+    // still get their own rows
     val got = cc(Seq((1L, 2L), (2L, 3L), (10L, 11L)))
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
@@ -47,6 +54,45 @@ class ComponentsSpec extends AnyFunSuite {
   test("isolated vertices map to themselves") {
     val got = cc(Seq((1L, 2L)), Some(Seq(1L, 2L, 99L)))
     assert(got == Map(1L -> 1L, 2L -> 1L, 99L -> 99L))
+  }
+
+  test("degenerate inputs: empty edges, duplicate vertex ids, self-loop-only vertices") {
+    assert(cc(Nil).isEmpty)
+    assert(cc(Nil, Some(Seq(3L, 1L))) == Map(1L -> 1L, 3L -> 3L))
+    assert(cc(Seq((1L, 2L)), Some(Seq(2L, 2L, 7L, 7L, 1L))) ==
+      Map(1L -> 1L, 2L -> 1L, 7L -> 7L))
+    assert(cc(Seq((5L, 5L), (6L, 6L))) == Map(5L -> 5L, 6L -> 6L))
+    assert(cc(Seq((5L, 5L), (6L, 6L)), Some(Seq(6L, 8L))) ==
+      Map(5L -> 5L, 6L -> 6L, 8L -> 8L))
+  }
+
+  test("bounded edge list: driver labels as a local relation, no labels-out cut") {
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (js.properties.getProperty("spark.jobGroup.id") == "components-local")
+          descs.add(String.valueOf(js.properties.getProperty("spark.job.description")))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
+    sc.addSparkListener(listener)
+    sc.setJobGroup("components-local", "components local branch")
+    val out = try {
+      val out = Components.connectedComponents(edges, "a", "b")
+      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
+      out
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(!descs.toArray.exists(_ == "cut: components: labels out"), s"jobs: $descs")
+    assert(out.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "local-branch labels without vertices are a driver-local relation")
+    assert(out.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
   test("intermediate checkpoints are released — at most one new persistent RDD survives") {
