@@ -26,25 +26,6 @@ object Vectors {
   def l2Distance(a: Column, b: Column): Column =
     sqrt(aggregate(zip_with(asD(a), asD(b), (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
 
-  /** Signed-random-projection signature: `nBits` hyperplanes with
-    * deterministic pseudo-random weights (seeded Scala RNG baked in as
-    * literals — no runtime randomness, plans are reproducible). Two
-    * vectors with equal signatures are likely near in cosine space.
-    * This is the LSH bucket key for the ANN scale path: at 100 TB the
-    * cross join is impossible; bucketing turns it into a co-partitioned
-    * equi-join on the signature.
-    */
-  def srpSignature(v: Column, dim: Int, nBits: Int, seed: Long = 42L): Column = {
-    val rng = new scala.util.Random(seed)
-    val planes: Seq[Array[Double]] =
-      Seq.fill(nBits)(Array.fill(dim)(rng.nextGaussian()))
-    val bits = planes.zipWithIndex.map { case (w, i) =>
-      val wCol = array(w.map(lit(_)): _*)
-      when(dot(v, wCol) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _).as("srp_sig")
-  }
-
   // (SRP sign-bit computation lives in NativeHash.SrpBitsExpr — a
   // codegen'd expression; the HOF formulation was interpreted and paid
   // a per-plane re-evaluation tax.)

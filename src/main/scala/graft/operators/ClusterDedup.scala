@@ -95,8 +95,19 @@ import graft.functions.{NativeHash, Text}
   *      components — equal the direct pipeline's.
   *
   * An adaptive route (see [[RouteContractRatio]]) runs the direct
-  * prefix self-join over the collapsed reps instead of steps 2-5 when
+  * PPJoin self-join over the collapsed reps instead of steps 2-5 when
   * contraction cannot pay; both routes are exact and row-identical.
+  * The direct route has two arms, picked by one reading of the route
+  * probe: when the reps' shingle arrays fit under the session's
+  * `spark.sql.autoBroadcastJoinThreshold`, one labelled job
+  * (`cluster: pair index`) collects them into broadcast postings
+  * ([[JaccardDedup.BenchPostings]], the index decontamination probes)
+  * and every rep probes them map-side — size and positional filters,
+  * a per-row candidate set and the exact verify inside the probe, so
+  * there is no prefix-index cut, candidate shuffle, pair `distinct` or
+  * array join; above the threshold it runs the shuffled prefix
+  * self-join ([[JaccardDedup.prefixPairs]]), the plan
+  * [[JaccardDedup.nearDupPairs]] keeps as the direct twin.
   *
   * Scale shape: every step is a narrow-key shuffle (element hash,
   * cluster id) or a bounded per-cluster aggregate; no driver
@@ -107,7 +118,12 @@ object ClusterDedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Fp guard shared with [[JaccardDedup]]'s pruning bounds. */
+  /** Guard band against fp rounding of t·n products in the Jaccard
+    * pruning bounds (e.g. 0.07·100 = 7.000000000000001 → ceil 8 would
+    * shrink a prefix by one and could silently drop a boundary-exact
+    * pair). Every prune subtracts/adds this so boundary cases are
+    * verified, not pruned.
+    */
   private val Eps = 1e-9
 
   /** Exact-set collapse fires only when the HLL probe sees distinct
@@ -183,18 +199,24 @@ object ClusterDedup {
     * any fixed global element order two such sets share an element
     * inside the first `prefixLen(n)` elements of each (PPJoin's prefix
     * filter). Jaccard ≥ t and |A∩B| ≥ k differ in α, the prefix length,
-    * the size filter and the output score — everything here.
+    * the size filter and the output score — everything here. The three
+    * bounds also come in scalar form for the broadcast probe
+    * ([[JaccardDedup.BenchPostings]]); each scalar twin runs the same
+    * double arithmetic as its Column, so both forms agree exactly.
     */
-  private[graft] sealed trait PairPredicate {
+  private[graft] sealed trait PairPredicate extends Serializable {
     /** Docs of size n that can be in a qualifying pair. */
     def eligible(n: Column): Column
     def prefixLen(n: Column): Column
+    def prefixLen(n: Int): Int
     /** α(n_a, n_b), increasing in both sizes (cast to int where a walk
       * bound needs it). */
     def alpha(na: Column, nb: Column): Column
+    def alpha(na: Int, nb: Int): Int
     /** Size filter: a doc of size `big` can qualify with one of size
       * `small` ≤ `big` only where this holds. */
     def fits(big: Column, small: Column): Column
+    def fits(big: Int, small: Int): Boolean
     def scoreCol: String
     /** Output score of a verified pair with overlap c. */
     def score(c: Column, na: Column, nb: Column): Column
@@ -203,15 +225,18 @@ object ClusterDedup {
     def identical(n: Column): Column
   }
 
-  /** J = c / (n_a + n_b − c) ≥ t with [[JaccardDedup]]'s ±[[Eps]]
-    * guards: α = ⌈t(n_a+n_b)/(1+t)⌉, prefix n − ⌈t·n⌉ + 1, size filter
+  /** J = c / (n_a + n_b − c) ≥ t with the ±[[Eps]] guards:
+    * α = ⌈t(n_a+n_b)/(1+t)⌉, prefix n − ⌈t·n⌉ + 1, size filter
     * t·max ≤ min. */
   private[graft] final case class Jaccard(threshold: Double) extends PairPredicate {
+    private val ratio = threshold / (1.0 + threshold)
     def eligible(n: Column): Column = n > 0
     def prefixLen(n: Column): Column = n - ceil(n * threshold - lit(Eps)) + 1
-    def alpha(na: Column, nb: Column): Column =
-      ceil((na + nb) * (threshold / (1.0 + threshold)) - lit(Eps))
+    def prefixLen(n: Int): Int = n - math.ceil(n * threshold - Eps).toInt + 1
+    def alpha(na: Column, nb: Column): Column = ceil((na + nb) * ratio - lit(Eps))
+    def alpha(na: Int, nb: Int): Int = math.ceil((na + nb) * ratio - Eps).toInt
     def fits(big: Column, small: Column): Column = big * threshold <= small + lit(Eps)
+    def fits(big: Int, small: Int): Boolean = big * threshold <= small + Eps
     def scoreCol: String = "jaccard"
     def score(c: Column, na: Column, nb: Column): Column = c / (na + nb - c)
     def keep(score: Column): Column = score >= threshold
@@ -224,8 +249,11 @@ object ClusterDedup {
     require(k >= 1, "minOverlap must be >= 1")
     def eligible(n: Column): Column = n >= k
     def prefixLen(n: Column): Column = n - k + 1
+    def prefixLen(n: Int): Int = n - k + 1
     def alpha(na: Column, nb: Column): Column = lit(k)
+    def alpha(na: Int, nb: Int): Int = k
     def fits(big: Column, small: Column): Column = lit(true)
+    def fits(big: Int, small: Int): Boolean = true
     def scoreCol: String = "overlap"
     def score(c: Column, na: Column, nb: Column): Column = c.cast("long")
     def keep(score: Column): Column = score >= k
@@ -302,17 +330,78 @@ object ClusterDedup {
       probes: Probes,
       cuts: Seq[DataFrame]) extends Routed
 
-  /** The ADAPTIVE direct arm (see [[RouteContractRatio]]): the exact
-    * rep-level pair stream through the plain PPJoin prefix pipeline —
-    * no contraction, no anchors/diffs, no cluster stats. Consumers fan
-    * the pairs out through the exact-set collapse (`docRep`) exactly as
-    * the clustered arm does.
+  /** The ADAPTIVE direct route (see [[RouteContractRatio]]): the exact
+    * rep-level pair stream of the PPJoin self-join — broadcast probe or
+    * shuffled prefix join, see the object doc — with no contraction,
+    * anchors/diffs or cluster stats. Consumers fan the pairs out
+    * through the exact-set collapse (`docRep`) exactly as the clustered
+    * arm does. `index` is the broadcast arm's postings, released with
+    * the rest.
     */
   private final case class DirectCore(
       hashed: DataFrame,
       docRep: DataFrame,
       pairs: DataFrame, // (ra, rb, score) exact rep pairs — LAZY
-      cuts: Seq[DataFrame]) extends Routed
+      cuts: Seq[DataFrame],
+      index: Option[org.apache.spark.broadcast.Broadcast[_]]) extends Routed {
+    override def release(): Unit = {
+      super.release()
+      index.foreach(_.unpersist(false))
+    }
+  }
+
+  /** The reps collected for the direct route's broadcast arm: their
+    * arrays as postings under the route's predicate, and each array's
+    * rep id (of type `idType`) by position.
+    */
+  private final class PairIndex(val postings: JaccardDedup.BenchPostings,
+      val ids: Array[Any], val idType: org.apache.spark.sql.types.DataType) extends Serializable
+
+  /** Collects the reps' (id, __sh) in ONE labelled job,
+    * `cluster: pair index`. Null-id reps are left out, as the shuffled
+    * arm's `ra < rb` leaves them out.
+    */
+  private def pairIndex(reps: DataFrame, pred: PairPredicate): PairIndex = {
+    val rows = Par.labeled(reps.sparkSession, "cluster: pair index")(
+      reps.where(col("id").isNotNull).select("id", "__sh").collect())
+    new PairIndex(new JaccardDedup.BenchPostings(rows.map(_.getSeq[Long](1).toArray), pred),
+      rows.map(_.get(0)), reps.schema("id").dataType)
+  }
+
+  /** The direct route's broadcast arm: the exact rep-level pair stream
+    * (ra < rb, score) from a map-side probe of the broadcast index, with
+    * no prefix-index cut, candidate shuffle or join. The two-sided probe
+    * ([[JaccardDedup.BenchPostings.pairsOf]]: size and positional
+    * filters, early-exit walk) runs once per rep position over a
+    * `range` and emits each verified pair with both rep ids, whatever
+    * their type, and both sizes.
+    */
+  private def probedRepPairs(spark: org.apache.spark.sql.SparkSession, index: PairIndex,
+      pred: PairPredicate): (DataFrame, org.apache.spark.broadcast.Broadcast[PairIndex]) = {
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
+    import org.apache.spark.sql.Row
+    val bc = spark.sparkContext.broadcast(index)
+    val pairType = ArrayType(StructType(Seq(StructField("ra", index.idType),
+      StructField("rb", index.idType)) ++ Seq("c", "n_a", "n_b").map(
+      StructField(_, IntegerType, nullable = false))))
+    val probe = udf(new org.apache.spark.sql.api.java.UDF1[java.lang.Long, Seq[Row]] {
+      def call(a: java.lang.Long): Seq[Row] = {
+        val ix = bc.value
+        val docs = ix.postings.docs
+        ix.postings.pairsOf(a.toInt).map { case (b, c) =>
+          Row(ix.ids(a.toInt), ix.ids(b), c, docs(a.toInt).length, docs(b).length)
+        }
+      }
+    }, pairType)
+    val pairs = spark.range(0, index.ids.length, 1, spark.sparkContext.defaultParallelism)
+      .select(explode(probe(col("id"))).as("__p"))
+      .select(col("__p.*"))
+      .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
+      .filter(pred.keep(col(pred.scoreCol)))
+      .select(least(col("ra"), col("rb")).as("ra"), greatest(col("ra"), col("rb")).as("rb"),
+        col(pred.scoreCol))
+    (pairs, bc)
+  }
 
   /** [[components]] plus the candidate-path [[Probes]] — the
     * PlanShapeSpec hook, pinned on the CLUSTERED arm (adaptive routing
@@ -540,20 +629,8 @@ object ClusterDedup {
       vol < DirectCandCap
     }
     if (routeDirect) {
-      val dp = prefix.where(col("__d"))
-      val a = dp.select(col("s").as("__sa"), col("id").as("ia"),
-        col("n").as("__na"), col("pos").as("__pa"))
-      val b = prefix.select(col("s").as("__sb"), col("id").as("ib"),
-        col("n").as("__nb"), col("pos").as("__pb"))
-      val cand = a.join(b,
-          col("__sa") === col("__sb") &&
-          col("ia") =!= col("ib") &&
-          pred.fits(greatest(col("__na"), col("__nb")), least(col("__na"), col("__nb"))) &&
-          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >=
-            pred.alpha(col("__na"), col("__nb")))
-        .select(least(col("ia"), col("ib")).as("id_a"),
-          greatest(col("ia"), col("ib")).as("id_b"))
-        .distinct()
+      val cand = JaccardDedup.prefixPairs(prefix, "id", pred, "id_a", "id_b",
+        probe = Some(prefix.where(col("__d"))))
       val alphaD = pred.alpha(col("n_a"), col("n_b")).cast("int")
       val deltaPairs = cand
         .join(nonEmpty.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
@@ -1060,7 +1137,8 @@ object ClusterDedup {
     //     per-band average at 1/numBands the hashing cost; identical
     //     sets share buckets, so distinct-buckets-over-docs equals
     //     distinct-buckets-over-reps and the statistic is rep-level
-    //     even before the collapse decision is made.
+    //     even before the collapse decision is made;
+    //   - Σn → the direct route's broadcast-or-shuffle choice.
     // Two r18 changes, both measured at sf0.1 (OPTIMIZATION_r18.md):
     //   - rsd 0.05, not 0.01 — the high-precision HLL buffer made the
     //     probe itself the bottleneck (fused aggregate 4.0 s vs 0.9 s;
@@ -1081,7 +1159,8 @@ object ClusterDedup {
         approx_count_distinct(xxhash64(col("__sh")), 0.05).as("__sets"),
         approx_count_distinct(element_at(
           NativeHash.minhashBandBucketsHashed(col("__sh"), numHashes / numBands, 1),
-          1), 0.05).as("__buckets")).head())
+          1), 0.05).as("__buckets"),
+        coalesce(sum(col("n").cast("long")), lit(0L)).as("__elems")).head())
     val collapseUseful = st.getLong(1) < st.getLong(0) * CollapseSkipRatio
     // Par.cut (not persist) on the fan-out frames: persist caches
     // EXECUTION but leaves the full logical subtree in every consumer's
@@ -1103,39 +1182,54 @@ object ClusterDedup {
     val reps = collapseCut.fold(eligible.select("id", "__sh", "n"))(
       _.where(col("id") === col("rep")).select("id", "__sh", "n"))
 
-    // prefix index over the FINAL rep set, built ONCE after the
+    // prefix index over the FINAL rep set, built at most ONCE, after the
     // collapse decision (the r17 probe built an optimistic doc-level
-    // index and discarded+rebuilt it when the collapse fired), and CUT
-    // rather than lazily persisted: the candidate self-join's two
-    // sides (and the clustered arm's postings + plan probes) would
-    // otherwise race to materialize the persist from concurrent AQE
-    // stages and double-compute the whole df + window chain (r18).
-    val prefix = Par.cut(JaccardDedup.prefixIndex(
-        reps.select(col("id"), explode(col("__sh")).as("s"), col("n")),
-        "id", pred), "cluster: prefix index")
+    // index and discarded+rebuilt it when the collapse fired), and only
+    // when something reads it: the candVol probe, the direct route's
+    // shuffled arm or the clustered arm. CUT rather than lazily
+    // persisted: the candidate self-join's two sides (and the clustered
+    // arm's postings + plan probes) would otherwise race to materialize
+    // the persist from concurrent AQE stages and double-compute the
+    // whole df + window chain (r18).
+    var prefixCut: Option[DataFrame] = None
+    def prefix: DataFrame = prefixCut.getOrElse {
+      val p = Par.cut(JaccardDedup.prefixIndex(
+          reps.select(col("id"), explode(col("__sh")).as("s"), col("n")),
+          "id", pred), "cluster: prefix index")
+      prefixCut = Some(p)
+      p
+    }
 
     // ---- ADAPTIVE ROUTE (see RouteContractRatio / DirectCandCap).
     // Probe — direct-candidate volume: Σ_s dfP(s)² is the EXACT row
-    // count of the direct arm's candidate join; under the absolute cap
-    // the direct arm is seconds of work and wins outright. The cap is
-    // LOAD-BEARING at gate scale: the collision estimate alone routes
-    // badly on small-vocabulary corpora (measured: the zh char-gram
-    // slice shows 560/753 band-0 collisions from sub-threshold overlap
-    // the contraction would never verify, and 1-gram token sets
-    // collide 3664/3935 — both corpora where the direct arm wins by
-    // 3-4×). The contraction-mass estimate (reps − distinct band-0
-    // buckets, a FREE upper bound on star edges) shortcuts the
-    // decision first: under the ratio the clustered arm cannot
-    // collapse enough to repay its phases and the direct route is
-    // taken with NO candVol aggregate at all (the common low-
-    // duplication shape — r18); only when the shortcut is inconclusive
-    // does the candVol job run and arbitrate via the cap. Same
-    // decision as r17's `candVol < cap || starEdges < ratio·reps` —
-    // `||` commutes — minus one aggregate job on most corpora, and
-    // minus every probe job when `adaptive` is off (the route is
-    // forced, so the statistics would be dead weight — r17 ADVICE).
+    // count of the direct arm's shuffled candidate join; under the
+    // absolute cap the direct arm is seconds of work and wins outright.
+    // The cap is LOAD-BEARING at gate scale: the collision estimate
+    // alone routes badly on small-vocabulary corpora (measured: the zh
+    // char-gram slice shows 560/753 band-0 collisions from
+    // sub-threshold overlap the contraction would never verify, and
+    // 1-gram token sets collide 3664/3935 — both corpora where the
+    // direct arm wins by 3-4×). The contraction-mass estimate (reps −
+    // distinct band-0 buckets, a FREE upper bound on star edges)
+    // shortcuts the decision first: under the ratio the clustered arm
+    // cannot collapse enough to repay its phases and the direct route
+    // is taken with NO candVol count at all — the common
+    // low-duplication shape; only when the shortcut is inconclusive
+    // does candVol run and arbitrate via the cap.
+    // No probe job runs when `adaptive` is off (the route is forced).
     val nRepsEst = if (collapseUseful) st.getLong(1) else st.getLong(0)
-    def candVol(): Double = {
+    // the direct route's arm, read off the route probe: the broadcast
+    // probe whenever the reps' shingle arrays (8 bytes an element; Σn
+    // over eligible docs bounds the reps' share) fit under the session's
+    // broadcast threshold, else the shuffled prefix pipeline. A
+    // broadcastable corpus collects its pair index at most once, for
+    // candVol or the broadcast arm, and candVol then counts the same
+    // Σ_s dfP(s)² from its postings on the driver, with no prefix cut
+    // (a corpus that then routes clustered pays that one collect)
+    val threshold = hashed.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val broadcastable = threshold >= 0 && 8.0 * st.getLong(3) <= threshold
+    lazy val index = pairIndex(reps, pred)
+    def candVol(): Double = if (broadcastable) index.postings.candidateRows else {
       val cv = Par.labeled(spark, "cluster: candVol probe")(
         prefix.groupBy("s").agg(count(lit(1)).as("c"))
           .agg(sum(col("c").cast("double") * col("c").cast("double"))).head())
@@ -1150,24 +1244,16 @@ object ClusterDedup {
       direct
     }
     if (routeDirect) {
-      // the direct arm: the direct twin's exact prefix pipeline over the
+      if (broadcastable) {
+        val (pairs, bc) = probedRepPairs(spark, index, pred)
+        return Left(DirectCore(hashed, docRep, pairs, collapseCut.toSeq, Some(bc)))
+      }
+      // the shuffled arm: the direct twin's prefix pipeline over the
       // already-hashed reps (df-rarity prefix index, size + positional
       // filters inside the join, early-exit merge-walk verify) — the
       // plan the direct operator runs, minus a second shingling pass
-      val a = prefix.select(col("s").as("__sa"), col("id").as("ra"),
-        col("n").as("__na"), col("pos").as("__pa"))
-      val b = prefix.select(col("s").as("__sb"), col("id").as("rb"),
-        col("n").as("__nb"), col("pos").as("__pb"))
-      val cand = a.join(b,
-          col("__sa") === col("__sb") &&
-          col("ra") < col("rb") &&
-          pred.fits(greatest(col("__na"), col("__nb")), least(col("__na"), col("__nb"))) &&
-          lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >=
-            pred.alpha(col("__na"), col("__nb")))
-        .select("ra", "rb")
-        .distinct()
       val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
-      val pairs = cand
+      val pairs = JaccardDedup.prefixPairs(prefix, "id", pred, "ra", "rb")
         .join(reps.select(col("id").as("ra"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("ra"))
         .join(reps.select(col("id").as("rb"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("rb"))
         .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"), alphaV))
@@ -1175,7 +1261,7 @@ object ClusterDedup {
         .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
         .filter(pred.keep(col(pred.scoreCol)))
         .select(col("ra"), col("rb"), col(pred.scoreCol))
-      return Left(DirectCore(hashed, docRep, pairs, cuts = collapseCut.toSeq :+ prefix))
+      return Left(DirectCore(hashed, docRep, pairs, collapseCut.toSeq :+ prefix, None))
     }
 
     // ---- 2. LSH contraction over representatives ----

@@ -71,13 +71,6 @@ object JaccardDedup {
     nearDupPairsByHashes(df, idCol,
       graft.functions.NativeHash.charShingleHashes(col(textCol), nChars), threshold, None)
 
-  /** Guard band against fp rounding of t·n products in pruning bounds
-    * (e.g. 0.07·100 = 7.000000000000001 → ceil 8 would shrink a prefix
-    * by one and could silently drop a boundary-exact pair). Every prune
-    * subtracts/adds this so boundary cases are verified, not pruned.
-    */
-  private val Eps = 1e-9
-
   /** Prefix index: each document's rarest `pred.prefixLen(n)` shingle
     * hashes (n − ⌈t·n⌉ + 1 for Jaccard ≥ t, n − k + 1 for overlap ≥ k)
     * under the global (document-frequency asc, hash asc) order, each
@@ -128,34 +121,50 @@ object JaccardDedup {
       .select((Seq("s", idCol, "n", "pos") ++ keep).map(col): _*)
   }
 
-  /** Candidate (id_a < id_b) pairs from the prefix self-join. The size
-    * and positional filters run inside the join condition — pruned rows
-    * never reach the pair-distinct exchange. The prefix index is
-    * persisted: a self-join re-evaluates its subtree per side, and the
-    * df + per-doc-window pipeline is the expensive part. Lazy persist,
-    * NOT an eager cut: the sides' concurrent AQE stages can race the
-    * materialization and duplicate some work, but at 32 cores that
-    * overlap rides otherwise-idle cores — the r18 A/B measured the
-    * eager-cut form 1.8× SLOWER on this operator (2.1 s → 3.9 s,
-    * serializing the probe-side build behind the checkpoint write).
-    * The routed cores are the opposite case (heavier chains, saturated
-    * cores) and keep their sequential cut.
+  /** Candidate (id_a < id_b) pairs from the prefix self-join (see
+    * [[prefixPairs]]). The prefix index is persisted: a self-join
+    * re-evaluates its subtree per side, and the df + per-doc-window
+    * pipeline is the expensive part. Lazy persist, NOT an eager cut:
+    * the sides' concurrent AQE stages can race the materialization and
+    * duplicate some work, but at 32 cores that overlap rides
+    * otherwise-idle cores — the r18 A/B measured the eager-cut form
+    * 1.8× SLOWER on this operator (2.1 s → 3.9 s, serializing the
+    * probe-side build behind the checkpoint write). The routed cores
+    * are the opposite case (heavier chains, saturated cores) and keep
+    * their sequential cut.
     */
   private[graft] def prefixCandidates(index: DataFrame, idCol: String, threshold: Double): DataFrame = {
-    val prefix = prefixIndex(index, idCol, ClusterDedup.Jaccard(threshold))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val a = prefix.select(col("s").as("__sa"), col(idCol).as("id_a"),
+    val pred = ClusterDedup.Jaccard(threshold)
+    prefixPairs(prefixIndex(index, idCol, pred)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), idCol, pred, "id_a", "id_b")
+  }
+
+  /** The shuffled candidate join over a [[prefixIndex]]: distinct pairs
+    * sharing a prefix element, named `a`/`b`. The size and positional
+    * filters run inside the join condition, so pruned rows never reach
+    * the pair-distinct exchange. Without `probe` it is the self-join of
+    * `prefix` with a < b; with `probe` (a subset's prefix rows, e.g. an
+    * ingest batch) it joins those rows against `prefix` and emits each
+    * unordered pair as (least, greatest).
+    */
+  private[graft] def prefixPairs(prefix: DataFrame, idCol: String,
+      pred: ClusterDedup.PairPredicate, a: String, b: String,
+      probe: Option[DataFrame] = None): DataFrame = {
+    val (ia, ib) = if (probe.isEmpty) (a, b) else ("ia", "ib")
+    val left = probe.getOrElse(prefix).select(col("s").as("__sa"), col(idCol).as(ia),
       col("n").as("__na"), col("pos").as("__pa"))
-    val b = prefix.select(col("s").as("__sb"), col(idCol).as("id_b"),
+    val right = prefix.select(col("s").as("__sb"), col(idCol).as(ib),
       col("n").as("__nb"), col("pos").as("__pb"))
-    // minimum overlap for J ≥ t: c ≥ t·(n_a+n_b)/(1+t)
-    val alpha = ceil((col("__na") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
-    a.join(b,
+    val (order, out) =
+      if (probe.isEmpty) (col(ia) < col(ib), Seq(col(a), col(b)))
+      else (col(ia) =!= col(ib), Seq(least(col(ia), col(ib)).as(a), greatest(col(ia), col(ib)).as(b)))
+    left.join(right,
         col("__sa") === col("__sb") &&
-        col("id_a") < col("id_b") &&
-        greatest(col("__na"), col("__nb")) * threshold <= least(col("__na"), col("__nb")) + lit(Eps) &&
-        lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >= alpha)
-      .select("id_a", "id_b")
+        order &&
+        pred.fits(greatest(col("__na"), col("__nb")), least(col("__na"), col("__nb"))) &&
+        lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >=
+          pred.alpha(col("__na"), col("__nb")))
+      .select(out: _*)
       .distinct()
   }
 
@@ -227,8 +236,7 @@ object JaccardDedup {
     // candidate streams low thresholds produce, most walks exit within
     // a few steps (measured 2.9× on the 10× soak corpus). α carries
     // the -Eps guard, so boundary-exact pairs are verified, not bailed.
-    val alpha = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-      .cast("int")
+    val alpha = ClusterDedup.Jaccard(threshold).alpha(col("n_a"), col("n_b")).cast("int")
     prefixCandidates(index, idCol, threshold)
       .join(verifyDocs.select(col(idCol).as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
       .join(verifyDocs.select(col(idCol).as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
@@ -332,30 +340,17 @@ object JaccardDedup {
     // per doc, __d carried through. Lazy persist (the prefixCandidates
     // rationale: the concurrent materialization race rides idle cores
     // and measured faster than an eager cut at gate scale)
+    val pred = ClusterDedup.Jaccard(threshold)
     val prefix = prefixIndex(
         docs.select(col("id"), explode(col("__sh")).as("s"), col("n"), col("__d")),
-        "id", ClusterDedup.Jaccard(threshold), keep = Seq("__d"))
+        "id", pred, keep = Seq("__d"))
       .persist(MEMORY_AND_DISK)
     val dp = prefix.filter(col("__d"))
     // delta-active shingles only: the corpus-sized side of the candidate
     // join never ships a row the batch cannot match
     val fp = prefix.join(dp.select("s").distinct(), Seq("s"), "left_semi")
-    val a = dp.select(col("s").as("__sa"), col("id").as("ia"),
-      col("n").as("__na"), col("pos").as("__pa"))
-    val b = fp.select(col("s").as("__sb"), col("id").as("ib"),
-      col("n").as("__nb"), col("pos").as("__pb"))
-    val alpha = ceil((col("__na") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
-    val cand = a.join(b,
-        col("__sa") === col("__sb") &&
-        col("ia") =!= col("ib") &&
-        greatest(col("__na"), col("__nb")) * threshold <=
-          least(col("__na"), col("__nb")) + lit(Eps) &&
-        lit(1) + least(col("__na") - col("__pa"), col("__nb") - col("__pb")) >= alpha)
-      .select(least(col("ia"), col("ib")).as("id_a"),
-        greatest(col("ia"), col("ib")).as("id_b"))
-      .distinct()
-    val alphaV = ceil((col("n_a") + col("n_b")) * (threshold / (1.0 + threshold)) - lit(Eps))
-      .cast("int")
+    val cand = prefixPairs(fp, "id", pred, "id_a", "id_b", probe = Some(dp))
+    val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
     val pairs = cand
       .join(docs.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
       .join(docs.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
@@ -412,14 +407,6 @@ object JaccardDedup {
         graft.functions.NativeHash.sortedIntersectCount(col("__sa"), col("__sb")).cast("long"))
       .filter(col("overlap") >= minOverlap)
       .select("id_a", "id_b", "overlap")
-  }
-
-  /** Dedup: drop every doc that near-dups an earlier (lower-id) doc. */
-  def dedup(df: DataFrame, idCol: String, textCol: String,
-      nGram: Int = 2, threshold: Double = 0.3): DataFrame = {
-    val losers = nearDupPairs(df, idCol, textCol, nGram, threshold)
-      .select(col("id_b").as(idCol)).distinct()
-    df.join(losers, Seq(idCol), "left_anti")
   }
 
   /** Cross-corpus contamination pairs: (left_id, right_id, jaccard) for
@@ -519,6 +506,8 @@ object JaccardDedup {
     * the benchmark stay out of its postings; no train statistic is
     * needed because the probe side posts nothing. The verify is exact,
     * so [[crossPairs]] lists the matching pairs through the same probe.
+    * The index is [[BenchPostings]], whose two-sided probe also runs
+    * the broadcast arm of [[ClusterDedup]]'s direct route.
     *
     * Contract: the benchmark is small (the decontamination use case).
     * Its ids and shingle arrays are collected to the driver in ONE eager
@@ -581,12 +570,12 @@ object JaccardDedup {
       textCol: String, nGram: Int, threshold: Double): DataFrame = {
     val spark = train.sparkSession
     val docs = bench.docs
-    val index = spark.sparkContext.broadcast(new BenchPostings(docs, threshold))
+    val pred = ClusterDedup.Jaccard(threshold)
+    val index = spark.sparkContext.broadcast(new BenchPostings(docs, pred))
     val probe = udf((sh: scala.collection.Seq[Long]) => index.value.probe(sh))
     val benchDocs = spark.createDataFrame(docs.indices.map(i => (i, docs(i), docs(i).length)))
       .toDF("__bi", "__shb", "__nb")
-    val alpha = ceil((col("__nt") + col("__nb")) * (threshold / (1.0 + threshold)) - lit(Eps))
-      .cast("int")
+    val alpha = pred.alpha(col("__nt"), col("__nb")).cast("int")
     train.select(col(trainId), shinglesOf(textCol, nGram).as("__sh"))
       .select(col(trainId), col("__sh"), size(col("__sh")).as("__nt"),
         explode(probe(col("__sh"))).as("__bi"))
@@ -606,31 +595,98 @@ object JaccardDedup {
       .select(col(leftId).as("left_id"), col("__id").as("right_id"),
         (col("c") / (col("__nt") + col("__nb") - col("c"))).as("jaccard"))
 
-  /** The family's broadcast index over the distinct non-empty
-    * benchmark shingle arrays `docs`: postings from each prefix shingle
-    * to the docs (by position in `docs`) whose prefix holds it.
+  /** The broadcast prefix index of the exact Jaccard and overlap
+    * family, over distinct sorted-distinct hash sets `docs`: each doc's
+    * first `pred.prefixLen(n)` elements under the (document frequency
+    * over `docs` asc, hash asc) order are posted with the doc's
+    * position in `docs` and the element's position in the doc's fully
+    * ordered list. Only `docs` ships; the order, postings and walk
+    * views are built where the index is first probed. Two probes read
+    * it:
+    *   - [[probe]], one-sided (decontamination): every element of an
+    *     outside set against the posted prefixes — lossless because
+    *     J(x, b) ≥ t needs c ≥ ⌈t·n_b⌉, so x meets b's prefix whatever
+    *     x's own order;
+    *   - [[pairsOf]], two-sided (the self-join of `docs`, PPJoin): a
+    *     doc's own prefix against the others' — a qualifying pair
+    *     shares an element inside both prefixes under one global order
+    *     (see the object doc) — with the positional filter and the
+    *     exact verify inside the probe.
     */
-  private final class BenchPostings(docs: Array[Array[Long]], threshold: Double)
-      extends Serializable {
+  private[operators] final class BenchPostings(val docs: Array[Array[Long]],
+      pred: ClusterDedup.PairPredicate) extends Serializable {
     private val sizes = docs.map(_.length)
-    private val postings: Map[Long, Array[Int]] = {
-      val df = docs.iterator.flatMap(_.iterator).toSeq.groupMapReduce(identity)(_ => 1)(_ + _)
-      docs.indices.flatMap { i =>
-        val n = docs(i).length
-        docs(i).sortBy(s => (df(s), s))
-          .take(n - math.ceil(n * threshold - Eps).toInt + 1)
-          .map(_ -> i)
-      }.groupMap(_._1)(_._2).view.mapValues(_.toArray).toMap
+
+    // doc → its prefix in (df asc, hash asc) order
+    @transient private lazy val prefixes: Array[Array[Long]] = {
+      val df = scala.collection.mutable.LongMap.empty[Int]
+      docs.foreach(_.foreach(s => df.update(s, df.getOrElse(s, 0) + 1)))
+      docs.map(d => d.sortBy(s => (df(s), s)).take(pred.prefixLen(d.length)))
     }
 
-    /** Distinct benchmark docs sharing a posted shingle with `sh` that
-      * pass the size filter.
+    // prefix element → its postings in doc order, each packed as
+    // doc << 32 | 1-based position in that doc's ordered list
+    @transient private lazy val postings: scala.collection.Map[Long, Array[Long]] = {
+      val acc = scala.collection.mutable.LongMap.empty[scala.collection.mutable.ArrayBuilder.ofLong]
+      for (d <- docs.indices; p <- prefixes(d).indices)
+        acc.getOrElseUpdate(prefixes(d)(p), new scala.collection.mutable.ArrayBuilder.ofLong) +=
+          (d.toLong << 32 | (p + 1))
+      acc.map { case (s, b) => s -> b.result() }
+    }
+
+    @transient private lazy val views = docs.map(
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(_))
+    @transient private lazy val walk = new graft.functions.NativeHash.SortedIntersectHelper
+
+    private def postingsOf(s: Long): Array[Long] = postings.getOrElse(s, Array.emptyLongArray)
+
+    /** Σ_s |postings(s)|²: the rows a shuffled self-join of these
+      * prefixes would emit before its filters (the route's candVol).
+      */
+    def candidateRows: Double = postings.valuesIterator.map(p => p.length.toDouble * p.length).sum
+
+    /** Distinct docs sharing a posted element with `sh` that pass the
+      * size filter.
       */
     def probe(sh: scala.collection.Seq[Long]): Array[Int] = {
       val n = sh.length
-      sh.iterator.flatMap(s => postings.getOrElse(s, Array.emptyIntArray))
-        .filter(b => math.max(n, sizes(b)) * threshold <= math.min(n, sizes(b)) + Eps)
+      sh.iterator.flatMap(postingsOf).map(p => (p >>> 32).toInt)
+        .filter(b => pred.fits(math.max(n, sizes(b)), math.min(n, sizes(b))))
         .distinct.toArray
+    }
+
+    /** The verified self-join pairs probed from doc `a`: every partner
+      * b it owns that shares an element of both prefixes, passes the
+      * size filter and the positional filter at the first shared
+      * element, and reaches c ≥ α(n_a, n_b) in the early-exit merge
+      * walk, as (b, c). `a` owns b > a when a + b is even and b < a
+      * when it is odd, so every unordered pair is probed once and a
+      * contiguous range of docs gets an even share of the pairs.
+      *
+      * Each partner is judged once, at its first posting met. Both
+      * prefixes follow the same order, so that posting holds the pair's
+      * first shared prefix element, where the positional bound
+      * 1 + min(n_a − p_a, n_b − p_b) is largest: later shared elements
+      * sit later in both docs and can only lower it.
+      */
+    def pairsOf(a: Int): Seq[(Int, Int)] = {
+      val na = sizes(a)
+      val seen = scala.collection.mutable.BitSet.empty
+      val out = Seq.newBuilder[(Int, Int)]
+      val pre = prefixes(a)
+      for (pa <- pre.indices; p <- postingsOf(pre(pa))) {
+        val b = (p >>> 32).toInt
+        if (b != a && (b > a) == ((a + b) % 2 == 0) && seen.add(b)) {
+          val nb = sizes(b)
+          val alpha = pred.alpha(na, nb)
+          if (pred.fits(math.max(na, nb), math.min(na, nb)) &&
+              1 + math.min(na - (pa + 1), nb - p.toInt) >= alpha) {
+            val c = walk.countAtLeast(views(a), views(b), alpha)
+            if (c >= 0) out += ((b, c))
+          }
+        }
+      }
+      out.result()
     }
   }
 }

@@ -31,13 +31,6 @@ object MinHashDedup {
   def signature(shingleSet: Column, k: Int = 64, seed: Long = 42L): Column =
     graft.functions.NativeHash.minhashSig(shingleSet, k, seed)
 
-  /** Band buckets for a shingle set: signature + per-band bucket hash in
-    * ONE compiled pass (NativeHash.MinHashBandsExpr). Bucket values are
-    * positional; consume with posexplode → (band, bucket).
-    */
-  def bandBuckets(shingleSet: Column, numHashes: Int, numBands: Int, seed: Long = 42L): Column =
-    graft.functions.NativeHash.minhashBandBuckets(shingleSet, numHashes, numBands, seed)
-
   /** Candidate near-dup pairs (idA < idB) with exact-Jaccard verification.
     *
     * Recall contract — the part callers get wrong: banding with b bands

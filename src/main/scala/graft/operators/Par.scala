@@ -23,15 +23,16 @@ object Par {
     * (widened or not) then reads that same executed RDD through a
     * stats-carrying `LogicalRDD` (`Shims.overExecutedRdd`), so the
     * consumer reuses the materialized shuffle instead of recomputing
-    * it — 1 job over a `Dedup.byRank` input, run once; 0 over a
-    * parquet scan.
+    * it — 1 job over a `Dedup.byRank` input, run once and labelled
+    * `widen: split probe`; 0 over a parquet scan.
     */
   def widen(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // probe the split count via the dataset's OWN query execution:
     // `df.rdd` would build a second QueryExecution (deserializer plan)
     // and plan the subtree twice
-    val splits = df.queryExecution.toRdd.getNumPartitions
+    val splits = labeled(df.sparkSession, "widen: split probe")(
+      df.queryExecution.toRdd.getNumPartitions)
     val in = if (Shims.ranQueryStages(df)) Shims.overExecutedRdd(df) else df
     if (splits < target) in.repartition(target) else in
   }

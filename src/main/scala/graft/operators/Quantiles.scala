@@ -31,43 +31,6 @@ object Quantiles {
   private case class Target(group: String, rank: Long)
   private case class State(lo: Double, hi: Double, r: Long)
 
-  /** The exact 0-based `rank`-th smallest `valueCol` (nulls and NaNs
-    * excluded — NaN has no usable order on both engines and would
-    * poison the interval bounds) per group per requested rank.
-    * Returns (group → rank → value).
-    *
-    * `maxIter` is generous headroom, not an expected cost: each round
-    * shrinks a target's interval to one cell's OCCUPIED extent (≤
-    * 1/buckets of the range), so even a log-uniform spread across all
-    * ~600 decades of double range resolves in ≈ 600/log10(buckets)
-    * rounds; benign data takes 1-3.
-    */
-  def exactOrderStats(
-      df: DataFrame, groupCol: String, valueCol: String,
-      ranksByGroup: Map[String, Seq[Long]],
-      buckets: Int = 1024, collectLimit: Int = 4096, maxIter: Int = 256)
-      : Map[String, Map[Long, Double]] = {
-    val in = prepare(df, groupCol, valueCol)
-    try {
-      val bounds = in.groupBy("g")
-        .agg(min("v").as("lo"), max("v").as("hi"), count(lit(1)).as("n"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
-      // validate up front: an out-of-range rank would otherwise surface
-      // rounds later as an opaque NoSuchElementException inside refine
-      ranksByGroup.foreach { case (g, ks) =>
-        require(bounds.contains(g),
-          s"group '$g' has no non-null, non-NaN values in '$valueCol'")
-        val n = bounds(g)._3
-        ks.foreach(k => require(k >= 0 && k < n,
-          s"rank $k out of range for group '$g' ($n usable values — ranks are 0-based)"))
-      }
-      refine(in, ranksByGroup.map { case (g, ks) =>
-          g -> ((bounds(g)._1, bounds(g)._2), ks)
-        }, buckets, collectLimit, maxIter)
-    } finally in.unpersist()
-  }
-
   private def prepare(df: DataFrame, groupCol: String, valueCol: String): DataFrame =
     df.select(col(groupCol).cast("string").as("g"),
         col(valueCol).cast("double").as("v"))

@@ -301,17 +301,27 @@ class ClusterDedupSpec extends AnyFunSuite {
     }
   }
 
-  test("direct route construction: the input is scanned once, no labels-out cut in components") {
-    import graft.operators.Dedup
-    // a parquet corpus behind a Dedup.byRank, the curation shape: the
-    // byRank shuffle runs once, in Par.widen's probe, and the route
-    // probe reads its map output
+  /** A parquet corpus behind a Dedup.byRank, the curation shape: the
+    * byRank shuffle runs once, in Par.widen's probe, and the route
+    * probe reads its map output.
+    */
+  private lazy val byRankDir = {
     val dir = java.nio.file.Files.createTempDirectory("components-jobs").toString
     (0L until 30L).map { i =>
       (i, s"family ${i % 6} shares these words across copies number ${i % 6} " +
         (if (i % 3 == 0) "" else s"edit $i"))
     }.toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/docs")
-    val docs = Dedup.byRank(spark.read.parquet(s"$dir/docs"), Seq("text"), Seq(col("doc_id")))
+    s"$dir/docs"
+  }
+
+  /** `components` over [[byRankDir]] in `session`: the descriptions of
+    * the jobs it runs before returning, the number of stages that scan
+    * the parquet input, its labels and the direct pipeline's labels.
+    */
+  private def constructComponents(session: org.apache.spark.sql.SparkSession)
+      : (Seq[String], Int, Set[(Long, Long)], Set[(Long, Long)]) = {
+    import graft.operators.Dedup
+    val docs = Dedup.byRank(session.read.parquet(byRankDir), Seq("text"), Seq(col("doc_id")))
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val scans = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -326,7 +336,7 @@ class ClusterDedupSpec extends AnyFunSuite {
         if (ours(ss.properties) && ss.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
           scans.incrementAndGet()
     }
-    val sc = spark.sparkContext
+    val sc = session.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup("components-construct", "components construction")
     val labels = try {
@@ -337,12 +347,69 @@ class ClusterDedupSpec extends AnyFunSuite {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    val jobs = descs.toArray.toSeq.map(_.toString)
+    (descs.toArray.toSeq.map(_.toString), scans.get,
+      labels.as[(Long, Long)].collect().toSet, direct(docs, 0.3))
+  }
+
+  test("direct route construction: the input is scanned once, no labels-out cut in components") {
+    val (jobs, scans, labels, want) = constructComponents(spark)
     assert(jobs.contains("cluster: components(direct)"), s"not the direct route: $jobs")
     assert(!jobs.contains("cut: components: labels out"), s"jobs: $jobs")
-    assert(scans.get == 1, s"the input was scanned ${scans.get} times")
-    assert(jobs.size == 21, s"construction jobs: $jobs")
-    assert(labels.as[(Long, Long)].collect().toSet == direct(docs, 0.3))
+    // the broadcast arm: one pair-index collect, no prefix-index cut
+    assert(jobs.count(_ == "cluster: pair index") == 1, s"jobs: $jobs")
+    assert(!jobs.contains("cut: cluster: prefix index"), s"jobs: $jobs")
+    assert(jobs.contains("widen: split probe"), s"jobs: $jobs")
+    assert(scans == 1, s"the input was scanned $scans times")
+    assert(jobs.size == 11, s"construction jobs: $jobs")
+    assert(labels == want)
+  }
+
+  test("direct route without broadcasts: the shuffled arm runs the prefix-index cut, same labels") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val (jobs, _, labels, want) = constructComponents(session)
+    assert(jobs.contains("cluster: components(direct)"), s"not the direct route: $jobs")
+    assert(jobs.contains("cut: cluster: prefix index"), s"jobs: $jobs")
+    assert(!jobs.contains("cluster: pair index"), s"jobs: $jobs")
+    assert(labels == want)
+  }
+
+  test("direct route over string ids: the broadcast probe labels and pairs as over long ids") {
+    val corpus = (0L until 30L).map { i =>
+      (i, s"family ${i % 6} shares these words across copies number ${i % 6} edit ${i % 4}")
+    }
+    // zero-padded, so string order is numeric order
+    def pad(i: Long) = f"d$i%03d"
+    val longs = corpus.toDF("doc_id", "text")
+    val strings = corpus.map { case (i, t) => (pad(i), t) }.toDF("doc_id", "text")
+    val labels = ClusterDedup.components(longs, "doc_id", "text", 2, 0.3)
+      .as[(Long, Long)].collect().toSeq
+    assert(labels.map(_._2).distinct.size < labels.size, "no pair at all")
+    assert(multiset(ClusterDedup.components(strings, "doc_id", "text", 2, 0.3)
+      .as[(String, String)].collect().toSeq) ==
+      multiset(labels.map { case (i, c) => (pad(i), pad(c)) }))
+    assert(multiset(ClusterDedup.pairsClustered(strings, "doc_id", "text", 2, 0.3)
+      .select(col("id_a"), col("id_b"), col("jaccard")).as[(String, String, Double)].collect().toSeq) ==
+      pairRows(ClusterDedup.pairsClustered(longs, "doc_id", "text", 2, 0.3)).map {
+        case ((a, b, j), m) => ((pad(a), pad(b), j), m)
+      })
+  }
+
+  test("PairPredicate: scalar bounds equal their Column forms on every size pair up to 200") {
+    val preds = Seq(0.3, 0.5, 0.7, 1.0).map(ClusterDedup.Jaccard(_)) ++
+      Seq(1, 3, 30).map(ClusterDedup.Overlap(_))
+    val sizes = spark.range(201).select(col("id").cast("int").as("na"))
+      .crossJoin(spark.range(201).select(col("id").cast("int").as("nb")))
+    for (p <- preds) {
+      val got = sizes.select(col("na"), col("nb"), p.prefixLen(col("na")).cast("int"),
+          p.alpha(col("na"), col("nb")).cast("int"), p.fits(col("na"), col("nb")))
+        .as[(Int, Int, Int, Int, Boolean)].collect()
+      assert(got.length == 201 * 201)
+      val bad = got.filterNot { case (na, nb, len, alpha, fits) =>
+        len == p.prefixLen(na) && alpha == p.alpha(na, nb) && fits == p.fits(na, nb)
+      }
+      assert(bad.isEmpty, s"$p disagrees at ${bad.take(5).toSeq}")
+    }
   }
 
   test("chain through mid-similarity links: components merge transitively across clusters") {

@@ -274,11 +274,13 @@ object GraftProperties extends Properties("graft") {
     } yield (100L, "beta") :: (101L, null: String) ::
       copied.toList.flatMap(x => List((102L, x), (103L, x + " mu"))) ++ c))
 
-  /** Set-level mirror of NativeHash.shingleHashes ∘ Text.tokens at n = 2. */
-  private def bigrams(text: String): Set[String] = {
+  /** Set-level mirror of NativeHash.shingleHashes ∘ Text.tokens. */
+  private def grams(text: String, n: Int): Set[String] = {
     val tk = Option(text).fold(Array.empty[String])(_.toLowerCase.split("\\s+").filter(_.nonEmpty))
-    if (tk.length < 2) Set.empty else tk.sliding(2).map(_.mkString(" ")).toSet
+    if (tk.length < n) Set.empty else tk.sliding(n).map(_.mkString(" ")).toSet
   }
+
+  private def bigrams(text: String): Set[String] = grams(text, 2)
 
   private def multiset[A](rows: Seq[A]): Map[A, Int] =
     rows.groupBy(identity).view.mapValues(_.size).toMap
@@ -322,6 +324,98 @@ object GraftProperties extends Properties("graft") {
           bench.toDF("bench_id", "text"), "bench_id", "text", 2, t)
         .as[(Long, String)].collect().toSeq
       multiset(got) == multiset(train.filterNot(r => dirty(r._1)))
+    }
+
+  // ---- the clustered family against a plain-Scala all-pairs truth
+  // that shares no code with the operators: string n-gram sets,
+  // quadratic pair scoring and a min-root union-find ----
+
+  /** Every (a < b) pair of `docs` whose sets score `Some`. */
+  private def truthPairs[S](docs: Seq[(Long, String)], set: String => Set[String],
+      score: (Int, Int, Int) => Option[S]): Seq[(Long, Long, S)] = {
+    val sets = docs.map { case (id, text) => (id, set(text)) }
+    for {
+      (ia, a) <- sets; (ib, b) <- sets if ia < ib
+      s <- score((a & b).size, a.size, b.size)
+    } yield (ia, ib, s)
+  }
+
+  private def jaccardScore(t: Double)(c: Int, na: Int, nb: Int): Option[Double] =
+    if (na == 0 || nb == 0) None
+    else Some(c.toDouble / (na + nb - c)).filter(_ >= t)
+
+  /** (id, min id of its component) for every doc of `ids`. */
+  private def truthLabels(ids: Seq[Long], edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long = if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => (i, find(i)))
+  }
+
+  /** The session whose broadcast threshold is off, so the direct route
+    * takes its shuffled arm.
+    */
+  private lazy val noBroadcast = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
+
+  /** `components`, `pairsClustered` and `OverlapJoin.pairsClustered`
+    * equal the truth as multisets of exact rows in three modes: the
+    * default call (the adaptive route, direct at these sizes, on its
+    * broadcast arm), `adaptive = false` (the clustered core), and the
+    * default call with broadcasts off (the direct route's shuffled arm).
+    */
+  private def clusteredFamilyMatches(docs: List[(Long, String)], t: Double, k: Int): Boolean = {
+    import graft.functions.{NativeHash, Text}
+    import graft.operators.{ClusterDedup, OverlapJoin}
+    val pairs = truthPairs(docs, grams(_, 2), jaccardScore(t))
+    val labels = truthLabels(docs.map(_._1), pairs.map(p => (p._1, p._2)))
+    val overlaps = truthPairs(docs, grams(_, 1),
+      (c, _, _) => Some(c.toLong).filter(_ >= k))
+    Seq((spark, true), (spark, false), (noBroadcast, true)).forall { case (session, adaptive) =>
+      val df = session.createDataFrame(docs).toDF("doc_id", "text")
+      val sets = NativeHash.shingleHashes(Text.tokens(col("text")), 1)
+      val gotLabels = ClusterDedup.components(df, "doc_id", "text", 2, t, adaptive = adaptive)
+        .as[(Long, Long)].collect().toSeq
+      val gotPairs = ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t, adaptive = adaptive)
+        .select(col("id_a"), col("id_b"), col("jaccard")).as[(Long, Long, Double)].collect().toSeq
+      val gotOverlaps = OverlapJoin.pairsClustered(df, "doc_id", sets, minOverlap = k,
+          adaptive = adaptive)
+        .select(col("id_a"), col("id_b"), col("overlap")).as[(Long, Long, Long)].collect().toSeq
+      multiset(gotLabels) == multiset(labels) && multiset(gotPairs) == multiset(pairs) &&
+        multiset(gotOverlaps) == multiset(overlaps)
+    }
+  }
+
+  property("clustered family equals the all-pairs truth on random corpora, every route") =
+    forAll(for {
+      docs <- corpusGen
+      odd <- Gen.listOfN(3, Gen.oneOf(null: String, "", "alpha", "alpha beta"))
+      t <- Gen.oneOf(0.3, 0.5, 0.8, 1.0)
+      k <- Gen.oneOf(1, 2, 3)
+    } yield (docs ++ odd.zipWithIndex.map { case (x, i) => (100L + i, x) }, t, k)) {
+      case (docs, t, k) => clusteredFamilyMatches(docs, t, k)
+    }
+
+  property("clustered family equals the all-pairs truth on degenerate corpora, every route") =
+    Prop.secure {
+      val words = "alpha beta gamma delta epsilon zeta eta theta".split(" ")
+      val varied = words.indices.toList.map(i => (i.toLong, words.drop(i).mkString(" ")))
+      Seq(
+        Nil, // empty frame
+        List((7L, "alpha beta gamma")), // one row
+        List((1L, null), (2L, ""), (3L, "alpha"), (4L, null), (5L, "alpha beta gamma")),
+        List.tabulate(6)(i => (i.toLong, "alpha beta gamma delta")), // all identical
+        // one shingle ("hot key") present in every doc
+        varied.map { case (id, text) => (id, s"hot key $text") }
+      ).forall(docs => Seq((0.3, 1), (0.6, 2), (1.0, 3)).forall { case (t, k) =>
+        clusteredFamilyMatches(docs, t, k)
+      })
     }
 
   property("parseContainerMeta is total on arbitrary bytes: never throws, garbage is unknown") =
