@@ -98,9 +98,9 @@ import graft.functions.{NativeHash, Text}
   * PPJoin self-join over the collapsed reps instead of steps 2-5 when
   * contraction cannot pay; both routes are exact and row-identical.
   * The direct route has two arms, picked by one reading of the route
-  * probe: when the reps' shingle arrays fit under the session's
-  * `spark.sql.autoBroadcastJoinThreshold`, one labelled job
-  * (`cluster: pair index`) collects them into broadcast postings
+  * probe: when the reps' index ([[IndexBytes]]) fits under the
+  * session's `spark.sql.autoBroadcastJoinThreshold`, one labelled job
+  * (`cluster: pair index`) collects the reps into broadcast postings
   * ([[JaccardDedup.BenchPostings]], the index decontamination probes)
   * and every rep probes them map-side — size and positional filters,
   * a per-row candidate set and the exact verify inside the probe, so
@@ -193,6 +193,25 @@ object ClusterDedup {
     * soak already measured 634M), so the cap is inert at scale.
     */
   private[operators] val DirectCandCap = 32L * 1000 * 1000
+
+  /** Bytes the direct route's broadcast arm holds per shingle element
+    * and per rep: the direct route takes it when
+    * `IndexBytes · (Σn + docs)` fits under the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, else the shuffled arm. What
+    * is held is the built [[JaccardDedup.BenchPostings]] — each rep's
+    * array, its walk view, its prefix and the packed postings map — plus
+    * the boxed rep ids; the driver's collect (boxed Rows, ~30 B an
+    * element) is garbage once the arrays are copied out. Spark's
+    * SizeEstimator on built indexes read 63–72 B per (element + rep) on
+    * random sets of 1 to 400 all-distinct elements under `Overlap(1)`,
+    * the worst case (one postings array per element, the whole set is
+    * prefix). Text shares elements and reads less: 21–31 B on the sf0.1
+    * gate corpora, 29–50 B on 400–40,000 generated documents, where the
+    * probe beat the shuffled arm at every size (1.8× at 40,000 docs and
+    * a 107 MB index). So the threshold caps memory, as it does for
+    * Spark's broadcast joins, not a speed crossover.
+    */
+  private[graft] val IndexBytes = 72.0
 
   /** The pair predicate the core runs under. A pair of set sizes
     * (n_a, n_b) qualifies only with overlap c ≥ α(n_a, n_b), and under
@@ -1191,14 +1210,9 @@ object ClusterDedup {
     // arm's postings + plan probes) would otherwise race to materialize
     // the persist from concurrent AQE stages and double-compute the
     // whole df + window chain (r18).
-    var prefixCut: Option[DataFrame] = None
-    def prefix: DataFrame = prefixCut.getOrElse {
-      val p = Par.cut(JaccardDedup.prefixIndex(
-          reps.select(col("id"), explode(col("__sh")).as("s"), col("n")),
-          "id", pred), "cluster: prefix index")
-      prefixCut = Some(p)
-      p
-    }
+    lazy val prefix = Par.cut(JaccardDedup.prefixIndex(
+        reps.select(col("id"), explode(col("__sh")).as("s"), col("n")),
+        "id", pred), "cluster: prefix index")
 
     // ---- ADAPTIVE ROUTE (see RouteContractRatio / DirectCandCap).
     // Probe — direct-candidate volume: Σ_s dfP(s)² is the EXACT row
@@ -1219,15 +1233,15 @@ object ClusterDedup {
     // No probe job runs when `adaptive` is off (the route is forced).
     val nRepsEst = if (collapseUseful) st.getLong(1) else st.getLong(0)
     // the direct route's arm, read off the route probe: the broadcast
-    // probe whenever the reps' shingle arrays (8 bytes an element; Σn
-    // over eligible docs bounds the reps' share) fit under the session's
-    // broadcast threshold, else the shuffled prefix pipeline. A
-    // broadcastable corpus collects its pair index at most once, for
-    // candVol or the broadcast arm, and candVol then counts the same
-    // Σ_s dfP(s)² from its postings on the driver, with no prefix cut
-    // (a corpus that then routes clustered pays that one collect)
+    // probe whenever its index (IndexBytes per element and per rep; Σn
+    // and the count over eligible docs bound the reps' share) fits under
+    // the session's broadcast threshold, else the shuffled prefix
+    // pipeline. A broadcastable corpus collects its pair index at most
+    // once, for candVol or the broadcast arm, and candVol then counts the
+    // same Σ_s dfP(s)² from its postings on the driver, with no prefix
+    // cut (a corpus that then routes clustered pays that one collect)
     val threshold = hashed.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val broadcastable = threshold >= 0 && 8.0 * st.getLong(3) <= threshold
+    val broadcastable = threshold >= 0 && IndexBytes * (st.getLong(3) + st.getLong(0)) <= threshold
     lazy val index = pairIndex(reps, pred)
     def candVol(): Double = if (broadcastable) index.postings.candidateRows else {
       val cv = Par.labeled(spark, "cluster: candVol probe")(

@@ -637,6 +637,10 @@ object JaccardDedup {
     @transient private lazy val views = docs.map(
       org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(_))
     @transient private lazy val walk = new graft.functions.NativeHash.SortedIntersectHelper
+    // pairsOf's candidate sets, reused across calls: at most one per
+    // concurrent caller, dropped with the index
+    @transient private lazy val marks =
+      new java.util.concurrent.ConcurrentLinkedQueue[BenchPostings.Marks]
 
     private def postingsOf(s: Long): Array[Long] = postings.getOrElse(s, Array.emptyLongArray)
 
@@ -671,7 +675,8 @@ object JaccardDedup {
       */
     def pairsOf(a: Int): Seq[(Int, Int)] = {
       val na = sizes(a)
-      val seen = scala.collection.mutable.BitSet.empty
+      val seen = Option(marks.poll()).getOrElse(new BenchPostings.Marks(docs.length))
+      seen.clear()
       val out = Seq.newBuilder[(Int, Int)]
       val pre = prefixes(a)
       for (pa <- pre.indices; p <- postingsOf(pre(pa))) {
@@ -686,7 +691,39 @@ object JaccardDedup {
           }
         }
       }
+      marks.offer(seen)
       out.result()
+    }
+  }
+
+  private[operators] object BenchPostings {
+    /** A set of doc positions in [0, n): one bit per doc, emptied
+      * through the list of docs added since the last clear, so a
+      * clear costs the candidates one probe met, not n / 64 words.
+      */
+    final class Marks(n: Int) {
+      private val bits = new Array[Long]((n + 63) >>> 6)
+      private var added = new Array[Int](16)
+      private var size = 0
+
+      def clear(): Unit = {
+        var i = 0
+        while (i < size) { bits(added(i) >>> 6) = 0L; i += 1 }
+        size = 0
+      }
+
+      /** Adds `b`; false when it was already in the set. */
+      def add(b: Int): Boolean = {
+        val m = 1L << b
+        if ((bits(b >>> 6) & m) != 0) false
+        else {
+          bits(b >>> 6) |= m
+          if (size == added.length) added = java.util.Arrays.copyOf(added, 2 * size)
+          added(size) = b
+          size += 1
+          true
+        }
+      }
     }
   }
 }

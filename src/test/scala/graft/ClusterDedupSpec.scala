@@ -364,14 +364,24 @@ class ClusterDedupSpec extends AnyFunSuite {
     assert(labels == want)
   }
 
-  test("direct route without broadcasts: the shuffled arm runs the prefix-index cut, same labels") {
-    val session = spark.newSession()
-    session.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val (jobs, _, labels, want) = constructComponents(session)
-    assert(jobs.contains("cluster: components(direct)"), s"not the direct route: $jobs")
-    assert(jobs.contains("cut: cluster: prefix index"), s"jobs: $jobs")
-    assert(!jobs.contains("cluster: pair index"), s"jobs: $jobs")
-    assert(labels == want)
+  test("direct route arm: the shuffled arm runs the prefix-index cut when the index exceeds the threshold, same labels") {
+    // the broadcast index the fixture would build: IndexBytes per
+    // shingle and per eligible doc
+    import graft.functions.{NativeHash, Text}
+    import graft.operators.Dedup
+    val sizes = Dedup.byRank(spark.read.parquet(byRankDir), Seq("text"), Seq(col("doc_id")))
+      .select(size(NativeHash.shingleHashes(Text.tokens(col("text")), 2)).as("n"))
+      .where(col("n") > 0).agg(sum("n"), count(lit(1))).head()
+    val index = (ClusterDedup.IndexBytes * (sizes.getLong(0) + sizes.getLong(1))).toLong
+    for ((threshold, broadcast) <- Seq(-1L -> false, index - 1 -> false, index -> true)) {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
+      val (jobs, _, labels, want) = constructComponents(session)
+      assert(jobs.contains("cluster: components(direct)"), s"not the direct route: $jobs")
+      assert(jobs.contains("cut: cluster: prefix index") == !broadcast, s"at $threshold: $jobs")
+      assert(jobs.contains("cluster: pair index") == broadcast, s"at $threshold: $jobs")
+      assert(labels == want)
+    }
   }
 
   test("direct route over string ids: the broadcast probe labels and pairs as over long ids") {
