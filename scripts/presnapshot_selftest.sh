@@ -1,8 +1,9 @@
 #!/usr/bin/env bash
 # Self-test for the CHANGES gate: in a scratch copy the gate must exit
 # non-zero without CHANGES.md, with an empty one and with one ending in
-# a dangling promise, and zero with a finished entry. Run any time;
-# touches nothing in-repo.
+# a dangling promise, and zero with a finished entry. It also runs the
+# LoC report (scripts/loc.sh) once on HEAD, which must exit zero. Run
+# any time; touches nothing in-repo.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -30,3 +31,8 @@ if ! gate; then
   exit 1
 fi
 echo "SELFTEST OK: gate needs a non-empty CHANGES.md without a dangling promise"
+if ! bash scripts/loc.sh HEAD >/dev/null; then
+  echo "SELFTEST FAIL: scripts/loc.sh HEAD exited non-zero" >&2
+  exit 1
+fi
+echo "SELFTEST OK: scripts/loc.sh runs on HEAD"

@@ -61,17 +61,18 @@ object Bench {
   private[graft] val SuspectFloorSec = 1.0
   private[graft] val MaxRerun = 12
 
-  /** Adoption rule for a suspect's re-run (r18, per the r17 verdict's
-    * symmetry item): adopt the RERUN MEDIAN only when it is both lower
-    * than the original AND itself back under the SuspectRatio trigger
-    * — a rerun that is merely somewhat faster but still suspicious
-    * does not overwrite a (possibly real) regression. Returns the
-    * adopted value, or None to keep the original. Unit-tested in
-    * BenchSpec.
+  /** Adoption rule for a suspect's re-run: adopt the RERUN MEDIAN only
+    * when it is both lower than the original AND itself back under the
+    * trigger of [[adjudicationSuspects]] (at most SuspectRatio × ruler
+    * or at most SuspectFloorSec) — a rerun that is merely somewhat
+    * faster but still suspicious does not overwrite a (possibly real)
+    * regression. Returns the adopted value, or None to keep the
+    * original. Unit-tested in BenchSpec.
     */
   private[graft] def adjudicatedValue(
       original: Double, rerunMedian: Double, ruler: Double): Option[Double] =
-    if (rerunMedian < original && rerunMedian <= SuspectRatio * ruler) Some(rerunMedian)
+    if (rerunMedian < original && rerunMedian <= math.max(SuspectRatio * ruler, SuspectFloorSec))
+      Some(rerunMedian)
     else None
 
   /** Pure trigger, unit-tested in BenchSpec: (name, median) pairs that

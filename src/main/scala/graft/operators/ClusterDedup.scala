@@ -546,14 +546,20 @@ object ClusterDedup {
     * `dedup_clusters`/`dedup_clusters_scalable` (three plans, one
     * truth).
     *
-    * Scale shape — CLUSTER granularity, like the batch core, with the
-    * base/delta SPLIT healed before candidates. Two cheaper designs
-    * were built and measured out on the 10×-replicated soak corpus:
-    *   - a doc-level delta-vs-all prefix join
-    *     ([[JaccardDedup.nearDupPairsIncremental]], kept as the
-    *     pair-LISTING API and the measurable A/B arm) inherits the g²
-    *     replication pathology — 409 s where a FULL clustered
-    *     recompute takes ~50 s;
+    * Two arms, picked by the exact doc-level candidate volume of the
+    * union prefix index (see [[DirectCandCap]]). The DIRECT arm runs
+    * the pair-listing pipeline of [[JaccardDedup.nearDupPairsIncremental]]
+    * ([[JaccardDedup.unionIndex]], the batch's prefix rows probing the
+    * whole index, [[JaccardDedup.verifiedPairs]]) and one components
+    * pass over (base star edges ∪ those pairs).
+    *
+    * Scale shape of the other arm — CLUSTER granularity, like the batch
+    * core, with the base/delta SPLIT healed before candidates. Two
+    * cheaper designs were built and measured out on the 10×-replicated
+    * soak corpus:
+    *   - the doc-level delta-vs-all prefix join alone (the direct arm)
+    *     inherits the g² replication pathology — 409 s where a FULL
+    *     clustered recompute takes ~50 s;
     *   - base-clusters-from-labels + delta-only contraction leaves
     *     each replica family SPLIT across the base/delta boundary and
     *     the batch side near doc granularity: 17.7M candidates, 1.66M
@@ -595,48 +601,24 @@ object ClusterDedup {
       prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
     val pred = jaccard(threshold)
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val hashed = Par.widen(
-        base.select(col(idCol).as("id"), col(textCol).as("__t"), lit(false).as("__d"))
-          .unionByName(
-            delta.select(col(idCol).as("id"), col(textCol).as("__t"), lit(true).as("__d"))))
-      .select(col("id"),
-        NativeHash.shingleHashes(Text.tokens(col("__t")), nGram).as("__sh"),
-        col("__d"))
-      .select(col("id"), col("__sh"),
-        coalesce(size(col("__sh")), lit(0)).as("n"), col("__d"))
-      .persist(MEMORY_AND_DISK)
-    // plain filter over the persist, NOT an extra eager cut: the cut
-    // was a full second materialization pass of the corpus arrays per
-    // call (the persist already dedups execution; the consumers' plans
-    // stay shallow — scan→widen→shingle→filter)
+    val (hashed, prefix) = JaccardDedup.unionIndex(base, delta, idCol, textCol, nGram, pred)
+    // a plain filter over the persist, not an extra eager cut, which
+    // would materialize the corpus arrays a second time per call
     val nonEmpty = hashed.where(col("n") > 0)
     val verts = base.select(col(idCol).as("id"))
       .unionByName(delta.select(col(idCol).as("id")))
 
-    // ---- ADAPTIVE ROUTE (r17, the batch core's [[DirectCandCap]]
-    // pattern): the cluster-granularity machinery below (banding +
-    // contraction + label merge + cluster candidates + diff verify —
-    // measured 6-10 s of fixed phases at sf0.1) only pays when the
-    // doc-level delta-vs-all prefix join would drown in replication.
-    // Its EXACT candidate volume is Σ_s dfPΔ(s)·dfP(s) over the UNION
-    // prefix index — one narrow aggregate over an index BOTH arms
-    // consume (the clustered arm's cluster postings reuse it, exactly
-    // like the batch core reuses its route probe's index). Under the
-    // absolute cap the direct arm runs in seconds on any hardware:
-    // exact delta-touching pairs ([[JaccardDedup.nearDupPairsIncremental]]'s
-    // candidate scheme, same size/positional filters and verify walk)
-    // plus ONE components pass over (base label star edges ∪ those
-    // pairs) — row-identical by the same argument as the clustered arm
-    // (baseLabels' id→component edges span exactly the base-internal
-    // connectivity; IncrementalDedupSpec pins adaptive == forced-
-    // clustered on both corpus shapes). On replica-heavy corpora the
-    // volume explodes g² and the probe routes clustered (the 10× soak
-    // measured 409 s doc-level vs 116 s clustered).
-    val prefIndex = nonEmpty.select(col("id"), explode(col("__sh")).as("s"),
-      col("n"), col("__d"))
-    val prefix = JaccardDedup.prefixIndex(prefIndex, "id", pred, keep = Seq("__d"))
-      .persist(MEMORY_AND_DISK)
+    // ---- ADAPTIVE ROUTE (the batch core's [[DirectCandCap]] pattern):
+    // the cluster-granularity machinery below (banding, contraction,
+    // label merge, cluster candidates, diff verify — 6-10 s of fixed
+    // phases at sf0.1) only pays when the doc-level delta-vs-all prefix
+    // join would drown in replication. Its EXACT candidate volume is
+    // Σ_s dfPΔ(s)·dfP(s) over the union prefix index, which both arms
+    // consume. Both arms are row-identical: baseLabels' id→component
+    // edges span exactly the base-internal connectivity
+    // (IncrementalDedupSpec pins adaptive == forced-clustered). On
+    // replica-heavy corpora the volume explodes g² and the probe routes
+    // clustered (10× soak: 409 s doc-level vs 116 s clustered).
     val routeDirect = adaptive && {
       val cv = Par.labeled(base.sparkSession, "inc: candVol probe")(
         prefix.groupBy("s").agg(count(lit(1)).as("c"),
@@ -648,16 +630,7 @@ object ClusterDedup {
       vol < DirectCandCap
     }
     if (routeDirect) {
-      val cand = JaccardDedup.prefixPairs(prefix, "id", pred, "id_a", "id_b",
-        probe = Some(prefix.where(col("__d"))))
-      val alphaD = pred.alpha(col("n_a"), col("n_b")).cast("int")
-      val deltaPairs = cand
-        .join(nonEmpty.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
-        .join(nonEmpty.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-        .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"), alphaD))
-        .filter(col("c") >= 0)
-        .filter(pred.keep(pred.score(col("c"), col("n_a"), col("n_b"))))
-        .select("id_a", "id_b")
+      val deltaPairs = JaccardDedup.deltaPairs(hashed, prefix, pred).select("id_a", "id_b")
       // baseLabels' star edges (id → component) ARE the base-internal
       // connectivity; self-loops (singletons) drop in the components
       // normalize and re-enter through the vertex universe
@@ -688,14 +661,7 @@ object ClusterDedup {
       .withColumn("__hub", min(col("id")).over(bucketW))
       .filter(col("__hub") < col("id"))
       .select(col("__hub").as("id_a"), col("id").as("id_b")).distinct()
-    val starEdges = lshCand
-      .join(nonEmpty.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
-      .join(nonEmpty.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-      .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
-      .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"),
-        pred.alpha(col("n_a"), col("n_b")).cast("int")))
-      .filter(col("c") >= 0)
-      .filter(pred.keep(pred.score(col("c"), col("n_a"), col("n_b"))))
+    val starEdges = JaccardDedup.verifiedPairs(lshCand, nonEmpty, "id", pred, "id_a", "id_b")
       .select("id_a", "id_b")
 
     // star label per doc: the batch core's one-pass contraction
@@ -1146,7 +1112,7 @@ object ClusterDedup {
     // DISTINCT sets, so this probe says nothing about them and the
     // g²-killing contraction must stay unconditional).
     // ONE narrow probe aggregate carries the doc-level routing
-    // statistics (r18 — reshaped from r17's fused crossJoin probe):
+    // statistics:
     //   - count + HLL distinct sets → the collapse decision;
     //   - HLL distinct band-0 buckets → the contraction-mass estimate:
     //     Σ over buckets of (size − 1) = members − distinct buckets, so
@@ -1158,21 +1124,16 @@ object ClusterDedup {
     //     distinct-buckets-over-reps and the statistic is rep-level
     //     even before the collapse decision is made;
     //   - Σn → the direct route's broadcast-or-shuffle choice.
-    // Two r18 changes, both measured at sf0.1 (OPTIMIZATION_r18.md):
-    //   - rsd 0.05, not 0.01 — the high-precision HLL buffer made the
-    //     probe itself the bottleneck (fused aggregate 4.0 s vs 0.9 s;
-    //     every routing threshold tolerates ≥ 10% estimate error, and
-    //     routing picks between two EXACT plans);
-    //   - no crossJoin with the candVol aggregate — the r17 fused form
-    //     ran this aggregate and the optimistic prefix build as
-    //     CONCURRENT AQE stages against the unmaterialized hashed
-    //     persist, and the race double-computed the shingling pass
-    //     (twin 3.2-3.7 s jobs, ~60% of dedup_canonical's wall). This
-    //     single-subtree action materializes the persist exactly once;
-    //     the prefix index is built AFTER the collapse decision over
-    //     the final rep set (no optimistic build + discard), and
-    //     candVol — only needed when the contraction-mass shortcut is
-    //     inconclusive — runs lazily against the prefix cut below.
+    // Measured at sf0.1:
+    //   - rsd 0.05, not 0.01: the high-precision HLL buffer made the
+    //     probe itself the bottleneck (4.0 s vs 0.9 s); every routing
+    //     threshold tolerates ≥ 10% estimate error, and routing picks
+    //     between two EXACT plans;
+    //   - a single-subtree action, not fused with the candVol aggregate:
+    //     concurrent stages over the unmaterialized hashed persist
+    //     double-computed the shingling pass (twin 3.2-3.7 s jobs).
+    //     candVol, only needed when the contraction-mass shortcut is
+    //     inconclusive, runs lazily below.
     val st = Par.labeled(spark, "cluster: route probe")(
       eligible.agg(count(lit(1)).as("__n"),
         approx_count_distinct(xxhash64(col("__sh")), 0.05).as("__sets"),
@@ -1201,15 +1162,13 @@ object ClusterDedup {
     val reps = collapseCut.fold(eligible.select("id", "__sh", "n"))(
       _.where(col("id") === col("rep")).select("id", "__sh", "n"))
 
-    // prefix index over the FINAL rep set, built at most ONCE, after the
-    // collapse decision (the r17 probe built an optimistic doc-level
-    // index and discarded+rebuilt it when the collapse fired), and only
-    // when something reads it: the candVol probe, the direct route's
-    // shuffled arm or the clustered arm. CUT rather than lazily
-    // persisted: the candidate self-join's two sides (and the clustered
-    // arm's postings + plan probes) would otherwise race to materialize
-    // the persist from concurrent AQE stages and double-compute the
-    // whole df + window chain (r18).
+    // prefix index over the FINAL rep set, built at most once, after the
+    // collapse decision, and only when something reads it: the candVol
+    // probe, the direct route's shuffled arm or the clustered arm. CUT
+    // rather than lazily persisted: the candidate self-join's two sides
+    // (and the clustered arm's postings + plan probes) would otherwise
+    // race to materialize the persist from concurrent AQE stages and
+    // double-compute the whole df + window chain.
     lazy val prefix = Par.cut(JaccardDedup.prefixIndex(
         reps.select(col("id"), explode(col("__sh")).as("s"), col("n")),
         "id", pred), "cluster: prefix index")
@@ -1262,19 +1221,10 @@ object ClusterDedup {
         val (pairs, bc) = probedRepPairs(spark, index, pred)
         return Left(DirectCore(hashed, docRep, pairs, collapseCut.toSeq, Some(bc)))
       }
-      // the shuffled arm: the direct twin's prefix pipeline over the
-      // already-hashed reps (df-rarity prefix index, size + positional
-      // filters inside the join, early-exit merge-walk verify) — the
-      // plan the direct operator runs, minus a second shingling pass
-      val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
-      val pairs = JaccardDedup.prefixPairs(prefix, "id", pred, "ra", "rb")
-        .join(reps.select(col("id").as("ra"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("ra"))
-        .join(reps.select(col("id").as("rb"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("rb"))
-        .withColumn("c", NativeHash.sortedIntersectAtLeast(col("__sha"), col("__shb"), alphaV))
-        .filter(col("c") >= 0)
-        .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
-        .filter(pred.keep(col(pred.scoreCol)))
-        .select(col("ra"), col("rb"), col(pred.scoreCol))
+      // the shuffled arm: the direct pipeline over the already-hashed
+      // reps, minus a second shingling pass
+      val pairs = JaccardDedup.verifiedPairs(
+        JaccardDedup.prefixPairs(prefix, "id", pred, "ra", "rb"), reps, "id", pred, "ra", "rb")
       return Left(DirectCore(hashed, docRep, pairs, collapseCut.toSeq :+ prefix, None))
     }
 
@@ -1302,14 +1252,7 @@ object ClusterDedup {
       .withColumn("__hub", min(col("id")).over(bucketW))
       .filter(col("__hub") < col("id"))
       .select(col("__hub").as("id_a"), col("id").as("id_b")).distinct()
-    val edges1 = lshCand
-      .join(reps.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
-      .join(reps.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-      .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
-      .withColumn("c", NativeHash.sortedIntersectAtLeast(
-        col("__sha"), col("__shb"), pred.alpha(col("n_a"), col("n_b")).cast("int")))
-      .filter(col("c") >= 0)
-      .filter(pred.keep(pred.score(col("c"), col("n_a"), col("n_b"))))
+    val edges1 = JaccardDedup.verifiedPairs(lshCand, reps, "id", pred, "id_a", "id_b")
       .select("id_a", "id_b")
     // contraction labels by ONE-PASS star contraction, not a full
     // components run: cl(x) = min(x, min t-neighbor). Validity needs

@@ -42,9 +42,12 @@ import graft.functions.Text
   * All pruning bounds are computed a hair conservative (±1e-9) against
   * fp rounding of t·n products: a boundary-exact pair is then verified
   * by the exact intersection count rather than silently pruned.
-  * `maxDocFreq` remains as an OPTIONAL extra cap for adversarial
-  * corpora; unlike prefix filtering it can lose pairs, so it stays off
-  * by default.
+  *
+  * One pipeline serves the direct Jaccard listings, batch and
+  * incremental: a widened doc table (id, `__sh`, n) → [[prefixIndex]]
+  * → [[prefixPairs]] → [[verifiedPairs]], each step under a
+  * [[ClusterDedup.PairPredicate]]. [[overlapJoin]] keeps its own
+  * hash-order prefix join (see there).
   */
 object JaccardDedup {
 
@@ -53,11 +56,9 @@ object JaccardDedup {
       idCol: String,
       textCol: String,
       nGram: Int = 2,
-      threshold: Double = 0.3,
-      maxDocFreq: Option[Long] = None): DataFrame =
+      threshold: Double = 0.3): DataFrame =
     nearDupPairsByHashes(df, idCol,
-      graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
-      threshold, maxDocFreq)
+      graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram), threshold)
 
   /** Char-n-gram flavor — for short or unsegmented text (e.g. zh) where
     * word tokenization is meaningless.
@@ -69,7 +70,7 @@ object JaccardDedup {
       nChars: Int = 3,
       threshold: Double = 0.3): DataFrame =
     nearDupPairsByHashes(df, idCol,
-      graft.functions.NativeHash.charShingleHashes(col(textCol), nChars), threshold, None)
+      graft.functions.NativeHash.charShingleHashes(col(textCol), nChars), threshold)
 
   /** Prefix index: each document's rarest `pred.prefixLen(n)` shingle
     * hashes (n − ⌈t·n⌉ + 1 for Jaccard ≥ t, n − k + 1 for overlap ≥ k)
@@ -83,35 +84,17 @@ object JaccardDedup {
     */
   private[graft] def prefixIndex(index: DataFrame, idCol: String,
       pred: ClusterDedup.PairPredicate, keep: Seq[String] = Nil): DataFrame = {
-    // df as a combiner AGGREGATE + join-back, not a count window over an
-    // s-partitioned exchange (r18, guide §2.3/§2.5/§3.1). The r17 window
-    // form shuffled the ENTIRE exploded index by shingle and sorted
-    // every partition so the whole-partition count window could buffer
-    // each shingle group — a hot shingle (a stopword n-gram at corpus
-    // scale) ships every posting into ONE window buffer in one task,
-    // the straggler-maker the r17 verdict flagged, and the 32 concurrent
-    // partition sorts were the prime suspect for dedup_canonical's
-    // 32-core GC pathology. The aggregate does map-side partial
-    // aggregation, so a hot shingle accumulates in O(1) combiner state
-    // and the df shuffle carries (s, partial count) rows —
-    // distinct-shingle-sized, not index-sized. The join-back is
-    // AQE-planned: at gate scale the aggregated dfreq is a few MB and
-    // broadcasts, so the index is NEVER exchanged by s at all (one
-    // exchange — by doc — where the window form paid two; measured
-    // 0.55 s vs 0.89 s warm at sf0.1); at corpus scale dfreq outgrows
-    // the broadcast threshold and AQE falls back to a shuffled join,
-    // where — unlike a window — AQE's skew-join splitting can still
-    // carve up a hot shingle's oversized partition.
-    // The join on s is null-rejecting: a null shingle drops here,
-    // matching the pre-r17 groupBy+join semantics (inert today — the
-    // shingle-hash arrays are containsNull=false).
+    // df as a combiner aggregate plus a join-back, not a count window
+    // over an s-partitioned exchange: a hot shingle accumulates in O(1)
+    // combiner state instead of one window buffer in one task, and at
+    // gate scale the aggregated dfreq broadcasts, so the index is
+    // exchanged once, by doc (0.55 s vs 0.89 s warm at sf0.1). At corpus
+    // scale AQE falls back to a shuffled join, whose skew splitting can
+    // still carve up a hot shingle's partition. The join on s drops a
+    // null shingle (inert: the shingle-hash arrays are containsNull=false).
     val dfreq = index.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    // explicit width on the per-doc exchange: AQE's advisory-size
-    // coalescing shrank this window to a SINGLE task at gate scale
-    // (sub-64MB shuffle), serializing the row_number pass. The width is
-    // data-size-aware with a cores floor (Par.scaleWidth, r18): cores
-    // locally, estimated-bytes/advisory-size at 100 TB — the r17 blind
-    // defaultParallelism would cap parallelism there.
+    // explicit, data-size-aware width on the per-doc exchange: AQE's
+    // advisory-size coalescing shrank it to a single task at gate scale
     val wDoc = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("df").asc, col("s").asc)
     index.join(dfreq, Seq("s"))
@@ -119,24 +102,6 @@ object JaccardDedup {
       .withColumn("pos", row_number().over(wDoc))
       .filter(col("pos") <= pred.prefixLen(col("n")))
       .select((Seq("s", idCol, "n", "pos") ++ keep).map(col): _*)
-  }
-
-  /** Candidate (id_a < id_b) pairs from the prefix self-join (see
-    * [[prefixPairs]]). The prefix index is persisted: a self-join
-    * re-evaluates its subtree per side, and the df + per-doc-window
-    * pipeline is the expensive part. Lazy persist, NOT an eager cut:
-    * the sides' concurrent AQE stages can race the materialization and
-    * duplicate some work, but at 32 cores that overlap rides
-    * otherwise-idle cores — the r18 A/B measured the eager-cut form
-    * 1.8× SLOWER on this operator (2.1 s → 3.9 s, serializing the
-    * probe-side build behind the checkpoint write). The routed cores
-    * are the opposite case (heavier chains, saturated cores) and keep
-    * their sequential cut.
-    */
-  private[graft] def prefixCandidates(index: DataFrame, idCol: String, threshold: Double): DataFrame = {
-    val pred = ClusterDedup.Jaccard(threshold)
-    prefixPairs(prefixIndex(index, idCol, pred)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), idCol, pred, "id_a", "id_b")
   }
 
   /** The shuffled candidate join over a [[prefixIndex]]: distinct pairs
@@ -168,20 +133,32 @@ object JaccardDedup {
       .distinct()
   }
 
-  /** Core: exact Jaccard over any shingle-array expression. Generic
-    * string-shingle hatch — hashes and sorts per doc (interpreted HOF),
-    * then delegates; the text/char entry points above use the native
-    * codegen'd shingle-hash expressions instead.
+  /** The exact verify of a candidate pair stream `cand` (columns `a`,
+    * `b`): both sides' (`__sh`, n) join on from `docs` (idCol, `__sh`,
+    * n), the size filter runs, then the early-exit merge walk at
+    * α(n_a, n_b) and the predicate's keep. Emits (a, b, score).
+    *
+    * The walk bails once c can no longer reach α. J ≥ t ⟺ c ≥ α, so it
+    * rejects exactly the sub-threshold pairs, and on the false-heavy
+    * candidate streams low thresholds produce most walks exit within a
+    * few steps (2.9× on the 10× soak corpus). Joining the arrays
+    * instead of re-joining through the exploded index avoids a
+    * Σ_cand n_a-row aggregate (375M rows for 6.2M candidates on sf0.1's
+    * tiny-vocabulary corpus). No broadcast hint: AQE broadcasts the doc
+    * table while it fits and shuffles at corpus scale.
     */
-  def nearDupPairsBy(
-      df: DataFrame,
-      idCol: String,
-      shingleExpr: Column,
-      threshold: Double,
-      maxDocFreq: Option[Long]): DataFrame =
-    nearDupPairsByHashes(df, idCol,
-      sort_array(transform(array_distinct(shingleExpr), s => xxhash64(s))),
-      threshold, maxDocFreq)
+  private[graft] def verifiedPairs(cand: DataFrame, docs: DataFrame, idCol: String,
+      pred: ClusterDedup.PairPredicate, a: String, b: String): DataFrame =
+    cand
+      .join(docs.select(col(idCol).as(a), col("__sh").as("__sha"), col("n").as("n_a")), Seq(a))
+      .join(docs.select(col(idCol).as(b), col("__sh").as("__shb"), col("n").as("n_b")), Seq(b))
+      .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
+      .withColumn("c", graft.functions.NativeHash.sortedIntersectAtLeast(
+        col("__sha"), col("__shb"), pred.alpha(col("n_a"), col("n_b")).cast("int")))
+      .filter(col("c") >= 0)
+      .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
+      .filter(pred.keep(col(pred.scoreCol)))
+      .select(col(a), col(b), col(pred.scoreCol))
 
   /** Core over a SORTED-distinct-hash-array expression (array<long>,
     * ascending — what NativeHash.shingleHashes/charShingleHashes emit).
@@ -189,63 +166,29 @@ object JaccardDedup {
     * shuffle fixed-width longs; a collision (≈2⁻⁶⁴ per pair) could only
     * merge two shingle identities — far below the result's 6-decimal
     * resolution.
+    *
+    * One persisted doc table carries each sorted hash array once; it
+    * feeds the exploded index and both verify sides, so the shingling
+    * pass runs once per document. The prefix index is persisted too,
+    * since the self-join evaluates it once per side: a lazy persist, not
+    * an eager cut, which measured 1.8× slower here (2.1 s → 3.9 s) by
+    * serializing the probe-side build behind the checkpoint write.
     */
   def nearDupPairsByHashes(
       df: DataFrame,
       idCol: String,
       hashArrExpr: Column,
-      threshold: Double,
-      maxDocFreq: Option[Long] = None): DataFrame = {
+      threshold: Double): DataFrame = {
     require(threshold > 0, "threshold must be > 0 (candidate generation relies on a shared shingle)")
-    // one persisted doc table carries the sorted hash array; it feeds
-    // the exploded index (df count + prefix join) AND both verify sides
-    // — the shingling pass runs once per document
+    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val pred = ClusterDedup.Jaccard(threshold)
     val docs = Par.widen(df)
       .select(col(idCol), hashArrExpr.as("__sh"))
       .select(col(idCol), col("__sh"), size(col("__sh")).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val full = docs.select(col(idCol), explode(col("__sh")).as("s"), col("n"))
-    val index = maxDocFreq.fold(full) { cap =>
-      // OPTIONAL document-frequency cap (can lose pairs — off by
-      // default; prefix filtering below already bounds the fan-out
-      // losslessly): broadcast anti-join of the tiny hot tail
-      val hot = full.groupBy("s").count().filter(col("count") > cap).select("s")
-      full.join(broadcast(hot), Seq("s"), "left_anti")
-    }
-    // capped mode verifies over the capped shingle set (c excludes
-    // capped shingles, n keeps the original size — J underestimates,
-    // matching the cap's documented lossy contract); the default path
-    // reuses the persisted doc arrays directly
-    val verifyDocs = maxDocFreq.fold(docs) { _ =>
-      index.groupBy(col(idCol))
-        .agg(sort_array(collect_list(col("s"))).as("__sh"), first(col("n")).as("n"))
-    }
-    // verification: exact intersection count per candidate pair over the
-    // per-doc sorted hash arrays — a codegen'd merge walk per row. The
-    // re-join-through-the-exploded-index alternative expands to
-    // Σ_cand n_a rows and then hash-aggregates them (at sf0.1's
-    // adversarial tiny-vocab corpus: 6.2M candidates → 375M rows into a
-    // 6.2M-group aggregate — that WAS 90% of the query's runtime); the
-    // array form shuffles each doc's ~n×8-byte hash array per pair side
-    // — comparable bytes — with no giant aggregate. No broadcast hint:
-    // AQE broadcasts the doc-array table while it fits (a few MB here)
-    // and falls back to shuffled joins at corpus scale.
-    // early-exit walk: J ≥ t ⟺ c ≥ t·(n_a+n_b)/(1+t) = α (monotone in
-    // c), so a walk that bails once c can no longer reach α rejects
-    // exactly the sub-threshold pairs — and on the false-heavy
-    // candidate streams low thresholds produce, most walks exit within
-    // a few steps (measured 2.9× on the 10× soak corpus). α carries
-    // the -Eps guard, so boundary-exact pairs are verified, not bailed.
-    val alpha = ClusterDedup.Jaccard(threshold).alpha(col("n_a"), col("n_b")).cast("int")
-    prefixCandidates(index, idCol, threshold)
-      .join(verifyDocs.select(col(idCol).as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
-      .join(verifyDocs.select(col(idCol).as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("c", graft.functions.NativeHash.sortedIntersectAtLeast(
-        col("__sha"), col("__shb"), alpha))
-      .filter(col("c") >= 0)
-      .withColumn("jaccard", col("c") / (col("n_a") + col("n_b") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .persist(MEMORY_AND_DISK)
+    val prefix = prefixIndex(docs.select(col(idCol), explode(col("__sh")).as("s"), col("n")),
+      idCol, pred).persist(MEMORY_AND_DISK)
+    verifiedPairs(prefixPairs(prefix, idCol, pred, "id_a", "id_b"), docs, idCol, pred, "id_a", "id_b")
   }
 
   /** Exact J ≥ `threshold` pairs with AT LEAST ONE endpoint in `delta`,
@@ -254,35 +197,31 @@ object JaccardDedup {
     * holds labels (or pairs) for `base` only needs the edges TOUCHING
     * the new batch: base-internal pairs are a previous run's output.
     *
-    * Candidate generation is the PPJoin prefix scheme under ONE global
-    * rarity order computed over the UNION (the losslessness proof
-    * needs some fixed common order, and a pair at J ≥ t shares a
-    * shingle inside the first n − ⌈t·n⌉ + 1 elements of EACH side
-    * under any such order). Both orientations of a
-    * delta-base pair are covered by joining the DELTA prefix index
-    * against the full one; delta-delta pairs arrive twice and collapse
-    * in the canonical least/greatest distinct. Size and positional
-    * filters run inside the join condition, exactly as the self-join.
+    * The pipeline is the one [[ClusterDedup.componentsIncremental]]'s
+    * direct arm runs: the union doc table and its prefix index under
+    * one rarity order counted over the union ([[unionIndex]]), the
+    * batch's prefix rows probing the whole index in [[prefixPairs]]
+    * (size and positional filters inside the join; delta-delta pairs
+    * arrive twice and collapse in its distinct), then [[verifiedPairs]]
+    * ([[deltaPairs]]). The losslessness proof needs only some fixed
+    * common order, so every pair at J ≥ t with a delta endpoint shares a
+    * prefix element with that endpoint's prefix.
     *
     * Scale shape: the self-join's Σ_s dfP(s)² becomes
-    * Σ_s dfPΔ(s)·dfP(s) — linear in the batch for bounded prefix
-    * frequencies — and the full-side prefix index is first SEMI-JOINED
-    * to the batch's distinct prefix shingles, so the corpus-sized side
-    * ships only rows whose shingle the batch actually mentions. The
-    * union df count and the prefix window remain one linear pass over
-    * the corpus (the price of NOT persisting any index between
-    * increments: the only state this API needs from the previous run
-    * is its labels).
+    * Σ_s dfPΔ(s)·dfP(s), linear in the batch for bounded prefix
+    * frequencies; the union df count and the prefix window remain one
+    * linear pass over the corpus (the price of keeping no index between
+    * increments: the only state this API needs is the previous run's
+    * labels or pairs). The listing is materialized, then the doc and
+    * prefix persists are released.
     *
     * REPLICATION CAVEAT (measured): doc-level frequencies multiply by
     * g under g near-identical copies on BOTH sides of the candidate
-    * join, so on replica-heavy corpora this LISTING inherits the g²
+    * join, so on replica-heavy corpora this listing inherits the g²
     * pathology — the 10× soak measured 409 s here where a full
-    * CLUSTERED recompute takes 116 s. When only labels (not the pair
-    * listing) are needed, use
-    * [[ClusterDedup.componentsIncremental]], which runs the same
-    * incremental idea at cluster granularity and stays at
-    * distinct-content cost.
+    * CLUSTERED recompute takes 116 s. When only labels are needed, use
+    * [[ClusterDedup.componentsIncremental]], whose clustered arm stays
+    * at distinct-content cost.
     */
   def nearDupPairsIncremental(
       base: DataFrame,
@@ -291,77 +230,49 @@ object JaccardDedup {
       textCol: String,
       nGram: Int = 2,
       threshold: Double = 0.3): DataFrame = {
-    // SEALED: materialize the (output-sized) listing, then release the
-    // doc/prefix persists — the lazy form would leave those
-    // MEMORY_AND_DISK blocks pinned for the session lifetime on every
-    // call (the semanticDedup/components per-call block-leak class).
-    // Callers that need the lazy frame use the Plan variant and own the
-    // release closure.
-    val (pairs, release) =
-      nearDupPairsIncrementalPlan(base, delta, idCol, textCol, nGram, threshold)
-    val out = Par.cut(pairs)
-    release()
+    require(threshold > 0, "threshold must be > 0")
+    val pred = ClusterDedup.Jaccard(threshold)
+    val (docs, prefix) = unionIndex(base, delta, idCol, textCol, nGram, pred)
+    val out = Par.cut(deltaPairs(docs, prefix, pred))
+    docs.unpersist(false)
+    prefix.unpersist(false)
     out
   }
 
-  /** [[nearDupPairsIncremental]] split before its seal: the LAZY pair
-    * frame plus the closure releasing the doc/prefix persists once the
-    * consumer has fully materialized downstream. Consumed by the sealed
-    * public wrapper; kept private[graft] for probes that want to plan
-    * or time the unsealed stream (ClusterDedup.componentsIncremental
-    * does NOT consume this — its final design runs its own
-    * cluster-granularity path; this doc-level listing was its measured
-    * A/B arm, 409 s at the 10× soak — see the replication caveat).
+  /** The incremental calls' union corpus, shingled once: `docs`
+    * (id, `__sh`, n, `__d`) over base ∪ delta, `__d` marking the batch,
+    * and its [[prefixIndex]] (carrying `__d`) under one rarity order
+    * counted over the union. Both are persisted; the caller releases
+    * them. No derived-column filter runs before the docs persist: it
+    * would be pushed below [[Par.widen]]'s exchange.
     */
-  private[graft] def nearDupPairsIncrementalPlan(
-      base: DataFrame,
-      delta: DataFrame,
-      idCol: String,
-      textCol: String,
-      nGram: Int,
-      threshold: Double): (DataFrame, () => Unit) = {
-    require(threshold > 0, "threshold must be > 0")
+  private[graft] def unionIndex(base: DataFrame, delta: DataFrame, idCol: String,
+      textCol: String, nGram: Int, pred: ClusterDedup.PairPredicate): (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // one tagged union feeds shingling ONCE per doc (df count, prefix
-    // window, verify); no derived-column filter before the persist —
-    // it would be pushed below Par.widen's exchange (the documented
-    // pushdown trap)
-    val docs = Par.widen(
-        base.select(col(idCol).as("id"), col(textCol).as("__t"), lit(false).as("__d"))
-          .unionByName(
-            delta.select(col(idCol).as("id"), col(textCol).as("__t"), lit(true).as("__d"))))
+    def side(d: DataFrame, isDelta: Boolean) =
+      d.select(col(idCol).as("id"), col(textCol).as("__t"), lit(isDelta).as("__d"))
+    val docs = Par.widen(side(base, isDelta = false).unionByName(side(delta, isDelta = true)))
       .select(col("id"),
         graft.functions.NativeHash.shingleHashes(Text.tokens(col("__t")), nGram).as("__sh"),
         col("__d"))
-      .select(col("id"), col("__sh"), size(col("__sh")).as("n"), col("__d"))
+      .select(col("id"), col("__sh"), coalesce(size(col("__sh")), lit(0)).as("n"), col("__d"))
       .persist(MEMORY_AND_DISK)
-    // shared prefix builder (combiner dfreq + AQE join-back — see
-    // prefixIndex): df counted over the whole union, prefix positions
-    // per doc, __d carried through. Lazy persist (the prefixCandidates
-    // rationale: the concurrent materialization race rides idle cores
-    // and measured faster than an eager cut at gate scale)
-    val pred = ClusterDedup.Jaccard(threshold)
     val prefix = prefixIndex(
-        docs.select(col("id"), explode(col("__sh")).as("s"), col("n"), col("__d")),
+        docs.where(col("n") > 0).select(col("id"), explode(col("__sh")).as("s"), col("n"), col("__d")),
         "id", pred, keep = Seq("__d"))
       .persist(MEMORY_AND_DISK)
-    val dp = prefix.filter(col("__d"))
-    // delta-active shingles only: the corpus-sized side of the candidate
-    // join never ships a row the batch cannot match
-    val fp = prefix.join(dp.select("s").distinct(), Seq("s"), "left_semi")
-    val cand = prefixPairs(fp, "id", pred, "id_a", "id_b", probe = Some(dp))
-    val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
-    val pairs = cand
-      .join(docs.select(col("id").as("id_a"), col("__sh").as("__sha"), col("n").as("n_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("__sh").as("__shb"), col("n").as("n_b")), Seq("id_b"))
-      .withColumn("c", graft.functions.NativeHash.sortedIntersectAtLeast(
-        col("__sha"), col("__shb"), alphaV))
-      .filter(col("c") >= 0)
-      .withColumn("jaccard", col("c") / (col("n_a") + col("n_b") - col("c")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (pairs, () => { docs.unpersist(false); prefix.unpersist(false); () })
+    (docs, prefix)
   }
+
+  /** Exact (id_a < id_b, score) pairs of a [[unionIndex]] with at least
+    * one endpoint in the batch: its delta prefix rows probe the whole
+    * index, then [[verifiedPairs]].
+    */
+  private[graft] def deltaPairs(docs: DataFrame, prefix: DataFrame,
+      pred: ClusterDedup.PairPredicate): DataFrame =
+    verifiedPairs(
+      prefixPairs(prefix, "id", pred, "id_a", "id_b", probe = Some(prefix.where(col("__d")))),
+      docs.where(col("n") > 0), "id", pred, "id_a", "id_b")
 
   /** Set-overlap self-join: every pair sharing ≥ `minOverlap` distinct
     * elements of a sorted-distinct set column (e.g. token-hash sets) —
@@ -378,11 +289,12 @@ object JaccardDedup {
     * qualify and are dropped before the explode.
     *
     * Scale note: prefixes here follow plain hash order, so a viral
-    * element can sit inside prefixes and cost df² candidate rows; at
-    * corpus scale switch the prefix order to ascending document
-    * frequency exactly as `nearDupPairs`' PPJoin path does (rarity
-    * order keeps viral elements out of every prefix — the lossless
-    * proof only needs SOME fixed global order).
+    * element can sit inside prefixes and cost df² candidate rows. Run
+    * through [[nearDupPairs]]' rarity-ordered pipeline under
+    * `ClusterDedup.Overlap(k)` instead, the gate row `overlap_join`
+    * (k = 30, sf0.1, 4 cores) read 0.43–0.54 s against 0.32–0.33 s
+    * here: its document-frequency count and per-doc window cost more
+    * than they prune when few sets reach k (286 of 5,000 documents).
     */
   def overlapJoin(
       df: DataFrame, idCol: String, setCol: Column, minOverlap: Int): DataFrame = {

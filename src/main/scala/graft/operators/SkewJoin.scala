@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Salted equi-join for pathological key skew.
@@ -52,6 +52,14 @@ object SkewJoin {
     math.max(1L, math.min(cap.toLong,
       (estMaxKeyRows + TargetRowsPerSalt - 1) / TargetRowsPerSalt)).toInt
 
+  /** Salted equi-join of `big` and `small` on `keys`, its fan-out
+    * capped at `salts` and picked from the data (see [[effectiveSalts]]).
+    *
+    * Contract: unless `salts` is 1, one eager Spark job, labelled
+    * `skewjoin: key probe`, samples `big`'s keys before this returns;
+    * the join itself stays lazy. At fan-out 1 the result is the plain
+    * `big.join(small, keys, joinType)`, otherwise [[saltedPlan]].
+    */
   def saltedEquiJoin(
       big: DataFrame,
       small: DataFrame,
@@ -72,13 +80,20 @@ object SkewJoin {
       log.info(s"saltedEquiJoin probe: estMaxKeyRows=$estMax -> fanOut=$e (cap $salts)")
       e
     }
-    if (eff == 1) big.join(small, keys, joinType)
-    else {
-      val saltedBig = big.withColumn("__salt",
-        pmod(xxhash64(struct(big.columns.map(col): _*)), lit(eff)).cast("int"))
-      val saltedSmall = small
-        .withColumn("__salt", explode(sequence(lit(0), lit(eff - 1))))
-      saltedBig.join(saltedSmall, keys :+ "__salt", joinType).drop("__salt")
-    }
+    if (eff == 1) big.join(small, keys, joinType) else saltedPlan(big, small, keys, eff, joinType)
   }
+
+  /** A big-side row's salt in [0, fanOut), hashed from the whole row. */
+  private[graft] def saltOf(big: DataFrame, fanOut: Int): Column =
+    pmod(xxhash64(struct(big.columns.map(col): _*)), lit(fanOut)).cast("int")
+
+  /** The salted plan at a given `fanOut` > 1: big rows keyed by
+    * (keys, [[saltOf]]), the small side replicated once per salt.
+    */
+  private[graft] def saltedPlan(big: DataFrame, small: DataFrame, keys: Seq[String],
+      fanOut: Int, joinType: String): DataFrame =
+    big.withColumn("__salt", saltOf(big, fanOut))
+      .join(small.withColumn("__salt", explode(sequence(lit(0), lit(fanOut - 1)))),
+        keys :+ "__salt", joinType)
+      .drop("__salt")
 }

@@ -41,6 +41,14 @@ class BenchSpec extends AnyFunSuite {
     // boundary: exactly at the trigger threshold counts as back under
     assert(Bench.adjudicatedValue(original = 16.0, rerunMedian = 15.0, ruler = 5.0)
       .contains(15.0))
+    // the trigger's floor half: a rerun under 1.0 s is back under the
+    // trigger even above 3x a tiny ruler, so it is adopted
+    assert(Bench.adjudicatedValue(original = 4.0, rerunMedian = 0.8, ruler = 0.1)
+      .contains(0.8))
+    assert(Bench.adjudicationSuspects(Seq("q" -> 0.8), Map("q" -> 0.1)).isEmpty)
+    // above both halves it is still suspect: keep the original
+    assert(Bench.adjudicatedValue(original = 4.0, rerunMedian = 1.2, ruler = 0.1).isEmpty)
+    assert(Bench.adjudicationSuspects(Seq("q" -> 1.2), Map("q" -> 0.1)) == Seq("q"))
   }
 
   test("committedRuler reads real committed records and takes per-query mins") {

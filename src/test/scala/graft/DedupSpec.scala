@@ -291,19 +291,6 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
-  test("generic string-shingle hatch agrees with the native hashed path") {
-    // nearDupPairsBy (arbitrary string-shingle expression, interpreted
-    // hash+sort) must produce identical pairs and jaccard values to the
-    // native shingle_hashes pipeline on the same shingling
-    import graft.functions.Text
-    val viaHatch = JaccardDedup.nearDupPairsBy(fixture, "doc_id",
-        Text.shingles(Text.tokens(col("text")), 2), threshold = 0.3, maxDocFreq = None)
-      .as[(Long, Long, Double)].collect().toSet
-    val viaNative = JaccardDedup.nearDupPairs(fixture, "doc_id", "text", nGram = 2, threshold = 0.3)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaHatch == viaNative && viaHatch.nonEmpty)
-  }
-
   test("jaccard candidate generation is lossless at low thresholds") {
     // docs sharing exactly one shingle: candidate must still be generated
     val df = Seq(
@@ -372,7 +359,9 @@ class DedupSpec extends AnyFunSuite {
       .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("sh"))
       .select(col("doc_id"), explode(col("sh")).as("s0"), size(col("sh")).as("n"))
       .select(col("doc_id"), xxhash64(col("s0")).as("s"), col("n"))
-    assert(JaccardDedup.prefixCandidates(index, "doc_id", 0.5).count() == 0)
+    val pred = graft.operators.ClusterDedup.Jaccard(0.5)
+    assert(JaccardDedup.prefixPairs(JaccardDedup.prefixIndex(index, "doc_id", pred),
+      "doc_id", pred, "id_a", "id_b").count() == 0)
     // end-to-end through the public API: no qualifying pairs either
     assert(JaccardDedup.nearDupPairs(docs, "doc_id", "text", nGram = 1, threshold = 0.5).count() == 0)
     // and losslessness at a threshold the viral-only overlap DOES meet:

@@ -218,40 +218,6 @@ object GraftProperties extends Properties("graft") {
     }
   }
 
-  /** The clustered twins against their direct reference, as multisets
-    * of exact rows, on both routes: the default call (adaptive — at
-    * this corpus size always the direct route) and `adaptive = false`
-    * (the clustered core).
-    */
-  private def bothRoutesMatch[A](want: Seq[A], got: Boolean => Seq[A]): Boolean =
-    multiset(got(true)) == multiset(want) && multiset(got(false)) == multiset(want)
-
-  property("ClusterDedup.pairsClustered equals nearDupPairs on random corpora") =
-    forAll(corpusGen, Gen.oneOf(0.3, 0.5, 0.8)) { (docs, t) =>
-      import graft.operators.{ClusterDedup, JaccardDedup}
-      val df = docs.toDF("doc_id", "text")
-      def rows(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("id_a"), col("id_b"), col("jaccard"))
-          .as[(Long, Long, Double)].collect().toSeq
-      bothRoutesMatch(rows(JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t)),
-        adaptive => rows(ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t,
-          adaptive = adaptive)))
-    }
-
-  property("OverlapJoin.pairsClustered equals the direct overlapJoin on random corpora") =
-    forAll(corpusGen, Gen.oneOf(2, 3)) { (docs, k) =>
-      import graft.functions.{NativeHash, Text}
-      import graft.operators.{JaccardDedup, OverlapJoin}
-      val df = docs.toDF("doc_id", "text")
-      val sets = NativeHash.shingleHashes(Text.tokens(col("text")), 1)
-      def rows(d: org.apache.spark.sql.DataFrame) =
-        d.select(col("id_a"), col("id_b"), col("overlap"))
-          .as[(Long, Long, Long)].collect().toSeq
-      bothRoutesMatch(rows(JaccardDedup.overlapJoin(df, "doc_id", sets, minOverlap = k)),
-        adaptive => rows(OverlapJoin.pairsClustered(df, "doc_id", sets, minOverlap = k,
-          adaptive = adaptive)))
-    }
-
   /** Corpus rows plus rows reusing corpus ids with other texts: null,
     * empty, one word (shorter than the 2-gram) or a corpus text.
     */
@@ -369,10 +335,12 @@ object GraftProperties extends Properties("graft") {
     * default call (the adaptive route, direct at these sizes, on its
     * broadcast arm), `adaptive = false` (the clustered core), and the
     * default call with broadcasts off (the direct route's shuffled arm).
+    * The direct twins `JaccardDedup.nearDupPairs` and `overlapJoin`
+    * (no route) are checked in both sessions.
     */
   private def clusteredFamilyMatches(docs: List[(Long, String)], t: Double, k: Int): Boolean = {
     import graft.functions.{NativeHash, Text}
-    import graft.operators.{ClusterDedup, OverlapJoin}
+    import graft.operators.{ClusterDedup, JaccardDedup, OverlapJoin}
     val pairs = truthPairs(docs, grams(_, 2), jaccardScore(t))
     val labels = truthLabels(docs.map(_._1), pairs.map(p => (p._1, p._2)))
     val overlaps = truthPairs(docs, grams(_, 1),
@@ -387,8 +355,15 @@ object GraftProperties extends Properties("graft") {
       val gotOverlaps = OverlapJoin.pairsClustered(df, "doc_id", sets, minOverlap = k,
           adaptive = adaptive)
         .select(col("id_a"), col("id_b"), col("overlap")).as[(Long, Long, Long)].collect().toSeq
+      val directOk = !adaptive || {
+        val direct = JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t)
+          .as[(Long, Long, Double)].collect().toSeq
+        val directOverlaps = JaccardDedup.overlapJoin(df, "doc_id", sets, minOverlap = k)
+          .as[(Long, Long, Long)].collect().toSeq
+        multiset(direct) == multiset(pairs) && multiset(directOverlaps) == multiset(overlaps)
+      }
       multiset(gotLabels) == multiset(labels) && multiset(gotPairs) == multiset(pairs) &&
-        multiset(gotOverlaps) == multiset(overlaps)
+        multiset(gotOverlaps) == multiset(overlaps) && directOk
     }
   }
 

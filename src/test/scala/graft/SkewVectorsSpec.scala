@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,25 +17,28 @@ class SkewVectorsSpec extends AnyFunSuite {
     (1 to 100).map(i => (i.toLong + 1, s"tail$i"))).toDF("k", "v")
   private lazy val small = Seq((1L, "dim1"), (2L, "dim2"), (50L, "dim50")).toDF("k", "d")
 
+  private def multiset(df: DataFrame): Map[Row, Int] =
+    df.select("k", "v", "d").collect().toSeq.groupBy(identity).view.mapValues(_.size).toMap
+
+  // the fixture's hot key is far below SkewJoin.TargetRowsPerSalt, so
+  // saltedEquiJoin itself plans the plain join; the salted plan is
+  // checked at a forced fan-out of 8
   test("salted inner join is multiset-identical to the plain join") {
-    val plain = big.join(small, Seq("k")).select("k", "v", "d")
-    val salted = SkewJoin.saltedEquiJoin(big, small, Seq("k"), salts = 8)
-      .select("k", "v", "d")
-    assert(salted.count() == plain.count())
-    assert(salted.collect().toSet == plain.collect().toSet)
+    val plain = multiset(big.join(small, Seq("k")))
+    assert(multiset(SkewJoin.saltedPlan(big, small, Seq("k"), 8, "inner")) == plain)
+    assert(multiset(SkewJoin.saltedEquiJoin(big, small, Seq("k"), salts = 8)) == plain)
   }
 
   test("salted left join keeps unmatched big rows exactly once") {
-    val plain = big.join(small, Seq("k"), "left").select("k", "v", "d")
-    val salted = SkewJoin.saltedEquiJoin(big, small, Seq("k"), salts = 8, joinType = "left")
-      .select("k", "v", "d")
-    assert(salted.count() == plain.count())
-    assert(salted.collect().toSet == plain.collect().toSet)
+    val plain = multiset(big.join(small, Seq("k"), "left"))
+    assert(plain.exists { case (r, n) => r.isNullAt(2) && n == 1 })
+    assert(multiset(SkewJoin.saltedPlan(big, small, Seq("k"), 8, "left")) == plain)
+    assert(multiset(SkewJoin.saltedEquiJoin(big, small, Seq("k"), salts = 8,
+      joinType = "left")) == plain)
   }
 
   test("salt actually spreads the hot key across buckets") {
-    val salts = big.withColumn("__salt",
-        pmod(xxhash64(struct(big.columns.map(col): _*)), lit(8)).cast("int"))
+    val salts = big.withColumn("__salt", SkewJoin.saltOf(big, 8))
       .filter(col("k") === 1L).select("__salt").distinct().count()
     assert(salts > 4, s"hot key landed in only $salts of 8 salt buckets")
   }
