@@ -428,16 +428,54 @@ object GraftProperties extends Properties("graft") {
       got == want
     }
 
+  /** Hive-text values over every byte the escape table rewrites, a
+    * backslash (passed through), and 2-, 3- and 4-byte UTF-8 characters,
+    * so the kernel's escape and no-escape branches both run; ~10% NULL.
+    */
+  private val hiveValue: Gen[Option[String]] = Gen.option(Gen.choose(0, 40).flatMap(n =>
+    Gen.listOfN(n, Gen.oneOf("a", "\u0000", "\u0001", "\n", "\r", "\\", "é", "中", "😀"))
+      .map(_.mkString)))
+
+  /** The line the reference writes, by plain `String.replace`. */
+  private def hiveLine(fields: Seq[Option[String]]): String =
+    fields.map(_.fold("\\N")(_.replace("\u0000", "\\0").replace("\u0001", "\\1")
+      .replace("\n", "\\n").replace("\r", "\\r"))).mkString("\u0001")
+
+  /** The session that evaluates every expression interpreted: no
+    * whole-stage codegen and no generated projections, so the escape
+    * kernel runs its `nullSafeEval`.
+    */
+  private lazy val noCodegen = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.codegen.wholeStage", "false")
+    s.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    s
+  }
+
+  /** encodeRow over an RDD-backed frame (a local relation would be
+    * folded on the driver, interpreted, whatever the session says)
+    * equals the truth line for line, never yields NULL, and has exactly
+    * one delimiter fewer than fields.
+    */
+  private def hiveTextMatches(session: org.apache.spark.sql.SparkSession,
+      rows: List[(Long, Option[String], Option[String])]): Boolean = {
+    import graft.functions.HiveText
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val df = session.createDataFrame(session.sparkContext.parallelize(rows, 2)).toDF("k", "v", "w")
+    val q = df.select(HiveText.encodeRow(df.schema).as("l"))
+    val lines = q.collect().map(_.getString(0)).toSeq
+    val codegen = q.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+    codegen == (session eq spark) &&
+    lines.length == rows.length &&
+    lines.forall(l => l != null && l.count(_ == '\u0001') == 2) &&
+    lines.sorted == rows.map { case (k, v, w) => hiveLine(Seq(Some(k.toString), v, w)) }.sorted
+  }
+
+  private val hiveRows = Gen.listOfN(10, Gen.zip(Gen.choose(0L, 99L), hiveValue, hiveValue))
+
   property("hive-text encodeRow never yields NULL and keeps the field count") =
-    forAll(Gen.listOfN(10, Gen.zip(Gen.choose(0L, 99L), Gen.option(Gen.alphaNumStr.map(_.take(8)))))) {
-      rows =>
-        rows.isEmpty || {
-          import graft.functions.HiveText
-          val df = rows.toDF("k", "v")
-          val lines = df.select(HiveText.encodeRow(df.schema).as("l")).as[String].collect()
-          lines.length == rows.length &&
-          lines.forall(_ != null) &&
-          lines.forall(_.count(_ == '') == 1) // 2 fields -> exactly 1 delimiter
-        }
-    }
+    forAll(hiveRows)(hiveTextMatches(spark, _))
+
+  property("hive-text encodeRow equals the String.replace truth, interpreted") =
+    forAll(hiveRows)(hiveTextMatches(noCodegen, _))
 }
