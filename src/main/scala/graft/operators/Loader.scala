@@ -12,6 +12,11 @@ import graft.sources.Source
   * loads are not transactional; in Spark the DataFrame IS the staging
   * area and `saveAsTable(Overwrite)` is the atomic publish, so R4's
   * `z_etl_*_staging` protocol collapses into the plan.
+  *
+  * A merge into an existing table with a dedup on the merge keys runs
+  * R1 and R2 as one window (`Merge.upsertLatest`); every other merge
+  * dedups first and then broadcasts the staging into `Merge.upsert`
+  * (see `reconciled`).
   */
 object Loader {
 
@@ -83,11 +88,11 @@ object Loader {
     validate(cfg)
     cfg.preSql.foreach(spark.sql(_))
 
-    val deduped = cfg.dedup.fold(staging0)(d => Dedup.byRank(staging0, d.uniqKeys, d.orderBy))
-    val partitioned = cfg.partition.foldLeft(deduped) { case (df, (k, v)) => df.withColumn(k, lit(v)) }
-    val staged =
-      if (cfg.clusterBy.isEmpty) partitioned
-      else graft.sinks.Sink.rangeCluster(partitioned, cfg.clusterBy, cfg.clusterParts)
+    // the staging as written when no existing target is merged: deduped,
+    // static partition columns added, clustered
+    lazy val staged = cluster(cfg.partition.foldLeft(dedup(staging0, cfg)) {
+      case (df, (k, v)) => df.withColumn(k, lit(v))
+    }, cfg)
 
     cfg.mode match {
       case Overwrite =>
@@ -133,14 +138,7 @@ object Loader {
           // reconcile→target, drop bak. A failure at ANY point leaves a
           // recoverable table — the target never ceases to exist without
           // a fully-built replacement already in the catalog.
-          // the reconcile write rewrites the WHOLE table — exactly when
-          // re-clustering is free; without this, merge mode would drop
-          // the clusterBy contract (upsert's anti-join union does not
-          // preserve the staged clustering)
-          val merged0 = Merge.upsert(spark.table(cfg.target), staged, keys)
-          val merged =
-            if (cfg.clusterBy.isEmpty) merged0
-            else graft.sinks.Sink.rangeCluster(merged0, cfg.clusterBy, cfg.clusterParts)
+          val merged = reconciled(spark, staging0, keys, cfg)
           val reconcile = s"${cfg.target}__graft_reconcile"
           val bak = s"${cfg.target}__graft_bak"
           // R10 quoting on every catalog statement
@@ -201,6 +199,33 @@ object Loader {
       s"RENAME TABLE `$table` TO `$old`, `$stg` TO `$table`",
       s"DROP TABLE `$old`")
   }
+
+  /** The rows `MergeOn` writes into the reconcile table when the target
+    * exists. A `DedupSpec` on the merge keys (as a set) takes
+    * `Merge.upsertLatest`: dedup and merge share one window over one
+    * shuffle of target ∪ raw staging, so the staging is scanned and
+    * decoded once. Any other case (no dedup, or dedup on other keys)
+    * takes `Dedup.byRank` then `Merge.upsert`, whose broadcast anti-join
+    * suits a small key-unique delta. Only this output is range-clustered
+    * (`clusterBy`): the reconcile write rewrites the whole table, and
+    * neither plan preserves a clustering of its staging input.
+    */
+  private[graft] def reconciled(spark: SparkSession, staging0: DataFrame, keys: Seq[String],
+      cfg: LoadConfig): DataFrame = {
+    val target = spark.table(cfg.target)
+    cluster(cfg.dedup match {
+      case Some(d) if d.uniqKeys.toSet == keys.toSet =>
+        Merge.upsertLatest(target, staging0, keys, d.orderBy)
+      case _ => Merge.upsert(target, dedup(staging0, cfg), keys)
+    }, cfg)
+  }
+
+  private def dedup(staging0: DataFrame, cfg: LoadConfig): DataFrame =
+    cfg.dedup.fold(staging0)(d => Dedup.byRank(staging0, d.uniqKeys, d.orderBy))
+
+  private def cluster(df: DataFrame, cfg: LoadConfig): DataFrame =
+    if (cfg.clusterBy.isEmpty) df
+    else graft.sinks.Sink.rangeCluster(df, cfg.clusterBy, cfg.clusterParts)
 
   private def writePartitioned(df: DataFrame, cfg: LoadConfig) = {
     val w = df.write

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** R2 — merge/upsert: *staging wins on primary key*.
@@ -13,10 +14,22 @@ import org.apache.spark.sql.functions._
   * clean NULL-key semantics: a NULL-keyed target row never "matches"
   * staging and is retained (SURVEY.md §7.4; pinned in MergeSpec).
   *
-  * Scale notes: Catalyst picks broadcast-hash when staging is small
-  * (the common incremental-load case — staging is the delta), else
-  * shuffled hash / sort-merge; AQE can switch at runtime. No custom
-  * join code needed or wanted.
+  * Two plans, chosen by what the staging needs:
+  *   - [[upsert]] takes a key-unique staging as it is. Catalyst
+  *     broadcasts the staging under GraftSession's 64 MB
+  *     `autoBroadcastJoinThreshold` (the incremental-load case: staging
+  *     is the delta), so the target is read once and never shuffled;
+  *     the staging subtree is planned twice, as build side and as union
+  *     side, which is cheap for a small delta. `Loader.load` takes it
+  *     when there is no dedup or the dedup keys differ from the merge
+  *     keys.
+  *   - [[upsertLatest]] takes a raw staging that still has to be
+  *     rank-deduped on the merge keys (R1 then R2, the reference's load
+  *     with `uniq_keys` equal to the merge keys). Dedup and merge both
+  *     partition on the keys, so they fuse into one window over one
+  *     shuffle of target ∪ staging: the staging is scanned, decoded and
+  *     sorted once, where `Dedup.byRank` + `upsert` would do all of it
+  *     twice (exchange reuse never fires between the two copies).
   */
 object Merge {
 
@@ -25,13 +38,37 @@ object Merge {
     target.join(staging, keys, "left_anti").unionByName(staging)
   }
 
-  /** Merge with an explicit broadcast hint on the staging (delta) side —
-    * for incremental loads where the delta is known-small relative to the
-    * target. The anti-join then needs NO shuffle of the (huge) target.
+  /** `upsert(target, Dedup.byRank(staging, keys, orderBy), keys)` as one
+    * operator: target rows (tag 0) and raw staging rows (tag 1) under
+    * one `Window` partitioned by the keys and ordered by (tag desc,
+    * `orderBy`…), which computes `row_number` and the partition's first
+    * tag. The best staging row per key is the partition's row 1; a
+    * target row survives when its partition's first row is a target row
+    * (no staging row for its key) or when any part of its key is NULL
+    * (a NULL key never matches, as in `upsert`). Staging rows with NULL
+    * key parts still dedup among themselves, as `byRank` does.
+    *
+    * The staging is the union's first side, so `orderBy` may name its
+    * columns as `col(...)` or as `staging(...)`. The output has
+    * `upsert`'s columns: the keys, then the target's other columns.
+    *
+    * The target is shuffled with the staging. `upsert`'s broadcast plan
+    * never shuffles the target, so for a target far larger than its
+    * delta the composed plan may be cheaper; that case is unmeasured.
     */
-  def upsertSmallDelta(target: DataFrame, staging: DataFrame, keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "merge requires primary keys")
-    target.join(broadcast(staging), keys, "left_anti").unionByName(staging)
+  def upsertLatest(target: DataFrame, staging: DataFrame, keys: Seq[String],
+      orderBy: Seq[Column] = Nil): DataFrame = {
+    require(keys.nonEmpty, "merge requires primary keys (reference: hive_loader.py:66-72)")
+    val (tag, rn, lead) = ("__graft_tag", "__graft_rn", "__graft_lead")
+    val ord = if (orderBy.nonEmpty) orderBy else keys.map(col)
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(col(tag).desc +: ord: _*)
+    val keyNames = target.select(keys.map(col): _*).columns.toSeq
+    val out = keyNames ++ target.columns.filterNot(keyNames.contains)
+    val nullKey = keys.map(col(_).isNull).reduce(_ || _)
+    staging.withColumn(tag, lit(1)).unionByName(target.withColumn(tag, lit(0)))
+      .select(col("*"), row_number().over(w).as(rn), first(tag).over(w).as(lead))
+      .filter((col(tag) === 1 && col(rn) === 1) || (col(tag) === 0 && (col(lead) === 0 || nullKey)))
+      .select(out.map(c => col(c).as(c)): _*)
   }
 
   /** SCD Type-2 apply — dimension history with full audit trail. The

@@ -94,7 +94,8 @@ object StreamOps {
   /** Streaming upsert sink: merge each micro-batch into a parquet
     * "table" directory by key — the streaming face of the reference's
     * load/merge protocol (`hive_loader.py` merge mode), built on
-    * foreachBatch + Merge.upsert + the recoverable rename swap
+    * foreachBatch + Merge.upsertLatest (dedup and merge in one window,
+    * so each micro-batch is read once) + the recoverable rename swap
     * (Sink.swapInDir).
     *
     * `orderBy` picks the winner when a micro-batch carries several rows
@@ -123,11 +124,10 @@ object StreamOps {
         // otherwise skip the merge and install batch-only rows as the
         // whole table (permanent loss of every other key)
         graft.sinks.Sink.recoverSwap(fs, tablePath)
-        val dedupedBatch = graft.operators.Dedup.byRank(batch, keys, orderBy) // key-unique staging
         val merged =
           if (fs.exists(new org.apache.hadoop.fs.Path(tablePath)))
-            graft.operators.Merge.upsert(spark.read.parquet(tablePath), dedupedBatch, keys)
-          else dedupedBatch
+            graft.operators.Merge.upsertLatest(spark.read.parquet(tablePath), batch, keys, orderBy)
+          else graft.operators.Dedup.byRank(batch, keys, orderBy)
         val staging = tablePath + "__merging"
         merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(staging)
         graft.sinks.Sink.swapInDir(fs, staging, tablePath)

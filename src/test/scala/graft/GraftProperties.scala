@@ -478,4 +478,48 @@ object GraftProperties extends Properties("graft") {
 
   property("hive-text encodeRow equals the String.replace truth, interpreted") =
     forAll(hiveRows)(hiveTextMatches(noCodegen, _))
+
+  /** (id, k1, v, k2, ver) rows: composite keys with nullable parts over
+    * tiny domains (duplicate keys on both sides, NULL parts often), and
+    * a frame that is empty about one time in six.
+    */
+  private type MergeRow = (Long, Option[Int], String, Option[String], Int)
+  private def mergeRows(idBase: Long): Gen[List[MergeRow]] = Gen.frequency(
+    1 -> Gen.const(Nil),
+    5 -> Gen.choose(1, 12).flatMap(n => Gen.listOfN(n, Gen.zip(
+        Gen.option(Gen.choose(0, 2)), Gen.alphaStr.map(_.take(3)),
+        Gen.option(Gen.oneOf("a", "b")), Gen.choose(0, 3)))
+      .map(_.zipWithIndex.map { case ((k1, v, k2, ver), i) => (idBase + i, k1, v, k2, ver) })))
+
+  /** upsertLatest over RDD-backed frames (a local relation could be
+    * folded on the driver) equals, as a multiset and column for column,
+    * the plain-Scala truth: rank-dedup the staging per key (NULL parts
+    * group together, as a window partition does) by (ver desc, id), the
+    * id being unique, then keep the target rows whose key has a NULL
+    * part or no staging row, and append the deduped staging.
+    */
+  private def upsertLatestMatches(session: org.apache.spark.sql.SparkSession,
+      target: List[MergeRow], staging: List[MergeRow]): Boolean = {
+    def frame(rows: List[MergeRow]) = session.createDataFrame(session.sparkContext.parallelize(rows, 2))
+      .toDF("id", "k1", "v", "k2", "ver")
+    val keys = Seq("k1", "k2")
+    val q = Merge.upsertLatest(frame(target), frame(staging), keys, Seq(col("ver").desc, col("id")))
+    def key(r: MergeRow) = (r._2, r._4)
+    val best = staging.groupBy(key).values.map(_.minBy(r => (-r._5, r._1))).toList
+    val staged = staging.collect { case r if r._2.isDefined && r._4.isDefined => key(r) }.toSet
+    val kept = target.filter(r => r._2.isEmpty || r._4.isEmpty || !staged(key(r)))
+    // upsert's column order: the keys, then the target's other columns
+    val want = (kept ++ best).map(r => (r._2, r._4, r._1, r._3, r._5))
+    q.columns.toSeq == Seq("k1", "k2", "id", "v", "ver") &&
+    q.as[(Option[Int], Option[String], Long, String, Int)].collect().toList.sortBy(_.toString) ==
+      want.sortBy(_.toString)
+  }
+
+  private val mergeSides = Gen.zip(mergeRows(0L), mergeRows(1000L))
+
+  property("upsertLatest equals rank-dedup then anti-join + union, as a multiset") =
+    forAll(mergeSides) { case (t, s) => upsertLatestMatches(spark, t, s) }
+
+  property("upsertLatest equals rank-dedup then anti-join + union, interpreted") =
+    forAll(mergeSides) { case (t, s) => upsertLatestMatches(noCodegen, t, s) }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -69,6 +70,118 @@ class LoaderSpec extends AnyFunSuite {
     Loader.load(spark, staging, Loader.LoadConfig("lt_d", Loader.MergeOn(Seq("k")),
       dedup = Some(Loader.DedupSpec(Seq("k"), Seq(col("ord").desc)))))
     assert(spark.table("lt_d").as[(Int, Int, String)].collect().toSet == Set((1, 9, "new")))
+  }
+
+  test("MergeOn with a DedupSpec on other keys takes the composed path and matches the truth") {
+    drop("lt_dk")
+    Seq((1, "x", 0, "t1"), (2, "x", 0, "t2"), (3, "y", 0, "t3")).toDF("k", "sub", "ver", "v")
+      .write.saveAsTable("lt_dk")
+    // dedup on (k, sub) leaves two staging rows for k = 2: both land
+    val rows = Seq((2, "x", 1, "a"), (2, "x", 5, "b"), (2, "y", 1, "c"), (4, "x", 2, "d"))
+    val staging = rows.toDF("k", "sub", "ver", "v")
+    val cfg = Loader.LoadConfig("lt_dk", Loader.MergeOn(Seq("k")),
+      dedup = Some(Loader.DedupSpec(Seq("k", "sub"), Seq(col("ver").desc))))
+    val plan = Loader.reconciled(spark, staging, Seq("k"), cfg).queryExecution.optimizedPlan
+    assert(plan.exists {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+        j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti
+      case _ => false
+    }, s"expected the anti-join of Merge.upsert:\n$plan")
+    Loader.load(spark, staging, cfg)
+    assert(spark.table("lt_dk").as[(Int, String, Int, String)].collect().sortBy(_.toString).toSeq ==
+      Seq((1, "x", 0, "t1"), (2, "x", 5, "b"), (2, "y", 1, "c"), (3, "y", 0, "t3"), (4, "x", 2, "d"))
+        .sortBy(_.toString))
+    drop("lt_dk")
+  }
+
+  test("fused MergeOn: orderBy as col(...) or as a staging column resolves against the union") {
+    val rows = Seq((1, "a", 1, 7L, "s1-old"), (1, "a", 3, 8L, "s1"), (2, "b", 2, 9L, "s2"))
+    // dedup keys are the merge keys as a set, in another order
+    for ((name, order) <- Seq[(String, org.apache.spark.sql.DataFrame => Seq[Column])](
+        "col" -> (_ => Seq((col("ver") * -1).asc, col("id"))),
+        "bound" -> (df => Seq(df("ver").desc, df("id"))))) {
+      val t = s"lt_ord_$name"
+      drop(t)
+      Seq((1, "a", 0, 1L, "t1"), (3, "c", 0, 2L, "t3")).toDF("k1", "k2", "ver", "id", "v").write.saveAsTable(t)
+      val staging = rows.toDF("k1", "k2", "ver", "id", "v")
+      Loader.load(spark, staging, Loader.LoadConfig(t, Loader.MergeOn(Seq("k1", "k2")),
+        dedup = Some(Loader.DedupSpec(Seq("k2", "k1"), order(staging)))))
+      assert(spark.table(t).select("k1", "k2", "ver", "id", "v").as[(Int, String, Int, Long, String)]
+        .collect().toSet == Set((1, "a", 3, 8L, "s1"), (2, "b", 2, 9L, "s2"), (3, "c", 0, 2L, "t3")), name)
+      drop(t)
+    }
+  }
+
+  test("fused MergeOn + DedupSpec reads its staging once: one window, no broadcast, one range cluster") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    drop("lt_f", "lt_f__graft_bak", "lt_f__graft_reconcile")
+    (1 to 200).map(i => (i.toLong, 0, s"t$i")).toDF("k", "ver", "v").write.saveAsTable("lt_f")
+    // parquet staging, two rows per key over 100..249 (a local relation
+    // would not be a scan)
+    val dir = java.nio.file.Files.createTempDirectory("lt_f").toString
+    (1 to 300).map(i => (i % 150 + 100L, i, s"s$i")).toDF("k", "ver", "v").write.parquet(s"$dir/stg")
+    val staging = spark.read.parquet(s"$dir/stg")
+    val cfg = Loader.LoadConfig("lt_f", Loader.MergeOn(Seq("k")),
+      dedup = Some(Loader.DedupSpec(Seq("k"), Seq(col("ver").desc))), clusterBy = Seq("k"))
+
+    val plan = Loader.reconciled(spark, staging, Seq("k"), cfg).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p: SparkPlan => p
+    }
+    val stagingScans = plan.collect {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(s"$dir/stg")) => s
+    }
+    assert(stagingScans.size == 1, s"staging scans:\n$plan")
+    assert(plan.collect { case b: BroadcastExchangeExec => b }.isEmpty, s"broadcast:\n$plan")
+    assert(plan.collect { case w: WindowExec => w }.size == 1, s"windows:\n$plan")
+    val ranges = plan.collect {
+      case e: ShuffleExchangeExec
+        if e.outputPartitioning.isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => e
+    }
+    assert(ranges.size == 1, s"range exchanges:\n$plan")
+
+    // the load's jobs and the input rows their stages read, in this
+    // thread's job group only: another suite's jobs never count
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val inputRows = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        if (js.properties.getProperty("spark.jobGroup.id") == "fused-merge-load") {
+          jobs.add(s"job ${js.jobId}: ${js.stageInfos.size} stage(s)")
+          js.stageIds.foreach(stages.add(_))
+        }
+        ()
+      }
+      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        if (stages.contains(sc.stageInfo.stageId))
+          inputRows.addAndGet(sc.stageInfo.taskMetrics.inputMetrics.recordsRead)
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup("fused-merge-load", "fused merge load")
+    try {
+      Loader.load(spark, staging, cfg)
+      assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // the union's shuffle-map stage, the range sample, the range
+    // shuffle, the reconcile write, and ANALYZE's count (two jobs)
+    assert(jobs.size == 6, s"jobs: $jobs")
+    // target (200) and staging (300) once each, then ANALYZE's count of
+    // the merged table (249 keys)
+    assert(inputRows.get == 200 + 300 + 249, s"input rows ${inputRows.get}; jobs: $jobs")
+    val got = spark.table("lt_f").as[(Long, Int, String)].collect()
+    assert(got.length == 249)
+    assert(got.filter(_._1 >= 100).forall(r => r._3 == s"s${r._2}" && r._2 > 150))
+    drop("lt_f")
   }
 
   test("swap protocol: a stranded bak table from a mid-swap failure is recoverable and cleaned up") {

@@ -55,11 +55,19 @@ class MergeSpec extends AnyFunSuite {
     assert(once.collect().toSet == twice.collect().toSet)
   }
 
-  test("upsertSmallDelta broadcast variant produces identical results") {
-    val target = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    val staging = Seq((2, "B"), (9, "I")).toDF("k", "v")
-    assert(Merge.upsert(target, staging, Seq("k")).collect().toSet ==
-      Merge.upsertSmallDelta(target, staging, Seq("k")).collect().toSet)
+  test("upsertLatest: best staging row per key wins once; NULL-keyed target rows retained") {
+    val target = Seq[(Option[Int], Int, String)](
+      (Some(1), 0, "t1"), (Some(2), 0, "t2"), (Some(2), 0, "t2-dup"), (None, 0, "t-null"))
+      .toDF("k", "ver", "v")
+    val staging = Seq[(Option[Int], Int, String)](
+      (Some(2), 1, "s2-old"), (Some(2), 3, "s2"), (Some(3), 1, "s3"),
+      (None, 1, "s-null-old"), (None, 2, "s-null"))
+      .toDF("k", "ver", "v")
+    val q = Merge.upsertLatest(target, staging, Seq("k"), Seq(col("ver").desc))
+    assert(q.columns.toSeq == Seq("k", "ver", "v"))
+    assert(q.collect().toSeq.sortBy(_.toString) == Seq(
+      Row(1, 0, "t1"), Row(2, 3, "s2"), Row(3, 1, "s3"), Row(null, 0, "t-null"), Row(null, 2, "s-null"))
+      .sortBy(_.toString))
   }
 
   // --- SCD Type-2 ---
