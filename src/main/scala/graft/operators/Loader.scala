@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.command.CommandUtils
 import org.apache.spark.sql.functions._
 import graft.sources.Source
 
@@ -17,6 +18,14 @@ import graft.sources.Source
   * R1 and R2 as one window (`Merge.upsertLatest`); every other merge
   * dedups first and then broadcasts the staging into `Merge.upsert`
   * (see `reconciled`).
+  *
+  * R8 stats come from the write when it replaces the whole table
+  * (Overwrite, a `MergeOn` reconcile, first creation in any mode): an
+  * `Observation` counts the rows written and the size is summed from
+  * the files left, so the table is not read back to be counted (see
+  * `publishStats`). Append and OverwritePartitions into an existing
+  * table write only part of it and still run `ANALYZE TABLE … COMPUTE
+  * STATISTICS`, which counts the whole table.
   */
 object Loader {
 
@@ -88,17 +97,30 @@ object Loader {
     validate(cfg)
     cfg.preSql.foreach(spark.sql(_))
 
+    val exists = spark.catalog.tableExists(cfg.target)
+    // Append and OverwritePartitions into an existing table write only
+    // part of it; every other load rewrites the whole table, and counts
+    // its rows on the way for R8 (read only after the write returns)
+    val whole = !exists || (cfg.mode match {
+      case Append | OverwritePartitions(_) => false
+      case _ => true
+    })
+    val written = Observation()
+    def counted(df: DataFrame) =
+      if (whole && cfg.analyze) df.observe(written, count(lit(1)).as("rows")) else df
+    def write(body: => Unit): Unit = Par.labeled(spark, "load: write")(body)
+
     // the staging as written when no existing target is merged: deduped,
     // static partition columns added, clustered
-    lazy val staged = cluster(cfg.partition.foldLeft(dedup(staging0, cfg)) {
+    lazy val staged = counted(cluster(cfg.partition.foldLeft(dedup(staging0, cfg)) {
       case (df, (k, v)) => df.withColumn(k, lit(v))
-    }, cfg)
+    }, cfg))
 
     cfg.mode match {
       case Overwrite =>
-        writePartitioned(staged, cfg).mode(SaveMode.Overwrite).saveAsTable(cfg.target)
+        write(writePartitioned(staged, cfg).mode(SaveMode.Overwrite).saveAsTable(cfg.target))
       case Append =>
-        if (spark.catalog.tableExists(cfg.target)) {
+        if (exists) {
           // insertInto is positional; when the staged names match the
           // table's, reorder to its schema (saveAsTable may have moved
           // partition columns last). Different names stay positional —
@@ -108,12 +130,12 @@ object Loader {
             if (staged.columns.toSet == tableCols.toSet && staged.columns.toSeq != tableCols.toSeq)
               staged.select(tableCols.map(col(_)): _*)
             else staged
-          aligned.write.mode(SaveMode.Append).insertInto(cfg.target)
+          write(aligned.write.mode(SaveMode.Append).insertInto(cfg.target))
         } else
-          writePartitioned(staged, cfg).mode(SaveMode.ErrorIfExists).saveAsTable(cfg.target)
+          write(writePartitioned(staged, cfg).mode(SaveMode.ErrorIfExists).saveAsTable(cfg.target))
       case OverwritePartitions(cols) =>
-        if (!spark.catalog.tableExists(cfg.target)) // R6 idempotent creation
-          staged.write.partitionBy(cols: _*).saveAsTable(cfg.target)
+        if (!exists) // R6 idempotent creation
+          write(staged.write.partitionBy(cols: _*).saveAsTable(cfg.target))
         else {
           // session-scoped conf flip, restored after the insert: STATIC
           // (Spark's default) would wipe untouched partitions
@@ -123,28 +145,29 @@ object Loader {
           // insertInto resolves by POSITION and saveAsTable reorders
           // partition columns last — select into the table's order
           val ordered = staged.select(spark.table(cfg.target).columns.map(col(_)): _*)
-          try ordered.write.mode(SaveMode.Overwrite).insertInto(cfg.target)
+          try write(ordered.write.mode(SaveMode.Overwrite).insertInto(cfg.target))
           finally prev match {
             case Some(v) => spark.conf.set(key, v)
             case None => spark.conf.unset(key)
           }
         }
       case MergeOn(keys) =>
-        if (!spark.catalog.tableExists(cfg.target)) // R6 idempotent creation
-          staged.write.saveAsTable(cfg.target)
+        if (!exists) // R6 idempotent creation
+          write(staged.write.saveAsTable(cfg.target))
         else {
           // R5 publish via rename-swap, same statement order as the
           // reference (`hive_loader.py:176-178`): target→bak,
           // reconcile→target, drop bak. A failure at ANY point leaves a
           // recoverable table — the target never ceases to exist without
           // a fully-built replacement already in the catalog.
-          val merged = reconciled(spark, staging0, keys, cfg)
+          val merged = counted(reconciled(spark, staging0, keys, cfg))
           val reconcile = s"${cfg.target}__graft_reconcile"
           val bak = s"${cfg.target}__graft_bak"
           // R10 quoting on every catalog statement
           val (qT, qR, qB) = (Source.quoteIdentifier(cfg.target),
             Source.quoteIdentifier(reconcile), Source.quoteIdentifier(bak))
-          merged.write.mode(SaveMode.Overwrite).saveAsTable(reconcile)
+          Par.labeled(spark, "load: reconcile write")(
+            merged.write.mode(SaveMode.Overwrite).saveAsTable(reconcile))
           spark.sql(s"DROP TABLE IF EXISTS $qB")
           spark.sql(s"ALTER TABLE $qT RENAME TO $qB")
           spark.sql(s"ALTER TABLE $qR RENAME TO $qT")
@@ -152,9 +175,34 @@ object Loader {
         }
     }
 
-    if (cfg.analyze) // R8 stats refresh for CBO (R10 quoting: dotted names)
-      spark.sql(s"ANALYZE TABLE ${Source.quoteIdentifier(cfg.target)} COMPUTE STATISTICS")
+    // R8 stats refresh for CBO (R10 quoting: dotted names)
+    if (cfg.analyze && !(whole && publishStats(spark, cfg.target, written)))
+      Par.labeled(spark, "load: analyze")(
+        spark.sql(s"ANALYZE TABLE ${Source.quoteIdentifier(cfg.target)} COMPUTE STATISTICS"))
     cfg.postSql.foreach(spark.sql(_))
+  }
+
+  /** R8 from the write itself: the rows the write counted and the bytes
+    * it left, published through the steps `ANALYZE TABLE … COMPUTE
+    * STATISTICS` ends with (`CommandUtils.analyzeTable`), so the table's
+    * stats equal what ANALYZE would write without re-reading the table.
+    * False, publishing nothing, for a partitioned table when the session
+    * asks ANALYZE for per-partition row counts, which the write does not
+    * keep.
+    */
+  private def publishStats(spark: SparkSession, target: String, written: Observation): Boolean = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val state = session.sessionState
+    val ident = state.sqlParser.parseTableIdentifier(Source.quoteIdentifier(target))
+    val meta = state.catalog.getTableMetadata(ident)
+    if (meta.partitionColumnNames.nonEmpty && state.conf.updatePartStatsInAnalyzeTableEnabled) false
+    else {
+      val size = CommandUtils.calculateTotalSize(session, meta, Some(Map.empty))._1
+      val rows = BigInt(written.get("rows").asInstanceOf[Long])
+      CommandUtils.compareAndGetNewStats(meta.stats, size, Some(rows))
+        .foreach(s => state.catalog.alterTableStats(ident, Some(s)))
+      true
+    }
   }
 
   /** K8 — bulk load a local file into a catalog table. The reference

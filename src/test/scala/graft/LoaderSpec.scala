@@ -117,6 +117,7 @@ class LoaderSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.window.WindowExec
+    import scala.jdk.CollectionConverters._
     drop("lt_f", "lt_f__graft_bak", "lt_f__graft_reconcile")
     (1 to 200).map(i => (i.toLong, 0, s"t$i")).toDF("k", "ver", "v").write.saveAsTable("lt_f")
     // parquet staging, two rows per key over 100..249 (a local relation
@@ -151,7 +152,7 @@ class LoaderSpec extends AnyFunSuite {
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         if (js.properties.getProperty("spark.jobGroup.id") == "fused-merge-load") {
-          jobs.add(s"job ${js.jobId}: ${js.stageInfos.size} stage(s)")
+          jobs.add(s"${js.properties.getProperty("spark.job.description")}: ${js.stageInfos.size} stage(s)")
           js.stageIds.foreach(stages.add(_))
         }
         ()
@@ -173,15 +174,84 @@ class LoaderSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
     // the union's shuffle-map stage, the range sample, the range
-    // shuffle, the reconcile write, and ANALYZE's count (two jobs)
-    assert(jobs.size == 6, s"jobs: $jobs")
-    // target (200) and staging (300) once each, then ANALYZE's count of
-    // the merged table (249 keys)
-    assert(inputRows.get == 200 + 300 + 249, s"input rows ${inputRows.get}; jobs: $jobs")
+    // shuffle and the reconcile write, all under the write's label; the
+    // stats come from that write, so no job re-reads the merged table
+    assert(jobs.size == 4, s"jobs: $jobs")
+    assert(jobs.asScala.forall(_.startsWith("load: reconcile write:")), s"jobs: $jobs")
+    // target (200) and staging (300) once each
+    assert(inputRows.get == 200 + 300, s"input rows ${inputRows.get}; jobs: $jobs")
     val got = spark.table("lt_f").as[(Long, Int, String)].collect()
     assert(got.length == 249)
     assert(got.filter(_._1 >= 100).forall(r => r._3 == s"s${r._2}" && r._2 > 150))
     drop("lt_f")
+  }
+
+  test("R8: the stats a load publishes equal what ANALYZE then writes, in every mode") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
+    def stats(t: String) = catalog.getTableMetadata(TableIdentifier(t)).stats
+    def rows(n: Int, tag: String) = (1 to n).map(i => (i, s"$tag$i", s"d${i % 3}")).toDF("k", "v", "dt")
+    def assertParity(t: String, what: String, count: Long) = {
+      val got = stats(t)
+      assert(got.flatMap(_.rowCount).contains(BigInt(count)), s"$what: $got")
+      spark.sql(s"ANALYZE TABLE `$t` COMPUTE STATISTICS")
+      assert(got == stats(t), what)
+    }
+    def load(t: String, df: org.apache.spark.sql.DataFrame, mode: Loader.Mode,
+        dedup: Option[Loader.DedupSpec] = None, partition: Map[String, String] = Map.empty) =
+      Loader.load(spark, df, Loader.LoadConfig(t, mode, dedup, partition))
+    val byVer = Some(Loader.DedupSpec(Seq("k"), Seq(col("v").desc)))
+    drop("lt_st")
+
+    load("lt_st", rows(40, "a"), Loader.Overwrite)
+    assertParity("lt_st", "Overwrite, first creation", 40)
+    load("lt_st", rows(30, "b"), Loader.Overwrite)
+    assertParity("lt_st", "Overwrite of an existing table", 30)
+    load("lt_st", rows(25, "c").drop("dt"), Loader.Overwrite, partition = Map("dt" -> "x"))
+    assertParity("lt_st", "Overwrite into a static partition", 25)
+    drop("lt_st")
+    load("lt_st", rows(50, "a").union(rows(20, "z")), Loader.MergeOn(Seq("k")), byVer)
+    assertParity("lt_st", "MergeOn at first creation", 50)
+    load("lt_st", rows(80, "b").union(rows(60, "c")), Loader.MergeOn(Seq("k")), byVer)
+    assertParity("lt_st", "MergeOn with a dedup on the keys", 80)
+    load("lt_st", rows(90, "d").filter(col("k") > 70), Loader.MergeOn(Seq("k")))
+    assertParity("lt_st", "MergeOn without a dedup", 90)
+    drop("lt_st")
+    load("lt_st", rows(10, "a"), Loader.Append)
+    assertParity("lt_st", "Append at first creation", 10)
+    load("lt_st", rows(15, "b"), Loader.Append)
+    assertParity("lt_st", "Append into an existing table", 25)
+    drop("lt_st")
+    load("lt_st", rows(12, "a"), Loader.OverwritePartitions(Seq("dt")))
+    assertParity("lt_st", "OverwritePartitions at first creation", 12)
+    load("lt_st", rows(12, "b").filter(col("dt") === "d1"), Loader.OverwritePartitions(Seq("dt")))
+    assertParity("lt_st", "OverwritePartitions of an existing table", 12)
+    drop("lt_st")
+    // a session that asks ANALYZE for per-partition row counts gets them
+    val ps = spark.newSession()
+    ps.conf.set("spark.sql.statistics.updatePartitionStatsInAnalyzeTable.enabled", "true")
+    Loader.load(ps, ps.range(12).selectExpr("cast(id AS INT) k", "concat('a', id) v", "concat('d', id % 3) dt"),
+      Loader.LoadConfig("lt_st", Loader.OverwritePartitions(Seq("dt"))))
+    assert(catalog.listPartitions(TableIdentifier("lt_st")).map(_.stats.flatMap(_.rowCount)).toSet ==
+      Set(Some(BigInt(4))))
+    assertParity("lt_st", "a partitioned creation under per-partition stats", 12)
+    drop("lt_st")
+
+    load("lt_st", rows(0, "a"), Loader.Overwrite)
+    assertParity("lt_st", "empty staging", 0)
+    load("lt_st", spark.read.schema("k INT, v STRING, dt STRING").parquet(
+      java.nio.file.Files.createTempDirectory("lt_st").toString), Loader.MergeOn(Seq("k")), byVer)
+    assertParity("lt_st", "empty parquet staging merged into an empty table", 0)
+
+    // analyze = false publishes nothing: the table keeps only what
+    // Spark's own write leaves, which holds no row count
+    for (mode <- Seq(Loader.Overwrite, Loader.Append, Loader.MergeOn(Seq("k")))) {
+      load("lt_st", rows(7, "a"), Loader.Overwrite)
+      assert(stats("lt_st").flatMap(_.rowCount).contains(BigInt(7)))
+      Loader.load(spark, rows(5, "b"), Loader.LoadConfig("lt_st", mode, analyze = false))
+      assert(stats("lt_st").flatMap(_.rowCount).isEmpty, s"$mode: ${stats("lt_st")}")
+    }
+    drop("lt_st")
   }
 
   test("swap protocol: a stranded bak table from a mid-swap failure is recoverable and cleaned up") {
