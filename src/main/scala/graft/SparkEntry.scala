@@ -1581,8 +1581,8 @@ object SparkEntry {
     // most-similar partners at J >= 0.6. The listing is Ω(output) and
     // output is quadratic in near-duplication (71× wall at 100×
     // replication, all of it qualifying output); retrieval bounds
-    // output at n·k with the WindowGroupLimit keeping per-task top-k
-    // ahead of the window exchange (plan-pinned)
+    // output at n·k with the TopKAgg hash aggregate keeping per-task
+    // top-k ahead of the exchange (plan-pinned)
     "jaccard_topk" -> ((s, dir) =>
       ClusterDedup.topKBy(
           t(s, dir, "documents").filter(col("lang") === "zh"),
@@ -1707,9 +1707,9 @@ object SparkEntry {
     // partners by overlap (ties by partner id) among pairs >= 30. Pair
     // LISTING is Ω(output) — the 100× soak measured ~1.85B qualifying
     // pairs and the listing correctly filled the disk — so at scale you
-    // retrieve, not list: output is n·k and the row_number filter plans
-    // as a WindowGroupLimit (partial top-k per task BEFORE the window
-    // exchange; pinned in PlanShapeSpec)
+    // retrieve, not list: output is n·k and the TopKAgg hash aggregate
+    // keeps a partial top-k per task BEFORE the exchange (pinned in
+    // PlanShapeSpec)
     "overlap_topk" -> ((s, dir) =>
       OverlapJoin.topK(
           docs(s, dir).select(col("doc_id"), col("text")), "doc_id",
@@ -1821,12 +1821,9 @@ object SparkEntry {
     // leakage-safe variant: buckets hash the near-dup CLUSTER label, so
     // dup clusters move between splits atomically; the oracle recomputes
     // the exact-Jaccard components recursively and the same md5 bucket.
-    // The row runs the scalable default: the direct arm (scalable=false,
-    // CurateSpec pins label identity) is ~5 s cheaper at gate scale but
-    // 185 s vs ~35 s on the 10×-replicated soak — this operator exists
-    // FOR duplicate-heavy corpora, so the bench prices the plan you'd
-    // actually run (the dedup_chargram trade goes the other way there
-    // because chargram's direct 10× wall is a modest 20 s)
+    // The labels come from ClusterDedup.components, whose adaptive route
+    // takes the direct pair self-join on low-duplication corpora such as
+    // the gate's, and the clustered route on replica-heavy ones
     "split_leakage_safe" -> ((s, dir) =>
       Curate.leakageSafeSplit(docs(s, dir), "doc_id", "text",
           nGram = 2, threshold = 0.3, testPct = 0.1, valPct = 0.1)

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Bounded-memory streaming top-k neighbors: the partial-aggregating
@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   * pathological partition concentrates billions of keys.
   *
   * Ordering contract: entries rank by (score DESC, id ASC) — the same
-  * deterministic tie-break as the window formulation, so the two plans
-  * are row-identical and share one oracle.
+  * deterministic tie-break as a `row_number()` window ordered that way,
+  * so the result matches an oracle written as that window row for row.
   */
 object TopKAgg {
 
@@ -112,14 +112,12 @@ object TopKAgg {
     * operators' rank/tie semantics (and with them the shared-oracle
     * guarantee) cannot drift apart.
     *
-    * `viaAgg = true` is the sort-free [[TopNeighbors]] hash-aggregate
-    * plan; `false` the row_number window whose partial WindowGroupLimit
-    * local-sorts every task's full input (kept measurable — the 100×
-    * A/B is the argument). Integer scores ride through the
-    * aggregator's double losslessly (|score| ≪ 2⁵³) and are cast back.
+    * The bound is the sort-free [[TopNeighbors]] hash aggregate, not a
+    * row_number window, whose partial WindowGroupLimit local-sorts every
+    * task's full input. Integer scores ride through the aggregator's
+    * double losslessly (|score| ≪ 2⁵³) and are cast back.
     */
-  private[graft] def perDocTopK(
-      pairs: DataFrame, scoreCol: String, k: Int, viaAgg: Boolean): DataFrame = {
+  private[graft] def perDocTopK(pairs: DataFrame, scoreCol: String, k: Int): DataFrame = {
     val scoreType = pairs.schema(scoreCol).dataType
     val sym = pairs.select(
         explode(array(
@@ -128,19 +126,13 @@ object TopKAgg {
         col(scoreCol))
       .select(col("e.id").as("id"), col("e.partner_id").as("partner_id"),
         col(scoreCol))
-    if (viaAgg)
-      sym.groupBy(col("id"))
-        .agg(topNeighbors(col("partner_id"), col(scoreCol).cast("double"), k)
-          .as("__top"))
-        .select(col("id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-        .select(col("id"), col("__e._1").as("partner_id"),
-          col("__e._2").cast(scoreType).as(scoreCol),
-          (col("__pos") + 1).cast("int").as("rk"))
-    else {
-      val w = Window.partitionBy(col("id"))
-        .orderBy(col(scoreCol).desc, col("partner_id").asc)
-      sym.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-    }
+    sym.groupBy(col("id"))
+      .agg(topNeighbors(col("partner_id"), col(scoreCol).cast("double"), k)
+        .as("__top"))
+      .select(col("id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
+      .select(col("id"), col("__e._1").as("partner_id"),
+        col("__e._2").cast(scoreType).as(scoreCol),
+        (col("__pos") + 1).cast("int").as("rk"))
   }
 
   /** Re-root `df` into a CLONED session whose ObjectHashAggregate

@@ -74,8 +74,8 @@ import graft.functions.{NativeHash, Text}
   *      pairs bypass the gate straight to step 5: their bound walk
   *      would BE the verify walk, so gating them only duplicates
   *      array movement (the low-duplication-corpus fast path). The
-  *      prune is an optimization, never a correctness arm
-  *      (`prune = false` disables it; exactness tests run both arms).
+  *      prune only retires cluster pairs the bound proves cannot
+  *      qualify; every pair it passes still runs step 5's exact verify.
   *   5. EXACT VERIFY — ambiguous surviving cluster pairs expand to
   *      member pairs, re-checked at exactly the direct operators' α
   *      bound (same ±1e-9 fp guards for Jaccard); pairs whose anchor
@@ -172,7 +172,7 @@ object ClusterDedup {
     * where direct candidates grow by a bounded few-× on the family
     * slice while the clustered arm's fixed extra phases (measured
     * 6-11 s per call at sf0.1) dwarf that. The probe normalizes by
-    * numBands, which UNDERcounts families whose J sits near the
+    * [[NumBands]], which UNDERcounts families whose J sits near the
     * banding knee — but those are families the contraction itself
     * would mostly miss (band collision is its only mechanism), so the
     * statistic tracks exactly the benefit available.
@@ -212,6 +212,13 @@ object ClusterDedup {
     * Spark's broadcast joins, not a speed crossover.
     */
   private[graft] val IndexBytes = 72.0
+
+  /** MinHash signature length and band count of the LSH contraction
+    * (step 2): 16 bands of 4 rows. The route probe hashes one band of
+    * the same family.
+    */
+  private val NumHashes = 64
+  private val NumBands = 16
 
   /** The pair predicate the core runs under. A pair of set sizes
     * (n_a, n_b) qualifies only with overlap c ≥ α(n_a, n_b), and under
@@ -310,13 +317,12 @@ object ClusterDedup {
       textCol: String,
       nGram: Int = 2,
       threshold: Double = 0.3,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
       adaptive: Boolean = true): DataFrame =
-    componentsImpl(df, idCol,
-      NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
-      threshold, numHashes, numBands, prune, adaptive)._1
+    candidateCore(df, idCol, NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
+        jaccard(threshold), adaptive) match {
+      case Left(d) => componentsDirect(d)
+      case Right(core) => componentsClustered(core)
+    }
 
   /** What both routes of the core hand their consumers; [[release]]
     * runs AFTER the consumer's own output is eagerly cut.
@@ -342,11 +348,9 @@ object ClusterDedup {
       docRep: DataFrame,
       repCluster: DataFrame, // (id, cl) — LSH star contraction of reps
       member: DataFrame,     // (id, __sh, n, cl)
-      anchors: DataFrame,    // (cl, __hsh, __hn)
-      diffs: DataFrame,      // (cl, id, n, __hn, __dm, __dp) — member-vs-anchor diffs
+      cand: ClusterCand,     // steps 3-4: postings, candidates, anchors, diffs
       pruned: DataFrame,     // (cl_a, cl_b, __wit, __hc, size stats) surviving the bound
       pred: PairPredicate,
-      probes: Probes,
       cuts: Seq[DataFrame]) extends Routed
 
   /** The ADAPTIVE direct route (see [[RouteContractRatio]]): the exact
@@ -422,40 +426,25 @@ object ClusterDedup {
     (pairs, bc)
   }
 
-  /** [[components]] plus the candidate-path [[Probes]] — the
-    * PlanShapeSpec hook, pinned on the CLUSTERED arm (adaptive routing
-    * off: the probes ARE the clustered frames).
+  /** [[components]] on the CLUSTERED route (adaptive routing off) plus
+    * its candidate-path [[Probes]] — the PlanShapeSpec hook. The probes
+    * are built here only, over the core's frames, before it is released.
     */
   private[graft] def componentsProbed(
       df: DataFrame,
       idCol: String,
       textCol: String,
       nGram: Int = 2,
-      threshold: Double = 0.3,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true): (DataFrame, Probes) = {
-    val (out, probes) = componentsImpl(df, idCol,
-      NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
-      threshold, numHashes, numBands, prune, adaptive = false)
-    (out, probes.get)
-  }
-
-  /** Shared [[components]] body over either core arm. */
-  private def componentsImpl(
-      df: DataFrame,
-      idCol: String,
-      shingleExpr: org.apache.spark.sql.Column,
-      threshold: Double,
-      numHashes: Int,
-      numBands: Int,
-      prune: Boolean,
-      adaptive: Boolean): (DataFrame, Option[Probes]) = {
-    candidateCore(df, idCol, shingleExpr,
-        jaccard(threshold), numHashes, numBands, prune, adaptive) match {
-      case Left(d) => (componentsDirect(d), None)
-      case Right(core) => componentsClustered(core)
-    }
+      threshold: Double = 0.3): (DataFrame, Probes) = {
+    val core = candidateCore(df, idCol,
+      NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram), jaccard(threshold),
+      adaptive = false).toOption.get
+    // the FULLY LAZY prune over the uncut candidate stream: the prune
+    // and candCl cuts would hide their subtrees behind leaves
+    val pruneProbe = core.cand.prunePlan(core.cand.candCl)
+    val probes = Probes(core.cand.cpostRaw, core.cand.candCl, pruneProbe,
+      crossEdgesPlan(pruneProbe, core.member, core.cand, core.pred))
+    (componentsClustered(core), probes)
   }
 
   /** Direct-route components assembly: reps ARE the clusters (cl = id),
@@ -484,17 +473,23 @@ object ClusterDedup {
     out
   }
 
-  private def componentsClustered(core: Core): (DataFrame, Option[Probes]) = {
+  /** Step 5 for labels: the cluster edges among `pruned`'s cluster
+    * pairs (connectivity only: the ids and scores are dropped — the
+    * pair-listing consumer keeps them, see pairsClustered). Witnessed
+    * pairs (anchor pair itself qualifies — see step 4) are cluster
+    * edges as-is, no member expansion; only ambiguous pairs expand.
+    */
+  private def crossEdgesPlan(pruned: DataFrame, member: DataFrame, cc: ClusterCand,
+      pred: PairPredicate, deltaOnly: Boolean = false): DataFrame =
+    pruned.where(col("__wit")).select(col("cl_a"), col("cl_b"))
+      .union(verifiedMemberPairs(pruned.where(!col("__wit")), member,
+          cc.diffs, cc.anchors, pred, deltaOnly)
+        .select(col("cl_a"), col("cl_b")).distinct())
+
+  private def componentsClustered(core: Core): DataFrame = {
     // ---- 5. exact member verification of surviving cluster pairs ----
-    // (connectivity only: the ids and jaccard values are dropped — the
-    // pair-listing consumer keeps them, see pairsClustered). Witnessed
-    // pairs (anchor pair itself at J ≥ t — see step 4) are cluster
-    // edges as-is, no member expansion; only ambiguous pairs expand.
-    val witnessed = core.pruned.where(col("__wit")).select(col("cl_a"), col("cl_b"))
-    val crossEdges = Par.cut(witnessed.union(
-      verifiedMemberPairs(core.pruned.where(!col("__wit")), core.member,
-          core.diffs, core.anchors, core.pred)
-        .select(col("cl_a"), col("cl_b")).distinct()), "cluster: verify cross edges")
+    val crossEdges = Par.cut(crossEdgesPlan(core.pruned, core.member, core.cand, core.pred),
+      "cluster: verify cross edges")
 
     // ---- assemble: cluster-graph components, then fan labels back out
     // through contraction (cl) and collapse (rep). Cluster ids are min
@@ -519,7 +514,7 @@ object ClusterDedup {
     // per-call block leak in long-lived sessions (the semanticDedup
     // seal rule); driver-local labels make the free a no-op
     Seq(crossEdges, clComp).foreach(Par.free)
-    (out, Some(core.probes))
+    out
   }
 
   /** INCREMENTAL labels for `base ∪ delta` from (a) the PREVIOUS run's
@@ -596,9 +591,6 @@ object ClusterDedup {
       textCol: String,
       nGram: Int = 2,
       threshold: Double = 0.3,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
     val pred = jaccard(threshold)
     val (hashed, prefix) = JaccardDedup.unionIndex(base, delta, idCol, textCol, nGram, pred)
@@ -653,7 +645,7 @@ object ClusterDedup {
     // exact-verified t-edges, so they are REAL connectivity, reusable
     // in the final pass.
     val buckets = nonEmpty.select(col("id"),
-      posexplode(NativeHash.minhashBandBucketsHashed(col("__sh"), numHashes, numBands))
+      posexplode(NativeHash.minhashBandBucketsHashed(col("__sh"), NumHashes, NumBands))
         .as(Seq("band", "bucket")))
     val bucketW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket"))
@@ -704,14 +696,10 @@ object ClusterDedup {
     // probe's persisted prefix index is REUSED as the postings source
     // (cluster labels join on by id — the batch core's pattern), so the
     // dfreq count + per-doc rarity window run once per call
-    val cc = clusterCandidatePlan(member, pred, prune, requireDelta = true,
-      prefix = Some(prefix))
+    val cc = clusterCandidatePlan(member, pred, requireDelta = true, prefix = Some(prefix))
     val pruned = Par.cut(cc.prunePlan(cc.candCl), "inc: prune")
-    val witnessed = pruned.where(col("__wit")).select(col("cl_a"), col("cl_b"))
-    val crossEdges = Par.cut(witnessed.union(
-      verifiedMemberPairs(pruned.where(!col("__wit")), member,
-          cc.diffs, cc.anchors, pred, deltaOnly = true)
-        .select(col("cl_a"), col("cl_b")).distinct()), "inc: verify cross edges")
+    val crossEdges = Par.cut(crossEdgesPlan(pruned, member, cc, pred, deltaOnly = true),
+      "inc: verify cross edges")
 
     // final labels: the pre-contraction's (id → cl) star edges carry
     // its connectivity (each edge abbreviates a path of known t-edges),
@@ -751,13 +739,9 @@ object ClusterDedup {
       textCol: String,
       nGram: Int = 2,
       threshold: Double = 0.3,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
       adaptive: Boolean = true): DataFrame =
     pairsClusteredBy(df, idCol,
-      NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram),
-      threshold, numHashes, numBands, prune, adaptive)
+      NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram), threshold, adaptive)
 
   /** [[pairsClustered]] over an arbitrary sorted-distinct-hash-array
     * shingle expression (the [[JaccardDedup.nearDupPairsByHashes]]
@@ -771,12 +755,8 @@ object ClusterDedup {
       idCol: String,
       shingleExpr: org.apache.spark.sql.Column,
       threshold: Double,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
-    val (pairs, seal) = pairsClusteredPlan(df, idCol, shingleExpr,
-      jaccard(threshold), numHashes, numBands, prune, adaptive)
+    val (pairs, seal) = pairsClusteredPlan(df, idCol, shingleExpr, jaccard(threshold), adaptive)
     seal(pairs)
   }
 
@@ -794,13 +774,8 @@ object ClusterDedup {
       shingleExpr: org.apache.spark.sql.Column,
       threshold: Double,
       k: Int,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
-      viaAgg: Boolean = true,
       adaptive: Boolean = true): DataFrame =
-    sealTopK(topKPlanBy(df, idCol, shingleExpr, threshold, k,
-      numHashes, numBands, prune, viaAgg, adaptive))
+    sealTopK(topKPlanBy(df, idCol, shingleExpr, threshold, k, adaptive))
 
   /** [[topKBy]] split before its seal (PlanShapeSpec pins the plan
     * shape live; the sealed frame's plan is just the checkpoint scan).
@@ -811,13 +786,8 @@ object ClusterDedup {
       shingleExpr: org.apache.spark.sql.Column,
       threshold: Double,
       k: Int,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
-      viaAgg: Boolean = true,
       adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) =
-    topKPlan(df, idCol, shingleExpr, jaccard(threshold), k,
-      numHashes, numBands, prune, viaAgg, adaptive)
+    topKPlan(df, idCol, shingleExpr, jaccard(threshold), k, adaptive)
 
   /** Per-doc top-k retrieval over [[pairsClusteredPlan]]: each doc's
     * `k` best partners (score DESC, ties by ascending partner id),
@@ -829,21 +799,15 @@ object ClusterDedup {
     * filled the disk; the chargram listing measured 71× wall at 100×
     * replication, all of it qualifying output. Retrieval bounds output
     * at n·k, and the candidate plan seals only AFTER the bounding step,
-    * so the full listing never materializes. Two row-identical plans,
-    * chosen by `viaAgg`:
-    *   - `true` (default, the 100-TB shape): [[TopKAgg.topNeighbors]]
-    *     hash aggregate — one Ω(rows·log k) pass, map-side combined,
-    *     NO sort of the pair stream. The window formulation's partial
-    *     WindowGroupLimit still local-sorts every task's full input,
-    *     which the 100× soak measured at 2.9× the pair LISTING's wall
-    *     (1,380 s vs 475 s); the aggregate removes that sort.
-    *   - `false`: the row_number window (kept measurable — it is the
-    *     plan most engines reach for, and the A/B is the argument).
-    * Both rank by (score DESC, partner ASC); the aggregate's buffer
-    * uses the identical comparator, so outputs are row-identical and
-    * share one oracle (an overlap rides through the aggregator's double
-    * score losslessly, |overlap| ≪ 2⁵³). The agg path requires a
-    * long-typed id (the aggregator's input encoder).
+    * so the full listing never materializes. The bounding step is the
+    * [[graft.functions.TopKAgg.topNeighbors]] hash aggregate — one
+    * Ω(rows·log k) pass, map-side combined, NO sort of the pair stream
+    * (a row_number window's partial WindowGroupLimit local-sorts every
+    * task's full input, which the 100× soak measured at 2.9× the pair
+    * LISTING's wall, 1,380 s vs 475 s). It ranks by (score DESC,
+    * partner ASC); an overlap rides through the aggregator's double
+    * score losslessly (|overlap| ≪ 2⁵³). It requires a long-typed id
+    * (the aggregator's input encoder).
     */
   private[graft] def topKPlan(
       df: DataFrame,
@@ -851,15 +815,10 @@ object ClusterDedup {
       setExpr: Column,
       pred: PairPredicate,
       k: Int,
-      numHashes: Int,
-      numBands: Int,
-      prune: Boolean,
-      viaAgg: Boolean,
       adaptive: Boolean): (DataFrame, DataFrame => DataFrame) = {
     require(k >= 1, "k must be >= 1")
-    val (pairs, seal) = pairsClusteredPlan(df, idCol, setExpr,
-      pred, numHashes, numBands, prune, adaptive)
-    (graft.functions.TopKAgg.perDocTopK(pairs, pred.scoreCol, k, viaAgg), seal)
+    val (pairs, seal) = pairsClusteredPlan(df, idCol, setExpr, pred, adaptive)
+    (graft.functions.TopKAgg.perDocTopK(pairs, pred.scoreCol, k), seal)
   }
 
   /** Seal a [[topKPlan]]. The hash-aggregate headroom raise is
@@ -887,12 +846,8 @@ object ClusterDedup {
       idCol: String,
       setExpr: Column,
       pred: PairPredicate,
-      numHashes: Int,
-      numBands: Int,
-      prune: Boolean,
       adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) = {
-    val (routed, repPairs, outLabel) = candidateCore(df, idCol, setExpr, pred,
-        numHashes, numBands, prune, adaptive) match {
+    val (routed, repPairs, outLabel) = candidateCore(df, idCol, setExpr, pred, adaptive) match {
       // direct route: d.pairs IS the exact rep-level pair stream
       case Left(d) => (d, d.pairs, "cluster: pairs out(direct)")
       case Right(core) => (core, clusteredRepPairs(core), "cluster: pairs out")
@@ -927,7 +882,7 @@ object ClusterDedup {
   private def clusteredRepPairs(core: Core): DataFrame = {
     val pred = core.pred
     val cross = verifiedMemberPairs(core.pruned, core.member,
-        core.diffs, core.anchors, pred)
+        core.cand.diffs, core.cand.anchors, pred)
       .select(least(col("ida"), col("idb")).as("ra"),
         greatest(col("ida"), col("idb")).as("rb"), col(pred.scoreCol))
     // intra-cluster pairs: the cluster exists because members share a
@@ -940,9 +895,9 @@ object ClusterDedup {
     // verify volume on the 100× soak (the family contracts into one
     // cluster, so its quadratic lives here, not in the cross arm)
     val alphaV = pred.alpha(col("n_a"), col("n_b")).cast("int")
-    val intra = core.diffs.select(col("cl"), col("id").as("ra"), col("n").as("n_a"),
+    val intra = core.cand.diffs.select(col("cl"), col("id").as("ra"), col("n").as("n_a"),
         col("__hn"), col("__dm").as("__dma"), col("__dp").as("__dpa"))
-      .join(core.diffs.select(col("cl"), col("id").as("rb"), col("n").as("n_b"),
+      .join(core.cand.diffs.select(col("cl"), col("id").as("rb"), col("n").as("n_b"),
         col("__dm").as("__dmb"), col("__dp").as("__dpb")), Seq("cl"))
       .filter(col("ra") < col("rb"))
       .filter(pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b"))))
@@ -978,11 +933,10 @@ object ClusterDedup {
     *     member — vs the opposite cluster's [minN, maxN] — never
     *     expands) and the per-pair count bound
     *     c ≤ __hc + |dP_a| + |dP_b| checked before the correction walk.
-    *   - DIRECT arm (`__hc` null — the singleton-singleton bypass, and
-    *     every pair when `prune = false`): the original full-array
-    *     early-exit merge walk. For 1×1 expansions the diff arm would
-    *     be byte-for-byte the same walk plus bookkeeping, so the bypass
-    *     keeps its fast path.
+    *   - DIRECT arm (`__hc` null — the singleton-singleton bypass): the
+    *     original full-array early-exit merge walk. For 1×1 expansions
+    *     the diff arm would be byte-for-byte the same walk plus
+    *     bookkeeping, so the bypass keeps its fast path.
     *
     * Exactness: every diff-arm term is an exact set cardinality, so the
     * assembled count is the same integer the direct walk returns and
@@ -998,7 +952,7 @@ object ClusterDedup {
     val sizeCompat = pred.fits(greatest(col("n_a"), col("n_b")), least(col("n_a"), col("n_b")))
     val score = pred.score(col("c"), col("n_a"), col("n_b"))
 
-    // ---- DIRECT arm: bypass pairs (and everything when prune=false) ----
+    // ---- DIRECT arm: singleton-singleton bypass pairs ----
     def aSide(src: DataFrame) = src.select(col("cl").as("cl_a"), col("id").as("ida"),
       col("__sh").as("__sha"), col("n").as("n_a"))
     def bSide(src: DataFrame) = src.select(col("cl").as("cl_b"), col("id").as("idb"),
@@ -1083,9 +1037,6 @@ object ClusterDedup {
       idCol: String,
       setExpr: Column,
       pred: PairPredicate,
-      numHashes: Int,
-      numBands: Int,
-      prune: Boolean,
       adaptive: Boolean): Either[DirectCore, Core] = {
     val spark = df.sparkSession
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1119,7 +1070,7 @@ object ClusterDedup {
     //     (reps − distinct buckets) IS the star-edge upper bound the old
     //     groupBy probe computed, now from one aggregate. One band of
     //     the real family (identical seeding ⇒ band 0) estimates the
-    //     per-band average at 1/numBands the hashing cost; identical
+    //     per-band average at 1/NumBands the hashing cost; identical
     //     sets share buckets, so distinct-buckets-over-docs equals
     //     distinct-buckets-over-reps and the statistic is rep-level
     //     even before the collapse decision is made;
@@ -1138,7 +1089,7 @@ object ClusterDedup {
       eligible.agg(count(lit(1)).as("__n"),
         approx_count_distinct(xxhash64(col("__sh")), 0.05).as("__sets"),
         approx_count_distinct(element_at(
-          NativeHash.minhashBandBucketsHashed(col("__sh"), numHashes / numBands, 1),
+          NativeHash.minhashBandBucketsHashed(col("__sh"), NumHashes / NumBands, 1),
           1), 0.05).as("__buckets"),
         coalesce(sum(col("n").cast("long")), lit(0L)).as("__elems")).head())
     val collapseUseful = st.getLong(1) < st.getLong(0) * CollapseSkipRatio
@@ -1231,7 +1182,7 @@ object ClusterDedup {
     // ---- 2. LSH contraction over representatives ----
     val buckets = reps
       .select(col("id"),
-        posexplode(NativeHash.minhashBandBucketsHashed(col("__sh"), numHashes, numBands))
+        posexplode(NativeHash.minhashBandBucketsHashed(col("__sh"), NumHashes, NumBands))
           .as(Seq("band", "bucket")))
     // STAR candidates, not bucket all-pairs: each member links only to
     // its bucket's min id (the hub), so candidate volume is
@@ -1244,7 +1195,7 @@ object ClusterDedup {
     // verified t-edges to a shared hub, so every contracted set lies
     // inside one t-component. Fewer edges can only mean LESS
     // contraction (a member whose hub fails the exact check keeps its
-    // own label — with numBands hub chances per member), and step 5
+    // own label — with NumBands hub chances per member), and step 5
     // finds every cross-cluster edge the contraction didn't take.
     val bucketW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bucket"))
@@ -1278,23 +1229,9 @@ object ClusterDedup {
     // the route probe's persisted prefix index is REUSED as the
     // postings source (contraction labels join on by id) — the dfreq
     // count and per-doc rarity window run once per call, not twice
-    val cc = clusterCandidatePlan(member, pred, prune, requireDelta = false,
-      prefix = Some(prefix))
+    val cc = clusterCandidatePlan(member, pred, requireDelta = false, prefix = Some(prefix))
     val pruned = Par.cut(cc.prunePlan(cc.candCl), "cluster: prune")
-
-    // probe frames for the plan-shape pins (plans only — executing the
-    // consumers re-runs the same stages): the FULLY LAZY prune over the
-    // uncut candidate stream (both the prune cut and the candCl cut
-    // would hide their subtrees behind leaves) and the connectivity
-    // projection of the witness-split step 5
-    val pruneProbe = cc.prunePlan(cc.candCl)
-    val crossEdgesProbe = pruneProbe.where(col("__wit")).select(col("cl_a"), col("cl_b"))
-      .union(verifiedMemberPairs(pruneProbe.where(!col("__wit")), member,
-          cc.diffs, cc.anchors, pred)
-        .select(col("cl_a"), col("cl_b")).distinct())
-
-    Right(Core(hashed, docRep, repCluster, member, cc.anchors, cc.diffs, pruned, pred,
-      Probes(cc.cpostRaw, cc.candCl, pruneProbe, crossEdgesProbe),
+    Right(Core(hashed, docRep, repCluster, member, cc, pruned, pred,
       cuts = collapseCut.toSeq ++ Seq(prefix, member, cc.cpost, cc.anchors, cc.diffs, pruned)))
   }
 
@@ -1370,8 +1307,8 @@ object ClusterDedup {
     * the walk is doc-length, not union-length (no cap needed).
     * (For a previous-run FULL component used as a cluster — the
     * incremental base side — a long chain component can make maxD
-    * vacuous; the pair then just falls through to the member verify,
-    * i.e. the prune degrades to `prune = false`, never to wrong.)
+    * vacuous; the pair then just falls through to the member verify:
+    * the prune degrades to no pruning, never to wrong.)
     *
     * WITNESS: when the walk passes it returns the EXACT |H_A∩H_B|
     * (countAtLeast early-exits only to say "can't reach α"), so
@@ -1398,7 +1335,6 @@ object ClusterDedup {
   private[operators] def clusterCandidatePlan(
       member: DataFrame,
       pred: PairPredicate,
-      prune: Boolean,
       requireDelta: Boolean,
       prefix: Option[DataFrame] = None): ClusterCand = {
     // the per-cluster delta flag exists ONLY in the incremental arm —
@@ -1491,15 +1427,14 @@ object ClusterDedup {
     val maxD = diffs.groupBy("cl").agg(max(size(col("__dp"))).as("__maxd"))
     val bothSingle = col("__nma") === 1 && col("__nmb") === 1
     // prune output carries the walk's EXACT anchor intersection (__hc,
-    // null on the bypass/no-prune arms — the verify's routing flag) and
+    // null on the bypass arm — the verify's routing flag) and
     // the per-cluster size stats the verify's per-side prefilters read
     val passCols = Seq(col("__mna"), col("__mnb"), col("__mxa"), col("__mxb"))
     def noWalk(cand: DataFrame): DataFrame = cand.select(
       Seq(col("cl_a"), col("cl_b"), lit(false).as("__wit"),
         lit(null).cast("int").as("__hc")) ++ passCols: _*)
     def prunePlan(cand: DataFrame): DataFrame =
-      if (!prune) noWalk(cand)
-      else cand.where(!bothSingle)
+      cand.where(!bothSingle)
         .join(anchors.select(col("cl").as("cl_a"), col("__hsh").as("__ha"), col("__hn").as("__hna")), Seq("cl_a"))
         .join(anchors.select(col("cl").as("cl_b"), col("__hsh").as("__hb"), col("__hn").as("__hnb")), Seq("cl_b"))
         .join(maxD.select(col("cl").as("cl_a"), col("__maxd").as("__da")), Seq("cl_a"), "left")

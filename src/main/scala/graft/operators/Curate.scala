@@ -53,15 +53,9 @@ object Curate {
     * probability. The configured fractions govern CLUSTER mass; the
     * doc-mass deviation is bounded by the duplicate-cluster size
     * distribution (tiny once dedup runs first, which is the intended
-    * order). Adds `cluster_id`, `bucket`, `split`.
-    *
-    * `scalable` picks the components plan — both produce identical
-    * labels (ClusterDedupSpec): true (default) routes through
-    * [[ClusterDedup.components]]' collapse/contraction candidate path,
-    * the right shape for the boilerplate-heavy corpora where dup-aware
-    * splitting matters; false runs the direct pair pipeline, cheaper
-    * on low-duplication corpora where the clustered machinery's fixed
-    * cost buys nothing (the `dedup_chargram` trade).
+    * order). Adds `cluster_id`, `bucket`, `split`. On a low-duplication
+    * corpus the components' adaptive route runs the direct pair
+    * self-join, so the clustered machinery costs nothing there.
     */
   def leakageSafeSplit(
       df: DataFrame,
@@ -70,14 +64,8 @@ object Curate {
       nGram: Int = 2,
       threshold: Double = 0.3,
       testPct: Double = 0.1,
-      valPct: Double = 0.1,
-      scalable: Boolean = true): DataFrame = {
-    val comp = (if (scalable)
-        ClusterDedup.components(df, idCol, textCol, nGram, threshold)
-      else
-        Components.connectedComponents(
-          JaccardDedup.nearDupPairs(df, idCol, textCol, nGram, threshold),
-          "id_a", "id_b", Some(df.select(col(idCol)))))
+      valPct: Double = 0.1): DataFrame = {
+    val comp = ClusterDedup.components(df, idCol, textCol, nGram, threshold)
       .select(col("id").as(idCol), col("component").as("cluster_id"))
     val testUb = math.floor(65536 * testPct).toInt
     val valUb = math.floor(65536 * (testPct + valPct)).toInt

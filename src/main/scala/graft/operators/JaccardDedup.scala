@@ -51,6 +51,10 @@ import graft.functions.Text
   */
 object JaccardDedup {
 
+  /** Exact word-n-gram J ≥ `threshold` pairs (id_a < id_b, jaccard):
+    * [[nearDupPairsByHashes]] over `shingleHashes`, so the listing runs
+    * one labelled construction job before this returns.
+    */
   def nearDupPairs(
       df: DataFrame,
       idCol: String,
@@ -61,7 +65,8 @@ object JaccardDedup {
       graft.functions.NativeHash.shingleHashes(Text.tokens(col(textCol)), nGram), threshold)
 
   /** Char-n-gram flavor — for short or unsegmented text (e.g. zh) where
-    * word tokenization is meaningless.
+    * word tokenization is meaningless. Like [[nearDupPairs]], it runs
+    * one labelled construction job before it returns.
     */
   def nearDupPairsByChars(
       df: DataFrame,
@@ -173,6 +178,10 @@ object JaccardDedup {
     * since the self-join evaluates it once per side: a lazy persist, not
     * an eager cut, which measured 1.8× slower here (2.1 s → 3.9 s) by
     * serializing the probe-side build behind the checkpoint write.
+    *
+    * The listing itself is cut before this returns, in one labelled
+    * construction job (`cut: jaccard: pairs out`), and both persists
+    * are then released, so a call leaves only its output behind.
     */
   def nearDupPairsByHashes(
       df: DataFrame,
@@ -188,7 +197,11 @@ object JaccardDedup {
       .persist(MEMORY_AND_DISK)
     val prefix = prefixIndex(docs.select(col(idCol), explode(col("__sh")).as("s"), col("n")),
       idCol, pred).persist(MEMORY_AND_DISK)
-    verifiedPairs(prefixPairs(prefix, idCol, pred, "id_a", "id_b"), docs, idCol, pred, "id_a", "id_b")
+    val out = Par.cut(verifiedPairs(prefixPairs(prefix, idCol, pred, "id_a", "id_b"),
+      docs, idCol, pred, "id_a", "id_b"), "jaccard: pairs out")
+    docs.unpersist(false)
+    prefix.unpersist(false)
+    out
   }
 
   /** Exact J ≥ `threshold` pairs with AT LEAST ONE endpoint in `delta`,
@@ -295,6 +308,10 @@ object JaccardDedup {
     * (k = 30, sf0.1, 4 cores) read 0.43–0.54 s against 0.32–0.33 s
     * here: its document-frequency count and per-doc window cost more
     * than they prune when few sets reach k (286 of 5,000 documents).
+    *
+    * The result is cut before this returns, in one labelled
+    * construction job (`cut: overlap: pairs out`), and the persisted
+    * set table is then released.
     */
   def overlapJoin(
       df: DataFrame, idCol: String, setCol: Column, minOverlap: Int): DataFrame = {
@@ -312,13 +329,15 @@ object JaccardDedup {
     val cand = prefix.as("a")
       .join(prefix.as("b"), col("a.e") === col("b.e") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    cand
+    val out = Par.cut(cand
       .join(base.select(col("id").as("id_a"), col("__set").as("__sa")), Seq("id_a"))
       .join(base.select(col("id").as("id_b"), col("__set").as("__sb")), Seq("id_b"))
       .withColumn("overlap",
         graft.functions.NativeHash.sortedIntersectCount(col("__sa"), col("__sb")).cast("long"))
       .filter(col("overlap") >= minOverlap)
-      .select("id_a", "id_b", "overlap")
+      .select("id_a", "id_b", "overlap"), "overlap: pairs out")
+    base.unpersist(false)
+    out
   }
 
   /** Cross-corpus contamination pairs: (left_id, right_id, jaccard) for

@@ -34,12 +34,9 @@ object OverlapJoin {
       idCol: String,
       setCol: Column,
       minOverlap: Int,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
       adaptive: Boolean = true): DataFrame = {
     val (pairs, seal) = ClusterDedup.pairsClusteredPlan(df, idCol, setCol,
-      ClusterDedup.Overlap(minOverlap), numHashes, numBands, prune, adaptive)
+      ClusterDedup.Overlap(minOverlap), adaptive)
     seal(pairs)
   }
 
@@ -55,13 +52,8 @@ object OverlapJoin {
       setCol: Column,
       minOverlap: Int,
       k: Int,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
-      viaAgg: Boolean = true,
       adaptive: Boolean = true): DataFrame =
-    ClusterDedup.sealTopK(topKPlan(df, idCol, setCol, minOverlap, k,
-      numHashes, numBands, prune, viaAgg, adaptive))
+    ClusterDedup.sealTopK(topKPlan(df, idCol, setCol, minOverlap, k, adaptive))
 
   /** [[topK]] split before its seal, so PlanShapeSpec can pin the plan
     * shape live (the sealed frame's plan is just the checkpoint scan).
@@ -72,11 +64,6 @@ object OverlapJoin {
       setCol: Column,
       minOverlap: Int,
       k: Int,
-      numHashes: Int = 64,
-      numBands: Int = 16,
-      prune: Boolean = true,
-      viaAgg: Boolean = true,
       adaptive: Boolean = true): (DataFrame, DataFrame => DataFrame) =
-    ClusterDedup.topKPlan(df, idCol, setCol, ClusterDedup.Overlap(minOverlap), k,
-      numHashes, numBands, prune, viaAgg, adaptive)
+    ClusterDedup.topKPlan(df, idCol, setCol, ClusterDedup.Overlap(minOverlap), k, adaptive)
 }

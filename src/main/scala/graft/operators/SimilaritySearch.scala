@@ -61,11 +61,19 @@ object SimilaritySearch {
     * at corpus scale use [[IvfSearch.knnJoinIvf]] (co-partitioned
     * list-local candidates). No broadcast hint: the optimizer
     * broadcasts one side while it fits and falls back to a cartesian
-    * product beyond that — either way the window shuffle moves only
+    * product beyond that — either way the top-k shuffle moves only
     * (qid, id, score) triples, never embeddings.
+    *
+    * The bound is the sort-free [[graft.functions.TopKAgg]] aggregate
+    * (the plan the overlap/jaccard retrieval rows run): a row_number
+    * window's WindowGroupLimit would local-sort every task's full n²
+    * scored stream — Ω(n²·log n²) before a single row is dropped —
+    * while the top-k hash aggregate bounds it in one map-side-combined
+    * pass with O(k) state per query, ranking by (score DESC, id ASC).
+    * Headroom clone: every task sees ~every qid, so the default
+    * 128-group fallback would silently reintroduce the sort.
     */
-  def knnJoinExact(corpus: DataFrame /* (id, vec) */, k: Int,
-      viaAgg: Boolean = true): DataFrame = {
+  def knnJoinExact(corpus: DataFrame /* (id, vec) */, k: Int): DataFrame = {
     // widen the STREAM side (r18): a small embeddings parquet arrives
     // as one split, so the Ω(n²) cosine scoring + top-k aggregate ran
     // in ONE task (JobProfile: a single 1.85 s single-task job was the
@@ -76,29 +84,13 @@ object SimilaritySearch {
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id"),
         graft.functions.NativeHash.cosine(col("qvec"), col("vec")).as("score"))
-    if (viaAgg) {
-      // sort-free bounding (r17, the TopKAgg plan the overlap/jaccard
-      // retrieval rows run): the window formulation's WindowGroupLimit
-      // still local-sorts every task's full n² scored stream —
-      // Ω(n²·log n²) before a single row is dropped — while the top-k
-      // hash aggregate bounds it in one map-side-combined pass with
-      // O(k) state per query. Identical (score DESC, id ASC) tie
-      // semantics (one comparator definition, TopKAgg.TopNeighbors),
-      // so the arms are row-identical and share one oracle —
-      // SimilaritySpec pins the equivalence. Headroom clone: every
-      // task sees ~every qid, so the default 128-group fallback would
-      // silently reintroduce the sort.
-      val top = scored.groupBy(col("qid"))
-        .agg(graft.functions.TopKAgg.topNeighbors(col("id"), col("score"), k)
-          .as("__top"))
-        .select(col("qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-        .select(col("qid"), col("__e._1").as("id"), col("__e._2").as("score"),
-          (col("__pos") + 1).cast("int").as("rank"))
-      graft.functions.TopKAgg.withHashAggHeadroom(top)
-    } else {
-      val w = Window.partitionBy("qid").orderBy(col("score").desc, col("id").asc)
-      scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-    }
+    val top = scored.groupBy(col("qid"))
+      .agg(graft.functions.TopKAgg.topNeighbors(col("id"), col("score"), k)
+        .as("__top"))
+      .select(col("qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
+      .select(col("qid"), col("__e._1").as("id"), col("__e._2").as("score"),
+        (col("__pos") + 1).cast("int").as("rank"))
+    graft.functions.TopKAgg.withHashAggHeadroom(top)
   }
 
   /** ANN via banded SRP-LSH: `tables` independent hash tables of

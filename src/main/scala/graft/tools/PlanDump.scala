@@ -18,6 +18,9 @@ import graft.{GraftSession, SparkEntry}
   * ExistingRDD/LogicalRDD leaves. That is the honest shape of what the
   * consumer re-executes; the in-flight stage plans are pinned by
   * PlanShapeSpec probes instead.
+  *
+  * Each dump has its per-session counters blanked (see [[normalized]]),
+  * so dumps of two commits compare with plain `diff`.
   */
 object PlanDump {
 
@@ -55,11 +58,11 @@ object PlanDump {
       "dedup_ngram_jaccard_clustered" -> (() =>
         ClusterDedup.pairsClusteredPlan(docs.select(col("doc_id"), col("text")),
           "doc_id", NativeHash.shingleHashes(Text.tokens(col("text")), 2),
-          ClusterDedup.Jaccard(0.3), 64, 16, prune = true)._1),
+          ClusterDedup.Jaccard(0.3))._1),
       "dedup_chargram_clustered" -> (() =>
         ClusterDedup.pairsClusteredPlan(docs.filter(col("lang") === "zh"),
           "doc_id", NativeHash.charShingleHashes(col("text"), 3),
-          ClusterDedup.Jaccard(0.6), 64, 16, prune = true)._1),
+          ClusterDedup.Jaccard(0.6))._1),
       "jaccard_topk" -> (() =>
         ClusterDedup.topKPlanBy(docs.filter(col("lang") === "zh"),
           "doc_id", NativeHash.charShingleHashes(col("text"), 3),
@@ -67,13 +70,25 @@ object PlanDump {
       "overlap_join_clustered" -> (() =>
         ClusterDedup.pairsClusteredPlan(docs.select(col("doc_id"), col("text")),
           "doc_id", NativeHash.shingleHashes(Text.tokens(col("text")), 1),
-          ClusterDedup.Overlap(30), 64, 16, prune = true)._1),
+          ClusterDedup.Overlap(30))._1),
       "overlap_topk" -> (() =>
         ClusterDedup.topKPlan(docs.select(col("doc_id"), col("text")),
           "doc_id", NativeHash.shingleHashes(Text.tokens(col("text")), 1),
-          ClusterDedup.Overlap(30), 5, 64, 16, prune = true, viaAgg = true,
-          adaptive = true)._1))
+          ClusterDedup.Overlap(30), 5, adaptive = true)._1))
   }
+
+  /** `plan` with the counters that differ between sessions and builds
+    * replaced by `N`: expression ids (`#123`), plan ids (`plan_id=4`),
+    * RDD ids of checkpointed leaves (`MapPartitionsRDD[262]`), the
+    * source line numbers in RDD call sites (`Par.scala:63`) and object
+    * identity hashes (`TopNeighbors@3c80ab43`).
+    */
+  private[graft] def normalized(plan: String): String = plan
+    .replaceAll("#\\d+", "#N")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+    .replaceAll("\\.scala:\\d+", ".scala:N")
+    .replaceAll("@[0-9a-f]{1,8}(?![0-9A-Za-z])", "@N")
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query> [query ...]")
@@ -92,7 +107,7 @@ object PlanDump {
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
-        plan.getBytes("UTF-8"))
+        normalized(plan).getBytes("UTF-8"))
       System.err.println(s"[plandump] wrote ${name}_$suffix.txt")
     }
     args.drop(2).foreach { q =>

@@ -33,9 +33,8 @@ class ClusterDedupSpec extends AnyFunSuite {
         "id_a", "id_b", Some(df.select(col("doc_id"))))
       .as[(Long, Long)].collect().toSet
 
-  private def clustered(df: DataFrame, t: Double, nGram: Int = 2,
-      prune: Boolean = true): Set[(Long, Long)] =
-    ClusterDedup.components(df, "doc_id", "text", nGram, t, prune = prune)
+  private def clustered(df: DataFrame, t: Double, nGram: Int = 2): Set[(Long, Long)] =
+    ClusterDedup.components(df, "doc_id", "text", nGram, t)
       .as[(Long, Long)].collect().toSet
 
   test("matches the direct pipeline on sf0.001 documents (t=0.3, the driver query's params)") {
@@ -141,13 +140,6 @@ class ClusterDedupSpec extends AnyFunSuite {
     }
   }
 
-  test("prune=false (anchor-bound prune disabled everywhere) still exact") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .limit(120)
-    assert(clustered(docs, 0.3, prune = false) == direct(docs, 0.3))
-  }
-
   // ---- pairsClustered: the pair LISTING through the same candidate
   // path must be row-identical to JaccardDedup.nearDupPairs, including
   // the jaccard VALUES (intra-group pairs are emitted as exact 1.0;
@@ -156,9 +148,8 @@ class ClusterDedupSpec extends AnyFunSuite {
   private def directPairs(df: DataFrame, t: Double): Map[(Long, Long, Double), Int] =
     pairRows(JaccardDedup.nearDupPairs(df, "doc_id", "text", 2, t))
 
-  private def clusteredPairs(df: DataFrame, t: Double,
-      prune: Boolean = true): Map[(Long, Long, Double), Int] =
-    pairRows(ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t, prune = prune))
+  private def clusteredPairs(df: DataFrame, t: Double): Map[(Long, Long, Double), Int] =
+    pairRows(ClusterDedup.pairsClustered(df, "doc_id", "text", 2, t))
 
   test("pairsClustered matches nearDupPairs on sf0.001 documents (values included)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -185,7 +176,7 @@ class ClusterDedupSpec extends AnyFunSuite {
       exp.keys.exists { case (_, _, j) => j == 1.0 })
   }
 
-  test("pairsClustered: exact duplicates, empty docs, boundary pairs, prune disabled") {
+  test("pairsClustered: exact duplicates, empty docs, boundary pairs") {
     val dups = (Seq.fill(4)("all of these documents are byte identical content") ++
       Seq("a singleton document unlike anything else right here") ++
       Seq("", "one"))
@@ -197,9 +188,6 @@ class ClusterDedupSpec extends AnyFunSuite {
       (2L, "zeta eta theta iota")).toDF("doc_id", "text")
     assert(clusteredPairs(boundary, 0.5) == directPairs(boundary, 0.5))
     assert(clusteredPairs(boundary, 0.5).keys.exists { case (a, b, _) => a == 0L && b == 1L })
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text")).limit(120)
-    assert(clusteredPairs(docs, 0.3, prune = false) == directPairs(docs, 0.3))
   }
 
   test("anchor bound includes the member-vs-anchor diff (maxD), not anchor walks alone") {
@@ -266,12 +254,10 @@ class ClusterDedupSpec extends AnyFunSuite {
             .map { case ((id, pid, j), r) => (id, pid, j, r + 1) }
         })
       assert(truth.keys.exists(_._4 == k), s"fixture must cut at k=$k (t=$t)")
-      for (viaAgg <- Seq(true, false)) {
-        val got = multiset(ClusterDedup.topKBy(docs, "doc_id",
-            NativeHash.charShingleHashes(col("text"), 3), t, k, viaAgg = viaAgg)
-          .as[(Long, Long, Double, Int)].collect().toSeq)
-        assert(got == truth, s"t=$t k=$k viaAgg=$viaAgg:\n got=$got\ntruth=$truth")
-      }
+      val got = multiset(ClusterDedup.topKBy(docs, "doc_id",
+          NativeHash.charShingleHashes(col("text"), 3), t, k)
+        .as[(Long, Long, Double, Int)].collect().toSeq)
+      assert(got == truth, s"t=$t k=$k:\n got=$got\ntruth=$truth")
     }
   }
 
@@ -292,7 +278,12 @@ class ClusterDedupSpec extends AnyFunSuite {
         (() => OverlapJoin.pairsClustered(docs, "doc_id", tokens1, 6)),
       "OverlapJoin.pairsClustered(adaptive = false)" ->
         (() => OverlapJoin.pairsClustered(docs, "doc_id", tokens1, 6, adaptive = false)),
-      "OverlapJoin.topK" -> (() => OverlapJoin.topK(docs, "doc_id", tokens1, 6, 3)))
+      "OverlapJoin.topK" -> (() => OverlapJoin.topK(docs, "doc_id", tokens1, 6, 3)),
+      "JaccardDedup.nearDupPairs" ->
+        (() => JaccardDedup.nearDupPairs(docs, "doc_id", "text", 2, 0.3)),
+      "JaccardDedup.nearDupPairsByChars" ->
+        (() => JaccardDedup.nearDupPairsByChars(docs, "doc_id", "text", 3, 0.3)),
+      "JaccardDedup.overlapJoin" -> (() => JaccardDedup.overlapJoin(docs, "doc_id", tokens1, 6)))
     for ((name, call) <- calls) {
       val before = spark.sparkContext.getPersistentRDDs.keySet
       assert(call().count() > 0, s"$name: degenerate fixture")

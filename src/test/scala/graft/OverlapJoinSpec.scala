@@ -32,14 +32,12 @@ class OverlapJoinSpec extends AnyFunSuite {
   private def direct(df: DataFrame, k: Int): Map[(Long, Long, Long), Int] =
     pairRows(JaccardDedup.overlapJoin(df, "doc_id", tokens1, k))
 
-  private def clustered(df: DataFrame, k: Int,
-      prune: Boolean = true): Map[(Long, Long, Long), Int] = {
+  private def clustered(df: DataFrame, k: Int): Map[(Long, Long, Long), Int] = {
     // ROUTING IDENTITY (r17): the adaptive probe picks a plan, never a
     // result — every fixture pins the default (adaptive, DIRECT at spec
     // scale) against the FORCED-CLUSTERED arm before returning
-    val adaptive = pairRows(OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, prune = prune))
-    val forced = pairRows(OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, prune = prune,
-        adaptive = false))
+    val adaptive = pairRows(OverlapJoin.pairsClustered(df, "doc_id", tokens1, k))
+    val forced = pairRows(OverlapJoin.pairsClustered(df, "doc_id", tokens1, k, adaptive = false))
     assert(adaptive == forced,
       s"adaptive route diverges from forced-clustered:\n adaptive=$adaptive\n forced=$forced")
     adaptive
@@ -95,13 +93,6 @@ class OverlapJoinSpec extends AnyFunSuite {
     assert(!clustered(docs, 3).keys.exists(p => p._1 == 0L || p._2 == 1L && p._1 < 2))
   }
 
-  test("prune=false (anchor bound disabled) still exact — the prune is never a correctness arm") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .limit(150)
-    assert(clustered(docs, 20, prune = false) == direct(docs, 20))
-  }
-
   // ---- topK: bounded-output retrieval over the same truth ----
 
   /** Per-doc top-k from the quadratic pair truth: symmetrize, sort by
@@ -116,8 +107,8 @@ class OverlapJoinSpec extends AnyFunSuite {
       })
 
   private def gotTopK(df: DataFrame, m: Int, k: Int,
-      viaAgg: Boolean = true): Map[(Long, Long, Long, Int), Int] =
-    multiset(OverlapJoin.topK(df, "doc_id", tokens1, m, k, viaAgg = viaAgg)
+      adaptive: Boolean = true): Map[(Long, Long, Long, Int), Int] =
+    multiset(OverlapJoin.topK(df, "doc_id", tokens1, m, k, adaptive = adaptive)
       .as[(Long, Long, Long, Int)].collect().toSeq)
 
   test("topK equals per-doc top-k of the direct join on sf0.001 documents (both plans)") {
@@ -125,8 +116,8 @@ class OverlapJoinSpec extends AnyFunSuite {
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     val truth = topTruth(direct(docs, 30), 5)
     assert(truth.nonEmpty, "fixture must exercise the retrieval path")
-    assert(gotTopK(docs, 30, 5) == truth, "TopKAgg plan")
-    assert(gotTopK(docs, 30, 5, viaAgg = false) == truth, "window plan")
+    assert(gotTopK(docs, 30, 5) == truth, "adaptive route")
+    assert(gotTopK(docs, 30, 5, adaptive = false) == truth, "forced-clustered route")
   }
 
   test("topK on the replica corpus: k cuts inside and across the duplicate families") {
