@@ -5,12 +5,15 @@
 #   scripts/ab_perfbench.sh BASE WORKLOAD [PAIRS=10] [FIRST_SEED]
 #   scripts/ab_perfbench.sh --summarize RESULTS
 #
-# BASE's committed files are exported (git archive) into a temporary
-# directory, removed on exit. Pair i runs `python3 perfbench/run.py
-# --workload WORKLOAD --seed FIRST_SEED+i --seconds <run_seconds of
-# BENCHMARK.json> --trace 0` once in that directory and once in the
-# working tree, base first on even pairs and the change first on odd
-# ones. FIRST_SEED defaults to a clock-derived value, so each call draws
+# Both sides run from fresh temporary directories, removed on exit:
+# BASE's committed files (git archive) and a snapshot of the working
+# tree taken at the start (its tracked and untracked files that git does
+# not ignore), so neither side inherits a `.bench_build/` and later
+# edits to the checkout do not reach the run. Pair i runs `python3
+# perfbench/run.py --workload WORKLOAD --seed FIRST_SEED+i --seconds
+# <run_seconds of BENCHMARK.json> --trace 0` once in each directory,
+# base first on even pairs and the change first on odd ones.
+# FIRST_SEED defaults to a clock-derived value, so each call draws
 # fresh seeds. Every run's result line is kept in a results file (its
 # path is printed) as `<base|change> <pair> <seed> <result json>`, or
 # `null` for a run that printed no result; their stderr goes to
@@ -96,12 +99,19 @@ git rev-parse --verify --quiet "$BASE^{commit}" >/dev/null || {
 SECONDS_PER_RUN="$(python3 -c 'import json; print(json.load(open("BENCHMARK.json"))["run_seconds"])')"
 
 BASE_DIR="$(mktemp -d /tmp/ab_perfbench.XXXXXX)"
-trap 'rm -rf "$BASE_DIR"' EXIT
+CHANGE_DIR="$(mktemp -d /tmp/ab_perfbench.XXXXXX)"
+trap 'rm -rf "$BASE_DIR" "$CHANGE_DIR"' EXIT
 git archive "$BASE" | tar -x -C "$BASE_DIR"
+# the working tree as it stands, minus ignored files; a tracked file
+# deleted in the working tree is left out
+git ls-files -z --cached --others --exclude-standard --deduplicate |
+  python3 -c 'import os, sys; sys.stdout.write("".join(
+    f + "\0" for f in sys.stdin.read().split("\0") if f and os.path.isfile(f)))' |
+  tar --null -T - -c | tar -x -C "$CHANGE_DIR"
 RESULTS="$(mktemp /tmp/ab_perfbench_results.XXXXXX)"
 
 run_side() { # side pair seed
-  local dir=$REPO line
+  local dir=$CHANGE_DIR line
   [[ "$1" == base ]] && dir=$BASE_DIR
   line="$(cd "$dir" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$3" \
     --seconds "$SECONDS_PER_RUN" --trace 0 2>>"$RESULTS.log" | tail -1)" || line=""

@@ -2043,8 +2043,10 @@ object SparkEntry {
     // reporting < k on a genuinely lossy beam
     "ann_hnsw_recall" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
-      val corpus = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // one cut, not a lazy persist: the two arms' concurrent stages
+      // would both build the persisted partitions
+      val corpus = Par.cut(e.select(col("vec_id").as("id"), col("embedding").as("vec")),
+        "ann_hnsw_recall: corpus")
       val queries = e.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       val approx = GraphAnn.hnswTopK(corpus, queries, k = 5, m = 8,
@@ -2053,7 +2055,7 @@ object SparkEntry {
       val out = SimilaritySearch.recall(exact, approx, 5).orderBy("qid")
       val rows = out.collect() // queries×1 rows: eager, then release corpus
       val result = s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-      corpus.unpersist()
+      Par.free(corpus)
       result
     }),
 

@@ -118,7 +118,6 @@ object TopKAgg {
     * double losslessly (|score| ≪ 2⁵³) and are cast back.
     */
   private[graft] def perDocTopK(pairs: DataFrame, scoreCol: String, k: Int): DataFrame = {
-    val scoreType = pairs.schema(scoreCol).dataType
     val sym = pairs.select(
         explode(array(
           struct(col("id_a").as("id"), col("id_b").as("partner_id")),
@@ -126,14 +125,24 @@ object TopKAgg {
         col(scoreCol))
       .select(col("e.id").as("id"), col("e.partner_id").as("partner_id"),
         col(scoreCol))
-    sym.groupBy(col("id"))
-      .agg(topNeighbors(col("partner_id"), col(scoreCol).cast("double"), k)
-        .as("__top"))
-      .select(col("id"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("id"), col("__e._1").as("partner_id"),
-        col("__e._2").cast(scoreType).as(scoreCol),
-        (col("__pos") + 1).cast("int").as("rk"))
+    topKRows(sym, "id", "partner_id", scoreCol, "rk", k)
   }
+
+  /** The bounding block of every top-k plan: each `key`'s `k` best
+    * (`partner`, `score`) rows by (score DESC, partner ASC) through one
+    * [[topNeighbors]] aggregate, ranked 1-based in `rankCol`. Output
+    * (key, partner, score, rankCol), the score in its input type. One
+    * definition, so every top-k operator shares the comparator and the
+    * rank rule.
+    */
+  private[graft] def topKRows(df: DataFrame, key: String, partner: String, score: String,
+      rankCol: String, k: Int): DataFrame =
+    df.groupBy(col(key))
+      .agg(topNeighbors(col(partner), col(score).cast("double"), k).as("__top"))
+      .select(col(key), posexplode(col("__top")).as(Seq("__pos", "__e")))
+      .select(col(key), col("__e._1").as(partner),
+        col("__e._2").cast(df.schema(score).dataType).as(score),
+        (col("__pos") + 1).cast("int").as(rankCol))
 
   /** Re-root `df` into a CLONED session whose ObjectHashAggregate
     * sort-based fallback threshold is raised to 4M groups/partition.

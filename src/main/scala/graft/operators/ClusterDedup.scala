@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.sql.functions._
 
 import graft.functions.{NativeHash, Text}
@@ -98,7 +100,7 @@ import graft.functions.{NativeHash, Text}
   * PPJoin self-join over the collapsed reps instead of steps 2-5 when
   * contraction cannot pay; both routes are exact and row-identical.
   * The direct route has two arms, picked by one reading of the route
-  * probe: when the reps' index ([[IndexBytes]]) fits under the
+  * statistics: when the reps' index ([[IndexBytes]]) fits under the
   * session's `spark.sql.autoBroadcastJoinThreshold`, one labelled job
   * (`cluster: pair index`) collects the reps into broadcast postings
   * ([[JaccardDedup.BenchPostings]], the index decontamination probes)
@@ -109,10 +111,22 @@ import graft.functions.{NativeHash, Text}
   * self-join ([[JaccardDedup.prefixPairs]]), the plan
   * [[JaccardDedup.nearDupPairs]] keeps as the direct twin.
   *
+  * Construction contract: every entry point runs its jobs before it
+  * returns. The corpus is hashed into ONE cut, `cut: cluster: hashed`,
+  * whose own pass also collects the route statistics (eligible docs,
+  * the HLLs of distinct sets and band-0 buckets, Σn) through an
+  * `Observation`, so routing re-reads nothing. On the broadcast arm
+  * [[components]] then runs the pair-index collect, one probe job that
+  * runs union-find inside the probe (`cluster: components(direct)`)
+  * and the labels-out cut: 6 jobs over a `Dedup.byRank` input, pinned
+  * in ClusterDedupSpec. The shuffled arm and the clustered route add
+  * their cuts and [[Components]]' jobs.
+  *
   * Scale shape: every step is a narrow-key shuffle (element hash,
-  * cluster id) or a bounded per-cluster aggregate; no driver
-  * materialization anywhere (components themselves go through
-  * [[Components]]' adaptive local/distributed arms).
+  * cluster id) or a bounded per-cluster aggregate; the only driver
+  * materialization is the broadcast arm's index, capped by the
+  * broadcast threshold, and its rep forests (components otherwise go
+  * through [[Components]]' adaptive local/distributed arms).
   */
 object ClusterDedup {
 
@@ -214,8 +228,8 @@ object ClusterDedup {
   private[graft] val IndexBytes = 72.0
 
   /** MinHash signature length and band count of the LSH contraction
-    * (step 2): 16 bands of 4 rows. The route probe hashes one band of
-    * the same family.
+    * (step 2): 16 bands of 4 rows. The route statistics hash one band
+    * of the same family.
     */
   private val NumHashes = 64
   private val NumBands = 16
@@ -226,9 +240,10 @@ object ClusterDedup {
     * inside the first `prefixLen(n)` elements of each (PPJoin's prefix
     * filter). Jaccard ≥ t and |A∩B| ≥ k differ in α, the prefix length,
     * the size filter and the output score — everything here. The three
-    * bounds also come in scalar form for the broadcast probe
-    * ([[JaccardDedup.BenchPostings]]); each scalar twin runs the same
-    * double arithmetic as its Column, so both forms agree exactly.
+    * bounds and the keep test also come in scalar form for the broadcast
+    * probe ([[JaccardDedup.BenchPostings]] and the union-find inside
+    * it); each scalar twin runs the same double arithmetic as its
+    * Column, so both forms agree exactly.
     */
   private[graft] sealed trait PairPredicate extends Serializable {
     /** Docs of size n that can be in a qualifying pair. */
@@ -247,6 +262,8 @@ object ClusterDedup {
     /** Output score of a verified pair with overlap c. */
     def score(c: Column, na: Column, nb: Column): Column
     def keep(score: Column): Column
+    /** `keep(score(c, n_a, n_b))` on scalars. */
+    def keep(c: Int, na: Int, nb: Int): Boolean
     /** Score of two docs holding the same size-n set (always kept). */
     def identical(n: Column): Column
   }
@@ -266,6 +283,7 @@ object ClusterDedup {
     def scoreCol: String = "jaccard"
     def score(c: Column, na: Column, nb: Column): Column = c / (na + nb - c)
     def keep(score: Column): Column = score >= threshold
+    def keep(c: Int, na: Int, nb: Int): Boolean = c.toDouble / (na + nb - c) >= threshold
     def identical(n: Column): Column = lit(1.0)
   }
 
@@ -283,6 +301,7 @@ object ClusterDedup {
     def scoreCol: String = "overlap"
     def score(c: Column, na: Column, nb: Column): Column = c.cast("long")
     def keep(score: Column): Column = score >= k
+    def keep(c: Int, na: Int, nb: Int): Boolean = c >= k
     def identical(n: Column): Column = n.cast("long")
   }
 
@@ -310,6 +329,17 @@ object ClusterDedup {
     * Result is row-identical to
     * `Components.connectedComponents(JaccardDedup.nearDupPairs(...))`
     * over the same input.
+    *
+    * Eager: the labels are cut before this returns. On the direct
+    * route's broadcast arm construction runs 4 labelled actions — the
+    * `cut: cluster: hashed` cut (with the route statistics), the
+    * `cluster: pair index` collect, the `cluster: components(direct)`
+    * probe job (union-find inside the probe) and the
+    * `cut: cluster: labels out(direct)` cut — plus [[Par.widen]]'s
+    * split probe over a shuffled input and the stage jobs AQE runs
+    * inside a cut: 6 jobs over a `Dedup.byRank` output
+    * (ClusterDedupSpec pins the list). The shuffled arm and the
+    * clustered route add their cuts and [[Components]]' jobs.
     */
   def components(
       df: DataFrame,
@@ -328,13 +358,10 @@ object ClusterDedup {
     * runs AFTER the consumer's own output is eagerly cut.
     */
   private sealed trait Routed {
-    def hashed: DataFrame // (id, __sh, n) — all docs, persisted
+    def hashed: DataFrame // (id, __sh, n) — all docs, cut
     def docRep: DataFrame // (id, n, rep) — exact-set collapse, eligible docs
     def cuts: Seq[DataFrame]
-    def release(): Unit = {
-      hashed.unpersist(false)
-      cuts.foreach(Par.free)
-    }
+    def release(): Unit = (hashed +: cuts).foreach(Par.free)
   }
 
   /** Candidate-path frames shared by [[components]] and
@@ -354,31 +381,34 @@ object ClusterDedup {
       cuts: Seq[DataFrame]) extends Routed
 
   /** The ADAPTIVE direct route (see [[RouteContractRatio]]): the exact
-    * rep-level pair stream of the PPJoin self-join — broadcast probe or
-    * shuffled prefix join, see the object doc — with no contraction,
-    * anchors/diffs or cluster stats. Consumers fan the pairs out
-    * through the exact-set collapse (`docRep`) exactly as the clustered
-    * arm does. `index` is the broadcast arm's postings, released with
-    * the rest.
+    * rep-level PPJoin self-join — broadcast probe or shuffled prefix
+    * join, see the object doc — with no contraction, anchors/diffs or
+    * cluster stats. `arm` is the broadcast arm's index, released with
+    * the rest, or the shuffled arm's lazy pairs.
     */
   private final case class DirectCore(
       hashed: DataFrame,
       docRep: DataFrame,
-      pairs: DataFrame, // (ra, rb, score) exact rep pairs — LAZY
-      cuts: Seq[DataFrame],
-      index: Option[org.apache.spark.broadcast.Broadcast[_]]) extends Routed {
+      arm: Either[Broadcast[PairIndex], DataFrame],
+      pred: PairPredicate,
+      cuts: Seq[DataFrame]) extends Routed {
+    /** (ra, rb, score) exact rep pairs — LAZY. Consumers fan them out
+      * through the exact-set collapse (`docRep`) exactly as the
+      * clustered arm does. */
+    def pairs: DataFrame = arm.fold(probedRepPairs(docRep.sparkSession, _, pred), identity)
     override def release(): Unit = {
       super.release()
-      index.foreach(_.unpersist(false))
+      arm.fold(_.unpersist(false), _ => ())
     }
   }
 
-  /** The reps collected for the direct route's broadcast arm: their
-    * arrays as postings under the route's predicate, and each array's
-    * rep id (of type `idType`) by position.
+  /** The reps collected for the direct route's broadcast arm, in
+    * ascending id order (Spark's, [[Components.idOrdering]]): their arrays as postings under the route's
+    * predicate, and each array's rep id (of type `idType`) by position,
+    * so a smaller position holds a smaller id.
     */
   private final class PairIndex(val postings: JaccardDedup.BenchPostings,
-      val ids: Array[Any], val idType: org.apache.spark.sql.types.DataType) extends Serializable
+      val ids: Array[Any], val idType: DataType) extends Serializable
 
   /** Collects the reps' (id, __sh) in ONE labelled job,
     * `cluster: pair index`. Null-id reps are left out, as the shuffled
@@ -387,25 +417,26 @@ object ClusterDedup {
   private def pairIndex(reps: DataFrame, pred: PairPredicate): PairIndex = {
     val rows = Par.labeled(reps.sparkSession, "cluster: pair index")(
       reps.where(col("id").isNotNull).select("id", "__sh").collect())
+      .sortBy(_.get(0))(Components.idOrdering(reps.schema("id").dataType))
     new PairIndex(new JaccardDedup.BenchPostings(rows.map(_.getSeq[Long](1).toArray), pred),
       rows.map(_.get(0)), reps.schema("id").dataType)
   }
 
-  /** The direct route's broadcast arm: the exact rep-level pair stream
-    * (ra < rb, score) from a map-side probe of the broadcast index, with
-    * no prefix-index cut, candidate shuffle or join. The two-sided probe
-    * ([[JaccardDedup.BenchPostings.pairsOf]]: size and positional
-    * filters, early-exit walk) runs once per rep position over a
-    * `range` and emits each verified pair with both rep ids, whatever
-    * their type, and both sizes.
+  /** The direct route's broadcast arm as a pair listing: the exact
+    * rep-level pair stream (ra < rb, score) from a map-side probe of the
+    * broadcast index, with no prefix-index cut, candidate shuffle or
+    * join. The two-sided probe ([[JaccardDedup.BenchPostings.pairsOf]]:
+    * size and positional filters, early-exit walk) runs once per rep
+    * position over a `range` and emits each verified pair with both rep
+    * ids, whatever their type, and both sizes.
     */
-  private def probedRepPairs(spark: org.apache.spark.sql.SparkSession, index: PairIndex,
-      pred: PairPredicate): (DataFrame, org.apache.spark.broadcast.Broadcast[PairIndex]) = {
+  private def probedRepPairs(spark: SparkSession, bc: Broadcast[PairIndex],
+      pred: PairPredicate): DataFrame = {
     import org.apache.spark.sql.types.{ArrayType, IntegerType, StructField, StructType}
     import org.apache.spark.sql.Row
-    val bc = spark.sparkContext.broadcast(index)
-    val pairType = ArrayType(StructType(Seq(StructField("ra", index.idType),
-      StructField("rb", index.idType)) ++ Seq("c", "n_a", "n_b").map(
+    val idType = bc.value.idType
+    val pairType = ArrayType(StructType(Seq(StructField("ra", idType),
+      StructField("rb", idType)) ++ Seq("c", "n_a", "n_b").map(
       StructField(_, IntegerType, nullable = false))))
     val probe = udf(new org.apache.spark.sql.api.java.UDF1[java.lang.Long, Seq[Row]] {
       def call(a: java.lang.Long): Seq[Row] = {
@@ -416,14 +447,62 @@ object ClusterDedup {
         }
       }
     }, pairType)
-    val pairs = spark.range(0, index.ids.length, 1, spark.sparkContext.defaultParallelism)
+    spark.range(0, bc.value.ids.length, 1, spark.sparkContext.defaultParallelism)
       .select(explode(probe(col("id"))).as("__p"))
       .select(col("__p.*"))
       .withColumn(pred.scoreCol, pred.score(col("c"), col("n_a"), col("n_b")))
       .filter(pred.keep(col(pred.scoreCol)))
       .select(least(col("ra"), col("rb")).as("ra"), greatest(col("ra"), col("rb")).as("rb"),
         col(pred.scoreCol))
-    (pairs, bc)
+  }
+
+  /** Union-find over positions [0, n) whose root is always the smallest
+    * position of its set.
+    */
+  private final class MinForest(n: Int) {
+    private val parent = Array.range(0, n)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    def union(a: Int, b: Int): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    /** (x, root of x) for every x that is not a root. */
+    def links: Iterator[(Int, Int)] =
+      Iterator.range(0, n).filter(x => parent(x) != x).map(x => (x, find(x)))
+  }
+
+  /** The broadcast arm's rep labels, in ONE labelled job,
+    * `cluster: components(direct)`: each task runs the two-sided probe
+    * ([[JaccardDedup.BenchPostings.pairsOf]]) and the exact keep test
+    * over its rep positions into its own [[MinForest]] and returns that
+    * forest's links, at most one per rep it touched. The driver merges
+    * the forests; index positions follow id order, so a root is its
+    * component's min id. Returns rep id → component id for every rep
+    * that is not its own component.
+    */
+  private def repComponents(spark: SparkSession, bc: Broadcast[PairIndex],
+      pred: PairPredicate): Map[Any, Any] = {
+    val ids = bc.value.ids
+    val n = ids.length
+    val links = Par.labeled(spark, "cluster: components(direct)")(
+      spark.sparkContext.parallelize(0 until n, spark.sparkContext.defaultParallelism)
+        .mapPartitions { as =>
+          val docs = bc.value.postings.docs
+          val forest = new MinForest(n)
+          as.foreach { a =>
+            bc.value.postings.pairsOf(a).foreach { case (b, c) =>
+              if (pred.keep(c, docs(a).length, docs(b).length)) forest.union(a, b)
+            }
+          }
+          forest.links
+        }.collect())
+    val forest = new MinForest(n)
+    links.foreach { case (x, r) => forest.union(x, r) }
+    forest.links.map { case (x, r) => ids(x) -> ids(r) }.toMap
   }
 
   /** [[components]] on the CLUSTERED route (adaptive routing off) plus
@@ -451,25 +530,37 @@ object ClusterDedup {
     * so the exact rep-level pairs are the cluster edges directly and
     * labels fan out through the collapse alone. Identical labeling to
     * the clustered arm: component = min doc id reachable, and every
-    * collapsed member's id ≥ its rep's. The rep pairs are evaluated
-    * once, by the edge cut inside [[Components.connectedComponents]];
-    * on a bounded pair graph its labels come back driver-local, so the
-    * fan-out join below is a broadcast and `labels out(direct)` is the
-    * only cut after the edge cut.
+    * collapsed member's id ≥ its rep's. On the broadcast arm the rep
+    * labels come from the union-find inside the probe
+    * ([[repComponents]]) and reach the docs through a broadcast-variable
+    * lookup inside the `labels out(direct)` cut, the only job after the
+    * probe. The shuffled arm evaluates its rep pairs once, in the edge
+    * cut inside [[Components.connectedComponents]], and joins its labels.
     */
   private def componentsDirect(d: DirectCore): DataFrame = {
-    val edges = d.pairs.select(col("ra"), col("rb"))
-    val clComp = Par.labeled(d.pairs.sparkSession, "cluster: components(direct)")(
-      Components.connectedComponents(edges, "ra", "rb"))
-      .select(col("id").as("rep"), col("component"))
-    val labeled = d.docRep.select(col("id"), col("rep"))
-      .join(clComp, Seq("rep"), "left")
-      .select(col("id"), coalesce(col("component"), col("rep")).as("component"))
+    val spark = d.docRep.sparkSession
+    val (labeled, done) = d.arm match {
+      case Left(bc) =>
+        val lookup = spark.sparkContext.broadcast(repComponents(spark, bc, d.pred))
+        val component = udf(new org.apache.spark.sql.api.java.UDF1[AnyRef, Any] {
+          def call(rep: AnyRef): Any = if (rep == null) null else lookup.value.getOrElse(rep, rep)
+        }, bc.value.idType)
+        (d.docRep.select(col("id"), component(col("rep")).as("component")),
+          () => lookup.destroy())
+      case Right(pairs) =>
+        val clComp = Par.labeled(spark, "cluster: components(direct)")(
+          Components.connectedComponents(pairs.select(col("ra"), col("rb")), "ra", "rb"))
+          .select(col("id").as("rep"), col("component"))
+        (d.docRep.select(col("id"), col("rep"))
+          .join(clComp, Seq("rep"), "left")
+          .select(col("id"), coalesce(col("component"), col("rep")).as("component")),
+          () => Par.free(clComp))
+    }
     val isolated = d.hashed.where(col("n") === 0)
       .select(col("id"), col("id").as("component"))
     val out = Par.cut(labeled.union(isolated), "cluster: labels out(direct)")
     d.release()
-    Par.free(clComp)
+    done()
     out
   }
 
@@ -1039,31 +1130,10 @@ object ClusterDedup {
       pred: PairPredicate,
       adaptive: Boolean): Either[DirectCore, Core] = {
     val spark = df.sparkSession
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-    val hashed = Par.widen(df)
-      .select(col(idCol).as("id"), setExpr.as("__sh"))
-      .select(col("id"), col("__sh"),
-        coalesce(size(col("__sh")), lit(0)).as("n"))
-      .persist(MEMORY_AND_DISK)
-
-    // ---- 1. exact-set collapse (array group key: exact, no hash-
-    // collision arm; one corpus-sized narrow exchange, same magnitude
-    // as the exploded index the pair join already pays) ----
-    val eligible = hashed.where(pred.eligible(col("n")))
-    // ADAPTIVE: the collapse window shuffles every shingle array in the
-    // corpus. One HLL probe (1% rsd, narrow partial-aggregate pass over
-    // the persisting frame) decides whether exact-set duplication even
-    // exists; on a (near-)fully-distinct corpus — the norm once exact
-    // dedup has run upstream, and the gate corpus at 99.8% — the
-    // collapse is the identity and the window + its lineage cut are
-    // skipped. Correctness is unaffected either way: identical sets are
-    // ordinary qualifying pairs for the LSH contraction and the verify
-    // (the contraction is NEVER skipped — near-duplicate replicas have
-    // DISTINCT sets, so this probe says nothing about them and the
-    // g²-killing contraction must stay unconditional).
-    // ONE narrow probe aggregate carries the doc-level routing
-    // statistics:
+    // ONE cut of the hashed corpus carries the doc-level routing
+    // statistics: an Observation of aggregates over its eligible docs
+    // rides the cut's own pass, so no probe re-reads the rows:
     //   - count + HLL distinct sets → the collapse decision;
     //   - HLL distinct band-0 buckets → the contraction-mass estimate:
     //     Σ over buckets of (size − 1) = members − distinct buckets, so
@@ -1075,24 +1145,43 @@ object ClusterDedup {
     //     distinct-buckets-over-reps and the statistic is rep-level
     //     even before the collapse decision is made;
     //   - Σn → the direct route's broadcast-or-shuffle choice.
-    // Measured at sf0.1:
-    //   - rsd 0.05, not 0.01: the high-precision HLL buffer made the
-    //     probe itself the bottleneck (4.0 s vs 0.9 s); every routing
-    //     threshold tolerates ≥ 10% estimate error, and routing picks
-    //     between two EXACT plans;
-    //   - a single-subtree action, not fused with the candVol aggregate:
-    //     concurrent stages over the unmaterialized hashed persist
-    //     double-computed the shingling pass (twin 3.2-3.7 s jobs).
-    //     candVol, only needed when the contraction-mass shortcut is
-    //     inconclusive, runs lazily below.
-    val st = Par.labeled(spark, "cluster: route probe")(
-      eligible.agg(count(lit(1)).as("__n"),
-        approx_count_distinct(xxhash64(col("__sh")), 0.05).as("__sets"),
-        approx_count_distinct(element_at(
+    // HLL at rsd 0.05, not 0.01: measured at sf0.1, the high-precision
+    // HLL buffer made the probe itself the bottleneck (4.0 s vs 0.9 s);
+    // every routing threshold tolerates ≥ 10% estimate error, and
+    // routing picks between two EXACT plans. candVol, only needed when
+    // the contraction-mass shortcut is inconclusive, runs lazily below.
+    def ifEligible(c: Column): Column = when(pred.eligible(col("n")), c)
+    val routeStats = org.apache.spark.sql.Observation()
+    val hashed = Par.cut(Par.widen(df)
+      .select(col(idCol).as("id"), setExpr.as("__sh"))
+      .select(col("id"), col("__sh"),
+        coalesce(size(col("__sh")), lit(0)).as("n"))
+      .observe(routeStats, count(ifEligible(lit(1))).as("__n"),
+        approx_count_distinct(ifEligible(xxhash64(col("__sh"))), 0.05).as("__sets"),
+        approx_count_distinct(ifEligible(element_at(
           NativeHash.minhashBandBucketsHashed(col("__sh"), NumHashes / NumBands, 1),
-          1), 0.05).as("__buckets"),
-        coalesce(sum(col("n").cast("long")), lit(0L)).as("__elems")).head())
-    val collapseUseful = st.getLong(1) < st.getLong(0) * CollapseSkipRatio
+          1)), 0.05).as("__buckets"),
+        coalesce(sum(ifEligible(col("n").cast("long"))), lit(0L)).as("__elems")),
+      "cluster: hashed")
+    val st = routeStats.get
+    val Seq(nDocs, nSets, nBuckets, nElems) =
+      Seq("__n", "__sets", "__buckets", "__elems").map(st(_).asInstanceOf[Long])
+
+    // ---- 1. exact-set collapse (array group key: exact, no hash-
+    // collision arm; one corpus-sized narrow exchange, same magnitude
+    // as the exploded index the pair join already pays) ----
+    val eligible = hashed.where(pred.eligible(col("n")))
+    // ADAPTIVE: the collapse window shuffles every shingle array in the
+    // corpus. The HLL of distinct sets decides whether exact-set
+    // duplication even exists; on a (near-)fully-distinct corpus — the
+    // norm once exact dedup has run upstream, and the gate corpus at
+    // 99.8% — the collapse is the identity and the window + its lineage
+    // cut are skipped. Correctness is unaffected either way: identical
+    // sets are ordinary qualifying pairs for the LSH contraction and the
+    // verify (the contraction is NEVER skipped — near-duplicate replicas
+    // have DISTINCT sets, so this statistic says nothing about them and
+    // the g²-killing contraction must stay unconditional).
+    val collapseUseful = nSets < nDocs * CollapseSkipRatio
     // Par.cut (not persist) on the fan-out frames: persist caches
     // EXECUTION but leaves the full logical subtree in every consumer's
     // plan — with this many mutually-referencing stages the analyzer
@@ -1103,10 +1192,13 @@ object ClusterDedup {
     // One window pass carries (__sh, n) through, so the collapse costs a
     // single cut: docRep/reps are projections of it, not a join + second
     // materialization of the corpus-sized shingle arrays.
+    // A null id never pairs (the direct pipeline's `ra < rb` drops it),
+    // so it stays out of its group: its rep is null, as without the
+    // collapse.
     val collapseCut: Option[DataFrame] = if (!collapseUseful) None else Some(
       Par.cut(eligible
-        .select(col("id"), col("__sh"), col("n"), min(col("id")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("__sh"))).as("rep")),
+        .select(col("id"), col("__sh"), col("n"), when(col("id").isNotNull,
+          min(col("id")).over(Window.partitionBy(col("__sh")))).as("rep")),
         "cluster: collapse window"))
     val docRep = collapseCut.fold(eligible.select(col("id"), col("n"), col("id").as("rep")))(
       _.select("id", "n", "rep"))
@@ -1141,8 +1233,8 @@ object ClusterDedup {
     // low-duplication shape; only when the shortcut is inconclusive
     // does candVol run and arbitrate via the cap.
     // No probe job runs when `adaptive` is off (the route is forced).
-    val nRepsEst = if (collapseUseful) st.getLong(1) else st.getLong(0)
-    // the direct route's arm, read off the route probe: the broadcast
+    val nRepsEst = if (collapseUseful) nSets else nDocs
+    // the direct route's arm, read off the route statistics: the broadcast
     // probe whenever its index (IndexBytes per element and per rep; Σn
     // and the count over eligible docs bound the reps' share) fits under
     // the session's broadcast threshold, else the shuffled prefix
@@ -1151,7 +1243,7 @@ object ClusterDedup {
     // same Σ_s dfP(s)² from its postings on the driver, with no prefix
     // cut (a corpus that then routes clustered pays that one collect)
     val threshold = hashed.queryExecution.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val broadcastable = threshold >= 0 && IndexBytes * (st.getLong(3) + st.getLong(0)) <= threshold
+    val broadcastable = threshold >= 0 && IndexBytes * (nElems + nDocs) <= threshold
     lazy val index = pairIndex(reps, pred)
     def candVol(): Double = if (broadcastable) index.postings.candidateRows else {
       val cv = Par.labeled(spark, "cluster: candVol probe")(
@@ -1160,7 +1252,7 @@ object ClusterDedup {
       if (cv.isNullAt(0)) 0.0 else cv.getDouble(0)
     }
     val routeDirect = adaptive && {
-      val starEdgesUb = math.max(0L, nRepsEst - st.getLong(2))
+      val starEdgesUb = math.max(0L, nRepsEst - nBuckets)
       val byRatio = starEdgesUb < RouteContractRatio * nRepsEst
       val direct = byRatio || candVol() < DirectCandCap
       log.info(s"candidateCore route: starEdgesUb=$starEdgesUb nReps=$nRepsEst " +
@@ -1168,15 +1260,14 @@ object ClusterDedup {
       direct
     }
     if (routeDirect) {
-      if (broadcastable) {
-        val (pairs, bc) = probedRepPairs(spark, index, pred)
-        return Left(DirectCore(hashed, docRep, pairs, collapseCut.toSeq, Some(bc)))
-      }
+      if (broadcastable)
+        return Left(DirectCore(hashed, docRep, Left(spark.sparkContext.broadcast(index)), pred,
+          collapseCut.toSeq))
       // the shuffled arm: the direct pipeline over the already-hashed
       // reps, minus a second shingling pass
       val pairs = JaccardDedup.verifiedPairs(
         JaccardDedup.prefixPairs(prefix, "id", pred, "ra", "rb"), reps, "id", pred, "ra", "rb")
-      return Left(DirectCore(hashed, docRep, pairs, collapseCut.toSeq :+ prefix, None))
+      return Left(DirectCore(hashed, docRep, Right(pairs), pred, collapseCut.toSeq :+ prefix))
     }
 
     // ---- 2. LSH contraction over representatives ----
@@ -1226,9 +1317,9 @@ object ClusterDedup {
     val repCluster = member.select("id", "cl")
 
     // ---- 3 + 4: cluster-level candidates + anchor-bound prune ----
-    // the route probe's persisted prefix index is REUSED as the
-    // postings source (contraction labels join on by id) — the dfreq
-    // count and per-doc rarity window run once per call, not twice
+    // the prefix index cut above is REUSED as the postings source
+    // (contraction labels join on by id) — the dfreq count and per-doc
+    // rarity window run once per call, not twice
     val cc = clusterCandidatePlan(member, pred, requireDelta = false, prefix = Some(prefix))
     val pruned = Par.cut(cc.prunePlan(cc.candCl), "cluster: prune")
     Right(Core(hashed, docRep, repCluster, member, cc, pruned, pred,
@@ -1343,10 +1434,10 @@ object ClusterDedup {
       count(lit(1)).as("nm")) ++
       (if (requireDelta) Seq(max(col("__d")).as("isDelta")) else Nil)
     val cStats = member.groupBy("cl").agg(statCols.head, statCols.tail: _*)
-    // postings source: the caller's persisted prefix index when it has
-    // one (the batch core's route probe — cluster labels join on by
-    // id, identical rows to rebuilding with keep = cl since cl is
-    // functionally dependent on id), else built here (incremental arm)
+    // postings source: the caller's prefix index cut when it has one
+    // (the batch core's — cluster labels join on by id, identical rows
+    // to rebuilding with keep = cl since cl is functionally dependent
+    // on id), else built here (incremental arm)
     val prefixed = prefix match {
       case Some(pf) => pf.join(member.select(col("id"), col("cl")), Seq("id"))
       case None =>

@@ -24,6 +24,12 @@ import org.apache.spark.sql.functions._
   * collect feeds a driver union-find, and its labels are returned as a
   * driver-local relation with no further job. Only the distributed
   * branch seals its labels with a cut.
+  *
+  * `ClusterDedup.components`' shuffled direct arm and clustered route
+  * label through here. Its broadcast direct arm does not: its pairs
+  * come from a probe of a driver-built index, so it runs union-find
+  * inside that probe job, with no edge cut, no bounded collect and no
+  * local-relation join.
   */
 object Components {
 
@@ -122,6 +128,16 @@ object Components {
     * non-checkpointed frames. */
   private def freeCheckpoint(df: DataFrame): Unit = Par.free(df)
 
+  /** Spark's own order over driver-side (external) values of type
+    * `dt`, the one `min`, `least` and `<` apply, so a driver union-find
+    * picks the same minimum as a plan: strings compare as UTF-8 bytes,
+    * where Java's `String.compareTo` compares UTF-16 code units and
+    * puts U+10000 and above before U+E000–U+FFFF.
+    */
+  private[graft] def idOrdering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+      .on(org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt))
+
   /** Driver union-find over a bounded edge list. Union-by-min with path
     * compression: the smaller id always stays root, so each final root
     * IS its component's minimum. Both endpoints of every edge are
@@ -141,14 +157,13 @@ object Components {
       while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    @inline def lt(a: Any, b: Any): Boolean =
-      a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
+    val ord = idOrdering(idT)
     edges.foreach { row =>
       val (a, b) = (row.get(0), row.get(1))
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (ord.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
     val rows = parent.keys.toArray.map(x => org.apache.spark.sql.Row(x, find(x)))
     val schema = org.apache.spark.sql.types.StructType(Seq(

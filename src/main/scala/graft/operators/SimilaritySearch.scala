@@ -64,8 +64,8 @@ object SimilaritySearch {
     * product beyond that — either way the top-k shuffle moves only
     * (qid, id, score) triples, never embeddings.
     *
-    * The bound is the sort-free [[graft.functions.TopKAgg]] aggregate
-    * (the plan the overlap/jaccard retrieval rows run): a row_number
+    * The bound is the sort-free [[graft.functions.TopKAgg.topKRows]]
+    * block (the one the overlap/jaccard retrieval rows run): a row_number
     * window's WindowGroupLimit would local-sort every task's full n²
     * scored stream — Ω(n²·log n²) before a single row is dropped —
     * while the top-k hash aggregate bounds it in one map-side-combined
@@ -84,13 +84,8 @@ object SimilaritySearch {
       .filter(col("qid") =!= col("id"))
       .select(col("qid"), col("id"),
         graft.functions.NativeHash.cosine(col("qvec"), col("vec")).as("score"))
-    val top = scored.groupBy(col("qid"))
-      .agg(graft.functions.TopKAgg.topNeighbors(col("id"), col("score"), k)
-        .as("__top"))
-      .select(col("qid"), posexplode(col("__top")).as(Seq("__pos", "__e")))
-      .select(col("qid"), col("__e._1").as("id"), col("__e._2").as("score"),
-        (col("__pos") + 1).cast("int").as("rank"))
-    graft.functions.TopKAgg.withHashAggHeadroom(top)
+    graft.functions.TopKAgg.withHashAggHeadroom(
+      graft.functions.TopKAgg.topKRows(scored, "qid", "id", "score", "rank", k))
   }
 
   /** ANN via banded SRP-LSH: `tables` independent hash tables of

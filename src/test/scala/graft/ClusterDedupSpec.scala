@@ -33,14 +33,24 @@ class ClusterDedupSpec extends AnyFunSuite {
         "id_a", "id_b", Some(df.select(col("doc_id"))))
       .as[(Long, Long)].collect().toSet
 
-  private def clustered(df: DataFrame, t: Double, nGram: Int = 2): Set[(Long, Long)] =
-    ClusterDedup.components(df, "doc_id", "text", nGram, t)
-      .as[(Long, Long)].collect().toSet
+  /** `components` on both routes, the adaptive default and the forced
+    * clustered route, each checked against [[direct]]; returns the
+    * labels.
+    */
+  private def clustered(df: DataFrame, t: Double, nGram: Int = 2): Set[(Long, Long)] = {
+    val want = direct(df, t, nGram)
+    for (adaptive <- Seq(true, false)) {
+      val got = ClusterDedup.components(df, "doc_id", "text", nGram, t, adaptive)
+        .as[(Long, Long)].collect().toSet
+      assert(got == want, s"adaptive = $adaptive:\n got=$got\nwant=$want")
+    }
+    want
+  }
 
   test("matches the direct pipeline on sf0.001 documents (t=0.3, the driver query's params)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    assert(clustered(docs, 0.3) == direct(docs, 0.3))
+    clustered(docs, 0.3)
   }
 
   test("replica-marked corpus (the soak shape): identical labels, near-identical copies cluster") {
@@ -61,7 +71,7 @@ class ClusterDedupSpec extends AnyFunSuite {
         (id * 10 + r, if (r == 0) text else s"$text rep $r")
       }
     }.toDF("doc_id", "text")
-    assert(clustered(docs, 0.3) == direct(docs, 0.3))
+    clustered(docs, 0.3)
   }
 
   test("mostly-distinct corpus (adaptive collapse SKIPS): stray exact dups still merge") {
@@ -75,9 +85,7 @@ class ClusterDedupSpec extends AnyFunSuite {
           (300L, "pack my box with five dozen liquor jugs today"),
           (301L, "pack my box with five dozen liquor jugs today"))
     ).toDF("doc_id", "text")
-    val got = clustered(corpus, 0.3)
-    assert(got == direct(corpus, 0.3))
-    val m = got.toMap
+    val m = clustered(corpus, 0.3).toMap
     assert(m(201L) == m(200L) && m(301L) == m(300L), "exact dups must share a label")
     assert(m(200L) == 200L && m(300L) == 300L)
   }
@@ -87,7 +95,7 @@ class ClusterDedupSpec extends AnyFunSuite {
       Seq.fill(3)("these three are identical to each other but not to the six") ++
       Seq("a singleton document unlike anything else in this corpus"))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    assert(clustered(docs, 0.3) == direct(docs, 0.3))
+    clustered(docs, 0.3)
   }
 
   test("empty and sub-shingle docs stay isolated singletons (J=0/0 is no-edge)") {
@@ -98,7 +106,6 @@ class ClusterDedupSpec extends AnyFunSuite {
       (3L, "shared words here exactly"), (4L, "shared words here exactly"),
       (5L, "totally disjoint vocabulary row")).toDF("doc_id", "text")
     val got = clustered(docs, 0.3)
-    assert(got == direct(docs, 0.3))
     // the empty-shingle docs each label themselves
     assert(got.contains((0L, 0L)) && got.contains((1L, 1L)) && got.contains((2L, 2L)))
     assert(got.contains((3L, 3L)) && got.contains((4L, 3L)))
@@ -113,7 +120,6 @@ class ClusterDedupSpec extends AnyFunSuite {
       (0L, "alpha beta gamma delta"),  // bigrams: ab, bg, gd
       (1L, "alpha beta gamma epsilon"), // ab, bg, ge → ∩=2, ∪=4, J=0.5
       (2L, "zeta eta theta iota")).toDF("doc_id", "text")
-    assert(clustered(docs, 0.5) == direct(docs, 0.5))
     assert(clustered(docs, 0.5).contains((1L, 0L)))
   }
 
@@ -305,14 +311,11 @@ class ClusterDedupSpec extends AnyFunSuite {
     s"$dir/docs"
   }
 
-  /** `components` over [[byRankDir]] in `session`: the descriptions of
-    * the jobs it runs before returning, the number of stages that scan
-    * the parquet input, its labels and the direct pipeline's labels.
+  /** The descriptions of the jobs `body` runs in `session`, in start
+    * order, the number of stages that scan a parquet input, and its
+    * result.
     */
-  private def constructComponents(session: org.apache.spark.sql.SparkSession)
-      : (Seq[String], Int, Set[(Long, Long)], Set[(Long, Long)]) = {
-    import graft.operators.Dedup
-    val docs = Dedup.byRank(session.read.parquet(byRankDir), Seq("text"), Seq(col("doc_id")))
+  private def jobsOf[T](session: org.apache.spark.sql.SparkSession)(body: => T): (Seq[String], Int, T) = {
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val scans = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -330,28 +333,39 @@ class ClusterDedupSpec extends AnyFunSuite {
     val sc = session.sparkContext
     sc.addSparkListener(listener)
     sc.setJobGroup("components-construct", "components construction")
-    val labels = try {
-      val out = ClusterDedup.components(docs, "doc_id", "text", 2, 0.3)
+    val out = try {
+      val out = body
       assert(org.apache.spark.sql.graft.Shims.drainListenerBus(sc))
       out
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
-    (descs.toArray.toSeq.map(_.toString), scans.get,
-      labels.as[(Long, Long)].collect().toSet, direct(docs, 0.3))
+    (descs.toArray.toSeq.map(_.toString), scans.get, out)
+  }
+
+  /** `components` over [[byRankDir]] in `session`: the descriptions of
+    * the jobs it runs before returning, the number of stages that scan
+    * the parquet input, its labels and the direct pipeline's labels.
+    */
+  private def constructComponents(session: org.apache.spark.sql.SparkSession)
+      : (Seq[String], Int, Set[(Long, Long)], Set[(Long, Long)]) = {
+    import graft.operators.Dedup
+    val docs = Dedup.byRank(session.read.parquet(byRankDir), Seq("text"), Seq(col("doc_id")))
+    val (jobs, scans, labels) =
+      jobsOf(session)(ClusterDedup.components(docs, "doc_id", "text", 2, 0.3))
+    (jobs, scans, labels.as[(Long, Long)].collect().toSet, direct(docs, 0.3))
   }
 
   test("direct route construction: the input is scanned once, no labels-out cut in components") {
     val (jobs, scans, labels, want) = constructComponents(spark)
-    assert(jobs.contains("cluster: components(direct)"), s"not the direct route: $jobs")
-    assert(!jobs.contains("cut: components: labels out"), s"jobs: $jobs")
-    // the broadcast arm: one pair-index collect, no prefix-index cut
-    assert(jobs.count(_ == "cluster: pair index") == 1, s"jobs: $jobs")
-    assert(!jobs.contains("cut: cluster: prefix index"), s"jobs: $jobs")
-    assert(jobs.contains("widen: split probe"), s"jobs: $jobs")
+    // the broadcast arm: the hashed cut carries the route statistics
+    // (its repartition stage and its result), one pair-index collect,
+    // the union-find inside the probe and the one labels-out cut
+    assert(jobs == Seq("widen: split probe", "cut: cluster: hashed", "cut: cluster: hashed",
+      "cluster: pair index", "cluster: components(direct)", "cut: cluster: labels out(direct)"),
+      s"construction jobs: $jobs")
     assert(scans == 1, s"the input was scanned $scans times")
-    assert(jobs.size == 11, s"construction jobs: $jobs")
     assert(labels == want)
   }
 
@@ -410,6 +424,59 @@ class ClusterDedupSpec extends AnyFunSuite {
         len == p.prefixLen(na) && alpha == p.alpha(na, nb) && fits == p.fits(na, nb)
       }
       assert(bad.isEmpty, s"$p disagrees at ${bad.take(5).toSeq}")
+      // keep at every overlap around the bound and at the full overlap
+      // a pair of non-empty sets can have
+      val alpha = p.alpha(col("na"), col("nb")).cast("int")
+      val kept = sizes.where(col("na") > 0 && col("nb") > 0)
+        .select(col("na"), col("nb"), explode(array_distinct(array(alpha - 1, alpha, alpha + 1,
+          least(col("na"), col("nb"))))).as("c"))
+        .where(col("c") >= 0 && col("c") <= least(col("na"), col("nb")))
+        .select(col("c"), col("na"), col("nb"),
+          p.keep(p.score(col("c"), col("na"), col("nb"))))
+        .as[(Int, Int, Int, Boolean)].collect()
+      assert(kept.exists(_._4) && kept.exists(!_._4), s"$p: degenerate keep grid")
+      val badKeep = kept.filterNot { case (c, na, nb, keep) => keep == p.keep(c, na, nb) }
+      assert(badKeep.isEmpty, s"$p keep disagrees at ${badKeep.take(5).toSeq}")
+    }
+  }
+
+  private def rows(df: DataFrame): Map[(Any, Any), Int] =
+    multiset(df.collect().toSeq.map(r => (r.get(0), r.get(1))))
+
+  test("broadcast arm: null id, empty text, exact duplicates, all docs identical and string ids match the direct pipeline") {
+    val fox = "the quick brown fox jumps over the lazy dog"
+    val texts = Seq[(Option[Long], String)](
+      None -> fox, Some(0L) -> fox, Some(1L) -> fox,  // exact duplicates, one with a null id
+      Some(2L) -> "the quick brown fox jumps over the lazy cat", // J = 7/9 with them
+      Some(3L) -> "", Some(4L) -> "one", Some(5L) -> "",         // no shingles: isolated
+      Some(6L) -> "pack my box with five dozen liquor jugs",
+      Some(7L) -> "pack my box with five dozen liquor jugs",
+      Some(8L) -> "sphinx of black quartz judge my vow")
+    val corpora = Seq(
+      "mixed" -> texts.toDF("doc_id", "text"),
+      "all identical" -> (0L until 6L).map(i => (i, fox)).toDF("doc_id", "text"),
+      // zero-padded, so string order is numeric order
+      // plus a pair whose min id differs between UTF-16 order (U+1F600
+      // first) and Spark's UTF-8 byte order (U+FFFD first)
+      "string ids" -> (texts.map { case (i, t) => (i.map(v => f"d$v%03d"), t) } ++ Seq(
+        Some("�") -> "how vexingly quick daft zebras jump",
+        Some("😀") -> "how vexingly quick daft zebras jump high"))
+        .toDF("doc_id", "text"))
+    for ((name, docs) <- corpora) {
+      val (jobs, _, got) =
+        jobsOf(spark)(rows(ClusterDedup.components(docs, "doc_id", "text", 2, 0.3)))
+      assert(jobs.contains("cluster: pair index") && !jobs.contains("cut: cluster: prefix index"),
+        s"$name: not the broadcast arm: $jobs")
+      assert(jobs.contains("cut: cluster: collapse window"), s"$name: no collapse: $jobs")
+      val want = rows(Components.connectedComponents(
+        JaccardDedup.nearDupPairs(docs, "doc_id", "text", 2, 0.3),
+        "id_a", "id_b", Some(docs.select(col("doc_id")))))
+      assert(got == want, s"$name:\n got=$got\nwant=$want")
+      if (name == "string ids") assert(got.get(("😀", "�")).contains(1), s"$name: $got")
+      def pairs(df: DataFrame) = multiset(df.select("id_a", "id_b", "jaccard").collect().toSeq
+        .map(r => (r.get(0), r.get(1), r.getDouble(2))))
+      assert(pairs(ClusterDedup.pairsClustered(docs, "doc_id", "text", 2, 0.3)) ==
+        pairs(JaccardDedup.nearDupPairs(docs, "doc_id", "text", 2, 0.3)), s"$name: pairs")
     }
   }
 
@@ -421,7 +488,6 @@ class ClusterDedupSpec extends AnyFunSuite {
       (12L, "x5 x6 w1 w2 w3 w4 x7 x8"),
       (13L, "q1 q2 q3 q4 q5 q6 q7 q8")).toDF("doc_id", "text")
     val got = clustered(docs, 0.4)
-    assert(got == direct(docs, 0.4))
     // Hand-verified bigram Jaccards: J(10,11)=5/9, J(11,12)=4/10=t,
     // J(10,12)=3/11<t — so {10,11,12} merge transitively through 11
     // (min-id label 10) and 13 stays a singleton.

@@ -66,6 +66,17 @@ class ComponentsSpec extends AnyFunSuite {
       Map(5L -> 5L, 6L -> 6L, 8L -> 8L))
   }
 
+  test("string ids: both branches label with Spark's minimum (UTF-8 byte order)") {
+    // U+1F600 sorts before U+FFFD in UTF-16 code units, after it in
+    // UTF-8 bytes, the order of Spark's min
+    val (hi, lo) = ("\uD83D\uDE00", "\uFFFD")
+    val edges = Seq((hi, lo), (hi, "\uD83D\uDE01"), ("a", "b")).toDF("a", "b")
+    val want = Map(hi -> lo, lo -> lo, "\uD83D\uDE01" -> lo, "a" -> "a", "b" -> "a")
+    for (t <- Seq(1L << 20, 0L))
+      assert(Components.connectedComponents(edges, "a", "b", localThreshold = t)
+        .as[(String, String)].collect().toMap == want, s"localThreshold=$t")
+  }
+
   test("bounded edge list: driver labels as a local relation, no labels-out cut") {
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
