@@ -59,6 +59,22 @@ object GraftSession {
       // (collect_list, exact percentile) — so the topK operators scope
       // it around their own materialization (TopKAgg.withHashAggHeadroom).
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      // TorrentBroadcast serializes every broadcast (each stage's task
+      // binary included) into chunks of this size, allocated whole:
+      // at the 4 MB default each one is a G1 humongous object on any
+      // heap under 32 GB (regions of 1 MB at a 2 GB heap, 16 MB at
+      // most), and G1 frees humongous objects only at a GC. With less
+      // young garbage there are fewer GCs, so more of them are resident
+      // when one runs. 256 KB is below half the smallest region, so no
+      // chunk is humongous; the pieces a value spans read back whole
+      // (BroadcastBlockSpec). Measured on perfbench curate_batch (2 GB
+      // heap, local[2] on a 4-core VM, seeds 7 and 8, G1 log): the
+      // native quality kernel, by cutting young garbage, raised the
+      // humongous regions resident before a young GC to at most
+      // 538/536 (4 MB chunks; 376/344 before the kernel) and peak RSS
+      // to 1,748/1,744 MB (1,574/1,524); with 256 KB chunks they were
+      // at most 261/293 and peak RSS 1,418/1,440 MB.
+      .config("spark.broadcast.blockSize", "256k")
 
   /** S7 — `hive = true` backs the session catalog with a Hive metastore
     * (derby under the warehouse dir unless configured otherwise),

@@ -325,10 +325,13 @@ object ClusterDedup {
       cpost: DataFrame, candCl: DataFrame, pruned: DataFrame, crossEdges: DataFrame)
 
   /** (id, component) for every input doc — component = min doc id
-    * reachable through the exact J ≥ threshold n-gram pair graph.
-    * Result is row-identical to
+    * reachable through the exact J ≥ threshold n-gram pair graph. One
+    * row per input ROW: a repeated id gets a row per doc, and each
+    * NULL-id doc a (NULL, NULL) row (a NULL id never pairs). Over
+    * distinct non-NULL ids the result is row-identical to
     * `Components.connectedComponents(JaccardDedup.nearDupPairs(...))`
-    * over the same input.
+    * with the docs' ids as `vertices`; that twin returns one row per
+    * distinct id (ComponentsSpec pins both shapes).
     *
     * Eager: the labels are cut before this returns. On the direct
     * route's broadcast arm construction runs 4 labelled actions — the

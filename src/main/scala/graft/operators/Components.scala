@@ -37,7 +37,10 @@ object Components {
 
   /** (id, component) for every vertex, component = min id reachable.
     * `vertices` (single id column, any name) adds isolated nodes that
-    * appear in no edge — they map to themselves.
+    * appear in no edge — they map to themselves. One row per DISTINCT
+    * id: an id repeated in `vertices` gets one row, and so do all its
+    * NULL ids together, as (NULL, NULL). `ClusterDedup.components`
+    * instead returns one row per input doc (ComponentsSpec pins both).
     *
     * Adaptive execution (same idea as AQE's broadcast threshold): the
     * normalized, deduped edge list is cut once, self-loops included so

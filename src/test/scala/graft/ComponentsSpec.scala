@@ -77,6 +77,28 @@ class ComponentsSpec extends AnyFunSuite {
         .as[(String, String)].collect().toMap == want, s"localThreshold=$t")
   }
 
+  test("row shapes: Components gives one row per distinct id, ClusterDedup.components one per doc") {
+    val (a, a2) = ("the quick brown fox jumps over the lazy dog", "the quick brown fox jumps over the lazy cat")
+    val docs = Seq[(java.lang.Long, String)]((1L, a), (1L, "lorem ipsum dolor sit amet consectetur adipiscing elit"),
+      (2L, a2), (null, "pack my box with five dozen liquor jugs now"),
+      (null, "pack my box with five dozen liquor jugs today"), (3L, "sphinx of black quartz judge my vow"))
+      .toDF("doc_id", "text")
+    type Label = (Option[Long], Option[Long])
+    def labels(df: org.apache.spark.sql.DataFrame): Seq[Label] =
+      df.as[(Option[Long], Option[Long])].collect().toSeq
+    def multiset(rows: Seq[Label]) = rows.groupBy(identity).map { case (k, v) => k -> v.size }
+    val perDoc = labels(graft.operators.ClusterDedup.components(docs, "doc_id", "text")
+      .select("id", "component"))
+    assert(multiset(perDoc) == Map[Label, Int]((Some(1L), Some(1L)) -> 2, (Some(2L), Some(1L)) -> 1,
+      (None, None) -> 2, (Some(3L), Some(3L)) -> 1))
+    for (t <- Seq(1L << 20, 0L)) {
+      val perId = labels(Components.connectedComponents(Seq((1L, 2L)).toDF("a", "b"), "a", "b",
+          Some(docs.select("doc_id")), localThreshold = t))
+      assert(perId.sortBy(_.toString) == Seq[Label]((None, None), (Some(1L), Some(1L)),
+        (Some(2L), Some(1L)), (Some(3L), Some(3L))).sortBy(_.toString), s"localThreshold=$t")
+    }
+  }
+
   test("bounded edge list: driver labels as a local relation, no labels-out cut") {
     val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {

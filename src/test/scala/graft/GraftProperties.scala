@@ -479,6 +479,47 @@ object GraftProperties extends Properties("graft") {
   property("hive-text encodeRow equals the String.replace truth, interpreted") =
     forAll(hiveRows)(hiveTextMatches(noCodegen, _))
 
+  /** Quality-score texts of 0–1,200 pieces, most of them one character:
+    * the six `\s` characters (U+000B included), ASCII letters, the
+    * counted punctuation, digits, stopwords in mixed case, characters
+    * whose lowercase is ASCII or longer (U+212A, U+0130), other cased
+    * non-ASCII (ß, Σ), CJK and an emoji; ~10% NULL.
+    */
+  private val qualityText: Gen[Option[String]] = {
+    val piece = Gen.frequency(
+      6 -> Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r"),
+      12 -> Gen.alphaChar.map(_.toString),
+      2 -> Gen.oneOf(".", ",", ";", ":", "!", "?"),
+      1 -> Gen.numChar.map(_.toString),
+      4 -> Gen.oneOf("the", "The", "AND", "a", "A", "Is", "wITh", "that", "ThIS", "be"),
+      2 -> Gen.oneOf("\u212A", "\u0130", "\u00DF", "\u03A3", "\u4E2D", "\uD83D\uDE00"))
+    Gen.frequency(1 -> Gen.const(None),
+      9 -> Gen.choose(0, 1200).flatMap(n => Gen.listOfN(n, piece)).map(p => Some(p.mkString)))
+  }
+
+  /** The kernel over an RDD-backed frame (a local relation would be
+    * folded on the driver) equals the Column formula it replaced, row
+    * for row, NULL included; it runs whole-stage codegen'd in the
+    * default session and interpreted in `noCodegen`.
+    */
+  private def qualityMatches(session: org.apache.spark.sql.SparkSession, texts: List[Option[String]]): Boolean = {
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    val df = session.createDataFrame(session.sparkContext.parallelize(
+      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 2)).toDF("id", "text")
+    val q = df.select(graft.functions.Text.qualityScore(col("text")))
+    val codegen = q.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec])
+    codegen == (session eq spark) &&
+    QualityFormula.compare(df).forall { case (_, got, want) => got == want }
+  }
+
+  private val qualityTexts = Gen.listOfN(12, qualityText)
+
+  property("qualityScore kernel equals the Column formula") =
+    forAll(qualityTexts)(qualityMatches(spark, _))
+
+  property("qualityScore kernel equals the Column formula, interpreted") =
+    forAll(qualityTexts)(qualityMatches(noCodegen, _))
+
   /** (id, k1, v, k2, ver) rows: composite keys with nullable parts over
     * tiny domains (duplicate keys on both sides, NULL parts often), and
     * a frame that is empty about one time in six.

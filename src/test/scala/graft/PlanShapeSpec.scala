@@ -83,6 +83,21 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(nodes(p, "[A-Za-z]*Join") == 0, s"plan:\n$p")
   }
 
+  test("qualityScore filter: one whole-stage-codegen'd Filter over the scan, no regexp_replace, split or lambda") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, WholeStageCodegenExec}
+    val q = spark.read.parquet(s"$dir/documents.parquet")
+      .filter(graft.functions.Text.qualityScore(col("text")) >= 0.45)
+    val exec = q.queryExecution.executedPlan
+    val filters = exec.collect { case f: FilterExec => f }
+    assert(filters.size == 1, s"plan:\n$exec")
+    val fused = exec.collect { case w: WholeStageCodegenExec => w.child.collect { case f: FilterExec => f } }.flatten
+    assert(fused == filters, s"the Filter runs outside whole-stage codegen:\n$exec")
+    assert(filters.head.exists(_.isInstanceOf[FileSourceScanExec]), s"plan:\n$exec")
+    val cond = filters.head.condition.toString.toLowerCase
+    for (f <- Seq("regexp_replace", "split", "lambdafunction"))
+      assert(!cond.contains(f), s"$f in the condition: $cond")
+  }
+
   test("ClusterDedup candidate path: cluster-keyed postings, bound-prune before expansion, no driver relation") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
